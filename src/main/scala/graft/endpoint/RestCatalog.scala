@@ -6,7 +6,11 @@ import java.nio.charset.StandardCharsets.UTF_8
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.json4s.{JArray, JNothing, JNull, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods.compact
 
+import graft.Json.{arr, at, bool, double, jstr, long, optLong, parse, parseObject,
+  present, str, strs}
 import graft.lake.SnapshotTable
 import graft.sources.{Catalog, PersistentCatalog}
 
@@ -40,6 +44,14 @@ import graft.sources.{Catalog, PersistentCatalog}
   *                                        across JVMs)
   *   - `DELETE /v1/tables/{name}`        drop from session + registry
   *
+  * Wire JSON: every request body is parsed once into a json4s AST
+  * ([[graft.Json]]) and its fields are read by the path the Iceberg
+  * REST spec defines, so key order and unknown keys do not matter.
+  * Malformed JSON — a truncated object, trailing content, a top-level
+  * array — is a 400 before anything is applied, and integer fields
+  * are strictly typed (`3.5` or `"3"` for an integer field is a 400).
+  * Responses are rendered as strings with [[graft.Json.jstr]].
+  *
   * Consistency: reads are served from the live session catalog (which
   * [[serve]] restores from the registry at bind time) and from the
   * registry SnapshotTable — whose versioned commits make every GET
@@ -55,39 +67,65 @@ import graft.sources.{Catalog, PersistentCatalog}
   */
 object RestCatalog {
 
-  // ---------------------------------------------------------------
-  // minimal JSON emit/extract (flat payloads only — documented
-  // contract of this endpoint; no external parser jars exist here)
-
-  private[graft] def jstr(s: String): String = {
-    val b = new StringBuilder("\"")
-    s.foreach {
-      case '"' => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case '\n' => b.append("\\n")
-      case '\r' => b.append("\\r")
-      case '\t' => b.append("\\t")
-      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
-    }
-    b.append('"').toString
-  }
-
   private def jobj(fields: (String, String)*): String =
     fields.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
 
-  /** Extract a flat string field from a JSON object body. Handles
-    * escaped quotes/backslashes; sufficient for this endpoint's own
-    * flat payloads (the only POST body shape it accepts).
+  /** One commit requirement (Iceberg UpdateRequirement) this catalog
+    * checks: `assert-ref-snapshot-id` — the named ref at `snapshotId`,
+    * or absent when None — and `assert-table-uuid`.
     */
-  private[graft] def jfield(body: String, key: String): Option[String] = {
-    val re = ("\"" + java.util.regex.Pattern.quote(key) +
-      "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").r
-    re.findFirstMatchIn(body).map(m =>
-      m.group(1)
-        .replace("\\\"", "\"").replace("\\\\", "\\")
-        .replace("\\n", "\n").replace("\\r", "\r").replace("\\t", "\t"))
+  private sealed trait Requirement
+  private final case class AssertRef(ref: String, snapshotId: Option[Long])
+      extends Requirement
+  private final case class AssertUuid(uuid: String) extends Requirement
+
+  /** The `requirements` array of a commit object (absent = none). A
+    * `snapshot-id` that is null or missing asserts the ref ABSENT; an
+    * unsupported type or a mistyped field is an IllegalArgumentException
+    * (400).
+    */
+  private def requirements(commit: JValue): Seq[Requirement] = {
+    val reqs = at(commit, "requirements") match {
+      case JNothing | JNull => Nil
+      case JArray(xs) => xs
+      case _ => throw new IllegalArgumentException("requirements must be an array")
+    }
+    reqs.map { r =>
+      str(at(r, "type")) match {
+        case Some("assert-ref-snapshot-id") =>
+          val ref = at(r, "ref") match {
+            case JNothing | JNull => "main"
+            case JString(n) => n
+            case _ => throw new IllegalArgumentException(
+              "assert-ref-snapshot-id ref must be a string")
+          }
+          AssertRef(ref, optLong(at(r, "snapshot-id"),
+            "assert-ref-snapshot-id snapshot-id"))
+        case Some("assert-table-uuid") =>
+          AssertUuid(str(at(r, "uuid")).getOrElse(throw new IllegalArgumentException(
+            "assert-table-uuid needs a uuid string")))
+        case Some(t) =>
+          throw new IllegalArgumentException(s"unsupported requirement type: $t")
+        case None =>
+          throw new IllegalArgumentException("every requirement needs a type string")
+      }
+    }
   }
+
+  /** The `updates` array of a commit object as (action, update object)
+    * pairs, in request order (absent = none).
+    */
+  private def updates(commit: JValue): List[(String, JValue)] =
+    at(commit, "updates") match {
+      case JNothing | JNull => Nil
+      case JArray(xs) => xs.map(u => str(at(u, "action")).map(_ -> u).getOrElse(
+        throw new IllegalArgumentException("every update needs an action string")))
+      case _ => throw new IllegalArgumentException("updates must be an array")
+    }
+
+  /** The `snapshot` objects of a commit's add-snapshot updates. */
+  private def snapshots(upds: Seq[(String, JValue)]): Seq[JValue] =
+    upds.collect { case ("add-snapshot", u) => at(u, "snapshot") }
 
   // ---------------------------------------------------------------
 
@@ -181,9 +219,9 @@ object RestCatalog {
     private def fs =
       whDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    // name -> (storage-profile JSON object body, handler)
+    // name -> (storage-profile object, handler)
     private val map =
-      new java.util.concurrent.ConcurrentHashMap[String, (String, CatalogHandler)]()
+      new java.util.concurrent.ConcurrentHashMap[String, (JObject, CatalogHandler)]()
 
     // name -> delete-protection flag (Lakekeeper's protection switch:
     // a protected warehouse refuses DELETE until unset); persisted in
@@ -208,7 +246,10 @@ object RestCatalog {
           .map { st =>
             val in = fs.open(st.getPath)
             val txt = try new String(in.readAllBytes(), UTF_8) finally in.close()
-            (st.getPath, st.getModificationTime, txt)
+            // a truncated record (see the unparseable-file branch below)
+            // carries no fields
+            (st.getPath, st.getModificationTime,
+              scala.util.Try(parse(txt)).getOrElse(JNothing))
           }
         // a crash between rename's publish-new and delete-old leaves
         // BOTH names pointing at ONE registry; mounting both would put
@@ -220,13 +261,13 @@ object RestCatalog {
         // monotonic write counter — immune to coarse-mtime ties);
         // mtime only breaks ties among pre-seq-format records.
         recordSeq.set(records.iterator
-          .map { case (_, _, txt) => jlong(txt, "wh_seq").getOrElse(0L) }
+          .map { case (_, _, rec) => long(at(rec, "wh_seq")).getOrElse(0L) }
           .maxOption.getOrElse(0L))
         val stale = records
-          .groupBy { case (_, _, txt) => jfieldAll(txt, "wh_registry").headOption }
+          .groupBy { case (_, _, rec) => str(at(rec, "wh_registry")) }
           .collect { case (Some(_), dups) if dups.size > 1 =>
-            dups.sortBy { case (_, mtime, txt) =>
-              (jlong(txt, "wh_seq").getOrElse(0L), mtime)
+            dups.sortBy { case (_, mtime, rec) =>
+              (long(at(rec, "wh_seq")).getOrElse(0L), mtime)
             }.dropRight(1)
           }.flatten.map(_._1).toSet
         stale.foreach { p =>
@@ -235,18 +276,20 @@ object RestCatalog {
             "the stale name")
           fs.delete(p, false)
         }
-        records.filterNot { case (p, _, _) => stale(p) }.foreach { case (p, _, txt) =>
-            (jfieldAll(txt, "wh_name").headOption,
-              jfieldAll(txt, "wh_db").headOption,
-              jfieldAll(txt, "wh_registry").headOption) match {
+        records.filterNot { case (p, _, _) => stale(p) }.foreach { case (p, _, rec) =>
+            (str(at(rec, "wh_name")), str(at(rec, "wh_db")),
+              str(at(rec, "wh_registry"))) match {
               case (Some(name), Some(db), Some(reg)) =>
                 scala.util.Try(PersistentCatalog.restore(spark, reg)) match {
                   case scala.util.Success(_) =>
-                    val profile = jobjBlock(txt, "storage-profile").getOrElse("")
+                    val profile = at(rec, "storage-profile") match {
+                      case o: JObject => o
+                      case _ => JObject()
+                    }
                     map.put(name,
                       (profile, new CatalogHandler(spark, reg, db, auth)))
                     protectedFlags.put(name, java.lang.Boolean.valueOf(
-                      jbool(txt, "delete-protection").getOrElse(false)))
+                      bool(at(rec, "delete-protection")).getOrElse(false)))
                     ()
                   case scala.util.Failure(e) =>
                     // a silently-mounted broken warehouse serves
@@ -273,7 +316,7 @@ object RestCatalog {
     def listJson: String = {
       import scala.jdk.CollectionConverters._
       val rows = map.asScala.toSeq.sortBy(_._1).map { case (n, (profile, _)) =>
-        s"""{"id":${jstr(n)},"name":${jstr(n)},"storage-profile":{$profile}}"""
+        s"""{"id":${jstr(n)},"name":${jstr(n)},"storage-profile":${compact(profile)}}"""
       }
       s"""{"warehouses":[${rows.mkString(",")}]}"""
     }
@@ -281,13 +324,13 @@ object RestCatalog {
     def detailJson(name: String): Option[String] =
       Option(map.get(name)).map { case (profile, h) =>
         s"""{"id":${jstr(name)},"name":${jstr(name)},""" +
-          s""""storage-profile":{$profile},""" +
+          s""""storage-profile":${compact(profile)},""" +
           s""""database":${jstr(h.database)},"registry":${jstr(h.registry)}}"""
       }
 
     /** Validate + provision; Left((status, message)) on refusal. */
-    def create(body: String): Either[(Int, String), String] = synchronized {
-      val name = jfieldAll(body, "warehouse-name").headOption.getOrElse(
+    def create(body: JObject): Either[(Int, String), String] = synchronized {
+      val name = str(at(body, "warehouse-name")).getOrElse(
         return Left(400 -> "warehouse-name is required"))
       if (!name.matches("[A-Za-z0-9_-]+"))
         return Left(400 -> s"invalid warehouse-name: $name")
@@ -295,12 +338,14 @@ object RestCatalog {
         return Left(400 -> s"warehouse-name $name is reserved")
       if (map.containsKey(name))
         return Left(409 -> s"warehouse $name already exists")
-      val profile = jobjBlock(body, "storage-profile").getOrElse(
-        return Left(400 -> "storage-profile object is required"))
-      jfieldAll(profile, "type").headOption match {
+      val profile = at(body, "storage-profile") match {
+        case o: JObject => o
+        case _ => return Left(400 -> "storage-profile object is required")
+      }
+      str(at(profile, "type")) match {
         case None => return Left(400 -> "storage-profile.type is required")
         case Some("s3") =>
-          if (jfieldAll(profile, "bucket").headOption.forall(_.isEmpty))
+          if (str(at(profile, "bucket")).forall(_.isEmpty))
             return Left(400 -> "s3 storage profile needs a non-empty bucket")
         case Some("file") | Some("local") => ()
         case Some(other) =>
@@ -312,14 +357,14 @@ object RestCatalog {
         return Left(409 -> (s"warehouse database $db already taken " +
           "(names differing only in -/_ collide)"))
       val reg = s"$rootRegistry/_warehouses/$name/registry"
-      val protect = jbool(body, "delete-protection").getOrElse(false)
+      val protect = bool(at(body, "delete-protection")).getOrElse(false)
       // persist: identity + profile + protection flag only.
       // storage-credential is deliberately NOT written (secrets never
       // touch the store)
       val rendered = s"""{"wh_name":${jstr(name)},"wh_db":${jstr(db)},""" +
         s""""wh_registry":${jstr(reg)},"delete-protection":$protect,""" +
         s""""wh_seq":${recordSeq.incrementAndGet()},""" +
-        s""""storage-profile":{$profile}}"""
+        s""""storage-profile":${compact(profile)}}"""
       fs.mkdirs(whDir)
       // name reservation is the cross-PROCESS arbiter, and it must be
       // won BEFORE any side effect: a duplicate create that first
@@ -366,11 +411,13 @@ object RestCatalog {
       // hold it in MEMORY ONLY — it switches loadTable vending on; the
       // secret itself is never persisted or served (the rendered
       // record above deliberately excludes it)
-      if (jbool(profile, "sts-enabled").contains(true))
-        jobjBlock(body, "storage-credential").foreach { cred =>
-          handler.stsCredential = Some(cred)
-          jlong(profile, "sts-token-ttl-seconds").foreach(ttl =>
-            handler.stsTtlMs = ttl * 1000)
+      if (bool(at(profile, "sts-enabled")).contains(true))
+        at(body, "storage-credential") match {
+          case cred: JObject =>
+            handler.stsCredential = Some(compact(cred))
+            long(at(profile, "sts-token-ttl-seconds")).foreach(ttl =>
+              handler.stsTtlMs = ttl * 1000)
+          case _ =>
         }
       map.put(name, (profile, handler))
       protectedFlags.put(name, java.lang.Boolean.valueOf(protect))
@@ -382,11 +429,11 @@ object RestCatalog {
       * registry itself never moves).
       */
     private def rewriteRecord(name: String, db: String, reg: String,
-        protect: Boolean, profile: String): Unit = {
+        protect: Boolean, profile: JObject): Unit = {
       val rendered = s"""{"wh_name":${jstr(name)},"wh_db":${jstr(db)},""" +
         s""""wh_registry":${jstr(reg)},"delete-protection":$protect,""" +
         s""""wh_seq":${recordSeq.incrementAndGet()},""" +
-        s""""storage-profile":{$profile}}"""
+        s""""storage-profile":${compact(profile)}}"""
       val out = fs.create(new Path(whDir, s"$name.json"), true)
       try out.write(rendered.getBytes(UTF_8)) finally out.close()
     }
@@ -396,11 +443,11 @@ object RestCatalog {
       * Lakekeeper's model exactly (the warehouse-id is stable; rename
       * touches the name). Left on refusal.
       */
-    def rename(oldName: String, body: String): Either[(Int, String), String] =
+    def rename(oldName: String, body: JObject): Either[(Int, String), String] =
       synchronized {
         val (profile, h) = Option(map.get(oldName)).getOrElse(
           return Left(404 -> s"no warehouse $oldName"))
-        val newName = jfieldAll(body, "new-name").headOption.getOrElse(
+        val newName = str(at(body, "new-name")).getOrElse(
           return Left(400 -> "new-name is required"))
         if (newName == oldName) return Right(newName) // idempotent
         if (!newName.matches("[A-Za-z0-9_-]+"))
@@ -440,11 +487,11 @@ object RestCatalog {
     /** Set/unset delete-protection (Lakekeeper's protection switch);
       * persisted so a restart keeps refusing the drop.
       */
-    def setProtection(name: String, body: String): Either[(Int, String), Boolean] =
+    def setProtection(name: String, body: JObject): Either[(Int, String), Boolean] =
       synchronized {
         val (profile, h) = Option(map.get(name)).getOrElse(
           return Left(404 -> s"no warehouse $name"))
-        val want = jbool(body, "protected").getOrElse(
+        val want = bool(at(body, "protected")).getOrElse(
           return Left(400 -> "protected (boolean) is required"))
         protectedFlags.put(name, java.lang.Boolean.valueOf(want))
         rewriteRecord(name, h.database, h.registry, want, profile)
@@ -522,34 +569,25 @@ object RestCatalog {
     // churn (the r19 mount-retention pattern; see loadViewResult)
     private val viewMetaRetain = 8
 
-    /** ALL requirement objects of `tpe` within a requirements block —
-      * commit handlers must validate EVERY matching requirement and
-      * read ref/snapshot-id/uuid from each matching object itself
-      * (Iceberg semantics: a commit carrying main PLUS a tag assertion
-      * fails when either is stale; first-match validation silently
-      * ignored the rest — r18 ADVICE).
-      */
-    private def reqsOf(reqBlock: String, tpe: String): Seq[String] =
-      jobjElements(reqBlock)
-        .filter(b => jfieldAll(b, "type").headOption.contains(tpe))
-
     /** The failure message of the first violated `assert-table-uuid`
-      * requirement, if any (every matching requirement is checked).
+      * requirement, if any (every one is checked).
       */
-    private def uuidAssertionFailure(loc: String, reqBlock: String): Option[String] =
-      if (reqsOf(reqBlock, "assert-table-uuid")
-            .exists(b => !jfieldAll(b, "uuid").forall(_ == tableUuid(loc))))
+    private def uuidAssertionFailure(loc: String,
+        reqs: Seq[Requirement]): Option[String] =
+      if (reqs.exists { case AssertUuid(u) => u != tableUuid(loc); case _ => false })
         Some(s"requirement failed: table-uuid is ${tableUuid(loc)}")
       else None
 
     /** Validate EVERY `assert-ref-snapshot-id` requirement against the
       * table's refs at `cur` — a requirement may name any ref (main,
       * a tag, a branch whose head is a main version); asserting a
-      * snapshot-id checks position, omitting it asserts ABSENCE.
-      * Returns the first violated assertion's message, if any.
+      * snapshot-id checks position, omitting it asserts ABSENCE
+      * (Iceberg semantics: a commit carrying main PLUS a tag assertion
+      * fails when either is stale). Returns the first violated
+      * assertion's message, if any.
       */
     private def refAssertionFailure(loc: String, cur: Int,
-        reqBlock: String): Option[String] = {
+        reqs: Seq[Requirement]): Option[String] = {
       // a ref's wire-visible position: main = the head; tags by
       // version; branches only when their head is a MAIN version
       // (branch-local staging is invisible to external catalogs)
@@ -559,17 +597,17 @@ object RestCatalog {
           .orElse(SnapshotTable.branches(spark, loc).get(n).collect {
             case stem if stem.matches("v\\d+") => stem.drop(1).toLong
           })
-      reqsOf(reqBlock, "assert-ref-snapshot-id").iterator.flatMap { rb =>
-        val reqRef = jfieldAll(rb, "ref").headOption.getOrElse("main")
-        val wanted = jlong(rb, "snapshot-id")
-        (refVersion(reqRef), wanted) match {
-          case (Some(have), Some(w)) if have == w => None // holds
-          case (None, None) => None // asserted absent, is absent
-          case (have, _) =>
-            Some(s"requirement failed: ref $reqRef " +
-              have.fold("does not exist")(h => s"snapshot-id is $h") +
-              wanted.fold(" (asserted absent)")(w => s", not $w"))
-        }
+      reqs.iterator.flatMap {
+        case AssertRef(reqRef, wanted) =>
+          (refVersion(reqRef), wanted) match {
+            case (Some(have), Some(w)) if have == w => None // holds
+            case (None, None) => None // asserted absent, is absent
+            case (have, _) =>
+              Some(s"requirement failed: ref $reqRef " +
+                have.fold("does not exist")(h => s"snapshot-id is $h") +
+                wanted.fold(" (asserted absent)")(w => s", not $w"))
+          }
+        case _ => None
       }.nextOption()
     }
 
@@ -685,8 +723,8 @@ object RestCatalog {
       else None
     }
 
-    private def createNamespace(ex: HttpExchange, body: String): Unit = {
-      val levels = jstrArray(body, "namespace")
+    private def createNamespace(ex: HttpExchange, body: JObject): Unit = {
+      val levels = strs(at(body, "namespace"), "namespace")
       if (levels.isEmpty) {
         err(ex, 400, "namespace must be a non-empty array"); return
       }
@@ -803,6 +841,13 @@ object RestCatalog {
     private def err(ex: HttpExchange, code: Int, msg: String): Unit =
       send(ex, code, jobj("error" -> jstr(msg)))
 
+    /** The request body as a JSON object; malformed JSON raises
+      * IllegalArgumentException, which [[handle]] answers with a 400
+      * before anything is applied.
+      */
+    private def jsonBody(ex: HttpExchange): JObject =
+      parseObject(new String(ex.getRequestBody.readAllBytes(), UTF_8))
+
     private[endpoint] def registryRows(): Seq[(String, String, String, String)] =
       SnapshotTable.read(spark, registryRoot)
         .collect()
@@ -912,8 +957,7 @@ object RestCatalog {
         case ("GET", List("v1", "warehouse")) =>
           send(ex, 200, store.listJson)
         case ("POST", List("v1", "warehouse")) =>
-          val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-          store.create(body) match {
+          store.create(jsonBody(ex)) match {
             case Right(name) =>
               send(ex, 201, s"""{"warehouse-id":${jstr(name)}}""")
             case Left((code, msg)) => err(ex, code, msg)
@@ -929,14 +973,12 @@ object RestCatalog {
             case Left((code, msg)) => err(ex, code, msg)
           }
         case ("POST", List("v1", "warehouse", name, "rename")) =>
-          val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-          store.rename(name, body) match {
+          store.rename(name, jsonBody(ex)) match {
             case Right(n) => send(ex, 200, s"""{"warehouse-id":${jstr(n)}}""")
             case Left((code, msg)) => err(ex, code, msg)
           }
         case ("POST", List("v1", "warehouse", name, "protection")) =>
-          val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-          store.setProtection(name, body) match {
+          store.setProtection(name, jsonBody(ex)) match {
             case Right(p) => send(ex, 200, s"""{"protected":$p}""")
             case Left((code, msg)) => err(ex, code, msg)
           }
@@ -1000,8 +1042,7 @@ object RestCatalog {
 
         case ("POST", List("v1", "namespaces")) =>
           // Iceberg CreateNamespace: {"namespace":["<db>","sub",…]}
-          createNamespace(ex,
-            new String(ex.getRequestBody.readAllBytes(), UTF_8))
+          createNamespace(ex, jsonBody(ex))
 
         case ("GET", List("v1", "namespaces", ns))
             if ns.indexOf(NsSep.toInt) >= 0 =>
@@ -1071,18 +1112,14 @@ object RestCatalog {
             if ns == db =>
           // Iceberg REST metrics-report sink (engines POST scan/commit
           // reports after every read) — tolerant accept-and-account:
-          // the report body is engine-specific, so any non-empty JSON
-          // object counts; the tally is served in warehouse statistics
+          // the report body is engine-specific, so any JSON object
+          // counts; the tally is served in warehouse statistics
           withTable(ex, name) { _ =>
-            val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-            if (body.trim.isEmpty || !body.trim.startsWith("{"))
-              err(ex, 400, "metrics report must be a JSON object")
-            else {
-              metricsReports.merge(name, 1L, (a, b) =>
-                java.lang.Long.valueOf(a.longValue + b.longValue))
-              ex.sendResponseHeaders(204, -1)
-              ex.close()
-            }
+            jsonBody(ex)
+            metricsReports.merge(name, 1L, (a, b) =>
+              java.lang.Long.valueOf(a.longValue + b.longValue))
+            ex.sendResponseHeaders(204, -1)
+            ex.close()
           }
 
         // ----- Iceberg REST views: the registry's views served over
@@ -1161,12 +1198,12 @@ object RestCatalog {
           }
 
         case ("POST", List("v1", "tables")) =>
-          val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-          val name = jfield(body, "name").getOrElse(
+          val body = jsonBody(ex)
+          val name = str(at(body, "name")).getOrElse(
             throw new IllegalArgumentException("missing field: name"))
           if (!name.matches("[A-Za-z_][A-Za-z0-9_]*"))
             throw new IllegalArgumentException(s"invalid table name: $name")
-          val v = jfield(body, "view_sql") match {
+          val v = str(at(body, "view_sql")) match {
             case Some(sql) =>
               // CREATE VIEW: the body is the defining query; the
               // registry round-trips it via SHOW CREATE TABLE like
@@ -1176,8 +1213,8 @@ object RestCatalog {
                 PersistentCatalog.save(spark, registryRoot, db)
               }
             case None =>
-              val format = jfield(body, "format").getOrElse("parquet")
-              val location = jfield(body, "location").getOrElse(
+              val format = str(at(body, "format")).getOrElse("parquet")
+              val location = str(at(body, "location")).getOrElse(
                 throw new IllegalArgumentException(
                   "missing field: location (or view_sql for a view)"))
               ddlLock.synchronized {
@@ -1198,18 +1235,19 @@ object RestCatalog {
             if (loc.isEmpty || SnapshotTable.currentVersion(spark, loc) == 0)
               err(ex, 404, s"$name is not a snapshot table")
             else {
-              val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
+              val body = jsonBody(ex)
+              def knob(k: String) = at(body, k)
               val d = graft.lake.Maintenance.Policy()
               // present-but-unparseable knobs are a client error, not
               // a silent fall-through to the default policy
-              val badKnob = Seq("max_delete_ratio" -> jdouble(body, "max_delete_ratio").isEmpty,
-                "small_bytes" -> jlong(body, "small_bytes").isEmpty,
-                "target_bytes" -> jlong(body, "target_bytes").isEmpty,
-                "min_delete_files" -> jlong(body, "min_delete_files").isEmpty,
-                "keep_versions" -> jlong(body, "keep_versions").isEmpty,
-                "orphan_grace_ms" -> jlong(body, "orphan_grace_ms").isEmpty)
-                .collectFirst { case (k, unparsed) if jkeyPresent(body, k) && unparsed => k }
-              val badRatio = jdouble(body, "max_delete_ratio")
+              val badKnob = Seq("max_delete_ratio" -> double(knob("max_delete_ratio")).isEmpty,
+                "small_bytes" -> long(knob("small_bytes")).isEmpty,
+                "target_bytes" -> long(knob("target_bytes")).isEmpty,
+                "min_delete_files" -> long(knob("min_delete_files")).isEmpty,
+                "keep_versions" -> long(knob("keep_versions")).isEmpty,
+                "orphan_grace_ms" -> long(knob("orphan_grace_ms")).isEmpty)
+                .collectFirst { case (k, unparsed) if present(knob(k)) && unparsed => k }
+              val badRatio = double(knob("max_delete_ratio"))
                 .filter(r => r < 0 || r > 1)
               if (badKnob.isDefined)
                 err(ex, 400, s"unparseable value for ${badKnob.get}")
@@ -1217,21 +1255,21 @@ object RestCatalog {
                 err(ex, 400, s"max_delete_ratio must be in [0, 1], got ${badRatio.get}")
               else {
               val policy = graft.lake.Maintenance.Policy(
-                maxDeleteRatio = jdouble(body, "max_delete_ratio")
+                maxDeleteRatio = double(knob("max_delete_ratio"))
                   .getOrElse(d.maxDeleteRatio),
-                smallBytes = jlong(body, "small_bytes").getOrElse(d.smallBytes),
-                targetBytes = jlong(body, "target_bytes").getOrElse(d.targetBytes),
-                sortCols = jfield(body, "sort_cols").toSeq
+                smallBytes = long(knob("small_bytes")).getOrElse(d.smallBytes),
+                targetBytes = long(knob("target_bytes")).getOrElse(d.targetBytes),
+                sortCols = str(knob("sort_cols")).toSeq
                   .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty),
-                minDeleteFiles = jlong(body, "min_delete_files")
+                minDeleteFiles = long(knob("min_delete_files"))
                   .map(_.toInt).getOrElse(d.minDeleteFiles),
-                keepVersions = jlong(body, "keep_versions")
+                keepVersions = long(knob("keep_versions"))
                   .map(_.toInt).getOrElse(d.keepVersions),
-                orphanGraceMs = jlong(body, "orphan_grace_ms")
+                orphanGraceMs = long(knob("orphan_grace_ms"))
                   .getOrElse(d.orphanGraceMs))
               // dry_run previews the destructive stages (expire /
               // orphan reclaim) without touching the table
-              val dryRun = jbool(body, "dry_run").getOrElse(false)
+              val dryRun = bool(knob("dry_run")).getOrElse(false)
               val r =
                 if (dryRun) graft.lake.Maintenance.plan(spark, loc, policy)
                 else graft.lake.Maintenance.run(spark, loc, policy)
@@ -1471,19 +1509,17 @@ object RestCatalog {
       * view or table of the name 409s (AlreadyExists).
       */
     private def createViewIceberg(ex: HttpExchange): Unit = {
-      val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-      val name = jfield(body, "name").getOrElse {
+      val body = jsonBody(ex)
+      val name = str(at(body, "name")).getOrElse {
         err(ex, 400, "missing field: name"); return
       }
       if (!name.matches("[A-Za-z_][A-Za-z0-9_]*")) {
         err(ex, 400, s"invalid view name: $name"); return
       }
       // the spark-dialect representation, or the only one present
-      val reps = jarrBlock(body, "representations").toSeq
-        .flatMap(jobjElements)
-      val sql = reps.find(r => jfieldAll(r, "dialect").headOption
-          .forall(d => d == "spark" || d == "default"))
-        .flatMap(r => jfieldAll(r, "sql").headOption).map(junescape)
+      val sql = arr(at(body, "view-version", "representations"))
+        .find(r => str(at(r, "dialect")).forall(d => d == "spark" || d == "default"))
+        .flatMap(r => str(at(r, "sql")))
         .getOrElse {
           err(ex, 400, "view-version.representations needs a sql entry " +
             "(dialect spark)"); return
@@ -1551,19 +1587,23 @@ object RestCatalog {
       * idempotent 200 no-op.
       */
     private def commitSchema(ex: HttpExchange, name: String, loc: String,
-        body: String, reqTypes: Seq[String], reqBlock: String): Unit = {
-      val want = icebergFields(body) match {
+        upds: Seq[(String, JValue)], reqs: Seq[Requirement]): Unit = {
+      val schema = upds.collect { case ("add-schema", u) => at(u, "schema") } match {
+        case Seq(one) => one
+        case _ => err(ex, 400, "exactly one add-schema action per request"); return
+      }
+      val want = icebergFields(schema) match {
         case Right(cs) => cs
         case Left(msg) => err(ex, 400, msg); return
       }
       def widens(from: String, to: String): Boolean =
         SnapshotTable.isWidening(from, to)
-      uuidAssertionFailure(loc, reqBlock).foreach { msg =>
+      uuidAssertionFailure(loc, reqs).foreach { msg =>
         err(ex, 409, msg); return
       }
       ddlLock.synchronized {
         val cur = SnapshotTable.currentVersion(spark, loc)
-        refAssertionFailure(loc, cur, reqBlock).foreach { msg =>
+        refAssertionFailure(loc, cur, reqs).foreach { msg =>
           err(ex, 409, msg); return
         }
         val have = SnapshotTable.read(spark, loc).schema
@@ -1713,29 +1753,32 @@ object RestCatalog {
       * under metadata.properties.
       */
     private def commitProps(ex: HttpExchange, name: String, loc: String,
-        body: String, reqTypes: Seq[String], reqBlock: String): Unit = {
-      // the set-properties action's "updates" is an OBJECT (the outer
-      // request's "updates" is an array — the brace distinguishes
-      // them). Brace-AWARE extraction: a `}` inside a quoted value
-      // must not truncate the object (the old single-regex scan
-      // silently dropped every entry after it), and values unescape
-      // exactly like jstrArray so what was set round-trips loadTable.
-      val updates = jobjBlock(body, "updates").map { blk =>
-        "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r
-          .findAllMatchIn(blk)
-          .map(m => junescape(m.group(1)) -> junescape(m.group(2))).toMap
-      }.getOrElse(Map.empty[String, String])
-      val removals = jstrArray(body, "removals")
+        upds: Seq[(String, JValue)], reqs: Seq[Requirement]): Unit = {
+      // every set-properties action's `updates` object (string values)
+      // and every remove-properties action's `removals` array
+      val updates = upds.collect { case ("set-properties", u) => at(u, "updates") }
+        .flatMap {
+          case JObject(kvs) => kvs.map { case (k, v) =>
+            k -> str(v).getOrElse(throw new IllegalArgumentException(
+              s"set-properties value of $k must be a string"))
+          }
+          case JNothing => Nil
+          case _ => throw new IllegalArgumentException(
+            "set-properties updates must be an object")
+        }.toMap
+      val removals = upds.collect { case ("remove-properties", u) =>
+        strs(at(u, "removals"), "remove-properties removals")
+      }.flatten
       if (updates.isEmpty && removals.isEmpty) {
         err(ex, 400, "set-properties needs a non-empty updates object " +
           "(or remove-properties a removals array)"); return
       }
-      uuidAssertionFailure(loc, reqBlock).foreach { msg =>
+      uuidAssertionFailure(loc, reqs).foreach { msg =>
         err(ex, 409, msg); return
       }
       ddlLock.synchronized {
         val cur = SnapshotTable.currentVersion(spark, loc)
-        refAssertionFailure(loc, cur, reqBlock).foreach { msg =>
+        refAssertionFailure(loc, cur, reqs).foreach { msg =>
           err(ex, 409, msg); return
         }
         val nv = SnapshotTable.setProperties(spark, loc, updates, removals)
@@ -1778,32 +1821,30 @@ object RestCatalog {
       * <tag>` from the exported JSON alone.
       */
     private def commitRefs(ex: HttpExchange, name: String, loc: String,
-        body: String, reqTypes: Seq[String], reqBlock: String): Unit = {
-      val updBlock = jarrBlock(body, "updates").getOrElse {
-        err(ex, 400, "updates must be an array"); return
+        upds: Seq[(String, JValue)], reqs: Seq[Requirement]): Unit = {
+      val (refAction, upd) = upds.filter { case (a, _) =>
+        a == "set-snapshot-ref" || a == "remove-snapshot-ref"
+      } match {
+        case Seq(one) => one
+        case _ =>
+          err(ex, 400, "exactly one set/remove-snapshot-ref action per " +
+            "request (documented delta)"); return
       }
-      val refActions = jfieldAll(updBlock, "action")
-        .filter(a => a == "set-snapshot-ref" || a == "remove-snapshot-ref")
-      if (refActions.size != 1) {
-        err(ex, 400, "exactly one set/remove-snapshot-ref action per " +
-          "request (documented delta)"); return
+      val rname = str(at(upd, "ref-name")).getOrElse {
+        err(ex, 400, s"$refAction needs a ref-name"); return
       }
-      val rname = jfieldAll(updBlock, "ref-name").headOption.getOrElse {
-        err(ex, 400, s"${refActions.head} needs a ref-name"); return
-      }
-      uuidAssertionFailure(loc, reqBlock).foreach { msg =>
+      uuidAssertionFailure(loc, reqs).foreach { msg =>
         err(ex, 409, msg); return
       }
       ddlLock.synchronized {
         val cur = SnapshotTable.currentVersion(spark, loc)
-        // ref and snapshot-id come from each assertion's OWN object,
-        // and EVERY assertion in the block must hold (r17 + r18 ADVICE)
-        refAssertionFailure(loc, cur, reqBlock).foreach { msg =>
+        // EVERY assertion must hold, each read from its own object
+        refAssertionFailure(loc, cur, reqs).foreach { msg =>
           err(ex, 409, msg); return
         }
-        val isRemove = refActions.head == "remove-snapshot-ref"
+        val isRemove = refAction == "remove-snapshot-ref"
         if (rname == "main") {
-          val sid = jlong(updBlock, "snapshot-id")
+          val sid = long(at(upd, "snapshot-id"))
           if (!isRemove && sid.contains(cur.toLong)) {
             // idempotent: main already IS the head
           } else {
@@ -1817,12 +1858,12 @@ object RestCatalog {
           else if (isBranch) SnapshotTable.dropBranch(spark, loc, rname)
           else { err(ex, 404, s"no ref $rname on $name"); return }
         } else {
-          val rtype = jfieldAll(updBlock, "type").headOption.getOrElse("")
+          val rtype = str(at(upd, "type")).getOrElse("")
           if (rtype != "tag" && rtype != "branch") {
             err(ex, 400, s"set-snapshot-ref type must be tag|branch, got '$rtype'")
             return
           }
-          val sid = jlong(updBlock, "snapshot-id").getOrElse {
+          val sid = long(at(upd, "snapshot-id")).getOrElse {
             err(ex, 400, "set-snapshot-ref needs a snapshot-id"); return
           }
           if (sid < 1 || sid > cur) {
@@ -1923,50 +1964,48 @@ object RestCatalog {
       case _ => None
     }
 
-    /** The (field id, name, spark DDL type) list of the FIRST
-      * `"fields": [...]` array in `body` (a CreateTableRequest's
-      * schema or an add-schema update action's), or a client-error
-      * message. The optional per-field `id` is the Iceberg schema's
-      * field-id — the channel that lets add-schema express RENAME
-      * (same id, new name).
+    /** The (field id, name, spark DDL type) list of an Iceberg
+      * `schema` object's `fields` (a CreateTableRequest's schema or an
+      * add-schema update action's), or a client-error message. The
+      * optional per-field `id` is the Iceberg schema's field-id — the
+      * channel that lets add-schema express RENAME (same id, new name).
       */
-    private def icebergFields(body: String): Either[String, Seq[(Option[Int], String, String)]] = {
-      val fieldsBlock = "(?s)\"fields\"\\s*:\\s*\\[(.*?)\\]".r
-        .findFirstMatchIn(body).map(_.group(1)).getOrElse {
-          return Left("missing schema.fields")
-        }
-      val fieldObjs = "\\{[^{}]*\\}".r.findAllIn(fieldsBlock).toSeq
-      if (fieldObjs.isEmpty) return Left("schema.fields is empty")
-      Right(fieldObjs.map { o =>
-        val fn = jfield(o, "name").getOrElse {
-          return Left(s"schema field without a name: $o")
+    private def icebergFields(schema: JValue): Either[String, Seq[(Option[Int], String, String)]] = {
+      val fields = at(schema, "fields") match {
+        case JArray(xs) => xs
+        case _ => return Left("missing schema.fields")
+      }
+      if (fields.isEmpty) return Left("schema.fields is empty")
+      Right(fields.map { o =>
+        val fn = str(at(o, "name")).getOrElse {
+          return Left(s"schema field without a name: ${compact(o)}")
         }
         if (!fn.matches("[A-Za-z_][A-Za-z0-9_]*"))
           return Left(s"invalid column name: $fn")
-        val ft = jfield(o, "type").flatMap(sparkType).getOrElse {
-          return Left(s"unsupported field type in $o (primitive Iceberg " +
-            "types only — documented delta)")
+        val ft = str(at(o, "type")).flatMap(sparkType).getOrElse {
+          return Left(s"unsupported field type in ${compact(o)} (primitive " +
+            "Iceberg types only — documented delta)")
         }
-        (jlong(o, "id").map(_.toInt), fn, ft)
+        (optLong(at(o, "id"), s"field id of $fn").map(_.toInt), fn, ft)
       })
     }
 
     private def createTableIceberg(ex: HttpExchange): Unit = {
-      val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-      val name = jfield(body, "name").getOrElse {
+      val body = jsonBody(ex)
+      val name = str(at(body, "name")).getOrElse {
         err(ex, 400, "missing field: name"); return
       }
       if (!name.matches("[A-Za-z_][A-Za-z0-9_]*")) {
         err(ex, 400, s"invalid table name: $name"); return
       }
-      if (jbool(body, "stage-create").contains(true)) {
+      if (bool(at(body, "stage-create")).contains(true)) {
         err(ex, 400, "stage-create transactions are not supported"); return
       }
-      val cols = icebergFields(body) match {
+      val cols = icebergFields(at(body, "schema")) match {
         case Right(cs) => cs
         case Left(msg) => err(ex, 400, msg); return
       }
-      val loc = jfield(body, "location").map(_.stripSuffix("/"))
+      val loc = str(at(body, "location")).map(_.stripSuffix("/"))
         .getOrElse(s"$registryRoot/_warehouse/$name")
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         cols.map { case (_, n, t) => s"$n $t" }.mkString(", "))
@@ -2019,19 +2058,10 @@ object RestCatalog {
       withTable(ex, name) { case (_, _, _, loc) =>
         val v0 = if (loc.isEmpty) 0 else SnapshotTable.currentVersion(spark, loc)
         if (v0 == 0) { err(ex, 404, s"$name is not a snapshot table"); return }
-        val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-        // requirement types are read from the requirements ARRAY only —
-        // grepping the whole body would false-positive on the "type"
-        // keys inside an add-schema action's field list
-        val reqBlock = "(?s)\"requirements\"\\s*:\\s*\\[(.*?)\\]".r
-          .findFirstMatchIn(body).map(_.group(1)).getOrElse("")
-        val reqTypes = jfieldAll(reqBlock, "type")
-        val badReq = reqTypes.find(t =>
-          t != "assert-ref-snapshot-id" && t != "assert-table-uuid")
-        if (badReq.isDefined) {
-          err(ex, 400, s"unsupported requirement type: ${badReq.get}"); return
-        }
-        val actions = jfieldAll(body, "action")
+        val body = jsonBody(ex)
+        val reqs = requirements(body)
+        val upds = updates(body)
+        val actions = upds.map(_._1)
         val allowedActs =
           Set("add-snapshot", "set-snapshot-ref", "remove-snapshot-ref",
             "add-schema", "set-current-schema",
@@ -2063,11 +2093,12 @@ object RestCatalog {
             "set/remove-snapshot-ref, or set/remove-properties action")
           return
         }
-        if (hasSchema) { commitSchema(ex, name, loc, body, reqTypes, reqBlock); return }
-        if (hasProps) { commitProps(ex, name, loc, body, reqTypes, reqBlock); return }
-        if (hasRef) { commitRefs(ex, name, loc, body, reqTypes, reqBlock); return }
-        val files = jstrArray(body, "added-data-files")
-        val (posDels, eqDels) = parseDeleteFiles(body) match {
+        if (hasSchema) { commitSchema(ex, name, loc, upds, reqs); return }
+        if (hasProps) { commitProps(ex, name, loc, upds, reqs); return }
+        if (hasRef) { commitRefs(ex, name, loc, upds, reqs); return }
+        val snaps = snapshots(upds)
+        val files = snaps.flatMap(sn => strs(at(sn, "added-data-files"), "added-data-files"))
+        val (posDels, eqDels) = parseDeleteFiles(snaps) match {
           case Left(m) => err(ex, 400, m); return
           case Right(parsed) => parsed
         }
@@ -2085,7 +2116,7 @@ object RestCatalog {
             err(ex, 400, s"added file does not exist: $missing"); return
           case None =>
         }
-        uuidAssertionFailure(loc, reqBlock).foreach { msg =>
+        uuidAssertionFailure(loc, reqs).foreach { msg =>
           err(ex, 409, msg); return
         }
         // the commit itself: serialized with DDL so a registry restore
@@ -2094,7 +2125,7 @@ object RestCatalog {
         // publishes through writeManifestAtomic)
         ddlLock.synchronized {
           val cur = SnapshotTable.currentVersion(spark, loc)
-          refAssertionFailure(loc, cur, reqBlock).foreach { msg =>
+          refAssertionFailure(loc, cur, reqs).foreach { msg =>
             err(ex, 409, msg); return
           }
           // staged files are validated against the table's schema AS
@@ -2136,18 +2167,17 @@ object RestCatalog {
       * Lakekeeper loop (reference RUNBOOK.md §7: Trino row-level DML
       * on Iceberg through the same catalog). Left = client error.
       */
-    private def parseDeleteFiles(body: String)
+    private def parseDeleteFiles(snaps: Seq[JValue])
         : Either[String, (Seq[String], Seq[(String, Seq[String])])] = {
-      val objs = jarrBlock(body, "added-delete-files").toSeq.flatMap(jobjElements)
       val pos = scala.collection.mutable.ArrayBuffer.empty[String]
       val eq = scala.collection.mutable.ArrayBuffer.empty[(String, Seq[String])]
-      objs.foreach { o =>
-        val path = jfieldAll(o, "path").headOption.getOrElse(
+      snaps.flatMap(sn => arr(at(sn, "added-delete-files"))).foreach { o =>
+        val path = str(at(o, "path")).getOrElse(
           return Left("every added-delete-files entry needs a path"))
-        jfieldAll(o, "content").headOption match {
+        str(at(o, "content")) match {
           case Some("position-deletes") => pos += path
           case Some("equality-deletes") =>
-            val cols = jstrArray(o, "equality-field-names")
+            val cols = strs(at(o, "equality-field-names"), "equality-field-names")
             if (cols.isEmpty)
               return Left(s"equality delete $path needs a non-empty " +
                 "equality-field-names array")
@@ -2246,8 +2276,7 @@ object RestCatalog {
       * Success is the spec's 204 (no content).
       */
     private def commitTransaction(ex: HttpExchange): Unit = {
-      val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-      val changes = jarrBlock(body, "table-changes").toSeq.flatMap(jobjElements)
+      val changes = arr(at(jsonBody(ex), "table-changes"))
       if (changes.isEmpty) {
         err(ex, 400, "table-changes must be a non-empty array of " +
           "per-table commit objects"); return
@@ -2258,16 +2287,18 @@ object RestCatalog {
       // name, tag|branch, snapshot version) — the "release a coherent
       // snapshot set" flow that tags several tables at one consistent
       // point (r19 VERDICT #5)
-      case class Change(name: String, loc: String, reqBlock: String,
+      case class Change(name: String, loc: String, reqs: Seq[Requirement],
         files: Seq[String], posDels: Seq[String],
         eqDels: Seq[(String, Seq[String])],
         ref: Option[(String, String, Long)], handler: CatalogHandler)
       val parsed = changes.map { ch =>
-        val ident = jobjBlock(ch, "identifier").getOrElse {
-          err(ex, 400, "every table change needs an identifier " +
-            "{namespace, name}"); return
+        val ident = at(ch, "identifier") match {
+          case o: JObject => o
+          case _ =>
+            err(ex, 400, "every table change needs an identifier " +
+              "{namespace, name}"); return
         }
-        val ns = jstrArray(ident, "namespace")
+        val ns = strs(at(ident, "namespace"), "identifier namespace")
         // a transaction may span THIS handler's namespace and any
         // nested namespace beneath it (Iceberg REST: the {prefix}
         // scopes the whole request, identifiers address namespaces
@@ -2283,7 +2314,7 @@ object RestCatalog {
               s"or a namespace nested beneath it (got ${ns.mkString(".")})")
             return
           }
-        val name = jfieldAll(ident, "name").headOption.getOrElse {
+        val name = str(at(ident, "name")).getOrElse {
           err(ex, 400, "identifier needs a name"); return
         }
         val loc = handler.registryRows().find(_._1 == name).map(_._4).getOrElse {
@@ -2292,7 +2323,8 @@ object RestCatalog {
         if (loc.isEmpty || SnapshotTable.currentVersion(spark, loc) == 0) {
           err(ex, 404, s"$name is not a snapshot table"); return
         }
-        val actions = jfieldAll(ch, "action")
+        val upds = updates(ch)
+        val actions = upds.map(_._1)
         val isSnap = actions.nonEmpty && actions.forall(_ == "add-snapshot")
         val isRef = actions == Seq("set-snapshot-ref")
         if (!isSnap && !isRef) {
@@ -2301,40 +2333,36 @@ object RestCatalog {
             "schema/property/ref-removal changes are single-table commits)")
           return
         }
-        // string- and nesting-aware extraction: a lazy regex would stop
-        // at the first ']' — one inside a string value (e.g. a ref
-        // name) truncates the block and silently skips later
-        // requirements' validation (r19 ADVICE, the r17 class)
-        val reqBlock = jarrBlock(ch, "requirements").getOrElse("")
-        val badReq = jfieldAll(reqBlock, "type").find(t =>
-          t != "assert-ref-snapshot-id" && t != "assert-table-uuid")
-        badReq.foreach { t =>
-          err(ex, 400, s"$name: unsupported requirement type: $t"); return
-        }
+        val reqs =
+          try requirements(ch)
+          catch {
+            case e: IllegalArgumentException =>
+              err(ex, 400, s"$name: ${e.getMessage}"); return
+          }
         if (isRef) {
-          // ref fields are read from the UPDATES block only — "type"
-          // and "snapshot-id" keys also live in requirement objects
-          val updBlock = jarrBlock(ch, "updates").getOrElse("")
-          val rname = jfieldAll(updBlock, "ref-name").headOption.getOrElse {
+          val upd = upds.head._2
+          val rname = str(at(upd, "ref-name")).getOrElse {
             err(ex, 400, s"$name: set-snapshot-ref needs a ref-name"); return
           }
           if (rname == "main") {
             err(ex, 400, s"$name: ref main is the table head — it cannot " +
               "be moved in a transaction (use engine rollback)"); return
           }
-          val rtype = jfieldAll(updBlock, "type").headOption.getOrElse("")
+          val rtype = str(at(upd, "type")).getOrElse("")
           if (rtype != "tag" && rtype != "branch") {
             err(ex, 400, s"$name: set-snapshot-ref type must be tag|branch, " +
               s"got '$rtype'"); return
           }
-          val sid = jlong(updBlock, "snapshot-id").getOrElse {
+          val sid = long(at(upd, "snapshot-id")).getOrElse {
             err(ex, 400, s"$name: set-snapshot-ref needs a snapshot-id"); return
           }
-          Change(name, loc, reqBlock, Seq.empty, Seq.empty, Seq.empty,
+          Change(name, loc, reqs, Seq.empty, Seq.empty, Seq.empty,
             Some((rname, rtype, sid)), handler)
         } else {
-          val files = jstrArray(ch, "added-data-files")
-          val (posDels, eqDels) = parseDeleteFiles(ch) match {
+          val snaps = snapshots(upds)
+          val files = snaps.flatMap(sn =>
+            strs(at(sn, "added-data-files"), "added-data-files"))
+          val (posDels, eqDels) = parseDeleteFiles(snaps) match {
             case Left(m) => err(ex, 400, s"$name: $m"); return
             case Right(parsed) => parsed
           }
@@ -2348,7 +2376,7 @@ object RestCatalog {
             err(ex, 400, s"$name: added file does not exist: $missing")
             return
           }
-          Change(name, loc, reqBlock, files, posDels, eqDels, None, handler)
+          Change(name, loc, reqs, files, posDels, eqDels, None, handler)
         }
       }
       if (parsed.map(c => (c.handler.registry, c.name)).distinct.size
@@ -2369,12 +2397,12 @@ object RestCatalog {
       withLocks(handlers) {
         // phase 1: validate EVERYTHING before committing ANYTHING
         parsed.foreach { c =>
-          uuidAssertionFailure(c.loc, c.reqBlock).foreach { m =>
+          uuidAssertionFailure(c.loc, c.reqs).foreach { m =>
             err(ex, 409, s"${c.name}: $m — transaction aborted, nothing " +
               "applied"); return
           }
           val cur = SnapshotTable.currentVersion(spark, c.loc)
-          refAssertionFailure(c.loc, cur, c.reqBlock).foreach { m =>
+          refAssertionFailure(c.loc, cur, c.reqs).foreach { m =>
             err(ex, 409, s"${c.name}: $m — transaction aborted, nothing " +
               "applied"); return
           }
@@ -2533,188 +2561,12 @@ object RestCatalog {
     (resp.statusCode(), resp.body())
   }
 
-  /** All `"name":"…"` values of `key` in a JSON array payload, in order. */
-  private[graft] def jfieldAll(body: String, key: String): Seq[String] = {
-    val re = ("\"" + java.util.regex.Pattern.quote(key) +
-      "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").r
-    re.findAllMatchIn(body).map(_.group(1)).toSeq
-  }
-
-  /** JSON string-escape decoding shared by every string-valued
-    * extractor — what was PUT must round-trip the next GET byte-equal.
-    * A left-to-right scan, not sequential replaces: replace chains
-    * mis-decode `\\n` (escaped backslash + n) whichever order they
-    * run in.
+  /** The table names of a listing response: `identifiers` (Iceberg
+    * ListTablesResponse) or graft's own `tables`.
     */
-  private[graft] def junescape(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"' => sb += '"'
-          case '\\' => sb += '\\'
-          case '/' => sb += '/'
-          case 'n' => sb += '\n'
-          case 'r' => sb += '\r'
-          case 't' => sb += '\t'
-          case 'b' => sb += '\b'
-          case 'f' => sb += '\f'
-          case 'u' if i + 5 < s.length =>
-            sb += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar
-            i += 4
-          case other => sb += '\\' += other // not a JSON escape: keep as-is
-        }
-        i += 2
-      } else { sb += c; i += 1 }
-    }
-    sb.result()
-  }
-
-  /** The string elements of `"key": ["a", "b", …]` (first occurrence),
-    * unescaped. Empty if the key is absent or the array is empty.
-    * Bracket scanning is STRING-AWARE, same as [[jobjBlock]]: a `]`
-    * inside a quoted element (`["weird]key"]`) must not truncate the
-    * array and silently drop the later elements.
-    */
-  private[graft] def jstrArray(body: String, key: String): Seq[String] = {
-    val open = ("\"" + java.util.regex.Pattern.quote(key) +
-      "\"\\s*:\\s*\\[").r
-    open.findFirstMatchIn(body).toSeq.flatMap { m =>
-      val start = m.end // first char after the opening bracket
-      var i = start
-      var depth = 1
-      var inStr = false
-      while (i < body.length && depth > 0) {
-        val c = body.charAt(i)
-        if (inStr) {
-          if (c == '\\') i += 1 // skip the escaped char
-          else if (c == '"') inStr = false
-        } else c match {
-          case '"' => inStr = true
-          case '[' => depth += 1
-          case ']' => depth -= 1
-          case _ =>
-        }
-        i += 1
-      }
-      if (depth != 0) Seq.empty
-      else "\"((?:[^\"\\\\]|\\\\.)*)\"".r
-        .findAllMatchIn(body.substring(start, i - 1))
-        .map(g => junescape(g.group(1))).toSeq
-    }
-  }
-
-  /** The body of `"key": <open>…<close>` (first occurrence) with
-    * delimiter NESTING and quoted strings respected — a closer inside
-    * a value or a nested block cannot truncate the block the way a
-    * greedy-stop regex would. Shared scanner of [[jobjBlock]] (braces)
-    * and [[jarrBlock]] (brackets): one escaping/nesting implementation
-    * so the two parsers can never diverge.
-    */
-  private def jBlock(body: String, key: String,
-      open: Char, close: Char): Option[String] = {
-    val head = ("\"" + java.util.regex.Pattern.quote(key) +
-      "\"\\s*:\\s*\\" + open).r
-    head.findFirstMatchIn(body).flatMap { m =>
-      val start = m.end // first char after the opening delimiter
-      var i = start
-      var depth = 1
-      var inStr = false
-      while (i < body.length && depth > 0) {
-        val c = body.charAt(i)
-        if (inStr) {
-          if (c == '\\') i += 1 // skip the escaped char
-          else if (c == '"') inStr = false
-        } else {
-          if (c == '"') inStr = true
-          else if (c == open) depth += 1
-          else if (c == close) depth -= 1
-        }
-        i += 1
-      }
-      if (depth == 0) Some(body.substring(start, i - 1)) else None
-    }
-  }
-
-  /** The content of `"key": { … }` — see [[jBlock]]. None when the
-    * key is absent or its value is not an object.
-    */
-  private[graft] def jobjBlock(body: String, key: String): Option[String] =
-    jBlock(body, key, '{', '}')
-
-  /** The content of `"key": [ … ]` — the array analogue of
-    * [[jobjBlock]], for update arrays whose elements are objects
-    * (jstrArray only yields string elements). See [[jBlock]].
-    */
-  private[graft] def jarrBlock(body: String, key: String): Option[String] =
-    jBlock(body, key, '[', ']')
-
-  /** Top-level OBJECT elements of a JSON array body (the text between
-    * [[jarrBlock]]'s brackets), string- and nesting-aware like
-    * [[jBlock]]. Lets requirement checks read fields from THEIR OWN
-    * requirement object instead of first-match-anywhere across the
-    * whole block (r17 ADVICE: a second requirement carrying its own
-    * snapshot-id must not satisfy — or fail — an unrelated
-    * assert-ref-snapshot-id check).
-    */
-  private[graft] def jobjElements(arrBody: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var i = 0
-    while (i < arrBody.length) {
-      if (arrBody.charAt(i) == '{') {
-        val start = i + 1
-        var depth = 1
-        var inStr = false
-        i += 1
-        while (i < arrBody.length && depth > 0) {
-          val c = arrBody.charAt(i)
-          if (inStr) {
-            if (c == '\\') i += 1 // skip the escaped char
-            else if (c == '"') inStr = false
-          } else {
-            if (c == '"') inStr = true
-            else if (c == '{') depth += 1
-            else if (c == '}') depth -= 1
-          }
-          i += 1
-        }
-        if (depth == 0) out += arrBody.substring(start, i - 1)
-      } else i += 1
-    }
-    out.toSeq
-  }
-
-  private[graft] def jlong(body: String, key: String): Option[Long] = {
-    // the lookahead rejects fractional values rather than silently
-    // truncating to their digit prefix ({"keep_versions": 3.5} must
-    // 400 as present-but-unparseable, not run with keep_versions=3)
-    val re = ("\"" + java.util.regex.Pattern.quote(key) +
-      "\"\\s*:\\s*(\\d+)(?![\\d.eE])").r
-    re.findFirstMatchIn(body).map(_.group(1).toLong)
-  }
-
-  private[graft] def jdouble(body: String, key: String): Option[Double] = {
-    // sign and leading-dot forms included: "-1" or ".5" must PARSE
-    // (and then fail validation loudly) rather than silently fall
-    // back to the default policy
-    val re = ("\"" + java.util.regex.Pattern.quote(key) +
-      "\"\\s*:\\s*(-?(?:\\d+(?:\\.\\d+)?|\\.\\d+)(?:[eE][+-]?\\d+)?)").r
-    re.findFirstMatchIn(body).map(_.group(1).toDouble)
-  }
-
-  /** Whether a key appears at all — lets handlers 400 on a present
-    * but unparseable value instead of defaulting (a 200 with
-    * different semantics than requested).
-    */
-  private[graft] def jkeyPresent(body: String, key: String): Boolean =
-    ("\"" + java.util.regex.Pattern.quote(key) + "\"\\s*:").r
-      .findFirstIn(body).isDefined
-
-  private[graft] def jbool(body: String, key: String): Option[Boolean] = {
-    val re = ("\"" + java.util.regex.Pattern.quote(key) + "\"\\s*:\\s*(true|false)").r
-    re.findFirstMatchIn(body).map(_.group(1).toBoolean)
+  private[graft] def listedNames(listing: String): Seq[String] = {
+    val doc = parse(listing)
+    (arr(at(doc, "identifiers")) ++ arr(at(doc, "tables"))).flatMap(t => str(at(t, "name")))
   }
 
   // ---------------------------------------------------------------
@@ -2750,7 +2602,7 @@ object RestCatalog {
         |{"id":1,"name":"id","type":"long"}]}}""".stripMargin)
     require(ctn == 200, s"create nested table -> $ctn: $ctr")
     val (ln, nestedListing) = get(port, s"/v1/namespaces/$nsPath/tables")
-    require(ln == 200 && jfieldAll(nestedListing, "name").contains("nested_probe"),
+    require(ln == 200 && listedNames(nestedListing).contains("nested_probe"),
       s"nested namespace must list its table: $nestedListing")
     require(delete(port, s"/v1/namespaces/$nsPath/tables/nested_probe")._1 == 200,
       "nested table cleanup failed")
@@ -2760,13 +2612,13 @@ object RestCatalog {
     require(code == 200, s"GET /v1/tables -> $code: $listing")
     require(!listing.contains("nested_probe"),
       "nested table leaked into the flat root listing")
-    val names = jfieldAll(listing, "name")
-    val rows = names.map { n =>
+    val rows = listedNames(listing).map { n =>
       val (c2, stats) = get(port, s"/v1/tables/$n/stats")
       require(c2 == 200, s"GET /v1/tables/$n/stats -> $c2: $stats")
+      val doc = parse(stats)
       Row(n,
-        jlong(stats, "row_count").getOrElse(sys.error(s"no row_count for $n")),
-        jlong(stats, "n_cols").getOrElse(sys.error(s"no n_cols for $n")))
+        long(at(doc, "row_count")).getOrElse(sys.error(s"no row_count for $n")),
+        long(at(doc, "n_cols")).getOrElse(sys.error(s"no n_cols for $n")))
     }
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types._
@@ -2824,7 +2676,7 @@ object RestCatalog {
     require(rc == 201, s"register events_rest -> $rc")
     val (lc, ltr) = RestCatalog.get(port, s"/v1/namespaces/${Catalog.DB}/tables/events_rest")
     require(lc == 200, s"loadTable -> $lc: $ltr")
-    val snapId = jlong(ltr, "current-snapshot-id")
+    val snapId = long(at(parse(ltr), "metadata", "current-snapshot-id"))
       .getOrElse(sys.error("no current-snapshot-id in LoadTableResult"))
     val commitBody =
       s"""{"requirements":[{"type":"assert-ref-snapshot-id","ref":"main","snapshot-id":$snapId}],
@@ -2922,12 +2774,9 @@ object RestCatalog {
     // the SECOND client: loadTable, resolve the tag from the JSON alone
     val (lc, ltr) = RestCatalog.get(port, tablesPath)
     require(lc == 200, s"loadTable -> $lc")
-    val refsBlk = jobjBlock(ltr, "refs")
-      .getOrElse(sys.error("LoadTableResult metadata has no refs"))
-    val tagBlk = jobjBlock(refsBlk, "audit_v1")
-      .getOrElse(sys.error("refs does not list audit_v1"))
-    val taggedV = jlong(tagBlk, "snapshot-id")
-      .getOrElse(sys.error("audit_v1 ref has no snapshot-id")).toInt
+    val taggedV = long(at(parse(ltr), "metadata", "refs", "audit_v1", "snapshot-id"))
+      .getOrElse(sys.error(s"LoadTableResult refs carry no audit_v1 snapshot-id: $ltr"))
+      .toInt
     require(taggedV == 1, s"audit_v1 must resolve to snapshot 1, got $taggedV")
     require(SnapshotTable.currentVersion(s, tableRoot) == 2,
       "head must still be v2 (ref management moves no data)")
@@ -2978,7 +2827,7 @@ object RestCatalog {
       val (c, _) = RestCatalog.get(port, s"/management/v1/warehouse/$w")
       if (c == 200) {
         val (lc, listing) = RestCatalog.get(port, s"/v1/$w/tables")
-        if (lc == 200) jfieldAll(listing, "name").foreach { t =>
+        if (lc == 200) listedNames(listing).foreach { t =>
           delete(port, s"/v1/$w/tables/$t"); ()
         }
         delete(port, s"/management/v1/warehouse/$w"); ()
@@ -3017,9 +2866,10 @@ object RestCatalog {
       // mount: config resolves the warehouse to its prefix + namespace
       val (cc, cfg) = RestCatalog.get(port, s"/v1/config?warehouse=$w")
       require(cc == 200, s"config?warehouse=$w -> $cc: $cfg")
-      val prefix = jfieldAll(jobjBlock(cfg, "overrides").getOrElse(""), "prefix")
-        .headOption.getOrElse(sys.error(s"no prefix override for $w"))
-      val ns = jfieldAll(cfg, "database").headOption
+      val cfgDoc = parse(cfg)
+      val prefix = str(at(cfgDoc, "overrides", "prefix"))
+        .getOrElse(sys.error(s"no prefix override for $w"))
+      val ns = str(at(cfgDoc, "database"))
         .getOrElse(sys.error(s"no database for $w"))
       // DDL inside the warehouse: Iceberg createTable over the prefix
       val (ct, ctr) = post(port, s"/v1/$prefix/namespaces/$ns/tables",
@@ -3045,7 +2895,7 @@ object RestCatalog {
     // registry is untouched by warehouse DDL
     whs.foreach { case (w, _) =>
       val (lc, l) = RestCatalog.get(port, s"/v1/$w/tables")
-      require(lc == 200 && jfieldAll(l, "name") == Seq("wh_events"),
+      require(lc == 200 && listedNames(l) == Seq("wh_events"),
         s"warehouse $w listing must contain exactly wh_events: $l")
     }
     val (rl, rootListing) = RestCatalog.get(port, "/v1/tables")

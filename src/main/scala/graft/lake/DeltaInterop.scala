@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{DataType, Metadata, MetadataBuilder, StructField, StructType}
 
+import graft.Json.{jstr, long, parse, str}
+
 /** Open-format metadata interop — BOTH directions of the migration
   * path the reference gets from Iceberg's ecosystem (its tables are
   * mountable by any Iceberg-aware engine via the Lakekeeper catalog,
@@ -27,12 +29,6 @@ import org.apache.spark.sql.types.{DataType, Metadata, MetadataBuilder, StructFi
 object DeltaInterop {
 
   private val PhysNameKey = "delta.columnMapping.physicalName"
-
-  private def esc(x: String): String = x.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-    case '\r' => "\\r"; case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-  }
 
   /** A version's logical schema (renames + widens applied) with each
     * mapped field stamped with its physical in-file name (Delta column
@@ -64,9 +60,9 @@ object DeltaInterop {
     val stamp = SnapshotTable.committedAt(s, root, v)
     val (stamped, cfg) = stampedSchema(s, root, v)
     val cfgJson = cfg.toSeq.sorted
-      .map { case (k, v2) => s""""${esc(k)}":"${esc(v2)}"""" }.mkString(",")
+      .map { case (k, v2) => s"""${jstr(k)}:${jstr(v2)}""" }.mkString(",")
     s"""{"metaData":{"id":"graft-delta-export","format":{"provider":"parquet",""" +
-      s""""options":{}},"schemaString":"${esc(stamped.json)}","partitionColumns":[],""" +
+      s""""options":{}},"schemaString":${jstr(stamped.json)},"partitionColumns":[],""" +
       s""""configuration":{$cfgJson},"createdTime":$stamp}}"""
   }
 
@@ -75,8 +71,8 @@ object DeltaInterop {
     */
   private[graft] def dvDescriptor(positions: Seq[Long]): String = {
     val payload = DeletionVectors.serialize(positions)
-    s""","deletionVector":{"storageType":"i","pathOrInlineDv":"${
-      esc(DeletionVectors.base85Encode(payload))}","sizeInBytes":${
+    s""","deletionVector":{"storageType":"i","pathOrInlineDv":${
+      jstr(DeletionVectors.base85Encode(payload))},"sizeInBytes":${
       payload.length},"cardinality":${positions.size}}"""
   }
 
@@ -85,13 +81,13 @@ object DeltaInterop {
     val p = new Path(f)
     val size = p.getFileSystem(s.sparkContext.hadoopConfiguration)
       .getFileStatus(p).getLen
-    s"""{"add":{"path":"${esc(p.toUri.toString)}","partitionValues":{},""" +
+    s"""{"add":{"path":${jstr(p.toUri.toString)},"partitionValues":{},""" +
       s""""size":$size,"modificationTime":$stamp,"dataChange":true${
         dv.fold("")(dvDescriptor)}}}"""
   }
 
   private def removeAction(f: String, stamp: Long): String =
-    s"""{"remove":{"path":"${esc(new Path(f).toUri.toString)}",""" +
+    s"""{"remove":{"path":${jstr(new Path(f).toUri.toString)},""" +
       s""""deletionTimestamp":$stamp,"dataChange":true}}"""
 
   /** Render the FULL version chain as a Delta transaction log under
@@ -413,18 +409,11 @@ object DeltaInterop {
     */
   def readLogState(s: SparkSession, tableDir: String)
       : (Seq[(String, Seq[Long])], StructType, Map[String, String]) = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
+    import org.json4s.{JArray, JObject, JValue}
     val logDir = new Path(s"$tableDir/_delta_log")
     val fs = logDir.getFileSystem(s.sparkContext.hadoopConfiguration)
     require(fs.exists(logDir), s"no _delta_log under $tableDir")
     val VersionRe = "(\\d{20})\\.json".r
-    def str(v: JValue): Option[String] = v match {
-      case JString(x) => Some(x); case _ => None
-    }
-    def num(v: JValue): Option[Long] = v match {
-      case JInt(n) => Some(n.longValue); case JLong(n) => Some(n); case _ => None
-    }
     // Delta's add.path is "relative to the table root, or an absolute
     // URI" — and writers in the wild also emit scheme-less absolute
     // filesystem paths, which URI.isAbsolute calls relative. Anything
@@ -432,7 +421,7 @@ object DeltaInterop {
     def resolve(p: String): String =
       if (p.startsWith("/") || java.net.URI.create(p).isAbsolute) p
       else s"$tableDir/$p"
-    def checkProtocol(j: JValue): Unit = num(j \ "minReaderVersion").foreach { v =>
+    def checkProtocol(j: JValue): Unit = long(j \ "minReaderVersion").foreach { v =>
       if (v > 2) {
         val feats = (j \ "readerFeatures") match {
           case JArray(xs) => xs.flatMap(str)
@@ -456,8 +445,8 @@ object DeltaInterop {
         val in = fs.open(lcPath)
         val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
           finally in.close()
-        val j = JsonMethods.parse(txt)
-        (num(j \ "version"), num(j \ "parts").map(_.toInt))
+        val j = parse(txt)
+        (long(j \ "version"), long(j \ "parts").map(_.toInt))
       }
     // live file -> deleted row indexes (empty = unmasked)
     val live = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Long]]
@@ -544,12 +533,12 @@ object DeltaInterop {
       def dvOf(action: JValue): Seq[Long] =
         (str(action \ "deletionVector" \ "storageType"),
           str(action \ "deletionVector" \ "pathOrInlineDv"),
-          num(action \ "deletionVector" \ "sizeInBytes")) match {
+          long(action \ "deletionVector" \ "sizeInBytes")) match {
           case (Some(st), Some(body), Some(sz)) => decodeDv(st, body, sz.toInt)
           case _ => Seq.empty[Long]
         }
       lines.foreach { line =>
-        val j = JsonMethods.parse(line)
+        val j = parse(line)
         str(j \ "add" \ "path").foreach { p =>
           live.put(resolve(p), dvOf(j \ "add")); ()
         }

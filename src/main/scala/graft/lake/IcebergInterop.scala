@@ -9,6 +9,9 @@ import org.apache.avro.mapred.FsInput
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.json4s.{JObject, JString, JValue}
+
+import graft.Json.{arr, at, jstr, long, parse, present, str}
 
 /** Iceberg-format metadata EXPORT: render a [[SnapshotTable]] version
   * as real Iceberg v2 table metadata — `metadata.json` + Avro
@@ -162,20 +165,6 @@ object IcebergInterop {
     df.getField("equality_ids").schema().getTypes.get(1)
 
   // ----- shared JSON/type rendering ----------------------------------
-
-  private def jstr(s: String): String = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.append('"').toString
-  }
 
   /** Spark simple type → Iceberg primitive type name. */
   private[graft] def icebergType(sparkType: String): String = {
@@ -480,43 +469,32 @@ object IcebergInterop {
     val mfs = mp.getFileSystem(c)
     val in = mfs.open(mp)
     val metaJson = try new String(in.readAllBytes(), UTF_8) finally in.close()
-    // REAL JSON parsing (json4s, shipped with Spark), not regexes:
-    // foreign writers emit key orders, `doc` attributes, and nested
-    // type objects this import must either consume or REFUSE loudly —
-    // a regex that silently skips an unmatched field would import a
-    // narrowed schema and read the table with missing columns.
-    import org.json4s.{JArray, JInt, JLong, JObject, JString, JValue}
-    import org.json4s.jackson.JsonMethods
-    val metaDoc: JValue = JsonMethods.parse(metaJson)
-    def jnum(v: JValue): Option[Long] = v match {
-      case JInt(n) => Some(n.longValue)
-      case JLong(n) => Some(n)
-      case _ => None
-    }
-    def jstring(v: JValue): Option[String] =
-      v match { case JString(x) => Some(x); case _ => None }
-    def jarr(v: JValue): List[JValue] =
-      v match { case JArray(xs) => xs; case _ => Nil }
+    // REAL JSON parsing, not regexes: foreign writers emit key orders,
+    // `doc` attributes, and nested type objects this import must either
+    // consume or REFUSE loudly — a regex that silently skips an
+    // unmatched field would import a narrowed schema and read the
+    // table with missing columns.
+    val metaDoc: JValue = parse(metaJson)
     def req[A](m: Option[A], what: String): A =
       m.getOrElse(throw new IllegalArgumentException(s"metadata.json has no $what"))
     val cur =
       if (snapshotId >= 0) snapshotId
-      else req(jnum(metaDoc \ "current-snapshot-id"), "current-snapshot-id")
-    val snapObj = req(jarr(metaDoc \ "snapshots")
-      .find(o => jnum(o \ "snapshot-id").contains(cur)),
+      else req(long(metaDoc \ "current-snapshot-id"), "current-snapshot-id")
+    val snapObj = req(arr(metaDoc \ "snapshots")
+      .find(o => long(o \ "snapshot-id").contains(cur)),
       s"snapshot $cur in the snapshots list")
-    val listPath = req(jstring(snapObj \ "manifest-list"),
+    val listPath = req(str(snapObj \ "manifest-list"),
       s"manifest-list for snapshot $cur")
     // the snapshot's own schema-id when stamped (per-snapshot schema
     // binding), else the file's current-schema-id (writers that stamp
     // none share one schema for every snapshot)
-    val schemaId = jnum(snapObj \ "schema-id").getOrElse(
-      req(jnum(metaDoc \ "current-schema-id"), "current-schema-id"))
-    val schemaObj = req(jarr(metaDoc \ "schemas")
-      .find(o => jnum(o \ "schema-id").contains(schemaId)), s"schema $schemaId")
-    val schemaFields: Seq[(Int, String, String)] = jarr(schemaObj \ "fields").map { f =>
-      val id = req(jnum(f \ "id"), s"id of a schema-$schemaId field").toInt
-      val name = req(jstring(f \ "name"), s"name of schema-$schemaId field id $id")
+    val schemaId = long(snapObj \ "schema-id").getOrElse(
+      req(long(metaDoc \ "current-schema-id"), "current-schema-id"))
+    val schemaObj = req(arr(metaDoc \ "schemas")
+      .find(o => long(o \ "schema-id").contains(schemaId)), s"schema $schemaId")
+    val schemaFields: Seq[(Int, String, String)] = arr(schemaObj \ "fields").map { f =>
+      val id = req(long(f \ "id"), s"id of a schema-$schemaId field").toInt
+      val name = req(str(f \ "name"), s"name of schema-$schemaId field id $id")
       val tpe = (f \ "type") match {
         case JString(t) => t
         case _: JObject => throw new IllegalArgumentException(
@@ -534,10 +512,10 @@ object IcebergInterop {
     // names (Iceberg tables that never renamed). The property VALUE is
     // itself a JSON document — parse it the same way.
     val nmNames: Map[Int, Seq[String]] =
-      jstring(metaDoc \ "properties" \ "schema.name-mapping.default").map { nm =>
-        jarr(JsonMethods.parse(nm)).flatMap { e =>
-          jnum(e \ "field-id").map(fid =>
-            fid.toInt -> jarr(e \ "names").flatMap(jstring(_)))
+      str(metaDoc \ "properties" \ "schema.name-mapping.default").map { nm =>
+        arr(parse(nm)).flatMap { e =>
+          long(e \ "field-id").map(fid =>
+            fid.toInt -> arr(e \ "names").flatMap(str(_)))
         }.toMap
       }.getOrElse(Map.empty)
     def physicalOf(id: Int, logical: String): String =
@@ -554,11 +532,11 @@ object IcebergInterop {
     // day partition spec -> graft's partition header (physical source):
     // resolved from the DEFAULT spec's fields, so a day transform in a
     // historic (non-default) spec never mis-labels the current layout
-    val defaultSpecId = jnum(metaDoc \ "default-spec-id").getOrElse(0L)
-    val daySource: Option[String] = jarr(metaDoc \ "partition-specs")
-      .find(o => jnum(o \ "spec-id").contains(defaultSpecId))
-      .flatMap(spec => jarr(spec \ "fields").collectFirst {
-        case f if jstring(f \ "transform").contains("day") => jnum(f \ "source-id")
+    val defaultSpecId = long(metaDoc \ "default-spec-id").getOrElse(0L)
+    val daySource: Option[String] = arr(metaDoc \ "partition-specs")
+      .find(o => long(o \ "spec-id").contains(defaultSpecId))
+      .flatMap(spec => arr(spec \ "fields").collectFirst {
+        case f if str(f \ "transform").contains("day") => long(f \ "source-id")
       }.flatten)
       .flatMap { srcId =>
         schemaFields.collectFirst { case (id, logical, _) if id == srcId.toInt =>
@@ -830,39 +808,29 @@ object IcebergInterop {
       // (a chain no external engine can read); pre-name-mapping files
       // lack the property that makes id-less parquet projectable.
       // Immutability resumes for everything this renderer wrote.
-      val stale = """"manifest-list":"([^"]+)"""".r
-        .findAllMatchIn(cached).exists(!_.group(1).endsWith(".avro")) ||
-        !cached.contains("\"schema.name-mapping.default\"") ||
-        // pre-refs files can't serve tag/timestamp travel to an
-        // external engine — regenerate once, like the upgrades above
-        !cached.contains("\"snapshot-log\"") ||
-        // refs drifted: a tag/branch created (or moved) after this
-        // file was rendered must surface to external readers
-        scala.util.Try {
-          import org.json4s.{JArray, JInt, JLong, JObject, JString}
-          val m = org.json4s.jackson.JsonMethods.parse(cached)
-          val listed: Set[Int] = (m \ "snapshots") match {
-            case JArray(xs) => xs.flatMap(o => (o \ "snapshot-id") match {
-              case JInt(n) => Some(n.toInt)
-              case JLong(n) => Some(n.toInt)
-              case _ => None
-            }).toSet
-            case _ => Set.empty
+      val stale = scala.util.Try {
+        val m = parse(cached)
+        val snaps = arr(at(m, "snapshots"))
+        snaps.exists(o => str(at(o, "manifest-list")).exists(!_.endsWith(".avro"))) ||
+          !present(at(m, "properties", "schema.name-mapping.default")) ||
+          // pre-refs files can't serve tag/timestamp travel to an
+          // external engine — regenerate once, like the upgrades above
+          !present(at(m, "snapshot-log")) || {
+            // refs drifted: a tag/branch created (or moved) after this
+            // file was rendered must surface to external readers
+            val listed = snaps.flatMap(o => long(at(o, "snapshot-id"))).map(_.toInt).toSet
+            val cachedRefs: Set[(String, Int, String)] = at(m, "refs") match {
+              case JObject(fs) => fs.flatMap { case (n, o) =>
+                for {
+                  sv <- long(at(o, "snapshot-id"))
+                  t <- str(at(o, "type"))
+                } yield (n, sv.toInt, t)
+              }.toSet
+              case _ => Set.empty
+            }
+            cachedRefs != refsSeq(s, loc, v, listed.contains).toSet
           }
-          val cachedRefs: Set[(String, Int, String)] = (m \ "refs") match {
-            case JObject(fs) => fs.flatMap { case (n, o) =>
-              for {
-                sv <- (o \ "snapshot-id") match {
-                  case JInt(x) => Some(x.toInt); case JLong(x) => Some(x.toInt)
-                  case _ => None
-                }
-                t <- (o \ "type") match { case JString(x) => Some(x); case _ => None }
-              } yield (n, sv, t)
-            }.toSet
-            case _ => Set.empty
-          }
-          cachedRefs != refsSeq(s, loc, v, listed.contains).toSet
-        }.getOrElse(true)
+      }.getOrElse(true)
       if (!stale) return (metaPath.toString, cached)
       // stale: fall through and regenerate — the old file is replaced
       // only at publish time (below, under the destination lock), so a

@@ -1341,7 +1341,7 @@ object LakeOps {
       try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
       finally in.close()
     }
-    val ckptV = """"version":(\d+)""".r.findFirstMatchIn(lcTxt).get.group(1).toLong
+    val ckptV = graft.Json.long(graft.Json.at(graft.Json.parse(lcTxt), "version")).get
     require(ckptV == 2, s"checkpoint must sit at the head (delta v2), got $ckptV")
     val ckpt = s.read.parquet(f"$logDir/$ckptV%020d.checkpoint.parquet")
     val paths = ckpt.filter(col("add").isNotNull)
@@ -1424,21 +1424,24 @@ object LakeOps {
       s, root, SnapshotTable.currentVersion(s, root))
     // ---- independent re-read: metadata.json → Avro chain → parquet
     val c = s.sparkContext.hadoopConfiguration
-    val cur = "\"current-snapshot-id\":(\\d+)".r
-      .findFirstMatchIn(metaJson).get.group(1).toInt
-    val listPath = ("\"snapshot-id\":" + cur +
-      ",[^{]*\"manifest-list\":\"([^\"]+)\"").r
-      .findFirstMatchIn(metaJson).get.group(1)
+    import graft.Json.{arr, at, long, parse, str, strs}
+    val meta = parse(metaJson)
+    val cur = long(at(meta, "current-snapshot-id")).get.toInt
+    val listPath = arr(at(meta, "snapshots"))
+      .find(sn => long(at(sn, "snapshot-id")).contains(cur.toLong))
+      .flatMap(sn => str(at(sn, "manifest-list"))).get
     // ---- travel surface, PURELY from the exported JSON: the tag ref
     // must resolve to its snapshot-id, and a timestamp must resolve
     // through snapshot-log (latest entry with timestamp-ms <= t) the
     // way an external engine serves FOR TIMESTAMP AS OF
-    val tagRef = """"first_half":\{"snapshot-id":(\d+),"type":"tag"\}""".r
-      .findFirstMatchIn(metaJson).map(_.group(1).toInt)
+    val tagRef = Some(at(meta, "refs", "first_half"))
+      .filter(r => str(at(r, "type")).contains("tag"))
+      .flatMap(r => long(at(r, "snapshot-id"))).map(_.toInt)
     require(tagRef.contains(1),
       s"exported refs must resolve tag first_half to snapshot 1, got $tagRef")
-    val logEntries = """\{"timestamp-ms":(\d+),"snapshot-id":(\d+)\}""".r
-      .findAllMatchIn(metaJson).map(m => (m.group(1).toLong, m.group(2).toInt)).toSeq
+    val logEntries = arr(at(meta, "snapshot-log")).flatMap(e => for {
+      t <- long(at(e, "timestamp-ms")); sid <- long(at(e, "snapshot-id"))
+    } yield (t, sid.toInt))
     require(logEntries.nonEmpty, "exported metadata must carry a snapshot-log")
     val t2 = SnapshotTable.committedAt(s, root, 2)
     // id tiebreak: commits landing within the same millisecond
@@ -1464,21 +1467,17 @@ object LakeOps {
     // each field-id to whichever of its names the files actually
     // carry. Reading `amount` by name would bind NOTHING (files say
     // `value`); the mapping is load-bearing, not decorative.
-    val schemaId = "\"current-schema-id\":(\\d+)".r
-      .findFirstMatchIn(metaJson).get.group(1).toInt
-    val schemaFields: Seq[(Int, String)] =
-      (s"""\\{"type":"struct","schema-id":$schemaId,"fields":\\[([^\\]]*)\\]\\}""").r
-        .findFirstMatchIn(metaJson).map(_.group(1)).toSeq
-        .flatMap(b => """\{"id":(\d+),"name":"([^"]+)"""".r.findAllMatchIn(b)
-          .map(m => (m.group(1).toInt, m.group(2))))
-    val nmProp = """"schema\.name-mapping\.default":"((?:[^"\\]|\\.)*)"""".r
-      .findFirstMatchIn(metaJson).get.group(1)
-      .replace("\\\"", "\"").replace("\\\\", "\\")
-    val nmNames: Map[Int, Seq[String]] =
-      """\{"field-id":(\d+),"names":\[([^\]]*)\]\}""".r.findAllMatchIn(nmProp)
-        .map(m => m.group(1).toInt ->
-          """"([^"]*)"""".r.findAllMatchIn(m.group(2)).map(_.group(1)).toSeq)
-        .toMap
+    val schemaId = long(at(meta, "current-schema-id")).get
+    val schemaFields: Seq[(Int, String)] = arr(at(meta, "schemas"))
+      .find(sc => long(at(sc, "schema-id")).contains(schemaId)).toSeq
+      .flatMap(sc => arr(at(sc, "fields")))
+      .flatMap(f => for {
+        id <- long(at(f, "id")); n <- str(at(f, "name"))
+      } yield (id.toInt, n))
+    val nmProp = str(at(meta, "properties", "schema.name-mapping.default")).get
+    val nmNames: Map[Int, Seq[String]] = arr(parse(nmProp)).flatMap(e =>
+      long(at(e, "field-id")).map(_.toInt -> strs(at(e, "names"), "names")))
+      .toMap
     require(schemaFields.map(_._2).contains("amount"),
       "current schema must carry the renamed column")
     // manifest entries carry canon URIs (file:///x); Spark's

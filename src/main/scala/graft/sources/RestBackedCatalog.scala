@@ -10,7 +10,9 @@ import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate,
 import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.json4s.JValue
 
+import graft.Json.{arr, at, jstr, long, parse, str, strs}
 import graft.lake.{IcebergInterop, SnapshotTable}
 
 /** A [[TableCatalog]] that resolves tables, refs and snapshot pointers
@@ -138,7 +140,7 @@ object RestBackedCatalog {
           s""""ref":"main","snapshot-id":$head}],""" +
           s""""updates":[{"action":"add-snapshot","snapshot":""" +
           s"""{"summary":{"operation":"append"},"added-data-files":[${
-            files.map(f => graft.endpoint.RestCatalog.jstr(f)).mkString(",")}]}}]}"""
+            files.map(jstr).mkString(",")}]}}]}"""
       last = postCommit(body)
       attempt += 1
       if (last._1 == 200) landed = true
@@ -250,8 +252,7 @@ class RestBackedCatalog extends TableCatalog with SupportsNamespaces
       java.net.http.HttpResponse.BodyHandlers.ofString())
     require(resp.statusCode() == 200,
       s"OAuth token mint failed (${resp.statusCode()}): ${resp.body()}")
-    val tok = graft.endpoint.RestCatalog.jfieldAll(resp.body(), "access_token")
-      .headOption.getOrElse(
+    val tok = str(at(parse(resp.body()), "access_token")).getOrElse(
         throw new IllegalStateException("token response has no access_token"))
     minted = Some(tok)
     tok
@@ -298,14 +299,17 @@ class RestBackedCatalog extends TableCatalog with SupportsNamespaces
       s"/tables/${java.net.URLEncoder.encode(ident.name(), "UTF-8")}"
 
   /** LoadTableResult for `ident`, or a loud NoSuchTableException. */
-  private def loadResult(ident: Identifier): String = {
+  private def loadResult(ident: Identifier): JValue = {
     val (code, body) = get(tablesPath(ident))
     if (code == 404) throw new NoSuchTableException(ident)
     require(code == 200, s"loadTable $ident over $uri -> $code: $body")
-    body
+    parse(body)
   }
 
-  import graft.endpoint.RestCatalog.{jfieldAll, jlong, jobjBlock}
+  /** The served table's current snapshot id. */
+  private def currentSnapshot(ident: Identifier, ltr: JValue): Long =
+    long(at(ltr, "metadata", "current-snapshot-id")).getOrElse(
+      sys.error(s"LoadTableResult for $ident has no current-snapshot-id"))
 
   /** Mount the snapshot `snapId` of the table the LoadTableResult
     * describes, zero-copy, into the per-snapshot scratch root; reuse
@@ -313,19 +317,16 @@ class RestBackedCatalog extends TableCatalog with SupportsNamespaces
     * the key fends off a dropped-and-recreated table at the same
     * location reusing snapshot ids).
     */
-  private def mountSnapshot(ltr: String, snapId: Long): String = {
-    val metaLocation = jfieldAll(ltr, "metadata-location").headOption.getOrElse(
+  private def mountSnapshot(ltr: JValue, snapId: Long): String = {
+    val metaLocation = str(at(ltr, "metadata-location")).getOrElse(
       sys.error("LoadTableResult has no metadata-location"))
-    val uuid = jfieldAll(ltr, "table-uuid").headOption.getOrElse(
+    val uuid = str(at(ltr, "metadata", "table-uuid")).getOrElse(
       sys.error("LoadTableResult metadata has no table-uuid"))
-    val stamp = {
-      // the chosen snapshot's own commit stamp, from snapshot-log
-      // (ordered, one entry per listed snapshot)
-      val logBlk = graft.endpoint.RestCatalog.jarrBlock(ltr, "snapshot-log")
-      logBlk.toSeq.flatMap(graft.endpoint.RestCatalog.jobjElements)
-        .find(e => jlong(e, "snapshot-id").contains(snapId))
-        .flatMap(e => jlong(e, "timestamp-ms")).getOrElse(0L)
-    }
+    // the chosen snapshot's own commit stamp, from snapshot-log
+    // (ordered, one entry per listed snapshot)
+    val stamp = arr(at(ltr, "metadata", "snapshot-log"))
+      .find(e => long(at(e, "snapshot-id")).contains(snapId))
+      .flatMap(e => long(at(e, "timestamp-ms"))).getOrElse(0L)
     val mount = s"$mountRoot/$uuid/snap-$snapId-$stamp"
     // same-JVM loaders racing the FIRST mount of a snapshot serialize
     // here (cross-process, the import's commit CAS makes the loser
@@ -391,7 +392,7 @@ class RestBackedCatalog extends TableCatalog with SupportsNamespaces
     }
   }
 
-  private def serve(ident: Identifier, ltr: String, snapId: Long): Table = {
+  private def serve(ident: Identifier, ltr: JValue, snapId: Long): Table = {
     val mount = mountSnapshot(ltr, snapId)
     val v = SnapshotTable.currentVersion(spark, mount)
     // reads come from the PINNED immutable mount; the pinned version
@@ -401,7 +402,7 @@ class RestBackedCatalog extends TableCatalog with SupportsNamespaces
     // then commit over the catalog's updateTable route — the full
     // Lakekeeper loop (engines write data files to storage, the
     // catalog arbitrates the commit)
-    val loc = jfieldAll(ltr, "location").headOption.getOrElse("")
+    val loc = str(at(ltr, "metadata", "location")).getOrElse("")
     new WireMountTable(
       (catalogName +: ident.namespace() :+ ident.name()).mkString("."),
       mount, v, ident, loc)
@@ -449,9 +450,7 @@ class RestBackedCatalog extends TableCatalog with SupportsNamespaces
                   () => {
                     // freshest head for the CAS assertion — the
                     // mount's pinned snapshot may be stale by commit
-                    val ltr = loadResult(ident)
-                    jlong(ltr, "current-snapshot-id").getOrElse(sys.error(
-                      s"$tableName: no current-snapshot-id at commit time"))
+                    currentSnapshot(ident, loadResult(ident))
                   },
                   commitBody => post(tablesPath(ident), commitBody),
                   files)
@@ -474,9 +473,7 @@ class RestBackedCatalog extends TableCatalog with SupportsNamespaces
   override def loadTable(ident: Identifier): Table = {
     GraftCatalog.ensureStatsRule(spark)
     val ltr = loadResult(ident)
-    val snapId = jlong(ltr, "current-snapshot-id").getOrElse(
-      sys.error(s"LoadTableResult for $ident has no current-snapshot-id"))
-    serve(ident, ltr, snapId)
+    serve(ident, ltr, currentSnapshot(ident, ltr))
   }
 
   /** `VERSION AS OF` — an integer addresses a snapshot id; any other
@@ -491,9 +488,7 @@ class RestBackedCatalog extends TableCatalog with SupportsNamespaces
     // through to ref resolution (and fail loudly), never silently
     // serve the head
     val snapId = version.trim.toLongOption.filter(_ >= 0).getOrElse {
-      val refs = jobjBlock(ltr, "refs").getOrElse(
-        sys.error(s"LoadTableResult for $ident serves no refs"))
-      jobjBlock(refs, version.trim).flatMap(jlong(_, "snapshot-id")).getOrElse(
+      long(at(ltr, "metadata", "refs", version.trim, "snapshot-id")).getOrElse(
         throw new IllegalArgumentException(
           s"table $ident has no ref '${version.trim}' in the wire catalog"))
     }
@@ -508,10 +503,9 @@ class RestBackedCatalog extends TableCatalog with SupportsNamespaces
     GraftCatalog.ensureStatsRule(spark)
     val ltr = loadResult(ident)
     val ms = timestamp / 1000L
-    val entries = graft.endpoint.RestCatalog.jarrBlock(ltr, "snapshot-log")
-      .toSeq.flatMap(graft.endpoint.RestCatalog.jobjElements)
+    val entries = arr(at(ltr, "metadata", "snapshot-log"))
       .flatMap(e => for {
-        t <- jlong(e, "timestamp-ms"); sid <- jlong(e, "snapshot-id")
+        t <- long(at(e, "timestamp-ms")); sid <- long(at(e, "snapshot-id"))
       } yield (t, sid))
     val snapId = entries.filter(_._1 <= ms).sortBy(_._1).lastOption.map(_._2)
       .getOrElse(throw new IllegalArgumentException(
@@ -529,23 +523,8 @@ class RestBackedCatalog extends TableCatalog with SupportsNamespaces
   override def listNamespaces(): Array[Array[String]] = {
     val (code, body) = get(s"/v1/${prefix}namespaces")
     require(code == 200, s"listNamespaces over $uri -> $code: $body")
-    // {"namespaces":[["db"],["a","b"],…]} — string elements per array
-    graft.endpoint.RestCatalog.jarrBlock(body, "namespaces").toArray.flatMap {
-      blk =>
-        // each top-level [...] element is one namespace path
-        var i = 0
-        val out = scala.collection.mutable.ArrayBuffer.empty[Array[String]]
-        while (i < blk.length) {
-          if (blk.charAt(i) == '[') {
-            val end = blk.indexOf(']', i)
-            require(end > i, s"unterminated namespace element in $body")
-            out += "\"((?:[^\"\\\\]|\\\\.)*)\"".r
-              .findAllMatchIn(blk.substring(i + 1, end)).map(_.group(1)).toArray
-            i = end + 1
-          } else i += 1
-        }
-        out
-    }
+    // {"namespaces":[["db"],["a","b"],…]} — one level array per namespace
+    arr(at(parse(body), "namespaces")).map(ns => strs(ns, "namespace").toArray).toArray
   }
 
   override def listNamespaces(namespace: Array[String]): Array[Array[String]] =
@@ -597,10 +576,9 @@ class RestBackedCatalog extends TableCatalog with SupportsNamespaces
         "&pageToken=" + java.net.URLEncoder.encode(t, "UTF-8"))
       val (code, body) = get(s"$basePath$q")
       require(code == 200, s"$what over $uri -> $code: $body")
-      // identifier objects carry exactly one "name" key each; the
-      // token rides its own "next-page-token" key, never a "name"
-      token = jfieldAll(body, "next-page-token").headOption
-      out ++= jfieldAll(body, "name")
+      val doc = parse(body)
+      token = str(at(doc, "next-page-token"))
+      out ++= arr(at(doc, "identifiers")).flatMap(i => str(at(i, "name")))
     }
     out.toSeq
   }
@@ -613,20 +591,24 @@ class RestBackedCatalog extends TableCatalog with SupportsNamespaces
     val (code, body) = get(viewsPath(ident))
     if (code == 404) throw new NoSuchViewException(ident)
     require(code == 200, s"loadView $ident over $uri -> $code: $body")
-    val reps = graft.endpoint.RestCatalog.jarrBlock(body, "representations")
-      .toSeq.flatMap(graft.endpoint.RestCatalog.jobjElements)
-    val sql = reps.find(r => jfieldAll(r, "dialect").headOption
-        .forall(d => d == "spark" || d == "default"))
-      .flatMap(r => jfieldAll(r, "sql").headOption)
-      .map(graft.endpoint.RestCatalog.junescape)
+    // the current version's spark-dialect (or sole) SQL representation
+    // and the fields of the schema that version names
+    val meta = at(parse(body), "metadata")
+    val version = arr(at(meta, "versions")).find(v =>
+      long(at(v, "version-id")) == long(at(meta, "current-version-id")))
+      .getOrElse(sys.error(s"LoadViewResult for $ident has no current version"))
+    val sql = arr(at(version, "representations"))
+      .find(r => str(at(r, "dialect")).forall(d => d == "spark" || d == "default"))
+      .flatMap(r => str(at(r, "sql")))
       .getOrElse(sys.error(s"LoadViewResult for $ident has no spark sql " +
         "representation"))
-    val fields = graft.endpoint.RestCatalog.jarrBlock(body, "fields")
-      .toSeq.flatMap(graft.endpoint.RestCatalog.jobjElements)
+    val fields = arr(at(meta, "schemas"))
+      .find(sc => long(at(sc, "schema-id")) == long(at(version, "schema-id")))
+      .toList.flatMap(sc => arr(at(sc, "fields")))
       .flatMap { f =>
         for {
-          n <- jfieldAll(f, "name").headOption
-          t <- jfieldAll(f, "type").headOption
+          n <- str(at(f, "name"))
+          t <- str(at(f, "type"))
         } yield s"`$n` ${sparkDdlType(t)}"
       }
     val viewSchema =
@@ -649,12 +631,11 @@ class RestBackedCatalog extends TableCatalog with SupportsNamespaces
 
   override def createView(info: ViewInfo): View = {
     val body =
-      s"""{"name":${graft.endpoint.RestCatalog.jstr(info.ident.name)},""" +
+      s"""{"name":${jstr(info.ident.name)},""" +
         s""""view-version":{"version-id":1,""" +
-        s""""default-namespace":[${info.ident.namespace.map(
-          graft.endpoint.RestCatalog.jstr).mkString(",")}],""" +
+        s""""default-namespace":[${info.ident.namespace.map(jstr).mkString(",")}],""" +
         s""""representations":[{"type":"sql",""" +
-        s""""sql":${graft.endpoint.RestCatalog.jstr(info.sql)},""" +
+        s""""sql":${jstr(info.sql)},""" +
         s""""dialect":"spark"}]}}"""
     val (code, resp) = post(
       s"/v1/${prefix}namespaces/${nsPath(info.ident.namespace)}/views", body)

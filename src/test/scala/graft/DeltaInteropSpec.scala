@@ -346,4 +346,30 @@ class DeltaInteropSpec extends SparkSpec {
     val (files3, _, _) = DeltaInterop.readLog(spark, export)
     assert(spark.read.parquet(files3: _*).count() === 90)
   }
+
+  test("exported log lines escape strings byte-exactly and parse back") {
+    val root = "/tmp/graft_test/delta_escape"
+    SnapshotTable.drop(spark, root)
+    SnapshotTable.commit(spark, root, Seq((1L, "a")).toDF("id", "v"))
+    val export = "/tmp/graft_test/delta_escape_out"
+    SnapshotTable.drop(spark, export)
+    DeltaInterop.writeLog(spark, root, export)
+    val p = new Path(s"$export/_delta_log/" + "%020d.json".format(0))
+    val lines = {
+      val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+      try new String(in.readAllBytes(), "UTF-8").split("\n").toSeq finally in.close()
+    }
+    // schemaString is a JSON document inside a JSON string: its quotes
+    // arrive escaped, exactly once
+    val meta = lines.find(_.startsWith("{\"metaData\"")).get
+    assert(meta.contains(
+      "\"schemaString\":\"{\\\"type\\\":\\\"struct\\\",\\\"fields\\\":[{\\\"name\\\":\\\"id\\\""),
+      meta)
+    val schema = Json.str(Json.at(Json.parse(meta), "metaData", "schemaString")).get
+    assert(org.apache.spark.sql.types.DataType.fromJson(schema)
+      .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq == Seq("id", "v"))
+    val added = lines.flatMap(l => Json.str(Json.at(Json.parse(l), "add", "path")))
+    assert(added.map(new Path(_).getName) ==
+      SnapshotTable.dataFiles(spark, root, 1).map(new Path(_).getName), lines)
+  }
 }

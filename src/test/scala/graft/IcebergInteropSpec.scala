@@ -627,4 +627,17 @@ class IcebergInteropSpec extends SparkSpec {
       .findFirstMatchIn(metaJson).get.group(1).replace("\\\"", "\"")
     assert(nm.contains("""{"field-id":2,"names":["v"]}"""), nm)
   }
+
+  test("exported metadata escapes strings byte-exactly and parses back") {
+    val root = "/tmp/graft_test/ice_escape"
+    SnapshotTable.drop(spark, root)
+    SnapshotTable.commit(spark, root, Seq((1L, "a")).toDF("id", "v"))
+    val (k, v) = ("q\"k", "a\\b\n\tc\u0001/é")
+    val cur = SnapshotTable.setProperties(spark, root, Map(k -> v))
+    val (_, metaJson) = IcebergInterop.writeMetadata(spark, root, cur)
+    // quote, backslash, newline, tab and control chars escape; '/' and
+    // non-ASCII pass through
+    assert(metaJson.contains("\"q\\\"k\":\"a\\\\b\\n\\tc\\u0001/é\""), metaJson)
+    assert(Json.str(Json.at(Json.parse(metaJson), "properties", k)).contains(v))
+  }
 }

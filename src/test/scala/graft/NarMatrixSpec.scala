@@ -129,7 +129,7 @@ class NarMatrixSpec extends SparkSpec {
       def snapId: Long = {
         val (c, ltr) = RestCatalog.get(port, base)
         assert(c == 200, ltr)
-        RestCatalog.jlong(ltr, "current-snapshot-id").get
+        Json.long(Json.at(Json.parse(ltr), "metadata", "current-snapshot-id")).get
       }
       def wireCommit(files: Seq[String], asserted: Long): (Int, String) =
         RestCatalog.post(port, base,

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.hadoop.fs.Path
 
+import graft.Json.{arr, at, long, parse, present, str}
 import graft.endpoint.RestCatalog
 import graft.lake.SnapshotTable
 import graft.sources.{Catalog, PersistentCatalog}
@@ -47,15 +48,16 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(c2 == 200 && ns.contains("\"graft\""), ns)
     val (c3, listing) = RestCatalog.get(port, "/v1/tables")
     assert(c3 == 200)
-    val names = RestCatalog.jfieldAll(listing, "name").toSet
+    val names = RestCatalog.listedNames(listing).toSet
     assert(Set("lineitem", "orders", "events", "documents").subsetOf(names), names.toString)
   }
 
   test("describe returns DESCRIBE-spelled columns over the wire") {
     val (code, body) = RestCatalog.get(port, "/v1/tables/lineitem")
     assert(code == 200, body)
-    val cols = RestCatalog.jfieldAll(body, "name").drop(1) // first "name" is the table's
-    val types = RestCatalog.jfieldAll(body, "type")
+    val columns = arr(at(parse(body), "columns"))
+    val cols = columns.flatMap(c => str(at(c, "name")))
+    val types = columns.flatMap(c => str(at(c, "type")))
     val byName = cols.zip(types).toMap
     assert(byName.get("l_orderkey").contains("bigint"), byName.toString)
     assert(byName.get("l_returnflag").contains("string"), byName.toString)
@@ -64,9 +66,9 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   test("stats match the engine's own counts") {
     val (code, body) = RestCatalog.get(port, "/v1/tables/region/stats")
     assert(code == 200, body)
-    assert(RestCatalog.jlong(body, "row_count").contains(
+    assert(long(at(parse(body), "row_count")).contains(
       spark.table("graft.region").count()), body)
-    assert(RestCatalog.jlong(body, "n_cols").contains(
+    assert(long(at(parse(body), "n_cols")).contains(
       spark.table("graft.region").schema.size.toLong), body)
   }
 
@@ -87,12 +89,12 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     // data files' parent is not the point here: the catalog stores the
     // location verbatim; pointer is the snapshot-aware surface
     val (_, listing) = RestCatalog.get(port, "/v1/tables")
-    assert(RestCatalog.jfieldAll(listing, "name").contains("rest_spec_created"))
+    assert(RestCatalog.listedNames(listing).contains("rest_spec_created"))
 
     val (c2, ptr) = RestCatalog.get(port, "/v1/tables/rest_spec_created/pointer")
     assert(c2 == 200, ptr)
     val v = SnapshotTable.currentVersion(spark, loc)
-    assert(RestCatalog.jlong(ptr, "snapshot_version").contains(v.toLong), ptr)
+    assert(long(at(parse(ptr), "snapshot_version")).contains(v.toLong), ptr)
     assert(ptr.contains(s"_manifests/v$v.manifest"), ptr)
 
     // durability: the registry table's LATEST version records the DDL —
@@ -119,7 +121,7 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       (1 to 25).map { _ =>
         val (c, listing) = RestCatalog.get(port, "/v1/tables")
         assert(c == 200, listing)
-        val names = RestCatalog.jfieldAll(listing, "name")
+        val names = RestCatalog.listedNames(listing)
         assert(names.contains("lineitem"))
         val (c2, d) = RestCatalog.get(port, "/v1/tables/orders")
         assert(c2 == 200 && d.contains("o_orderkey"), d)
@@ -134,14 +136,14 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
           s"""{"name":"rest_spec_conc_$i","format":"parquet","location":"$loc"}""")
         assert(c == 201, resp)
         val (c2, stats) = RestCatalog.get(port, s"/v1/tables/rest_spec_conc_$i/stats")
-        assert(c2 == 200 && RestCatalog.jlong(stats, "row_count").contains(1L), stats)
+        assert(c2 == 200 && long(at(parse(stats), "row_count")).contains(1L), stats)
       }
     }
     Await.result(writer, 120.seconds)
     val lastSeen = Await.result(reader, 120.seconds)
     assert(lastSeen >= 3) // sanity: listings stayed parseable throughout
     val (_, fin) = RestCatalog.get(port, "/v1/tables")
-    val names = RestCatalog.jfieldAll(fin, "name")
+    val names = RestCatalog.listedNames(fin)
     (1 to 3).foreach(i => assert(names.contains(s"rest_spec_conc_$i"), names.toString))
   }
 
@@ -166,7 +168,7 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val (c2, d) = RestCatalog.get(port, "/v1/tables/rest_spec_view")
     assert(c2 == 200 && d.contains("\"kind\":\"view\"") && d.contains("region"), d)
     val (c3, stats) = RestCatalog.get(port, "/v1/tables/rest_spec_view/stats")
-    assert(c3 == 200 && RestCatalog.jlong(stats, "row_count").contains(
+    assert(c3 == 200 && long(at(parse(stats), "row_count")).contains(
       spark.table("graft.region").count()), stats)
     // durably recorded with its defining SQL
     val reg = lake.SnapshotTable.read(spark, registryRoot)
@@ -188,7 +190,7 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val (c2, resp) = RestCatalog.delete(port, "/v1/tables/rest_spec_dropme")
     assert(c2 == 200, resp)
     val (_, listing) = RestCatalog.get(port, "/v1/tables")
-    assert(!RestCatalog.jfieldAll(listing, "name").contains("rest_spec_dropme"))
+    assert(!RestCatalog.listedNames(listing).contains("rest_spec_dropme"))
     assert(!spark.catalog.tableExists("graft.rest_spec_dropme"))
   }
 
@@ -206,8 +208,8 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val (c2, resp) = RestCatalog.post(port, "/v1/tables/rest_spec_maint/maintain",
       """{"small_bytes":1048576,"target_bytes":1073741824,"keep_versions":1,"orphan_grace_ms":0}""")
     assert(c2 == 200, resp)
-    assert(RestCatalog.jlong(resp, "packed_version").contains(4L), resp)
-    assert(RestCatalog.jlong(resp, "final_version").contains(4L), resp)
+    assert(long(at(parse(resp), "packed_version")).contains(4L), resp)
+    assert(long(at(parse(resp), "final_version")).contains(4L), resp)
     assert(resp.contains("\"expired_versions\":[1,2,3]"), resp)
     assert(SnapshotTable.read(spark, loc).count() === 24,
       "content preserved through wire-driven maintenance")
@@ -372,7 +374,7 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       val (cTok, tok) = RestCatalog.post(aport, "/v1/oauth/tokens",
         "grant_type=client_credentials&client_id=trino&client_secret=s3cr3t", form)
       assert(cTok == 200 && tok.contains("\"token_type\":\"bearer\""), tok)
-      val access = RestCatalog.jfieldAll(tok, "access_token").head
+      val access = str(at(parse(tok), "access_token")).get
       val (cOk, listing) = RestCatalog.get(aport, "/v1/tables",
         Seq("Authorization" -> s"Bearer $access"))
       assert(cOk == 200 && listing.contains("lineitem"), listing)
@@ -433,7 +435,7 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     // matching uuid + matching ref snapshot-id commits zero-copy
     val (cL, load) = RestCatalog.get(port, base)
     assert(cL == 200, load)
-    val uuid = RestCatalog.jfieldAll(load, "table-uuid").head
+    val uuid = str(at(parse(load), "metadata", "table-uuid")).get
     val (cOk, rOk) = RestCatalog.post(port, base,
       s"""{"requirements":[{"type":"assert-table-uuid","uuid":"$uuid"},
          |{"type":"assert-ref-snapshot-id","ref":"main","snapshot-id":1}],
@@ -814,7 +816,7 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
         while (!done) {
           val (lc, load) = RestCatalog.get(port, base)
           assert(lc == 200, load)
-          val snap = RestCatalog.jlong(load, "current-snapshot-id").get
+          val snap = long(at(parse(load), "metadata", "current-snapshot-id")).get
           val (c, r) = RestCatalog.post(port, base,
             s"""{"requirements":[{"type":"assert-ref-snapshot-id","ref":"main","snapshot-id":$snap}],
                |"updates":[{"action":"add-snapshot","snapshot":{"added-data-files":["$f"]}}]}""".stripMargin)
@@ -862,7 +864,7 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(c1 == 200, r1)
     assert(SnapshotTable.tags(spark, loc).get("rel").contains(1))
     // the 200 response's metadata already serves the new ref
-    assert(RestCatalog.jobjBlock(r1, "refs").exists(_.contains("\"rel\"")), r1)
+    assert(present(at(parse(r1), "metadata", "refs", "rel")), r1)
     // absent-assertion replay now 409s (the ref exists)
     val (c2, r2) = RestCatalog.post(port, base, mk)
     assert(c2 == 409 && r2.contains("requirement failed"), r2)
@@ -914,8 +916,8 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(c14 == 200)
     val (cL, load) = RestCatalog.get(port, base)
     assert(cL == 200)
-    val refs = RestCatalog.jobjBlock(load, "refs").get
-    assert(!refs.contains("\"rel\"") && refs.contains("\"main\""), refs)
+    val refs = at(parse(load), "metadata", "refs")
+    assert(!present(at(refs, "rel")) && present(at(refs, "main")), load)
     // ref commits may not mix with snapshot/schema/property commits
     val (c15, r15) = RestCatalog.post(port, base,
       """{"updates":[{"action":"set-snapshot-ref","ref-name":"x","type":"tag","snapshot-id":1},
@@ -986,8 +988,8 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val (_, lA) = RestCatalog.get(port, "/v1/spec_wh_a/tables")
     val (_, lB) = RestCatalog.get(port, "/v1/spec_wh_b/tables")
     val (_, lRoot) = RestCatalog.get(port, "/v1/tables")
-    assert(RestCatalog.jfieldAll(lA, "name") == Seq("t1"), lA)
-    assert(RestCatalog.jfieldAll(lB, "name").isEmpty, lB)
+    assert(RestCatalog.listedNames(lA) == Seq("t1"), lA)
+    assert(RestCatalog.listedNames(lB).isEmpty, lB)
     assert(!lRoot.contains("\"t1\""), "warehouse table leaked into the root catalog")
     // a non-empty warehouse refuses DELETE; after dropping its table it goes
     assert(RestCatalog.delete(port, "/management/v1/warehouse/spec_wh_a")._1 == 409)
@@ -1025,7 +1027,7 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(RestCatalog.get(port, "/management/v1/warehouse/mgmt_wh")._1 == 404)
     assert(RestCatalog.get(port, "/management/v1/warehouse/mgmt_wh2")._1 == 200)
     val (lc, l) = RestCatalog.get(port, "/v1/mgmt_wh2/tables")
-    assert(lc == 200 && RestCatalog.jfieldAll(l, "name") == Seq("s1"), l)
+    assert(lc == 200 && RestCatalog.listedNames(l) == Seq("s1"), l)
     // rename collisions / validation refuse
     assert(RestCatalog.post(port, "/management/v1/warehouse/mgmt_wh2/rename",
       """{"new-name":"tables"}""")._1 == 400)
@@ -1065,7 +1067,7 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(rc == 201)
     val (lc, ltr) = RestCatalog.get(port, "/v1/namespaces/graft/tables/rest_spec_req")
     assert(lc == 200, ltr)
-    val uuid = RestCatalog.jfieldAll(ltr, "table-uuid").head
+    val uuid = str(at(parse(ltr), "metadata", "table-uuid")).get
     // the FIRST requirement carries a stray snapshot-id field (999); a
     // whole-block scan would bind the assert-ref check to 999 and 409
     // a perfectly valid commit (r17 ADVICE). Per-object parsing reads
@@ -1186,7 +1188,7 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       "grant_type=client_credentials&client_id=engine&client_secret=pw",
       Seq("Content-Type" -> "application/x-www-form-urlencoded"))
     assert(tc == 200, tok)
-    val bearer = RestCatalog.jfieldAll(tok, "access_token").head
+    val bearer = str(at(parse(tok), "access_token")).get
     val (rc, _) = RestCatalog.post(aport, "/v1/tables",
       s"""{"name":"rest_spec_auth_mnt","format":"graft-snapshot","location":"$root"}""",
       Seq("Authorization" -> s"Bearer $bearer"))
@@ -1221,7 +1223,7 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val (_, tokBody) = RestCatalog.post(aport, "/v1/oauth/tokens",
       "grant_type=client_credentials&client_id=engine&client_secret=pw", form)
     val bearer = Seq("Authorization" ->
-      s"Bearer ${RestCatalog.jfieldAll(tokBody, "access_token").head}")
+      s"Bearer ${str(at(parse(tokBody), "access_token")).get}")
     // sts-enabled warehouse with an (in-memory-only) storage credential
     // and a 2-second vend TTL so expiry is testable
     val (cw, rw) = RestCatalog.post(aport, "/management/v1/warehouse",
@@ -1260,7 +1262,8 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(!ltr.contains("sts-sekrit") && !ltr.contains("AKIA123"), ltr)
     val (_, whList) = RestCatalog.get(aport, "/management/v1/warehouse", bearer)
     assert(!whList.contains("sts-sekrit"), whList)
-    val vended = RestCatalog.jfieldAll(ltr, "s3.session-token").head
+    val vended = arr(at(parse(ltr), "storage-credentials"))
+      .flatMap(c => str(at(c, "config", "s3.session-token"))).head
     val vBearer = Seq("Authorization" -> s"Bearer $vended")
     // the vended token is a SCOPED bearer: its own table's load ONLY;
     // other tables / writes / listings 401 — and it CANNOT refresh

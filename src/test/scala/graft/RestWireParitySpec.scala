@@ -2,6 +2,7 @@ package graft
 
 import org.apache.hadoop.fs.Path
 
+import graft.Json.{arr, at, long, parse, str}
 import graft.endpoint.RestCatalog
 import graft.lake.SnapshotTable
 import graft.sources.{Catalog, PersistentCatalog, RestBackedCatalog}
@@ -56,7 +57,7 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     SnapshotTable.drop(spark, loc)
     SnapshotTable.commit(spark, loc, rows.toDF("id", "v"))
     val (rc, rr) = RestCatalog.post(port, "/v1/tables",
-      s"""{"name":"$name","format":"graft-snapshot","location":${RestCatalog.jstr(loc)}}""")
+      s"""{"name":"$name","format":"graft-snapshot","location":${Json.jstr(loc)}}""")
     assert(rc == 201, rr)
     loc
   }
@@ -76,7 +77,7 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
   test("paged table listing walks to exactly the unpaged listing") {
     val (c0, unpaged) = RestCatalog.get(port, "/v1/namespaces/graft/tables")
     assert(c0 == 200, unpaged)
-    val all = RestCatalog.jfieldAll(unpaged, "name")
+    val all = RestCatalog.listedNames(unpaged)
     assert(all.size >= 10, all.toString) // the registered sf tables
     assert(!unpaged.contains("next-page-token"), unpaged)
     var token = Option.empty[String]
@@ -88,8 +89,8 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
         s"&pageToken=${java.net.URLEncoder.encode(t, "UTF-8")}")
       val (c, body) = RestCatalog.get(port, s"/v1/namespaces/graft/tables$q")
       assert(c == 200, body)
-      pages :+= RestCatalog.jfieldAll(body, "name")
-      token = RestCatalog.jfieldAll(body, "next-page-token").headOption
+      pages :+= RestCatalog.listedNames(body)
+      token = str(at(parse(body), "next-page-token"))
     }
     assert(pages.init.forall(_.size == 3), pages.toString)
     assert(pages.flatten == all.sorted, pages.flatten.toString)
@@ -129,7 +130,7 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     val (sc, stats) = RestCatalog.get(port,
       "/management/v1/warehouse/w19_metrics/statistics")
     assert(sc == 200, stats)
-    assert(RestCatalog.jlong(stats, "metrics-reports").contains(2L), stats)
+    assert(long(at(parse(stats), "metrics-reports")).contains(2L), stats)
     RestCatalog.delete(port, "/v1/w19_metrics/tables/t_m")
     assert(RestCatalog.delete(port, "/management/v1/warehouse/w19_metrics")._1 == 200)
   }
@@ -157,7 +158,7 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     assert(RestCatalog.head(port, "/v1/namespaces/graft/views/rest_w19_badview") == 404)
     // listing includes it (and the registry's events view)
     val (lc, listing) = RestCatalog.get(port, "/v1/namespaces/graft/views")
-    val names = RestCatalog.jfieldAll(listing, "name").toSet
+    val names = RestCatalog.listedNames(listing).toSet
     assert(lc == 200 && names.contains("rest_w19_view") && names.contains("events"),
       listing)
     assert(RestCatalog.head(port, "/v1/namespaces/graft/views/rest_w19_view") == 204)
@@ -167,8 +168,10 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     // load: sql representation + a materialized metadata-location
     val (gc, lvr) = RestCatalog.get(port, "/v1/namespaces/graft/views/rest_w19_view")
     assert(gc == 200, lvr)
-    assert(RestCatalog.jfieldAll(lvr, "sql").head.contains("rest_w19_base"), lvr)
-    val metaLoc = RestCatalog.jfieldAll(lvr, "metadata-location").head
+    val sqls = arr(at(parse(lvr), "metadata", "versions"))
+      .flatMap(v => arr(at(v, "representations"))).flatMap(r => str(at(r, "sql")))
+    assert(sqls.head.contains("rest_w19_base"), lvr)
+    val metaLoc = str(at(parse(lvr), "metadata-location")).get
     val mp = new Path(metaLoc)
     assert(mp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(mp),
       metaLoc)
@@ -221,7 +224,7 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
       s"""{"identifier":{"namespace":["graft"],"name":"$name"},
          |"requirements":[{"type":"assert-ref-snapshot-id","ref":"main","snapshot-id":$assertSnap}],
          |"updates":[{"action":"add-snapshot","snapshot":{"summary":{"operation":"append"},
-         |"added-data-files":[${RestCatalog.jstr(file)}]}}]}""".stripMargin
+         |"added-data-files":[${Json.jstr(file)}]}}]}""".stripMargin
     // both land atomically
     val (tc, tr) = RestCatalog.post(port, "/v1/transactions/commit",
       s"""{"table-changes":[${change("rest_w19_txna", fa, 1)},${change("rest_w19_txnb", fb, 1)}]}""")
@@ -263,7 +266,7 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
         |{"id":1,"name":"id","type":"long"},
         |{"id":2,"name":"v","type":"string"}]}}""".stripMargin)
     assert(rc == 200, rr)
-    val nestedLoc = RestCatalog.jfieldAll(rr, "location").head
+    val nestedLoc = str(at(parse(rr), "metadata", "location")).get
     mkSnapshotTable("rest_w19_txnroot", Seq(1L -> "r"))
     val fRoot = stageOne("txnroot", Seq(2L -> "r2"))
     val fNested = stageOne("txnnested", Seq(101L -> "n2"))
@@ -271,7 +274,7 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
       s"""{"identifier":{"namespace":[$nsJson],"name":"$name"},
          |"requirements":[{"type":"assert-ref-snapshot-id","ref":"main","snapshot-id":$snap}],
          |"updates":[{"action":"add-snapshot","snapshot":{
-         |"added-data-files":[${RestCatalog.jstr(file)}]}}]}""".stripMargin
+         |"added-data-files":[${Json.jstr(file)}]}}]}""".stripMargin
     // one transaction lands a root-namespace table AND a nested one
     val (tc, tr) = RestCatalog.post(port, "/v1/transactions/commit",
       s"""{"table-changes":[${change("\"graft\"", "rest_w19_txnroot", fRoot, 1)},${
@@ -308,7 +311,7 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
          |{"type":"assert-ref-snapshot-id","ref":"main","snapshot-id":2},
          |{"type":"assert-ref-snapshot-id","ref":"keep","snapshot-id":$keepAt}],
          |"updates":[{"action":"add-snapshot","snapshot":{
-         |"added-data-files":[${RestCatalog.jstr(f)}]}}]}""".stripMargin
+         |"added-data-files":[${Json.jstr(f)}]}}]}""".stripMargin
     // main holds but the SECOND assertion (tag keep at 2) is stale:
     // first-match validation would silently ignore it and land
     val (c1, r1) = RestCatalog.post(port,
@@ -344,7 +347,7 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
       s"""{"requirements":[{"type":"assert-ref-snapshot-id","ref":"main",
          |"snapshot-id":${SnapshotTable.currentVersion(spark, loc)}}],
          |"updates":[{"action":"add-snapshot","snapshot":{
-         |"added-data-files":[${RestCatalog.jstr(file)}]}}]}""".stripMargin)
+         |"added-data-files":[${Json.jstr(file)}]}}]}""".stripMargin)
     val (bc, br) = commit(one(badDir))
     assert(bc == 409 && br.contains("schema"), br)
     assert(SnapshotTable.currentVersion(spark, loc) == 1)
@@ -403,7 +406,7 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     (2 to 4).foreach(k => SnapshotTable.commitAppend(spark, loc,
       Seq(k.toLong -> s"r$k").toDF("id", "v")))
     val (rc, _) = RestCatalog.post(port, "/v1/tables",
-      s"""{"name":"rest_w19_ret","format":"graft-snapshot","location":${RestCatalog.jstr(loc)}}""")
+      s"""{"name":"rest_w19_ret","format":"graft-snapshot","location":${Json.jstr(loc)}}""")
     assert(rc == 201)
     val s3 = spark.newSession()
     val mroot = s"$tableArea/ret_mounts"
@@ -498,10 +501,10 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
            |"snapshot-id":$assertSnap}],
            |"updates":[{"action":"add-snapshot","snapshot":{
            |"summary":{"operation":"overwrite"},
-           |"added-data-files":[${dataFiles.map(RestCatalog.jstr).mkString(",")}],
+           |"added-data-files":[${dataFiles.map(Json.jstr).mkString(",")}],
            |"added-delete-files":[${delEntries.mkString(",")}]}}]}""".stripMargin)
     def eqEntry(path: String): String =
-      s"""{"content":"equality-deletes","path":${RestCatalog.jstr(path)},
+      s"""{"content":"equality-deletes","path":${Json.jstr(path)},
          |"equality-field-names":["id"]}""".stripMargin
     // the CDC update batch: delete key 2, insert its replacement — ONE
     // commit; the same commit's own row survives (shared sequence
@@ -548,7 +551,7 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
          |"updates":[{"action":"add-snapshot","snapshot":{
          |"summary":{"operation":"delete"},
          |"added-delete-files":[{"content":"position-deletes",
-         |"path":${RestCatalog.jstr(posFile)}}]}}]}""".stripMargin)
+         |"path":${Json.jstr(posFile)}}]}}]}""".stripMargin)
     assert(uc == 200, ur)
     assert(rows(loc) == Set(1L -> "a", 2L -> "b", 4L -> "d"), rows(loc))
     RestCatalog.delete(port, "/v1/tables/rest_w20_pos")
@@ -566,11 +569,11 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     val keys = stageKeys("w20dval", Seq(1L))
     // no content field / unknown content / missing field names / a
     // path that doesn't exist — all client errors
-    assert(commit(s"""{"path":${RestCatalog.jstr(keys)}}""")._1 == 400)
+    assert(commit(s"""{"path":${Json.jstr(keys)}}""")._1 == 400)
     assert(commit(s"""{"content":"verschmutzt","path":${
-      RestCatalog.jstr(keys)}}""")._1 == 400)
+      Json.jstr(keys)}}""")._1 == 400)
     assert(commit(s"""{"content":"equality-deletes","path":${
-      RestCatalog.jstr(keys)}}""")._1 == 400)
+      Json.jstr(keys)}}""")._1 == 400)
     assert(commit(s"""{"content":"equality-deletes","path":"/nope.parquet",
       |"equality-field-names":["id"]}""".stripMargin)._1 == 400)
     // empty everything is the documented 400
@@ -580,7 +583,7 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     // a positional file without (file_path, pos) is a 400 naming the shape
     val badPos = stageOne("w20dvalpos", Seq(9L -> "z"))
     val (pc, pr) = commit(s"""{"content":"position-deletes","path":${
-      RestCatalog.jstr(badPos)}}""")
+      Json.jstr(badPos)}}""")
     assert(pc == 400 && pr.contains("file_path"), pr)
     // an eq file whose declared column the file carries but the TABLE
     // schema does not — the schema-evolution 409 class
@@ -592,11 +595,11 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     val zzFile = zp.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .listStatus(zp).map(_.getPath.toString).filter(_.endsWith(".parquet")).head
     val (zc, zr) = commit(s"""{"content":"equality-deletes","path":${
-      RestCatalog.jstr(zzFile)},"equality-field-names":["zz"]}""")
+      Json.jstr(zzFile)},"equality-field-names":["zz"]}""")
     assert(zc == 409 && zr.contains("re-stage"), zr)
     // a declared key column the FILE does not carry is a 400
     val (mc, mr) = commit(s"""{"content":"equality-deletes","path":${
-      RestCatalog.jstr(keys)},"equality-field-names":["id","vv"]}""")
+      Json.jstr(keys)},"equality-field-names":["id","vv"]}""")
     assert(mc == 400 && mr.contains("vv"), mr)
     // nothing landed through any of that
     assert(SnapshotTable.currentVersion(spark,
@@ -617,13 +620,13 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
            |{"identifier":{"namespace":["graft"],"name":"rest_w20_txd"},
            |"requirements":[{"type":"assert-ref-snapshot-id","ref":"main","snapshot-id":$assertD}],
            |"updates":[{"action":"add-snapshot","snapshot":{
-           |"added-data-files":[${RestCatalog.jstr(upData)}],
+           |"added-data-files":[${Json.jstr(upData)}],
            |"added-delete-files":[{"content":"equality-deletes",
-           |"path":${RestCatalog.jstr(upKeys)},"equality-field-names":["id"]}]}}]},
+           |"path":${Json.jstr(upKeys)},"equality-field-names":["id"]}]}}]},
            |{"identifier":{"namespace":["graft"],"name":"rest_w20_txe"},
            |"requirements":[{"type":"assert-ref-snapshot-id","ref":"main","snapshot-id":$assertE}],
            |"updates":[{"action":"add-snapshot","snapshot":{
-           |"added-data-files":[${RestCatalog.jstr(appData)}]}}]}]}""".stripMargin)
+           |"added-data-files":[${Json.jstr(appData)}]}}]}]}""".stripMargin)
     // a stale assertion on the APPEND half aborts the upsert half too
     val (xc, xr) = tx(1, 9)
     assert(xc == 409 && xr.contains("nothing applied"), xr)
@@ -674,7 +677,7 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
          |{"identifier":{"namespace":["graft"],"name":"rest_w20_tga"},
          |"requirements":[{"type":"assert-ref-snapshot-id","ref":"main","snapshot-id":2}],
          |"updates":[{"action":"add-snapshot","snapshot":{
-         |"added-data-files":[${RestCatalog.jstr(f)}]}}]},${
+         |"added-data-files":[${Json.jstr(f)}]}}]},${
         refChange("rest_w20_tgb", "dev", "branch", 1, 2)}]}""".stripMargin)
     assert(mc == 204, mr)
     assert(SnapshotTable.currentVersion(spark, locA) == 3)
@@ -800,7 +803,8 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     val p2 = RestCatalog.serve(spark, whRoot)
     val (lc, listing) = RestCatalog.get(p2, "/management/v1/warehouse")
     assert(lc == 200, listing)
-    val names = RestCatalog.jfieldAll(listing, "name").toSet
+    val names = arr(at(parse(listing), "warehouses"))
+      .flatMap(w => str(at(w, "name"))).toSet
     assert(names.contains("ren_b") && !names.contains("ren_a"), listing)
     // the stale record was retired (the interrupted rename completed),
     // and the survivor is fully functional: drop reclaims cleanly
@@ -845,7 +849,8 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     val p2 = RestCatalog.serve(spark, whRoot)
     val (lc, listing) = RestCatalog.get(p2, "/management/v1/warehouse")
     assert(lc == 200, listing)
-    val names = RestCatalog.jfieldAll(listing, "name").toSet
+    val names = arr(at(parse(listing), "warehouses"))
+      .flatMap(w => str(at(w, "name"))).toSet
     assert(names.contains("tie_a") && !names.contains("tie_z"), listing)
     assert(!fs.exists(zPath))
     assert(RestCatalog.delete(p2, "/management/v1/warehouse/tie_a")._1 == 200)
