@@ -65,30 +65,10 @@ object Bench {
     out
   }
 
-  private def mkSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // steady-state MICROS: lake commits take the lock-free fast path
-      // in writingMicrosTimestamps instead of serializing every
-      // data-write behind the toggle lock
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.hive.thriftServer.singleSession", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    var spark = mkSession(cpus)
+    var spark = GraftSession.build()
     var restarts = 0
     // JIT/codegen warmup so the first measured query isn't charged
     // for JVM compilation of the whole scan/agg stack. Besides the
@@ -150,7 +130,7 @@ object Bench {
                 s"$name; restarting the session for the remaining entries")
               SparkSession.clearActiveSession()
               SparkSession.clearDefaultSession()
-              spark = mkSession(cpus)
+              spark = GraftSession.build()
               restarts += 1
             }
           }
@@ -176,12 +156,6 @@ object Bench {
       }
     val results = swept.collect { case (k, Right((m, s, ts))) => (k, m, s, ts) }
     val failed = swept.collect { case (k, Left(m)) => (k, m) }
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
     val qs = results.map { case (k, m, _, _) => "\"" + k + "\":" + fmt(m) }
       .mkString("{", ",", "}")
     val spreads = results.map { case (k, _, s, _) => "\"" + k + "\":" + fmt(s) }
@@ -194,7 +168,7 @@ object Bench {
     val repTimes = results.map { case (k, _, _, ts) =>
       "\"" + k + "\":[" + ts.map(fmt).mkString(",") + "]" }
       .mkString("{", ",", "}")
-    val errs = failed.map { case (k, m) => "\"" + k + "\":" + jstr(m) }
+    val errs = failed.map { case (k, m) => "\"" + k + "\":" + Json.jstr(m) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"errors":${failed.size},"restarts":$restarts,"queries":$qs,"spread":$spreads,"rep_times":$repTimes,"errored":$errs,"sf":"$sfDir"}"""

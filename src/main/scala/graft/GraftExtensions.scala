@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
@@ -26,9 +26,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => graft.plans.PushLimitThroughAsOfJoin)
     e.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsOfJoin)
     e.injectOptimizerRule(_ => graft.plans.SnapshotScanPruning)
-    // after pushdown (which wraps V1 scans), before stats consumers —
-    // exactly what the pre-CBO slot exists for
-    e.injectPreCBORule(_ => graft.plans.ForwardV1ScanStatistics)
+    // ForwardV1ScanStatistics is NOT injected here: it must run after
+    // the scan push-down that wraps V1 scans, and Spark 4.1 runs the
+    // pre-CBO batch before that push-down, so an injected copy never
+    // matches. GraftCatalog.loadTable installs it as an experimental
+    // optimization, which runs after the push-down.
     // one shared builder list (GraftFunctions.builders) feeds both
     // registration paths, so the SQL surfaces cannot diverge
     GraftFunctions.builders.foreach { case (name, builder) =>
@@ -38,4 +40,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         builder))
     }
   }
+}
+
+object GraftExtensions {
+
+  /** True when `spark` was built with these extensions (by
+    * `withExtensions` or `spark.sql.extensions`): their planner
+    * strategy is among the session's injected ones, and the rules
+    * injected with it are in its analyzer and optimizer already, so
+    * the runtime install helpers must not add them a second time.
+    */
+  def installedOn(spark: SparkSession): Boolean =
+    spark.sessionState.planner.extraPlanningStrategies.contains(AsOfJoinStrategy)
 }

@@ -207,9 +207,11 @@ object SqlEndpoint {
     }
     // the pruning rule rides the optimizer, so it applies to JDBC
     // queries the same as session queries
-    val rules = s.experimental.extraOptimizations
-    if (!rules.contains(graft.plans.SnapshotScanPruning))
-      s.experimental.extraOptimizations = rules :+ graft.plans.SnapshotScanPruning
+    if (!graft.GraftExtensions.installedOn(s)) {
+      val rules = s.experimental.extraOptimizations
+      if (!rules.contains(graft.plans.SnapshotScanPruning))
+        s.experimental.extraOptimizations = rules :+ graft.plans.SnapshotScanPruning
+    }
     SnapshotTable.read(s, root).createOrReplaceTempView(IndexedEventsView)
   }
 

@@ -7,17 +7,19 @@ import org.apache.spark.sql.{DataFrame, GraftSqlInternals, SparkSession}
   */
 object AsOf {
 
-  private def ensureStrategy(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies = cur :+ AsOfJoinStrategy
+  /** Runtime install for sessions not built with [[graft.GraftExtensions]]. */
+  private def ensureStrategy(spark: SparkSession): Unit =
+    if (!graft.GraftExtensions.installedOn(spark)) {
+      val cur = spark.experimental.extraStrategies
+      if (!cur.contains(AsOfJoinStrategy)) {
+        spark.experimental.extraStrategies = cur :+ AsOfJoinStrategy
+      }
+      val rules = spark.experimental.extraOptimizations
+      val missing = Seq(PruneAsOfJoinColumns, PushLimitThroughAsOfJoin, PushFilterThroughAsOfJoin).filterNot(rules.contains)
+      if (missing.nonEmpty) {
+        spark.experimental.extraOptimizations = rules ++ missing
+      }
     }
-    val rules = spark.experimental.extraOptimizations
-    val missing = Seq(PruneAsOfJoinColumns, PushLimitThroughAsOfJoin, PushFilterThroughAsOfJoin).filterNot(rules.contains)
-    if (missing.nonEmpty) {
-      spark.experimental.extraOptimizations = rules ++ missing
-    }
-  }
 
   /** As-of LEFT join. Backward (default): every left row picks the
     * most recent right row with equal key and `rightTime <= leftTime`;

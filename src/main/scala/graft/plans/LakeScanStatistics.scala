@@ -36,9 +36,9 @@ private[graft] class StatsForwardingV1ScanWrapper(w: V1ScanWrapper)
 /** Late optimizer rule (after V2ScanRelationPushDown, before any
   * stats consumer — JoinSelection reads logical stats at physical
   * planning): rewrap stats-capable V1 scans so their manifest-derived
-  * statistics reach Catalyst. Registered via [[graft.GraftExtensions]]
-  * and lazily by [[graft.sources.GraftCatalog]] for sessions the
-  * engine didn't create.
+  * statistics reach Catalyst. Registered lazily by
+  * [[graft.sources.GraftCatalog]] as an experimental optimization on
+  * every session (the extensions' slots all run before the push-down).
   */
 object ForwardV1ScanStatistics extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {

@@ -57,9 +57,11 @@ object GraftCatalog {
   /** Idempotently inject [[graft.plans.ForwardV1ScanStatistics]] into
     * `session`'s experimental optimizations — the rule that re-exposes
     * a graft V1Scan's manifest statistics after V1ScanWrapper hides
-    * them, enabling auto-broadcast of lake dims without hints.
+    * them, enabling auto-broadcast of lake dims without hints. Every
+    * session takes this path, [[graft.GraftExtensions]] ones included
+    * (see there why the extensions cannot inject it).
     */
-  private[sources] def ensureStatsRule(session: SparkSession): Unit =
+  private[graft] def ensureStatsRule(session: SparkSession): Unit =
     session.experimental.synchronized {
       val rules = session.experimental.extraOptimizations
       if (!rules.contains(graft.plans.ForwardV1ScanStatistics))

@@ -94,7 +94,7 @@ object RestBackedCatalog {
     * per extensions instance.
     */
   def ensureViewResolution(s: SparkSession): Unit =
-    viewRuleInjected.synchronized {
+    if (!graft.GraftExtensions.installedOn(s)) viewRuleInjected.synchronized {
       val ext = org.apache.spark.sql.GraftSqlInternals.extensionsOf(s)
       if (viewRuleInjected.add(ext)) {
         ext.injectResolutionRule(sess => graft.plans.ResolveWireViews(sess))

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Dev-only: phase attribution for dedup_cc_ann at scale (VERDICT r16
   * task 3 — "attribute the 43.2 s"). Breaks the entry into its
@@ -21,14 +22,7 @@ import org.apache.spark.sql.functions._
 object CcAnnProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     graft.functions.GraftFunctions.register(spark)
     def phase[T](name: String)(f: => T): T = {
       val t0 = System.nanoTime()

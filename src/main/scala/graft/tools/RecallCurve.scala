@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.ann.Ann
 
 /** Dev-only: recall-vs-tuning curves for the approximate ANN paths
@@ -12,10 +12,7 @@ import graft.ann.Ann
   */
 object RecallCurve {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     val corpus = Ann.clusteredCorpus(spark, clusters = 25,
       membersPerCluster = 40, dims = 16, noise = 0.15, seed = 42L).cache()
     val pred = col("vec_id") % 41 === 0

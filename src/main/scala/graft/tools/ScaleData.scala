@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.sources.Tables
 
 /** Dev-only: scale the driver testdata up by integer replication with
@@ -33,14 +34,7 @@ object ScaleData {
   def main(args: Array[String]): Unit = {
     val Array(src, dest, factorStr) = args.take(3)
     val factor = factorStr.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
 
     def maxOf(df: DataFrame, c: String): Long =
       df.agg(max(col(c))).head().getLong(0) + 1L

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** VERDICT r16 task 7: one entry's fatal executor loss (OOM stops a
@@ -22,31 +20,14 @@ class BenchResilienceSpec extends AnyFunSuite {
       Files.walk(out).sorted(java.util.Comparator.reverseOrder())
         .forEach(p => { Files.delete(p); () })
     Files.createDirectories(out)
-    val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = (Seq(javaBin) ++ addOpens ++ Seq(
-      "-Xmx2g", "-Dspark.ui.enabled=false",
-      "-cp", sys.props("java.class.path"), "graft.Bench")).asJava
-    val pb = new ProcessBuilder(cmd)
-    pb.environment().put("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    pb.environment().put("SPARK_GRAFT_CPUS", "4")
-    pb.environment().put("SPARK_GRAFT_BENCH_REPS", "1")
-    pb.environment().put("SPARK_GRAFT_BENCH_PLANT", "die")
-    pb.environment().put("SPARK_GRAFT_BENCH_ONLY",
-      "^(_planted_die|q01_pricing_summary|q06_revenue_filter)$")
-    pb.environment().put("SPARK_GRAFT_OUT_DIR", outDir)
-    pb.redirectErrorStream(true)
-    val proc = pb.start()
-    val log = new String(proc.getInputStream.readAllBytes(), "UTF-8")
-    val code = proc.waitFor()
+    val (code, log) = ForkedJvm.start("graft.Bench", Nil, Map(
+      "SPARK_GRAFT_SF_DIR" -> "/root/testdata/sf0.001",
+      "SPARK_GRAFT_CPUS" -> "4",
+      "SPARK_GRAFT_BENCH_REPS" -> "1",
+      "SPARK_GRAFT_BENCH_PLANT" -> "die",
+      "SPARK_GRAFT_BENCH_ONLY" ->
+        "^(_planted_die|q01_pricing_summary|q06_revenue_filter)$",
+      "SPARK_GRAFT_OUT_DIR" -> outDir)).await(600)
     // a sweep with failures exits nonzero — by design, not a crash
     assert(code == 1, s"bench exit $code; tail: ${log.takeRight(1500)}")
     val full = Files.readString(Paths.get(outDir, "bench_full.json"))

@@ -1,7 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import graft.lake.{CommitArbiter, SnapshotTable}
 
 /** VERDICT r16 task 8: CommitConcurrencySpec races THREADS in one JVM;
@@ -18,16 +16,6 @@ import graft.lake.{CommitArbiter, SnapshotTable}
 class CrossProcessCommitSpec extends SparkSpec {
   import spark.implicits._
 
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
   private def race(scheme: String): Unit = {
     val root = s"/tmp/graft_test/xproc_commits_$scheme"
     SnapshotTable.drop(spark, root)
@@ -35,35 +23,15 @@ class CrossProcessCommitSpec extends SparkSpec {
     conf.set(CommitArbiter.ConfKey, scheme)
     try {
       SnapshotTable.commit(spark, root, Seq((0L, "seed")).toDF("id", "v"))
-      val javaBin = java.nio.file.Paths
-        .get(sys.props("java.home"), "bin", "java").toString
-      val cmd = (Seq(javaBin) ++ addOpens ++ Seq(
-        "-Xmx2g", "-Dspark.ui.enabled=false",
-        "-cp", sys.props("java.class.path"),
-        "graft.tools.CommitRacer", root, "25", "1000", scheme)).asJava
-      val pb = new ProcessBuilder(cmd)
-      pb.redirectErrorStream(true)
-      val proc = pb.start()
-      // drain the child's output concurrently (a full pipe would
-      // deadlock it) while the host runs ITS 25 commits
-      val sb = new java.lang.StringBuilder
-      val drainer = new Thread(() => {
-        val in = proc.getInputStream
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { sb.append(new String(buf, 0, n, "UTF-8")); n = in.read(buf) }
-      })
-      drainer.setDaemon(true)
-      drainer.start()
+      val racer = ForkedJvm.start("graft.tools.CommitRacer",
+        Seq(root, "25", "1000", scheme))
+      // the host runs ITS 25 commits while the racer runs its own
       (0 until 25).foreach { i =>
         SnapshotTable.commitAppend(spark, root,
           Seq((2000L + i, s"host-$i")).toDF("id", "v"))
       }
-      assert(proc.waitFor(300, java.util.concurrent.TimeUnit.SECONDS),
-        "racer JVM did not finish")
-      drainer.join(10000)
-      val log = sb.toString
-      assert(proc.exitValue() == 0, s"racer failed: ${log.takeRight(2000)}")
+      val (code, log) = racer.await()
+      assert(code == 0, s"racer failed: ${log.takeRight(2000)}")
       assert(log.contains("RACER_DONE"), log.takeRight(2000))
       // strictly sequential chain: seed + 25 + 25 commits = v51
       assert(SnapshotTable.currentVersion(spark, root) === 51,

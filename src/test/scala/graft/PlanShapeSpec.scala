@@ -8,8 +8,18 @@ import org.apache.spark.sql.functions._
   */
 class PlanShapeSpec extends SparkSpec {
 
-  private def planOf(name: String): String =
-    SparkEntry.queries(name)(spark, sf()).queryExecution.executedPlan.toString
+  /** The physical plan as text. Under AQE (the GraftSession default)
+    * an unexecuted plan prints as `AdaptiveSparkPlan` over its initial
+    * plan; requiring a scan leaf keeps every absence check below from
+    * passing on a plan string that stops at the adaptive wrapper.
+    */
+  private def physical(df: org.apache.spark.sql.DataFrame): String = {
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("Scan"), s"plan text does not reach its scans:\n${p.take(1500)}")
+    p
+  }
+
+  private def planOf(name: String): String = physical(SparkEntry.queries(name)(spark, sf()))
 
   test("filters and column pruning reach the parquet scan (q06)") {
     val p = planOf("q06_revenue_filter")
@@ -32,14 +42,14 @@ class PlanShapeSpec extends SparkSpec {
       val suffix = math.abs(sf().hashCode).toString
       val joined = spark.table(s"graft_b_lineitem_$suffix")
         .join(spark.table(s"graft_b_orders_$suffix"), col("l_orderkey") === col("o_orderkey"))
-      val p = joined.queryExecution.executedPlan.toString
+      val p = physical(joined)
       assert(!p.contains("Exchange"), s"bucketed join should not shuffle:\n${p.take(2000)}")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("date filter prunes partitions on the curated layout") {
     val df = lake.LakeOps.partitionPruning(spark, sf())
-    val p = df.queryExecution.executedPlan.toString
+    val p = physical(df)
     assert(p.contains("PartitionFilters: [isnotnull(date"),
       s"no partition pruning in:\n${p.take(1500)}")
   }
@@ -54,7 +64,7 @@ class PlanShapeSpec extends SparkSpec {
       .withColumnRenamed("ts", "v_ts")
     val joined = plans.AsOf.join(l, r, "user_id", "v_user_id", "ts", "v_ts")
       .select("event_id", "v_event_id") // only ids + (implicitly) keys/time needed
-    val p = joined.queryExecution.executedPlan.toString
+    val p = physical(joined)
     assert(!p.contains("props"), s"props should be pruned from scans:\n${p.take(2500)}")
     assert(!p.contains("value#"), s"value should be pruned from scans:\n${p.take(2500)}")
   }
@@ -66,14 +76,26 @@ class PlanShapeSpec extends SparkSpec {
       .withColumnRenamed("event_id", "v_event_id")
       .withColumnRenamed("user_id", "v_user_id")
       .withColumnRenamed("ts", "v_ts")
-    val limited = plans.AsOf.join(l, r, "user_id", "v_user_id", "ts", "v_ts").limit(7)
+    val joined = plans.AsOf.join(l, r, "user_id", "v_user_id", "ts", "v_ts")
+    val limited = joined.limit(7)
     val optimized = limited.queryExecution.optimizedPlan.toString
     // a LocalLimit must appear BELOW the AsOfJoin (on its left child)
     val asofIdx = optimized.indexOf("AsOfJoin")
     assert(asofIdx >= 0)
     assert(optimized.indexOf("LocalLimit", asofIdx) > asofIdx,
       s"no pushed LocalLimit below AsOfJoin:\n${optimized.take(1500)}")
-    assert(limited.count() === 7) // and semantics hold
+    // and semantics hold: each limited left row keeps the match the
+    // unlimited join gives it (a limit below the join must not starve
+    // the right side of the rows a match needs). Rows are read whole:
+    // a select on top would put a Project between the limit and the
+    // join, and the plan that runs would not be the pushed one.
+    def matches(df: org.apache.spark.sql.DataFrame): Map[Long, Option[Long]] =
+      df.collect().map(row => row.getAs[Long]("event_id") ->
+        Option(row.getAs[Any]("v_event_id")).map(_.asInstanceOf[Long])).toMap
+    val got = matches(limited)
+    assert(got.size === 7)
+    val full = matches(joined)
+    got.foreach { case (id, m) => assert(full(id) === m, s"event $id") }
   }
 
   test("dimension joins broadcast (q05)") {
@@ -104,8 +126,7 @@ class PlanShapeSpec extends SparkSpec {
       // assert the shared exactSelf1nn plan directly instead.
       val e = sources.Tables.load(spark, sf(), "embeddings")
         .select("vec_id", "embedding")
-      val nn = dedup.Dedup.exactSelf1nn(spark, e)
-        .queryExecution.executedPlan.toString
+      val nn = physical(dedup.Dedup.exactSelf1nn(spark, e))
       assert(!nn.contains("BroadcastNestedLoopJoin") && !nn.contains("BroadcastExchange"))
       assert(nn.contains("partial_graft_topk"))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
@@ -121,6 +142,8 @@ class PlanShapeSpec extends SparkSpec {
 
   test("embedding ANN dedup joins within LSH buckets only") {
     val p = planOf("dedup_embedding_ann")
+    assert(p.contains("HashJoin") || p.contains("SortMergeJoin"),
+      s"candidate generation must be an equi-join:\n${p.take(2000)}")
     assert(!p.contains("BroadcastNestedLoopJoin"),
       s"candidate generation must be a bucket equi-join:\n${p.take(2000)}")
   }
@@ -133,7 +156,7 @@ class PlanShapeSpec extends SparkSpec {
     val d = sources.Tables.load(spark, sf(), "documents").select("doc_id", "text")
     val (exactEdges, reps) = dedup.Dedup.exactPrePass(d)
     Seq("exactEdges" -> exactEdges, "reps" -> reps).foreach { case (label, df) =>
-      val p = df.queryExecution.executedPlan.toString
+      val p = physical(df)
       assert(!p.contains("Window"), s"$label plan must not window:\n${p.take(2000)}")
       assert(p.contains("HashAggregate"), s"$label rep election must partial-agg:\n${p.take(2000)}")
     }
@@ -168,9 +191,9 @@ class PlanShapeSpec extends SparkSpec {
     assert(optimized.substring(0, asofIdx).contains("r_value"),
       s"right-side conjunct must stay above the join:\n${optimized.take(2000)}")
     // and the pushed conjunct reaches the left parquet scan
-    val physical = joined.queryExecution.executedPlan.toString
-    assert(physical.contains("PushedFilters: [IsNotNull(value), GreaterThan(value,100"),
-      s"pushed filter should reach the scan:\n${physical.take(2500)}")
+    val pushed = physical(joined)
+    assert(pushed.contains("PushedFilters: [IsNotNull(value), GreaterThan(value,100"),
+      s"pushed filter should reach the scan:\n${pushed.take(2500)}")
   }
 
   test("per-group top terms aggregate partially, no per-group window sort") {
@@ -284,7 +307,7 @@ class PlanShapeSpec extends SparkSpec {
     SnapshotTable.commit(spark, root,
       spark.range(1000).select(col("id"), (col("id") % 7).as("grp")).repartition(2))
     SnapshotTable.deleteWhereMor(spark, root, col("id") === 5L)
-    val p = SnapshotTable.read(spark, root).queryExecution.executedPlan.toString
+    val p = physical(SnapshotTable.read(spark, root))
     // the positional anti-join must be a broadcast of the Δ-row
     // delete set against the streaming scan — at 100 TB a sort-merge
     // here would shuffle the whole table to drop one row
@@ -302,7 +325,7 @@ class PlanShapeSpec extends SparkSpec {
       spark.range(1000).select(col("id"), (col("id") % 7).as("grp")).repartition(2))
     SnapshotTable.deleteWhereEq(spark, root, Seq("grp"),
       spark.range(1).select(lit(3L).as("grp")))
-    val p = SnapshotTable.read(spark, root).queryExecution.executedPlan.toString
+    val p = physical(SnapshotTable.read(spark, root))
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"),
       s"equality deletes must broadcast-anti-join on the key:\n${p.take(1500)}")
     assert(!p.contains("SortMergeJoin"),
@@ -310,7 +333,7 @@ class PlanShapeSpec extends SparkSpec {
     // folding the deletes must return the table to a join-free scan —
     // the pre-MoR plan, byte for byte of shape
     SnapshotTable.compactDeletes(spark, root)
-    val p2 = SnapshotTable.read(spark, root).queryExecution.executedPlan.toString
+    val p2 = physical(SnapshotTable.read(spark, root))
     assert(!p2.contains("Join"),
       s"compacted table must read as a plain scan:\n${p2.take(1500)}")
   }

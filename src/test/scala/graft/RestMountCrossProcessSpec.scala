@@ -1,7 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import graft.endpoint.RestCatalog
 import graft.lake.SnapshotTable
 import graft.sources.{Catalog, PersistentCatalog}
@@ -21,16 +19,6 @@ import graft.sources.{Catalog, PersistentCatalog}
   */
 class RestMountCrossProcessSpec extends SparkSpec {
   import spark.implicits._
-
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
   test("a forked JVM with only the URI reads head + tag via the wire catalog") {
     val base = "/tmp/graft_test/rest_mount_xproc"
@@ -53,31 +41,10 @@ class RestMountCrossProcessSpec extends SparkSpec {
       s"""{"name":"events_xp","format":"graft-snapshot","location":"$root"}""")
     assert(rc == 201, s"register events_xp -> $rc: $rr")
     try {
-      val javaBin = java.nio.file.Paths
-        .get(sys.props("java.home"), "bin", "java").toString
-      val cmd = (Seq(javaBin) ++ addOpens ++ Seq(
-        "-Xmx2g", "-Dspark.ui.enabled=false",
-        "-cp", sys.props("java.class.path"),
-        "graft.tools.RestMountReader",
-        s"http://127.0.0.1:$port", Catalog.DB, "events_xp", "audit_v1",
-        outDir)).asJava
-      val pb = new ProcessBuilder(cmd)
-      pb.redirectErrorStream(true)
-      val proc = pb.start()
-      val sb = new java.lang.StringBuilder
-      val drainer = new Thread(() => {
-        val in = proc.getInputStream
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { sb.append(new String(buf, 0, n, "UTF-8")); n = in.read(buf) }
-      })
-      drainer.setDaemon(true)
-      drainer.start()
-      assert(proc.waitFor(300, java.util.concurrent.TimeUnit.SECONDS),
-        "mount-reader JVM did not finish")
-      drainer.join(10000)
-      val log = sb.toString
-      assert(proc.exitValue() == 0, s"mount reader failed: ${log.takeRight(3000)}")
+      val (code, log) = ForkedJvm.start("graft.tools.RestMountReader",
+        Seq(s"http://127.0.0.1:$port", Catalog.DB, "events_xp", "audit_v1",
+          outDir)).await()
+      assert(code == 0, s"mount reader failed: ${log.takeRight(3000)}")
       assert(log.contains("MOUNT_READER_DONE head=100 tagged=40"),
         log.takeRight(2000))
       // row-exact against the engine's own reads — the child's head is

@@ -3,18 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session base for all suites (one JVM-wide session). */
+/** Shared session base for all suites (one JVM-wide session): the
+  * GraftSession config Bench and Verify run, at 8 cores so test
+  * partition counts do not depend on the box.
+  */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    // static conf for SqlEndpointSpec: serve JDBC clients from this
-    // session so temp state stays visible (see SqlEndpoint.start)
-    .config("spark.sql.hive.thriftServer.singleSession", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.build(8)
 
   def sf(s: String = "0.001"): String = s"/root/testdata/sf$s"
 }

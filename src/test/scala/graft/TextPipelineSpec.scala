@@ -42,6 +42,8 @@ class TextPipelineSpec extends SparkSpec {
   test("packing plan has no single-partition exchange") {
     val p = Packing.packSequences(spark, sf())
       .queryExecution.executedPlan.toString
+    // the text must reach the scans (not stop at the AQE wrapper)
+    assert(p.contains("Scan"), p.take(1500))
     assert(!p.contains("SinglePartition"),
       s"global scan leaked into the plan:\n${p.take(1500)}")
   }

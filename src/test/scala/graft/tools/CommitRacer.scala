@@ -1,10 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.lake.{CommitArbiter, SnapshotTable}
 
-/** Dev-only: the SECOND PROCESS of the cross-process commit race
+/** The SECOND PROCESS of the cross-process commit race
   * (CrossProcessCommitSpec, VERDICT r16 task 8). Args:
   * `<root> <nCommits> <idBase> <scheme>` — runs nCommits optimistic
   * commitAppends of one row each against the table at `root` under
@@ -17,12 +16,7 @@ object CommitRacer {
     val Array(root, nStr, baseStr, scheme) = args.take(4)
     val n = nStr.toInt
     val base = baseStr.toLong
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(4)
     spark.sparkContext.hadoopConfiguration.set(CommitArbiter.ConfKey, scheme)
     import spark.implicits._
     (0 until n).foreach { i =>

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Child JVM for RestMountCrossProcessSpec — a PROCESS whose only
   * knowledge of the lake is a wire-catalog URI. It is handed no
@@ -20,16 +20,10 @@ import org.apache.spark.sql.SparkSession
 object RestMountReader {
   def main(args: Array[String]): Unit = {
     val Array(uri, db, table, tag, outDir) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-rest-mount-reader")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.catalog.wire", "graft.sources.RestBackedCatalog")
-      .config("spark.sql.catalog.wire.uri", uri)
-      .config("spark.sql.catalog.wire.mount-root", s"$outDir/mounts")
-      .getOrCreate()
+    val spark = GraftSession.build(2)
+    spark.conf.set("spark.sql.catalog.wire", "graft.sources.RestBackedCatalog")
+    spark.conf.set("spark.sql.catalog.wire.uri", uri)
+    spark.conf.set("spark.sql.catalog.wire.mount-root", s"$outDir/mounts")
     try {
       val head = spark.table(s"wire.$db.$table")
       head.write.mode("overwrite").parquet(s"$outDir/head")
