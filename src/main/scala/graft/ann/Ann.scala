@@ -251,34 +251,6 @@ object Ann {
     cents.toDF("cid", "c_emb")
   }
 
-  /** Legacy fully-distributed Lloyd refinement (kept for the dev
-    * probe tools): reassign vectors to nearest centroid, then
-    * recompute each centroid as the per-dimension mean of its list.
-    * Means are computed via posexplode → (cid, dim) partial-agg —
-    * one shuffle of (cid, dim, sum, count) per round, never the
-    * vectors themselves.
-    */
-  def refineCentroids(e: DataFrame, init: DataFrame, iters: Int): DataFrame = {
-    var cents = init
-    (1 to iters).foreach { _ =>
-      val assigned = e.join(broadcast(cents))
-        .select(col("vec_id"), col("embedding"), col("cid"),
-          expr("graft_cosine(embedding, c_emb)").as("c_cos"))
-        .groupBy("vec_id", "embedding")
-        .agg(expr("graft_topk(c_cos, cid, 1)").as("top"))
-        .select(col("embedding"), col("top")(0).getField("id").as("cid"))
-      cents = assigned
-        .select(col("cid"), posexplode(col("embedding")))
-        .groupBy("cid", "pos")
-        .agg(avg(col("col")).as("mean"))
-        .groupBy("cid")
-        .agg(expr("transform(array_sort(collect_list(struct(pos, mean))), x -> CAST(x.mean AS FLOAT))")
-          .as("c_emb"))
-        .localCheckpoint()
-    }
-    cents
-  }
-
   /** IVF-style ANN core: a k-means coarse quantizer (`nLists` seed
     * centroids + `lloydIters` Lloyd rounds) partitions the corpus into
     * inverted lists; each query probes its `nProbes` nearest lists

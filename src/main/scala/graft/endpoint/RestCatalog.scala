@@ -161,6 +161,13 @@ object RestCatalog {
           sv.http.getAddress.getPort
         case None =>
           PersistentCatalog.restore(spark, registryRoot)
+          // the JDK server writes a response's headers and body as two
+          // segments; with Nagle on, the body waits out the client's
+          // delayed ACK (~40 ms on Linux), which dwarfed a cached
+          // loadTable. The server reads this once, when the JVM's first
+          // HttpServer is built; an explicit setting wins.
+          if (System.getProperty("sun.net.httpserver.nodelay") == null)
+            System.setProperty("sun.net.httpserver.nodelay", "true")
           val http = HttpServer.create(new InetSocketAddress("localhost", 0), 0)
           // a small fixed pool: handlers are metadata-sized, and the
           // spec's two concurrent clients must genuinely overlap.
@@ -507,8 +514,7 @@ object RestCatalog {
       */
     def statsJson(name: String): Option[String] =
       Option(map.get(name)).map { case (_, h) =>
-        val rows = SnapshotTable.read(spark, h.registry)
-          .select("kind").collect().map(_.getString(0))
+        val rows = h.registryRows().map(_._2)
         val tables = rows.count(_ != "view")
         val views = rows.length - tables
         s"""{"warehouse":${jstr(name)},"number-of-tables":$tables,""" +
@@ -531,7 +537,7 @@ object RestCatalog {
       // is store → handler only; handler routes never call back into
       // the store, so no inversion is possible.
       h.ddlLock.synchronized {
-        if (SnapshotTable.read(spark, h.registry).count() > 0)
+        if (h.registryRows().nonEmpty)
           return Left(409 -> s"warehouse $name still lists tables; drop them first")
         if (h.hasNested)
           return Left(409 -> (s"warehouse $name still has nested namespaces; " +
@@ -541,6 +547,7 @@ object RestCatalog {
         // renames (stable identity) — reclaim by the registry's actual
         // parent, not the current addressable name
         fs.delete(new Path(h.registry).getParent, true)
+        graft.lake.Manifest.purge(h.registry)
         // the warehouse's engine-side database must not outlive it:
         // a re-created warehouse of the same name starts empty
         spark.sql(s"DROP DATABASE IF EXISTS ${h.database} CASCADE")
@@ -772,7 +779,7 @@ object RestCatalog {
         h.ddlLock.synchronized {
           // same guarantees as warehouse drop: emptiness judged under
           // the sub-handler's DDL lock; the engine database goes too
-          if (SnapshotTable.read(spark, h.registry).count() > 0) {
+          if (h.registryRows().nonEmpty) {
             err(ex, 409, s"namespace ${levels.mkString(".")} still lists " +
               "tables; drop them first"); return
           }
@@ -784,6 +791,7 @@ object RestCatalog {
           }
           val p = new Path(s"$nsRoot/${tail.mkString("/")}")
           p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+          graft.lake.Manifest.purge(h.registry)
           spark.sql(s"DROP DATABASE IF EXISTS ${h.database} CASCADE")
           nested.remove(key)
           send(ex, 200, s"""{"dropped":[${levels.map(jstr).mkString(",")}]}""")
@@ -848,13 +856,21 @@ object RestCatalog {
     private def jsonBody(ex: HttpExchange): JObject =
       parseObject(new String(ex.getRequestBody.readAllBytes(), UTF_8))
 
+    /** (name, kind, format, location) of every registry entry, sorted.
+      * Read once per registry version and kept with the parsed
+      * manifest, so a warmed loadTable/listTables runs no Spark query:
+      * a DDL commit publishes a new registry version (a new manifest
+      * identity), which is the only thing that re-reads the rows.
+      */
     private[endpoint] def registryRows(): Seq[(String, String, String, String)] =
-      SnapshotTable.read(spark, registryRoot)
-        .collect()
-        .map(r => (r.getAs[String]("table_name"), r.getAs[String]("kind"),
-          Option(r.getAs[String]("format")).getOrElse(""),
-          Option(r.getAs[String]("location")).getOrElse("")))
-        .sortBy(_._1).toSeq
+      SnapshotTable.memoAtHead(spark, registryRoot, "rest.registryRows") { v =>
+        SnapshotTable.read(spark, registryRoot, v)
+          .collect()
+          .map(r => (r.getAs[String]("table_name"), r.getAs[String]("kind"),
+            Option(r.getAs[String]("format")).getOrElse(""),
+            Option(r.getAs[String]("location")).getOrElse("")))
+          .sortBy(_._1).toSeq
+      }
 
     /** Iceberg REST list-route pagination (`?pageToken=…&pageSize=N`
       * — Trino paginates every listing against big catalogs). The
@@ -1606,7 +1622,7 @@ object RestCatalog {
         refAssertionFailure(loc, cur, reqs).foreach { msg =>
           err(ex, 409, msg); return
         }
-        val have = SnapshotTable.read(spark, loc).schema
+        val have = SnapshotTable.schema(spark, loc)
           .map(f => f.name -> f.dataType.simpleString)
         val haveMap = have.toMap
         val idOf = SnapshotTable.fieldIds(spark, loc, cur) // name -> id
@@ -2231,7 +2247,7 @@ object RestCatalog {
       */
     private def stagedSchemaConflict(loc: String,
         files: Seq[String]): Option[String] = {
-      val curTypes = SnapshotTable.read(spark, loc).schema
+      val curTypes = SnapshotTable.schema(spark, loc)
         .map(f => f.name -> f.dataType.simpleString).toMap
       files.iterator.flatMap { f =>
         graft.sources.Footer.schemaOf(spark, f).iterator.flatMap { sf =>

@@ -31,9 +31,6 @@ object HashUtil {
     hashBytes(b, 0, b.length)
   }
 
-  /** k-th independent hash of a base hash (affine-in-mix family). */
-  def rehash(base: Long, k: Int): Long = mix64(base ^ mix64(k.toLong * 0x9e3779b97f4a7c15L))
-
   /** Deterministic pseudo-random hyperplane component in [-1, 1). */
   def unitComponent(seed: Long, plane: Int, dim: Int): Double = {
     val h = mix64(seed ^ mix64(plane.toLong << 32 | (dim.toLong & 0xffffffffL)))

@@ -2,7 +2,7 @@ package graft.lake
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.types.{DataType, Metadata, MetadataBuilder, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, MetadataBuilder, StructType}
 
 import graft.Json.{jstr, long, parse, str}
 
@@ -39,7 +39,7 @@ object DeltaInterop {
   private def stampedSchema(s: SparkSession, root: String, v: Int)
       : (StructType, Map[String, String]) = {
     val mapping = SnapshotTable.columnMapping(s, root, v)
-    val logical = SnapshotTable.read(s, root, v).schema
+    val logical = SnapshotTable.schema(s, root, v)
     val stamped = StructType(logical.map { f =>
       mapping.get(f.name) match {
         case Some(phys) if phys != f.name =>
@@ -582,8 +582,6 @@ object DeltaInterop {
     }.toMap
     (live.toSeq, schema, mapping)
   }
-
-  private def stripMeta(f: StructField): StructField = f.copy(metadata = Metadata.empty)
 
   /** IMPORT: materialize a foreign Delta table as SnapshotTable v1 at
     * `destRoot` — zero-copy (the manifest references the foreign

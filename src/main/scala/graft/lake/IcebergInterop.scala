@@ -229,30 +229,17 @@ object IcebergInterop {
     * (id, name, iceberg type). Ids come from [[SnapshotTable]]'s
     * field-id header when present, ordinal otherwise — stable across
     * renames either way, since renames keep their field position.
-    *
-    * MEMOIZED per (root, version, commit stamp): a version's schema is
-    * immutable, but [[writeMetadata]] walks EVERY live version for its
-    * per-snapshot schema-ids — uncached, each new commit would re-run
-    * O(versions) parquet schema inferences, quadratic over a table's
-    * life. The commit stamp in the key (one header read) keeps a
-    * dropped-and-recreated root from serving the old table's schema.
+    * [[writeMetadata]] walks EVERY live version for its per-snapshot
+    * schema-ids; the schema each lookup needs is derived once per
+    * version and kept with the parsed manifest ([[Manifest]]), so the
+    * walk stays metadata-priced instead of re-inferring O(versions)
+    * parquet schemas per commit.
     */
-  private val fieldsCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Long), Seq[(Int, String, String)]]()
-
   private def fieldsOf(s: SparkSession, root: String, v: Int): Seq[(Int, String, String)] = {
-    val key = (root, v, SnapshotTable.committedAt(s, root, v))
-    val hit = fieldsCache.get(key)
-    if (hit != null) hit
-    else {
-      val ids = SnapshotTable.fieldIds(s, root, v)
-      val computed = SnapshotTable.read(s, root, v).schema.zipWithIndex.map { case (f, i) =>
-        (ids.getOrElse(f.name, i + 1), f.name, icebergType(f.dataType.simpleString))
-      }.toSeq
-      if (fieldsCache.size > 65536) fieldsCache.clear() // crude bound, never wrong
-      fieldsCache.put(key, computed)
-      computed
-    }
+    val ids = SnapshotTable.fieldIds(s, root, v)
+    SnapshotTable.schema(s, root, v).zipWithIndex.map { case (f, i) =>
+      (ids.getOrElse(f.name, i + 1), f.name, icebergType(f.dataType.simpleString))
+    }.toSeq
   }
 
   private def fieldsJson(fields: Seq[(Int, String, String)]): String =
@@ -640,7 +627,7 @@ object IcebergInterop {
     // still scopes the effect to exactly the referenced files.
     val posDeleteSeq: Long =
       math.max(v.toLong, entries.map(_.seq).maxOption.getOrElse(0L))
-    def entryRec(e: SnapshotTable.LineEntry): GenericRecord = {
+    def entryRec(e: Manifest.Entry): GenericRecord = {
       val isData = e.kind == 0
       val schema = if (isData) dataEntrySchema else delEntrySchema
       val dfSchema = dataFileSchemaOf(schema)

@@ -34,6 +34,8 @@ import org.apache.spark.sql.functions.{coalesce, col, lit, when}
   * MinIO bucket; local paths are just the test medium.
   */
 object SnapshotTable {
+  import Manifest.{BytesAnnot, DeleteKindAnnot, Entry, EqColsAnnot, EqDelete,
+    EqDeleteKindAnnot, EqSeqAnnot, EofMarker, RefPrefix, RowsAnnot, SeqAnnot, pairs}
 
   private def fsOf(s: SparkSession, p: Path): FileSystem =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -61,142 +63,35 @@ object SnapshotTable {
     s"${u.getScheme}://${Option(u.getAuthority).getOrElse("")}${u.getPath}"
   }
 
-  private val ManifestRe = "v(\\d+)\\.manifest".r
+  private def conf(s: SparkSession) = s.sparkContext.hadoopConfiguration
 
-  def currentVersion(s: SparkSession, root: String): Int = {
-    val dir = manifestDir(root)
-    val fs = fsOf(s, dir)
-    if (!fs.exists(dir)) 0
-    else
-      fs.listStatus(dir).map(_.getPath.getName).collect {
-        case ManifestRe(v) => v.toInt
-      }.foldLeft(0)(math.max)
-  }
+  def currentVersion(s: SparkSession, root: String): Int =
+    Manifest.versions(conf(s), root).lastOption.fold(0)(_._1)
 
-  private def manifestLines(s: SparkSession, root: String, version: Int): Seq[String] =
-    manifestLinesAt(s, root, s"v$version")
+  /** Main version `version` of `root`, parsed once ([[Manifest]]). */
+  private def ver(s: SparkSession, root: String, version: Int): Manifest.Version =
+    verAt(s, root, s"v$version")
 
-  // ----- manifest lists + fragments --------------------------------
-  //
-  // `>`-prefixed lines in a version manifest reference an immutable
-  // fragment file by absolute path; resolution inlines the fragment's
-  // data lines. Fragment paths are absolute so zero-copy refs survive
-  // a cross-root shallowClone (with the same expire caveat as data
-  // files).
-
-  private val RefPrefix = ">"
-
-  private def readSmallFile(s: SparkSession, p: Path): Seq[String] =
-    readSmallFileConf(s.sparkContext.hadoopConfiguration, p)
-
-  // conf-based twin: runs where there is no SparkSession — the
-  // distributed orphan-scan tasks read manifests executor-side
-  private def readSmallFileConf(
-      conf: org.apache.hadoop.conf.Configuration, p: Path): Seq[String] = {
-    val in = p.getFileSystem(conf).open(p)
-    try
-      scala.io.Source.fromInputStream(in, "UTF-8").getLines().filter(_.nonEmpty).toList
-    finally in.close()
-  }
-
-  /** Trailer marking a COMPLETELY written manifest. On stores whose
-    * publish is a non-atomic copy (the mock no-atomic-rename FS; any
-    * store without per-object atomic visibility), a reader — in
-    * particular a CONCURRENT COMMITTER re-reading head to rebase —
-    * can open the manifest mid-copy and see a truncated prefix. A
-    * line-oriented format makes that tear SILENT: the prefix parses
-    * fine, the tail fragment refs vanish, and the rebased commit
-    * drops the racing writer's rows (caught by
-    * CommitConcurrencySpec's lockfile round occasionally losing one
-    * append). The trailer turns truncation into something a reader
-    * can detect and wait out.
-    */
-  private val EofMarker = "#graft.eof"
-
-  /** Lines of the manifest FILE itself — headers, fragment refs, and
-    * (legacy) inline data lines; no resolution. Retries until the
-    * [[EofMarker]] trailer is visible; a manifest that never shows it
-    * is CORRUPT (a publish that died mid-copy) and serving its prefix
-    * would silently drop rows — so this throws, loudly. Deliberately
-    * NO stable-content fallback: a stalled tear is byte-identical to
-    * a "complete" trailer-less file, and guessing wrong loses data
-    * (the torn-manifest spec pins the wait).
-    */
-  private def rawManifestLines(s: SparkSession, root: String, stem: String): Seq[String] =
-    rawManifestLinesConf(s.sparkContext.hadoopConfiguration, root, stem)
-
-  private def rawManifestLinesConf(
-      conf: org.apache.hadoop.conf.Configuration,
-      root: String, stem: String): Seq[String] = {
-    val p = new Path(s"$root/_manifests/$stem.manifest")
-    var attempt = 0
-    while (true) {
-      val lines = readSmallFileConf(conf, p)
-      if (lines.nonEmpty && lines.last == EofMarker) return lines.dropRight(1)
-      attempt += 1
-      if (attempt > 200) throw new IllegalStateException(
-        s"manifest $p is incomplete (no $EofMarker trailer) — a " +
-          "mid-publish tear, a crashed publish, or a pre-trailer file")
-      Thread.sleep(5)
-    }
-    Seq.empty // unreachable
-  }
-
-  /** Non-header body of a manifest list (fragment refs + legacy inline
-    * lines) — what O(Δ) commits copy forward VERBATIM: re-referencing
-    * a fragment costs one line, never its contents.
-    */
-  private def listBody(s: SparkSession, root: String, stem: String): Seq[String] =
-    rawManifestLines(s, root, stem).filterNot(_.startsWith("#"))
-
-  /** Absolute fragment paths a manifest list references. */
-  private def fragmentRefs(s: SparkSession, root: String, stem: String): Seq[String] =
-    rawManifestLines(s, root, stem)
-      .filter(_.startsWith(RefPrefix)).map(_.drop(1))
+  /** Manifest version by stem — `v3` (main) or `audit.v2` (branch). */
+  private def verAt(s: SparkSession, root: String, stem: String): Manifest.Version =
+    Manifest.at(conf(s), root, stem)
 
   /** Write an immutable fragment (create-exclusive — fragments are
-    * write-once) and return its manifest ref line. Names carry a
-    * random suffix so a losing concurrent committer's orphan fragment
-    * can never collide with the winner's.
+    * write-once) and return its manifest ref line; no lines, no
+    * fragment. Names carry a random suffix so a losing concurrent
+    * committer's orphan fragment can never collide with the winner's.
     */
   private def writeFragment(
-      s: SparkSession, root: String, hint: String, lines: Seq[String]): String = {
+      s: SparkSession, root: String, hint: String, lines: Seq[String]): Seq[String] = {
+    if (lines.isEmpty) return Seq.empty
     val suffix = java.util.UUID.randomUUID.toString.take(8)
     val p = new Path(s"$root/_manifests/$hint-$suffix.frag")
     val fs = fsOf(s, p)
     val out = fs.create(p, false)
     try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
-    RefPrefix + p.toString
+    Seq(RefPrefix + p.toString)
   }
-
-  /** Manifest lines by stem — `v3` (main) or `audit.v2` (branch) —
-    * with fragment refs RESOLVED: every returned non-header line is a
-    * data-file entry, whichever manifest generation wrote it.
-    */
-  private def manifestLinesAt(s: SparkSession, root: String, stem: String): Seq[String] =
-    rawManifestLines(s, root, stem).flatMap { l =>
-      if (l.startsWith(RefPrefix)) readSmallFile(s, new Path(l.drop(1)))
-      else Seq(l)
-    }
-
-  // headers come off the RAW manifest lines: [[writeManifestAtomicAt]]
-  // always writes them as the file's prefix and [[writeFragment]]ed
-  // fragments carry data lines only, so resolving fragment refs here
-  // (as this did through r20) read every fragment file of the version
-  // just to discard the contents — O(commits) extra driver-side file
-  // reads per header lookup, paid by EVERY schemaMeta/commitMeta/
-  // committedAt call on every read and commit (r21, §1.2).
-  private def headerAt(s: SparkSession, root: String, stem: String): Map[String, String] =
-    rawManifestLines(s, root, stem).takeWhile(_.startsWith("#")).flatMap { l =>
-      l.drop(1).split("=", 2) match {
-        case Array(k, v) => Some(k -> v)
-        case _ => None
-      }
-    }.toMap
-
-  private def filesAt(s: SparkSession, root: String, stem: String): Seq[String] =
-    manifestLinesAt(s, root, stem).filterNot(_.startsWith("#")).map(_.split('\t').head)
 
   // ----- merge-on-read positional deletes ---------------------------
   //
@@ -212,22 +107,6 @@ object SnapshotTable {
   // merge-on-read writes one small file. [[compactDeletes]] folds
   // accumulated deletes back into rewritten data files.
 
-  private[lake] val DeleteKindAnnot = "_kind=posdelete"
-  private[lake] val EqDeleteKindAnnot = "_kind=eqdelete"
-  private val EqColsAnnot = "_eqcols="
-  private val EqSeqAnnot = "_eqseq="
-  private val SeqAnnot = "_seq="
-
-  private def isDeleteLine(l: String): Boolean =
-    l.split('\t').drop(1).contains(DeleteKindAnnot)
-
-  private def isEqDeleteLine(l: String): Boolean =
-    l.split('\t').drop(1).contains(EqDeleteKindAnnot)
-
-  /** Any row-suppression line (positional or equality delete file). */
-  private def isSuppressionLine(l: String): Boolean =
-    isDeleteLine(l) || isEqDeleteLine(l)
-
   // ----- equality deletes + data sequence numbers -------------------
   //
   // Iceberg v2 EQUALITY deletes: a delete file of key VALUES (not
@@ -239,43 +118,9 @@ object SnapshotTable {
   // positional deletes, writing one requires NO table read or
   // planning scan at all: the O(batch) streaming-writer delete path.
 
-  /** An equality-delete file: parquet of key values, the PHYSICAL key
-    * column names it matches on, and the sequence number it was
-    * committed at (suppresses rows of files with seq strictly below).
-    */
-  private[lake] final case class EqDelete(path: String, cols: Seq[String], seq: Long)
-
-  private def eqDeletesOf(lines: Seq[String]): Seq[EqDelete] =
-    lines.filterNot(_.startsWith("#")).filter(isEqDeleteLine).map { l =>
-      val parts = l.split('\t')
-      EqDelete(
-        parts.head,
-        parts.tail.collectFirst {
-          case a if a.startsWith(EqColsAnnot) =>
-            a.stripPrefix(EqColsAnnot).split(",").toSeq
-        }.getOrElse(Seq.empty),
-        parts.tail.collectFirst {
-          case a if a.startsWith(EqSeqAnnot) => a.stripPrefix(EqSeqAnnot).toLong
-        }.getOrElse(Long.MaxValue))
-    }
-
   /** Equality-delete files visible at a version. */
   def eqDeleteEntries(s: SparkSession, root: String, version: Int): Seq[EqDelete] =
-    eqDeletesOf(manifestLines(s, root, version))
-
-  private def seqOfLine(l: String): Long =
-    l.split('\t').tail.collectFirst {
-      case a if a.startsWith(SeqAnnot) => a.stripPrefix(SeqAnnot).toLong
-    }.getOrElse(0L)
-
-  private def maxSeqOf(lines: Seq[String]): Long =
-    lines.filterNot(_.startsWith("#")).map { l =>
-      val parts = l.split('\t').tail
-      parts.collectFirst { case a if a.startsWith(SeqAnnot) => a.stripPrefix(SeqAnnot).toLong }
-        .orElse(parts.collectFirst {
-          case a if a.startsWith(EqSeqAnnot) => a.stripPrefix(EqSeqAnnot).toLong })
-        .getOrElse(0L)
-    }.maxOption.getOrElse(0L)
+    ver(s, root, version).eqDeletes
 
   /** Sequence number the NEXT commit on top of `cur` should stamp.
     * Pre-seq manifests (every line unstamped) yield 1; data lines
@@ -283,17 +128,36 @@ object SnapshotTable {
     * the conservative direction.
     */
   private def nextSeqAt(s: SparkSession, root: String, cur: Int): Long =
-    if (cur < 1) 1L else maxSeqOf(manifestLinesAt(s, root, s"v$cur")) + 1
+    if (cur < 1) 1L else ver(s, root, cur).maxSeq + 1
 
   private def stampSeq(lines: Seq[String], seq: Long): Seq[String] =
     lines.map(l => s"$l\t$SeqAnnot$seq")
 
-  /** canon(data file) → its commit sequence number, from a resolved
-    * line set. Metadata-sized.
+  /** The parquet files Spark just wrote under `dir`, sorted. */
+  private def parquetFilesIn(s: SparkSession, dir: String): Seq[String] = {
+    val p = new Path(dir)
+    fsOf(s, p).listStatus(p).map(_.getPath.toString)
+      .filter(_.endsWith(".parquet")).sorted.toSeq
+  }
+
+  /** Manifest lines (row-stamped) for the positional-delete parquet
+    * just written under `dir`, and the delete rows they carry. A set
+    * that deletes nothing is removed again.
     */
-  private def fileSeqFn(s: SparkSession, lines: Seq[String]): String => Long = {
-    val m = lines.filterNot(_.startsWith("#")).filterNot(isSuppressionLine)
-      .map(l => canon(s, l.split('\t').head) -> seqOfLine(l)).toMap
+  private def posDeleteLines(s: SparkSession, dir: String): (Seq[String], Long) = {
+    val lines = annotateRows(s, parquetFilesIn(s, dir).map(f => s"$f\t$DeleteKindAnnot"))
+    val n = lines.map(new Entry(_).rows).sum
+    if (n == 0) { val p = new Path(dir); fsOf(s, p).delete(p, true) }
+    (lines, n)
+  }
+
+  /** canon(data file) → its commit sequence number, for a version.
+    * Metadata-sized, computed once per version.
+    */
+  private def fileSeqFn(s: SparkSession, mv: Manifest.Version): String => Long = {
+    val m = mv.memo("fileSeq") {
+      mv.dataEntries.map(e => canon(s, e.path) -> e.seq).toMap
+    }
     f => m.getOrElse(canon(s, f), 0L)
   }
 
@@ -302,61 +166,29 @@ object SnapshotTable {
     * stripped).
     */
   def dataFiles(s: SparkSession, root: String, version: Int): Seq[String] =
-    manifestLines(s, root, version).filterNot(_.startsWith("#"))
-      .filterNot(isSuppressionLine).map(_.split('\t').head)
+    ver(s, root, version).dataFiles
 
   /** Positional delete files visible at a version. */
   def deleteFiles(s: SparkSession, root: String, version: Int): Seq[String] =
-    manifestLines(s, root, version).filterNot(_.startsWith("#"))
-      .filter(isDeleteLine).map(_.split('\t').head)
+    ver(s, root, version).deleteFiles
 
   /** Data files with their manifest-recorded partition values —
     * Iceberg-style: partition values live in table metadata, NOT in
     * the file content, which is what makes the partitioning hidden.
     */
   def dataFilesWithPartitions(s: SparkSession, root: String, version: Int): Seq[(String, Map[String, String])] =
-    manifestLines(s, root, version).filterNot(_.startsWith("#"))
-      .filterNot(isSuppressionLine).map { line =>
-      val parts = line.split('\t')
-      val annots = parts.drop(1).flatMap { a =>
-        a.split("=", 2) match { case Array(k, v) => Some(k -> v); case _ => None }
-      }.toMap
-      (parts.head, annots)
-    }
+    ver(s, root, version).dataEntries.map(e => (e.path, e.annots))
 
   /** Metadata recorded with a commit (`#key=value` manifest header). */
   def commitMeta(s: SparkSession, root: String, version: Int): Map[String, String] =
-    headerAt(s, root, s"v$version")
-
-  /** One manifest line, parsed: the per-file facts the Iceberg Avro
-    * export renders ([[IcebergInterop]]). `kind` is 0 = data file,
-    * 1 = positional-delete file, 2 = equality-delete file; `eqCols`
-    * carries the PHYSICAL equality columns of kind-2 entries.
-    */
-  private[lake] final case class LineEntry(
-      path: String, rows: Long, seq: Long, kind: Int, eqCols: Seq[String])
+    ver(s, root, version).header
 
   /** All file entries visible at a version — data AND delete files,
-    * with their annotations decoded. Metadata-sized (O(files) driver
-    * work, no data read).
+    * with their annotations decoded (the per-file facts the Iceberg
+    * Avro export renders). Metadata-sized (no data read).
     */
-  private[lake] def lineEntries(s: SparkSession, root: String, version: Int): Seq[LineEntry] =
-    manifestLines(s, root, version).filterNot(_.startsWith("#")).map { l =>
-      val parts = l.split('\t')
-      val annots = parts.drop(1)
-      def ann(prefix: String): Option[String] =
-        annots.collectFirst { case a if a.startsWith(prefix) => a.stripPrefix(prefix) }
-      val kind = if (isDeleteLine(l)) 1 else if (isEqDeleteLine(l)) 2 else 0
-      LineEntry(
-        parts.head,
-        ann(RowsAnnot).map(_.toLong).getOrElse(0L),
-        ann(SeqAnnot).orElse(ann(EqSeqAnnot)).map(_.toLong).getOrElse(0L),
-        kind,
-        ann(EqColsAnnot).map(_.split(",").toSeq).getOrElse(Seq.empty))
-    }
-
-  private val RowsAnnot = "_rows="
-  private val BytesAnnot = "_bytes="
+  private[lake] def lineEntries(s: SparkSession, root: String, version: Int): Seq[Entry] =
+    ver(s, root, version).entries
 
   /** Stamp each manifest line with its file's row count
     * (`_rows=<n>`, Iceberg's per-data-file `record_count`) and byte
@@ -413,25 +245,22 @@ object SnapshotTable {
     * files.
     */
   def recordCount(s: SparkSession, root: String, version: Int): Long = {
-    val lines = manifestLines(s, root, version).filterNot(_.startsWith("#"))
+    val entries = ver(s, root, version).entries
     // equality deletes suppress an unknowable-from-metadata number of
     // rows (their `_rows` is key rows, not matches) — fall back to an
     // exact read-side count; exactness beats speed here, and
     // maintenance (compactDeletesIfNeeded) folds eq deletes promptly
     // so the metadata-only fast path is the steady state
-    if (lines.exists(isEqDeleteLine)) return read(s, root, version).count()
-    def rowsOf(l: String): Option[Long] = l.split('\t').tail.collectFirst {
-      case a if a.startsWith(RowsAnnot) => a.stripPrefix(RowsAnnot).toLong
-    }
-    def total(ls: Seq[String]): Long = {
-      val known = ls.flatMap(rowsOf).sum
-      val unknown = ls.filter(rowsOf(_).isEmpty).map(_.split('\t').head)
+    if (entries.exists(_.kind == 2)) return read(s, root, version).count()
+    def total(es: Seq[Entry]): Long = {
+      val known = es.flatMap(_.rowsOpt).sum
+      val unknown = es.filter(_.rowsOpt.isEmpty).map(_.path)
       if (unknown.isEmpty) known else known + s.read.parquet(unknown: _*).count()
     }
     // each positional delete row suppresses exactly one live data row
     // (deleteWhereMor plans against the already-delete-filtered view,
     // so positions never duplicate) — net them out, still metadata-only
-    val (del, data) = lines.partition(isDeleteLine)
+    val (del, data) = entries.partition(_.kind == 1)
     total(data) - total(del)
   }
 
@@ -452,21 +281,16 @@ object SnapshotTable {
     */
   def tableStats(s: SparkSession, root: String, version: Int = -1): (Long, Long) = {
     val v = if (version < 0) currentVersion(s, root) else version
-    val lines = manifestLines(s, root, v).filterNot(_.startsWith("#"))
-    def annot(l: String, prefix: String): Option[Long] =
-      l.split('\t').tail.collectFirst {
-        case a if a.startsWith(prefix) => a.stripPrefix(prefix).toLong
-      }
-    val (del, data) = lines.partition(isDeleteLine)
-    val dataOnly = data.filterNot(isEqDeleteLine)
-    val bytes = dataOnly.map { l =>
-      annot(l, BytesAnnot).getOrElse {
-        val p = new Path(l.split('\t').head)
+    val entries = ver(s, root, v).entries
+    val dataOnly = entries.filter(_.isData)
+    val bytes = dataOnly.map { e =>
+      e.bytesOpt.getOrElse {
+        val p = new Path(e.path)
         try fsOf(s, p).getFileStatus(p).getLen catch { case _: java.io.IOException => 0L }
       }
     }.sum
-    val rows = dataOnly.flatMap(annot(_, RowsAnnot)).sum -
-      del.flatMap(annot(_, RowsAnnot)).sum
+    val rows = dataOnly.flatMap(_.rowsOpt).sum -
+      entries.filter(_.kind == 1).flatMap(_.rowsOpt).sum
     (bytes, math.max(rows, 0L))
   }
 
@@ -568,14 +392,14 @@ object SnapshotTable {
     // replacing the data does not undo a rename); incoming logical
     // column names are stored under their physical names
     val inherited = schemaMeta(s, root, cur)
-    val mapping = parsePairs(inherited.get(ColMapKey))
+    val mapping = pairs(inherited.get(ColMapKey))
     val physDf = toPhysical(df, mapping)
     val physIds = physFieldIds(s, root, cur, physDf.columns)
     // the header a first-stamped commit persists covers the WHOLE
     // table (columns absent from this df included), so later lookups
     // never re-derive ordinals from a different column subset
     val idsHeader = fieldIdsHeader(inherited, mapping,
-      if (cur < 1 || parsePairs(inherited.get(FieldIdsKey)).nonEmpty) physIds
+      if (cur < 1 || pairs(inherited.get(FieldIdsKey)).nonEmpty) physIds
       else fieldIds(s, root, cur)
         .map { case (n, id) => mapping.getOrElse(n, n) -> id } ++ physIds)
     val newFiles = writeDataFiles(s, root, v, withFieldIds(physDf, physIds))
@@ -590,7 +414,7 @@ object SnapshotTable {
     // annotations live inside the untouched fragments) — this line is
     // what makes the append O(files touched), not O(table)
     val base =
-      if (append && v > 1) listBody(s, root, s"v${v - 1}")
+      if (append && v > 1) ver(s, root, v - 1).body
       else Seq.empty
     // merge newly-registered stats/bloom columns with the inherited
     // set: a commit stamping stats on `value` must not forget that
@@ -603,9 +427,7 @@ object SnapshotTable {
        else Map(StatsKey -> mergeCols(StatsKey, statsCols))) ++
         (if (bloomCols.isEmpty) Map.empty[String, String]
          else Map(BloomKey -> mergeCols(BloomKey, bloomCols)))
-    val newRef =
-      if (annotated.isEmpty) Seq.empty
-      else Seq(writeFragment(s, root, s"v$v", annotated))
+    val newRef = writeFragment(s, root, s"v$v", annotated)
     writeManifestAtomic(s, root, v,
       inherited ++ idsHeader ++ statsMeta ++ meta, base ++ newRef)
     v
@@ -625,10 +447,8 @@ object SnapshotTable {
     val v = cur + 1
     val annotated = stampSeq(annotateRows(s, files.map(f => canon(s, f))),
       nextSeqAt(s, root, cur))
-    val base = if (append && v > 1) listBody(s, root, s"v${v - 1}") else Seq.empty
-    val newRef =
-      if (annotated.isEmpty) Seq.empty
-      else Seq(writeFragment(s, root, s"v$v", annotated))
+    val base = if (append && v > 1) ver(s, root, v - 1).body else Seq.empty
+    val newRef = writeFragment(s, root, s"v$v", annotated)
     writeManifestAtomic(s, root, v, schemaMeta(s, root, cur) ++ meta, base ++ newRef)
     v
   }
@@ -683,22 +503,18 @@ object SnapshotTable {
             s.read.parquet(p)
               .select(cols.map(c => col(c).as(mapping.getOrElse(c, c))): _*)
               .repartition(1).write.mode("overwrite").parquet(dir)
-            val dp = new Path(dir)
-            fsOf(s, dp).listStatus(dp).map(_.getPath.toString)
-              .filter(_.endsWith(".parquet")).min
+            parquetFilesIn(s, dir).head
           }
         s"${canon(s, path)}\t$EqDeleteKindAnnot\t$EqColsAnnot${phys.mkString(",")}\t$EqSeqAnnot$seq"
     })
     val lines = eqLines ++ posLines ++ dataLines
-    val newRef =
-      if (lines.isEmpty) Seq.empty
-      else Seq(writeFragment(s, root, s"v$v", lines))
+    val newRef = writeFragment(s, root, s"v$v", lines)
     writeManifestAtomic(s, root, v,
       schemaMeta(s, root, cur) ++
         (if (eqDeletes.nonEmpty || posDeletes.nonEmpty)
            Map("op" -> (if (dataFiles.nonEmpty) "upsert_wire" else "delete_wire"))
          else Map.empty[String, String]) ++ meta,
-      listBody(s, root, s"v$cur") ++ newRef)
+      ver(s, root, cur).body ++ newRef)
     v
   }
 
@@ -735,9 +551,8 @@ object SnapshotTable {
       eqDeletes.map { case (p, cols, seq) =>
         s"${canon(s, p)}\t$EqDeleteKindAnnot\t$EqColsAnnot${cols.mkString(",")}\t$EqSeqAnnot$seq"
       }
-    val base = if (v > 1) listBody(s, root, s"v${v - 1}") else Seq.empty
-    val newRef =
-      if (lines.isEmpty) Seq.empty else Seq(writeFragment(s, root, s"v$v", lines))
+    val base = if (v > 1) ver(s, root, v - 1).body else Seq.empty
+    val newRef = writeFragment(s, root, s"v$v", lines)
     writeManifestAtomic(s, root, v, schemaMeta(s, root, cur) ++ meta, base ++ newRef)
     v
   }
@@ -794,11 +609,11 @@ object SnapshotTable {
       val v = cur + 1
       val seq = nextSeqAt(s, root, cur)
       if (baseLines.nonEmpty && seq != stagedSeq) {
-        newRef = Seq(writeFragment(s, root, s"c-$stage-s$seq", stampSeq(baseLines, seq)))
+        newRef = writeFragment(s, root, s"c-$stage-s$seq", stampSeq(baseLines, seq))
         stagedSeq = seq
       }
       val inherited = schemaMeta(s, root, cur)
-      val base = if (cur >= 1) listBody(s, root, s"v$cur") else Seq.empty
+      val base = if (cur >= 1) ver(s, root, cur).body else Seq.empty
       try {
         writeManifestAtomic(s, root, v,
           inherited ++ fieldIdsHeader(inherited, mapping, physIds) ++ meta,
@@ -1110,7 +925,7 @@ object SnapshotTable {
   def deleteWhereMor(s: SparkSession, root: String, predicate: Column): Int = {
     val cur = currentVersion(s, root)
     require(cur > 0, s"no snapshot table at $root")
-    val curLines = manifestLines(s, root, cur)
+    val curVer = ver(s, root, cur)
     val files = dataFiles(s, root, cur)
     val dels = deleteFiles(s, root, cur)
     val mapping = columnMapping(s, root, cur)
@@ -1132,7 +947,7 @@ object SnapshotTable {
     if (candidates.isEmpty) return cur // metadata proves zero matches
     val live = applyAllDeletes(s, candidates,
       fs => rawWidenedRead(s, fs, mapping, types),
-      dels, eqDeletesOf(curLines), fileSeqFn(s, curLines), keepRowId = true)
+      dels, curVer.eqDeletes, fileSeqFn(s, curVer), keepRowId = true)
     val matches = logicalView(live, mapping, types,
         droppedColumns(s, root, cur).keySet)
       .filter(coalesce(predicate, lit(false)))
@@ -1145,22 +960,13 @@ object SnapshotTable {
       .repartition(col("file_path"))
     val delDir = s"$root/deletes/v$v"
     matches.write.mode("overwrite").parquet(delDir)
-    val delPath = new Path(delDir)
-    val fs = fsOf(s, delPath)
-    val written = fs.listStatus(delPath).map(_.getPath.toString)
-      .filter(_.endsWith(".parquet")).sorted.toSeq
-    val delLines = annotateRows(s, written.map(f => s"$f\t$DeleteKindAnnot"))
-    val nDeleted = delLines.map { l =>
-      l.split('\t').collectFirst {
-        case a if a.startsWith(RowsAnnot) => a.stripPrefix(RowsAnnot).toLong
-      }.getOrElse(0L)
-    }.sum
-    if (nDeleted == 0) { fs.delete(delPath, true); return cur }
-    val newRef = Seq(writeFragment(s, root, s"v$v-del", delLines))
+    val (delLines, nDeleted) = posDeleteLines(s, delDir)
+    if (nDeleted == 0) return cur
+    val newRef = writeFragment(s, root, s"v$v-del", delLines)
     writeManifestAtomic(s, root, v,
       schemaMeta(s, root, cur) ++
         Map("op" -> "delete_mor", "delete_rows" -> nDeleted.toString),
-      listBody(s, root, s"v$cur") ++ newRef)
+      ver(s, root, cur).body ++ newRef)
     v
   }
 
@@ -1189,7 +995,7 @@ object SnapshotTable {
       set: Map[String, Column]): Int = {
     val cur = currentVersion(s, root)
     require(cur > 0, s"no snapshot table at $root")
-    val curLines = manifestLines(s, root, cur)
+    val curVer = ver(s, root, cur)
     val files = dataFiles(s, root, cur)
     val dels = deleteFiles(s, root, cur)
     val mapping = columnMapping(s, root, cur)
@@ -1205,7 +1011,7 @@ object SnapshotTable {
     if (candidates.isEmpty) return cur // metadata proves zero matches
     val live = applyAllDeletes(s, candidates,
       fs => rawWidenedRead(s, fs, mapping, types),
-      dels, eqDeletesOf(curLines), fileSeqFn(s, curLines), keepRowId = true)
+      dels, curVer.eqDeletes, fileSeqFn(s, curVer), keepRowId = true)
     val matched = logicalView(live, mapping, types,
         droppedColumns(s, root, cur).keySet)
       .filter(coalesce(predicate, lit(false)))
@@ -1216,17 +1022,8 @@ object SnapshotTable {
         .select(col("_graft_fp").as("file_path"), col("_graft_pos").as("pos"))
         .repartition(col("file_path"))
         .write.mode("overwrite").parquet(delDir)
-      val delPath = new Path(delDir)
-      val fs = fsOf(s, delPath)
-      val written = fs.listStatus(delPath).map(_.getPath.toString)
-        .filter(_.endsWith(".parquet")).sorted.toSeq
-      val delLines = annotateRows(s, written.map(f => s"$f\t$DeleteKindAnnot"))
-      val nUpdated = delLines.map { l =>
-        l.split('\t').collectFirst {
-          case a if a.startsWith(RowsAnnot) => a.stripPrefix(RowsAnnot).toLong
-        }.getOrElse(0L)
-      }.sum
-      if (nUpdated == 0) { fs.delete(delPath, true); return cur }
+      val (delLines, nUpdated) = posDeleteLines(s, delDir)
+      if (nUpdated == 0) return cur
       val replacements = toPhysical(
         set.foldLeft(matched) { case (d, (name, value)) =>
           require(d.columns.contains(name), s"unknown SET column $name")
@@ -1238,14 +1035,12 @@ object SnapshotTable {
       val newFiles = stampSeq(
         annotateRows(s, writeDataFiles(s, root, v, replacements)),
         nextSeqAt(s, root, cur))
-      val delRef = Seq(writeFragment(s, root, s"v$v-del", delLines))
-      val dataRef =
-        if (newFiles.isEmpty) Seq.empty
-        else Seq(writeFragment(s, root, s"v$v", newFiles))
+      val delRef = writeFragment(s, root, s"v$v-del", delLines)
+      val dataRef = writeFragment(s, root, s"v$v", newFiles)
       writeManifestAtomic(s, root, v,
         schemaMeta(s, root, cur) ++
           Map("op" -> "update_mor", "delete_rows" -> nUpdated.toString),
-        listBody(s, root, s"v$cur") ++ delRef ++ dataRef)
+        ver(s, root, cur).body ++ delRef ++ dataRef)
       v
     } finally { matched.unpersist(); () }
   }
@@ -1277,7 +1072,7 @@ object SnapshotTable {
       deleteImages: DataFrame, meta: Map[String, String] = Map.empty): Int = {
     val cur = currentVersion(s, root)
     require(cur > 0, s"no snapshot table at $root (bootstrap with commit)")
-    val curLines = manifestLines(s, root, cur)
+    val curVer = ver(s, root, cur)
     val files = dataFiles(s, root, cur)
     val dels = deleteFiles(s, root, cur)
     val mapping = columnMapping(s, root, cur)
@@ -1294,7 +1089,7 @@ object SnapshotTable {
         val planFiles = cdcPlanningCandidates(s, root, cur, deleteImages, files)
         val live = logicalView(
           applyAllDeletes(s, planFiles, fs => rawWidenedRead(s, fs, mapping, types),
-            dels, eqDeletesOf(curLines), fileSeqFn(s, curLines), keepRowId = true),
+            dels, curVer.eqDeletes, fileSeqFn(s, curVer), keepRowId = true),
           mapping, types, droppedColumns(s, root, cur).keySet)
         val cols = deleteImages.columns.toSeq
         // image multiplicities; null-safe equality on every column;
@@ -1319,17 +1114,7 @@ object SnapshotTable {
           .repartition(col("file_path"))
         val delDir = s"$root/deletes/v$v"
         matches.write.mode("overwrite").parquet(delDir)
-        val delPath = new Path(delDir)
-        val fsys = fsOf(s, delPath)
-        val written = fsys.listStatus(delPath).map(_.getPath.toString)
-          .filter(_.endsWith(".parquet")).sorted.toSeq
-        val lines = annotateRows(s, written.map(f => s"$f\t$DeleteKindAnnot"))
-        val n = lines.map { l =>
-          l.split('\t').collectFirst {
-            case a if a.startsWith(RowsAnnot) => a.stripPrefix(RowsAnnot).toLong
-          }.getOrElse(0L)
-        }.sum
-        if (n == 0) { fsys.delete(delPath, true); Seq.empty } else lines
+        posDeleteLines(s, delDir)._1
       }
     val newFiles =
       if (inserts.isEmpty) Seq.empty[String]
@@ -1339,11 +1124,9 @@ object SnapshotTable {
     if (delLines.isEmpty && newFiles.isEmpty) return cur
     writeManifestAtomic(s, root, v,
       schemaMeta(s, root, cur) ++ meta + ("op" -> "cdc_apply"),
-      listBody(s, root, s"v$cur") ++
-        (if (delLines.isEmpty) Seq.empty
-         else Seq(writeFragment(s, root, s"v$v-del", delLines))) ++
-        (if (newFiles.isEmpty) Seq.empty
-         else Seq(writeFragment(s, root, s"v$v", newFiles))))
+      ver(s, root, cur).body ++
+        writeFragment(s, root, s"v$v-del", delLines) ++
+        writeFragment(s, root, s"v$v", newFiles))
     v
   }
 
@@ -1377,8 +1160,8 @@ object SnapshotTable {
     writeManifestAtomic(s, root, v,
       schemaMeta(s, root, cur) ++
         Map("op" -> "delete_eq", "eq_cols" -> keyCols.mkString(",")),
-      listBody(s, root, s"v$cur") ++
-        Seq(writeFragment(s, root, s"v$v-eqdel", eqLines)))
+      ver(s, root, cur).body ++
+        writeFragment(s, root, s"v$v-eqdel", eqLines))
     v
   }
 
@@ -1410,10 +1193,9 @@ object SnapshotTable {
     writeManifestAtomic(s, root, v,
       schemaMeta(s, root, cur) ++
         Map("op" -> "upsert_eq", "eq_cols" -> keyCols.mkString(",")),
-      listBody(s, root, s"v$cur") ++
-        Seq(writeFragment(s, root, s"v$v-eqdel", eqLines)) ++
-        (if (newFiles.isEmpty) Seq.empty
-         else Seq(writeFragment(s, root, s"v$v", newFiles))))
+      ver(s, root, cur).body ++
+        writeFragment(s, root, s"v$v-eqdel", eqLines) ++
+        writeFragment(s, root, s"v$v", newFiles))
     v
   }
 
@@ -1450,10 +1232,7 @@ object SnapshotTable {
     toPhysical(keyRows, mapping).distinct()
       .repartition(1) // key sets are O(batch) small; one file beats 32 shards
       .write.mode("overwrite").parquet(delDir)
-    val delPath = new Path(delDir)
-    val written = fsOf(s, delPath).listStatus(delPath)
-      .map(_.getPath.toString).filter(_.endsWith(".parquet")).sorted.toSeq
-    annotateRows(s, written.map(f =>
+    annotateRows(s, parquetFilesIn(s, delDir).map(f =>
       s"$f\t$EqDeleteKindAnnot\t$EqColsAnnot${physCols.mkString(",")}\t$EqSeqAnnot$seq"))
   }
 
@@ -1469,13 +1248,13 @@ object SnapshotTable {
   def compactDeletes(s: SparkSession, root: String): Int = {
     val cur = currentVersion(s, root)
     require(cur > 0, s"no snapshot table at $root")
-    val lines = manifestLines(s, root, cur)
+    val mv = ver(s, root, cur)
     val dels = deleteFiles(s, root, cur)
-    val eqs = eqDeletesOf(lines)
+    val eqs = mv.eqDeletes
     if (dels.isEmpty && eqs.isEmpty) return cur
     def norm(p: String) = canon(s, p)
     val files = dataFiles(s, root, cur)
-    val fileSeq = fileSeqFn(s, lines)
+    val fileSeq = fileSeqFn(s, mv)
     val mapping = columnMapping(s, root, cur)
     val types = columnTypes(s, root, cur)
     // positionally-affected files: named directly by the delete rows
@@ -1538,26 +1317,13 @@ object SnapshotTable {
       }
     // every delete line goes (eq deletes with no matching rows are
     // spent: the semi-join proved no surviving row matches them)
-    def gone(line: String) =
-      isSuppressionLine(line) || affected.contains(norm(line.split('\t').head))
-    val keptRefs = scala.collection.mutable.ArrayBuffer.empty[String]
-    val survivors = scala.collection.mutable.ArrayBuffer.empty[String]
-    listBody(s, root, s"v$cur").foreach { l =>
-      if (l.startsWith(RefPrefix)) {
-        val lines = readSmallFile(s, new Path(l.drop(1)))
-        if (lines.exists(gone)) survivors ++= lines.filterNot(gone)
-        else keptRefs += l
-      } else if (!gone(l)) survivors += l
-    }
-    val survivorRef =
-      if (survivors.isEmpty) Seq.empty
-      else Seq(writeFragment(s, root, s"v$v-keep", survivors.toSeq))
-    val newRef =
-      if (newFiles.isEmpty) Seq.empty
-      else Seq(writeFragment(s, root, s"v$v", newFiles))
+    val (keptRefs, survivors) =
+      mv.splitBody(e => !e.isData || affected.contains(norm(e.path)))
+    val survivorRef = writeFragment(s, root, s"v$v-keep", survivors)
+    val newRef = writeFragment(s, root, s"v$v", newFiles)
     publishRewrite(s, root, cur,
       Map("op" -> "compact_deletes", "rewrote" -> touched.size.toString),
-      keptRefs.toSeq ++ survivorRef ++ newRef)
+      keptRefs ++ survivorRef ++ newRef)
   }
 
   /** Publish a CONTENT-PRESERVING rewrite with Iceberg
@@ -1588,7 +1354,7 @@ object SnapshotTable {
       s: SparkSession, root: String, basedOn: Int,
       opMeta: Map[String, String], body: Seq[String],
       maxAttempts: Int = 50): Int = {
-    val baseBodySet = listBody(s, root, s"v$basedOn").toSet
+    val baseBodySet = ver(s, root, basedOn).body.toSet
     val baseSchema = schemaMeta(s, root, basedOn)
     var attempt = 0
     while (attempt < maxAttempts) {
@@ -1596,21 +1362,18 @@ object SnapshotTable {
       val added: Seq[String] =
         if (head == basedOn) Seq.empty
         else {
-          val headBody = listBody(s, root, s"v$head")
+          val headBody = ver(s, root, head).body
           val removed = baseBodySet -- headBody.toSet
           if (removed.nonEmpty) throw new IllegalStateException(
             s"rewrite of $root based on v$basedOn conflicts with a concurrent " +
               s"commit that removed ${removed.size} manifest line(s) (another " +
               "rewrite/overwrite) — re-plan the rewrite against the new head")
           val extra = headBody.filterNot(baseBodySet.contains)
-          val resolvedExtra = extra.flatMap { l =>
-            if (l.startsWith(RefPrefix)) readSmallFile(s, new Path(l.drop(1)))
-            else Seq(l)
-          }
-          if (resolvedExtra.exists(isSuppressionLine)) throw new IllegalStateException(
-            s"rewrite of $root based on v$basedOn conflicts with a concurrent " +
-              "row-level delete — its positions/keys may target replaced files; " +
-              "re-plan the rewrite against the new head")
+          if (ver(s, root, head).entriesBeyond(baseBodySet).exists(!_.isData))
+            throw new IllegalStateException(
+              s"rewrite of $root based on v$basedOn conflicts with a concurrent " +
+                "row-level delete — its positions/keys may target replaced files; " +
+                "re-plan the rewrite against the new head")
           if (schemaMeta(s, root, head) != baseSchema) throw new IllegalStateException(
             s"rewrite of $root based on v$basedOn conflicts with a concurrent " +
               "schema/registration change — re-plan against the new head")
@@ -1658,29 +1421,15 @@ object SnapshotTable {
     val dir = s"$root/deletes/m-${java.util.UUID.randomUUID.toString.take(8)}"
     s.read.parquet(dels: _*).distinct()
       .repartition(1).write.mode("overwrite").parquet(dir)
-    val p = new Path(dir)
-    val fsys = fsOf(s, p)
-    val written = fsys.listStatus(p).map(_.getPath.toString)
-      .filter(_.endsWith(".parquet")).sorted.toSeq
-    val newLines = annotateRows(s, written.map(f => s"$f\t$DeleteKindAnnot"))
+    val (newLines, _) = posDeleteLines(s, dir)
     val delSet = dels.map(norm).toSet
-    def gone(l: String) = isDeleteLine(l) && delSet.contains(norm(l.split('\t').head))
-    val keptRefs = scala.collection.mutable.ArrayBuffer.empty[String]
-    val survivors = scala.collection.mutable.ArrayBuffer.empty[String]
-    listBody(s, root, s"v$cur").foreach { l =>
-      if (l.startsWith(RefPrefix)) {
-        val ls = readSmallFile(s, new Path(l.drop(1)))
-        if (ls.exists(gone)) survivors ++= ls.filterNot(gone)
-        else keptRefs += l
-      } else if (!gone(l)) survivors += l
-    }
-    val survivorRef =
-      if (survivors.isEmpty) Seq.empty
-      else Seq(writeFragment(s, root, s"v${cur + 1}-keep", survivors.toSeq))
-    val newRef = Seq(writeFragment(s, root, s"v${cur + 1}", newLines))
+    val (keptRefs, survivors) = ver(s, root, cur)
+      .splitBody(e => e.kind == 1 && delSet.contains(norm(e.path)))
+    val survivorRef = writeFragment(s, root, s"v${cur + 1}-keep", survivors)
+    val newRef = writeFragment(s, root, s"v${cur + 1}", newLines)
     publishRewrite(s, root, cur,
       Map("op" -> "compact_delete_files", "consolidated" -> dels.size.toString),
-      keptRefs.toSeq ++ survivorRef ++ newRef)
+      keptRefs ++ survivorRef ++ newRef)
   }
 
   /** Delete-aware maintenance policy (the WHEN for [[compactDeletes]]
@@ -1708,16 +1457,10 @@ object SnapshotTable {
     val delCounts: Map[String, Long] = s.read.parquet(dels: _*)
       .groupBy("file_path").count().collect()
       .map(r => canon(s, r.getString(0)) -> r.getLong(1)).toMap
-    val trigger = manifestLines(s, root, cur)
-      .filterNot(_.startsWith("#")).filterNot(isDeleteLine)
-      .exists { l =>
-        val parts = l.split('\t')
-        val rows = parts.tail.collectFirst {
-          case a if a.startsWith(RowsAnnot) => a.stripPrefix(RowsAnnot).toLong
-        }
-        delCounts.get(canon(s, parts.head)).exists(d =>
-          rows.exists(r => r > 0 && d.toDouble / r > maxDeleteRatio))
-      }
+    val trigger = ver(s, root, cur).entries.filter(_.kind != 1).exists { e =>
+      delCounts.get(canon(s, e.path)).exists(d =>
+        e.rowsOpt.exists(r => r > 0 && d.toDouble / r > maxDeleteRatio))
+    }
     if (trigger) compactDeletes(s, root) else cur
   }
 
@@ -1762,10 +1505,10 @@ object SnapshotTable {
       sortCols: Seq[String] = Seq.empty): Int = {
     val cur = currentVersion(s, root)
     require(cur > 0, s"no snapshot table at $root")
-    val lines = manifestLines(s, root, cur)
+    val mv = ver(s, root, cur)
     val dels = deleteFiles(s, root, cur)
-    val eqs = eqDeletesOf(lines)
-    val fileSeq = fileSeqFn(s, lines)
+    val eqs = mv.eqDeletes
+    val fileSeq = fileSeqFn(s, mv)
     val mapping = columnMapping(s, root, cur)
     val types = columnTypes(s, root, cur)
     def norm(p: String) = canon(s, p)
@@ -1844,25 +1587,14 @@ object SnapshotTable {
         stampSeq(annotateRows(s, withPart), seq)
     }
     val packedSet: Set[String] = smallByGroup.values.flatten.map(norm).toSet
-    def packedLine(l: String) =
-      !isSuppressionLine(l) && packedSet.contains(norm(l.split('\t').head))
-    val keptRefs = scala.collection.mutable.ArrayBuffer.empty[String]
-    val survivors = scala.collection.mutable.ArrayBuffer.empty[String]
-    listBody(s, root, s"v$cur").foreach { l =>
-      if (l.startsWith(RefPrefix)) {
-        val ls = readSmallFile(s, new Path(l.drop(1)))
-        if (ls.exists(packedLine)) survivors ++= ls.filterNot(packedLine)
-        else keptRefs += l
-      } else if (!packedLine(l)) survivors += l
-    }
-    val survivorRef =
-      if (survivors.isEmpty) Seq.empty
-      else Seq(writeFragment(s, root, s"v${cur + 1}-keep", survivors.toSeq))
-    val newRef = Seq(writeFragment(s, root, s"v${cur + 1}", newFiles))
+    val (keptRefs, survivors) =
+      mv.splitBody(e => e.isData && packedSet.contains(norm(e.path)))
+    val survivorRef = writeFragment(s, root, s"v${cur + 1}-keep", survivors)
+    val newRef = writeFragment(s, root, s"v${cur + 1}", newFiles)
     publishRewrite(s, root, cur,
       Map("op" -> "optimize",
         "packed" -> packedSet.size.toString, "outputs" -> newFiles.size.toString),
-      keptRefs.toSeq ++ survivorRef ++ newRef)
+      keptRefs ++ survivorRef ++ newRef)
   }
 
   /** Shared copy-on-write planner: find the data files that actually
@@ -1875,11 +1607,11 @@ object SnapshotTable {
       rewrite: (DataFrame, Column) => DataFrame): Int = {
     val cur = currentVersion(s, root)
     require(cur > 0, s"no snapshot table at $root")
-    val curLines = manifestLines(s, root, cur)
+    val curVer = ver(s, root, cur)
     val files = dataFiles(s, root, cur)
     val dels = deleteFiles(s, root, cur)
-    val eqs = eqDeletesOf(curLines)
-    val curFileSeq = fileSeqFn(s, curLines)
+    val eqs = curVer.eqDeletes
+    val curFileSeq = fileSeqFn(s, curVer)
     val mapping = columnMapping(s, root, cur)
     val types = columnTypes(s, root, cur)
     def norm(p: String) = canon(s, p)
@@ -1963,10 +1695,7 @@ object SnapshotTable {
           s.read.parquet(staleFiles: _*)
             .filter(col("file_path").isin(keepRaw.toIndexedSeq: _*))
             .repartition(1).write.mode("overwrite").parquet(delDir)
-          val delPath = new Path(delDir)
-          val written = fsOf(s, delPath).listStatus(delPath)
-            .map(_.getPath.toString).filter(_.endsWith(".parquet")).sorted.toSeq
-          annotateRows(s, written.map(f => s"$f\t$DeleteKindAnnot"))
+          posDeleteLines(s, delDir)._1
         }
       }
     // Iceberg-style partial rewrite: fragments with NO affected file
@@ -1976,29 +1705,15 @@ object SnapshotTable {
     // (stats/bloom/partition/_rows annotations stay valid — the files
     // didn't change). Metadata I/O is O(touched fragments), not
     // O(table).
-    def hits(line: String) = {
-      val path = line.split('\t').head
-      if (isDeleteLine(line)) staleDels.contains(norm(path))
-      else affected.contains(norm(path))
+    // (legacy inline lines fold into the rewrite fragment)
+    val (keptRefs, survivors) = ver(s, root, cur).splitBody { e =>
+      if (e.kind == 1) staleDels.contains(norm(e.path)) else affected.contains(norm(e.path))
     }
-    val keptRefs = scala.collection.mutable.ArrayBuffer.empty[String]
-    val survivors = scala.collection.mutable.ArrayBuffer.empty[String]
-    listBody(s, root, s"v$cur").foreach { l =>
-      if (l.startsWith(RefPrefix)) {
-        val lines = readSmallFile(s, new Path(l.drop(1)))
-        if (lines.exists(hits)) survivors ++= lines.filterNot(hits)
-        else keptRefs += l
-      } else if (!hits(l)) survivors += l // legacy inline line: fold into the rewrite fragment
-    }
-    val survivorRef =
-      if (survivors.isEmpty) Seq.empty
-      else Seq(writeFragment(s, root, s"v$v-keep", survivors.toSeq))
-    val newRef =
-      if (newDataLines.isEmpty && delKeepLines.isEmpty) Seq.empty
-      else Seq(writeFragment(s, root, s"v$v", newDataLines ++ delKeepLines))
+    val survivorRef = writeFragment(s, root, s"v$v-keep", survivors)
+    val newRef = writeFragment(s, root, s"v$v", newDataLines ++ delKeepLines)
     writeManifestAtomic(s, root, v,
       schemaMeta(s, root, cur) ++ meta,
-      keptRefs.toSeq ++ survivorRef ++ newRef)
+      keptRefs ++ survivorRef ++ newRef)
     v
   }
 
@@ -2142,11 +1857,10 @@ object SnapshotTable {
       }
     }
     val annotated = files.map(_._1)
-    val base = if (append && v > 1) listBody(s, root, s"v$cur") else Seq.empty
+    val base = if (append && v > 1) ver(s, root, cur).body else Seq.empty
     val lines = stampSeq(annotateRows(s, annotated.sorted),
       nextSeqAt(s, root, cur))
-    val newRef =
-      if (lines.isEmpty) Seq.empty else Seq(writeFragment(s, root, s"v$v", lines))
+    val newRef = writeFragment(s, root, s"v$v", lines)
     val inherited = schemaMeta(s, root, cur)
     // real mapping (not Map.empty): a df carrying a renamed column's
     // physical name must persist under the LOGICAL key, or the header
@@ -2169,13 +1883,13 @@ object SnapshotTable {
     val entries = dataFilesWithPartitions(s, root, v)
     val mapping = columnMapping(s, root, v)
     val types = columnTypes(s, root, v)
-    val lines = manifestLines(s, root, v)
-    val dels = deleteFiles(s, root, v)
-    val eqs = eqDeletesOf(lines)
-    val fileSeq = fileSeqFn(s, lines)
+    val mv = ver(s, root, v)
+    val dels = mv.deleteFiles
+    val eqs = mv.eqDeletes
+    val fileSeq = fileSeqFn(s, mv)
     def view(files: Seq[String]) =
       logicalView(
-        applyAllDeletes(s, files, fs => rawWidenedRead(s, fs, mapping, types),
+        applyAllDeletes(s, files, fs => rawWidenedRead(s, fs, mapping, types, of = Some(mv)),
           dels, eqs, fileSeq),
         mapping, types, droppedColumns(s, root, v).keySet).filter(predicate)
     val full = view(entries.map(_._1))
@@ -2237,8 +1951,8 @@ object SnapshotTable {
     */
   private[graft] def sqlRowLevelBlocker(
       s: SparkSession, root: String, version: Int): Option[String] = {
-    val lines = manifestLines(s, root, version)
-    if (deleteFiles(s, root, version).nonEmpty || eqDeletesOf(lines).nonEmpty)
+    val mv = ver(s, root, version)
+    if (mv.deleteFiles.nonEmpty || mv.eqDeletes.nonEmpty)
       Some("pending merge-on-read deletes — run compactDeletes() first")
     else if (columnMapping(s, root, version).nonEmpty ||
       columnTypes(s, root, version).nonEmpty)
@@ -2314,9 +2028,10 @@ object SnapshotTable {
   private[graft] def pruneEntries(
       s: SparkSession, root: String, version: Int,
       c: org.apache.spark.sql.catalyst.expressions.Expression): Seq[String] = {
-    val entries = dataFilesWithPartitions(s, root, version)
-    val meta = commitMeta(s, root, version)
-    val mapping = columnMapping(s, root, version)
+    val mv = ver(s, root, version)
+    val entries = mv.dataEntries.map(e => (e.path, e.annots))
+    val meta = mv.header
+    val mapping = mv.columnMapping
     val afterPartition = meta.get(PartitionKey) match {
       case Some(source) =>
         PartitionTransforms.dayBounds(c, source) match {
@@ -2391,45 +2106,36 @@ object SnapshotTable {
     */
   def expirableVersions(s: SparkSession, root: String, keepLast: Int): Seq[Int] = {
     require(keepLast >= 1, "must keep at least the current version")
-    val dir = manifestDir(root)
-    val fs = fsOf(s, dir)
-    if (!fs.exists(dir)) Seq.empty
-    else {
-      val versions = fs.listStatus(dir).map(_.getPath.getName).collect {
-        case ManifestRe(v) => v.toInt
-      }.sorted.toSeq
-      versions.splitAt(math.max(0, versions.size - keepLast))._1
-    }
+    val versions = Manifest.versions(conf(s), root).map(_._1)
+    versions.splitAt(math.max(0, versions.size - keepLast))._1
   }
 
   def expire(s: SparkSession, root: String, keepLast: Int): (Seq[Int], Seq[String]) = {
     require(keepLast >= 1, "must keep at least the current version")
-    val dir = manifestDir(root)
-    val fs = fsOf(s, dir)
-    if (!fs.exists(dir)) return (Seq.empty, Seq.empty)
-    val versions = fs.listStatus(dir).map(_.getPath.getName).collect {
-      case ManifestRe(v) => v.toInt
-    }.sorted.toSeq
+    val versions = Manifest.versions(conf(s), root).map(_._1)
     val (expired, live) = versions.splitAt(math.max(0, versions.size - keepLast))
     if (expired.isEmpty) return (Seq.empty, Seq.empty)
     // branch heads keep their referenced files live — a branch created
     // from an expired main version must stay readable until published
     // or dropped
-    // filesAt includes positional delete files — deletes referenced by
-    // a live version must survive, expired-only ones are reclaimed
+    // every entry counts, positional delete files included — deletes
+    // referenced by a live version must survive, expired-only ones are
+    // reclaimed
+    def filesAt(stem: String) = verAt(s, root, stem).entries.map(_.path)
     val branchStems = branches(s, root).values.toSeq
-    val branchLive = branchStems.flatMap(stem => filesAt(s, root, stem)).toSet
-    val liveFiles = live.flatMap(v => filesAt(s, root, s"v$v")).toSet ++ branchLive
-    val orphaned = expired.flatMap(v => filesAt(s, root, s"v$v")).distinct
+    val branchLive = branchStems.flatMap(filesAt).toSet
+    val liveFiles = live.flatMap(v => filesAt(s"v$v")).toSet ++ branchLive
+    val orphaned = expired.flatMap(v => filesAt(s"v$v")).distinct
       .filterNot(liveFiles.contains)
     // fragments referenced only by expired versions are reclaimed too
     // — manifest metadata must not outgrow the data it describes
     val liveFrags = (live.map(v => s"v$v") ++ branchStems)
-      .flatMap(st => fragmentRefs(s, root, st)).toSet
-    val orphanedFrags = expired.flatMap(v => fragmentRefs(s, root, s"v$v"))
+      .flatMap(st => verAt(s, root, st).fragments).toSet
+    val orphanedFrags = expired.flatMap(v => ver(s, root, v).fragments)
       .distinct.filterNot(liveFrags.contains)
     // delete manifests FIRST: a crash mid-expire must never leave a
     // readable version pointing at deleted fragments or data files
+    val fs = fsOf(s, new Path(root))
     expired.foreach(v => fs.delete(new Path(s"$root/_manifests/v$v.manifest"), false))
     orphanedFrags.foreach(f => fs.delete(new Path(f), false))
     orphaned.foreach(f => fs.delete(new Path(f), false))
@@ -2577,13 +2283,8 @@ object SnapshotTable {
     val refDf = stemsRdd.mapPartitions { sts =>
       val conf = execConf()
       sts.flatMap { st =>
-        val raw = rawManifestLinesConf(conf, root, st)
-        val frags = raw.filter(_.startsWith(RefPrefix)).map(_.drop(1))
-        val files = raw.flatMap { l =>
-          if (l.startsWith(RefPrefix)) readSmallFileConf(conf, new Path(l.drop(1)))
-          else Seq(l)
-        }.filterNot(_.startsWith("#")).map(_.split('\t').head)
-        (files ++ frags).map(p => canonConf(conf, p))
+        val mv = Manifest.at(conf, root, st)
+        (mv.entries.map(_.path) ++ mv.fragments).map(p => canonConf(conf, p))
       }
     }.toDF("ref")
     val orphans: Seq[String] = listed
@@ -2641,7 +2342,7 @@ object SnapshotTable {
     if (cur < 1) dfCols.zipWithIndex.map { case (n, i) => n -> (i + 1) }.toMap
     else {
       val mapping = columnMapping(s, root, cur)
-      val stored = parsePairs(commitMeta(s, root, cur).get(FieldIdsKey))
+      val stored = pairs(commitMeta(s, root, cur).get(FieldIdsKey))
       // dropped physical names keep their TOMBSTONED id: a compaction
       // rewriting an old file that still physically carries a dropped
       // column must stamp the dropped field's own id, never a fresh one.
@@ -2678,7 +2379,7 @@ object SnapshotTable {
     */
   private def fieldIdsHeader(inherited: Map[String, String],
       mapping: Map[String, String], physIds: Map[String, Int]): Map[String, String] = {
-    val stored = parsePairs(inherited.get(FieldIdsKey))
+    val stored = pairs(inherited.get(FieldIdsKey))
     val reverse = mapping.map(_.swap)
     val merged = stored ++ physIds.map { case (p, id) =>
       reverse.getOrElse(p, p) -> id.toString
@@ -2777,9 +2478,7 @@ object SnapshotTable {
 
   private def writeDataFilesAt(s: SparkSession, dataDir: String, df: DataFrame): Seq[String] = {
     writingMicrosTimestamps(s) { df.write.mode("overwrite").parquet(dataDir) }
-    val dataPath = new Path(dataDir)
-    fsOf(s, dataPath).listStatus(dataPath)
-      .map(_.getPath.toString).filter(_.endsWith(".parquet")).sorted.toSeq
+    parquetFilesIn(s, dataDir)
   }
 
   private def writeManifestAtomic(
@@ -2815,7 +2514,7 @@ object SnapshotTable {
     val fs = fsOf(s, mp)
     val out = fs.create(tmp, true)
     // EofMarker LAST: readers treat a manifest without it as possibly
-    // mid-publish and wait (see rawManifestLines)
+    // mid-publish and wait (see Manifest.readRaw)
     try out.write(((header ++ files ++ Seq(EofMarker)).mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
     // the atomic swap is the store-specific part — see CommitArbiter
@@ -2897,7 +2596,7 @@ object SnapshotTable {
       Map("op" -> "clone", "clone_of" -> s"$srcRoot@v$v")
     // fragment refs are absolute paths, so the zero-copy clone carries
     // them verbatim across roots (same expire caveat as data files)
-    writeManifestAtomic(s, destRoot, 1, header, listBody(s, srcRoot, s"v$v"))
+    writeManifestAtomic(s, destRoot, 1, header, ver(s, srcRoot, v).body)
     1
   }
 
@@ -2909,7 +2608,7 @@ object SnapshotTable {
     val header = commitMeta(s, root, toVersion)
     writeManifestAtomic(s, root, v,
       header ++ Map("op" -> "rollback", "rollback_of" -> toVersion.toString),
-      listBody(s, root, s"v$toVersion"))
+      ver(s, root, toVersion).body)
     v
   }
 
@@ -3052,10 +2751,10 @@ object SnapshotTable {
       s: SparkSession, root: String, name: String, df: DataFrame,
       append: Boolean = true, meta: Map[String, String] = Map.empty): Int = {
     val headStem = branchHead(s, root, name)
-    val inherited = headerAt(s, root, headStem)
+    val inherited = verAt(s, root, headStem).header
       .filter(kv => kv._1 == ColMapKey || kv._1 == ColTypesKey ||
         kv._1 == PartitionKey || kv._1 == StatsKey || kv._1 == BloomKey)
-    val mapping = parsePairs(inherited.get(ColMapKey))
+    val mapping = pairs(inherited.get(ColMapKey))
     val mdir = manifestDir(root)
     val fs = fsOf(s, mdir)
     val seqRe = (java.util.regex.Pattern.quote(name) + "\\.v(\\d+)\\.manifest").r
@@ -3064,12 +2763,10 @@ object SnapshotTable {
     }.foldLeft(0)(math.max) + 1
     val newFiles = stampSeq(annotateRows(s,
       writeDataFilesAt(s, s"$root/data/$name/v$n", toPhysical(df, mapping))),
-      maxSeqOf(manifestLinesAt(s, root, headStem)) + 1)
-    val base = if (append) listBody(s, root, headStem) else Seq.empty
+      verAt(s, root, headStem).maxSeq + 1)
+    val base = if (append) verAt(s, root, headStem).body else Seq.empty
     val stem = s"$name.v$n"
-    val newRef =
-      if (newFiles.isEmpty) Seq.empty
-      else Seq(writeFragment(s, root, stem, newFiles))
+    val newRef = writeFragment(s, root, stem, newFiles)
     writeManifestAtomicAt(s, root, stem,
       inherited ++ meta + ("branch" -> name), base ++ newRef)
     writeRef(fs, new Path(branchesDir(root), name), stem, overwrite = true)
@@ -3081,14 +2778,10 @@ object SnapshotTable {
     */
   def readBranch(s: SparkSession, root: String, name: String): DataFrame = {
     val stem = branchHead(s, root, name)
-    val header = headerAt(s, root, stem)
-    val lines = manifestLinesAt(s, root, stem).filterNot(_.startsWith("#"))
-    readWithSchema(s,
-      lines.filterNot(isSuppressionLine).map(_.split('\t').head),
-      parsePairs(header.get(ColMapKey)), parsePairs(header.get(ColTypesKey)),
-      deletes = lines.filter(isDeleteLine).map(_.split('\t').head),
-      eqDels = eqDeletesOf(lines), fileSeq = fileSeqFn(s, lines),
-      dropped = parsePairs(header.get(DroppedKey)).keySet)
+    val mv = verAt(s, root, stem)
+    readWithSchema(s, mv.dataFiles, mv.columnMapping, pairs(mv.header.get(ColTypesKey)),
+      deletes = mv.deleteFiles, eqDels = mv.eqDeletes, fileSeq = fileSeqFn(s, mv),
+      dropped = pairs(mv.header.get(DroppedKey)).keySet)
   }
 
   /** PUBLISH: fast-forward main to the branch head. Zero-copy — the
@@ -3102,9 +2795,9 @@ object SnapshotTable {
     val cur = currentVersion(s, root)
     val v = cur + 1
     writeManifestAtomic(s, root, v,
-      headerAt(s, root, stem) ++
+      verAt(s, root, stem).header ++
         Map("op" -> "publish", "published_from" -> stem),
-      listBody(s, root, stem))
+      verAt(s, root, stem).body)
     v
   }
 
@@ -3161,20 +2854,15 @@ object SnapshotTable {
     * travel reads the column.
     */
   def droppedColumns(s: SparkSession, root: String, version: Int): Map[String, Int] =
-    parsePairs(commitMeta(s, root, version).get(DroppedKey))
+    pairs(commitMeta(s, root, version).get(DroppedKey))
       .map { case (k, v) => k -> v.toInt }
-
-  private def parsePairs(v: Option[String]): Map[String, String] =
-    v.toSeq.flatMap(_.split(",")).flatMap { e =>
-      e.split("=", 2) match { case Array(k, x) => Some(k -> x); case _ => None }
-    }.toMap
 
   private def renderPairs(m: Map[String, String]): String =
     m.toSeq.sorted.map { case (k, x) => s"$k=$x" }.mkString(",")
 
   /** logical name → physical (in-file) name at a version. */
   def columnMapping(s: SparkSession, root: String, version: Int): Map[String, String] =
-    parsePairs(commitMeta(s, root, version).get(ColMapKey))
+    ver(s, root, version).columnMapping
 
   // persistent Iceberg-style field ids: logical name → id, carried in
   // the inherited header. The id FOLLOWS a field through renames (the
@@ -3192,9 +2880,9 @@ object SnapshotTable {
     * when some are.
     */
   def fieldIds(s: SparkSession, root: String, version: Int): Map[String, Int] = {
-    val stored = parsePairs(commitMeta(s, root, version).get(FieldIdsKey))
+    val stored = pairs(commitMeta(s, root, version).get(FieldIdsKey))
       .map { case (k, v) => k -> v.toInt }
-    val names = read(s, root, version).schema.fieldNames
+    val names = schema(s, root, version).fieldNames
     if (stored.isEmpty) names.zipWithIndex.map { case (n, i) => n -> (i + 1) }.toMap
     else {
       var next = stored.values.max
@@ -3209,7 +2897,7 @@ object SnapshotTable {
 
   /** logical name → widened DDL type at a version. */
   def columnTypes(s: SparkSession, root: String, version: Int): Map[String, String] =
-    parsePairs(commitMeta(s, root, version).get(ColTypesKey))
+    pairs(commitMeta(s, root, version).get(ColTypesKey))
 
   // statscols/bloomcols ride along with the schema headers: the
   // per-file min/max and bloom annotations live in the (immutable,
@@ -3234,7 +2922,7 @@ object SnapshotTable {
 
   /** Table properties visible at `version` (Iceberg/Delta TBLPROPERTIES). */
   def properties(s: SparkSession, root: String, version: Int): Map[String, String] =
-    parsePairs(commitMeta(s, root, version).get(PropsKey)).map { case (k, v) =>
+    pairs(commitMeta(s, root, version).get(PropsKey)).map { case (k, v) =>
       java.net.URLDecoder.decode(k, "UTF-8") -> java.net.URLDecoder.decode(v, "UTF-8")
     }
 
@@ -3254,7 +2942,7 @@ object SnapshotTable {
       (if (encoded.nonEmpty) Map(PropsKey -> renderPairs(encoded)) else Map.empty) +
       ("op" -> "properties")
     val v = cur + 1
-    writeManifestAtomic(s, root, v, meta, listBody(s, root, s"v$cur"))
+    writeManifestAtomic(s, root, v, meta, ver(s, root, cur).body)
     v
   }
 
@@ -3302,7 +2990,7 @@ object SnapshotTable {
     // fragment refs copied verbatim: a metadata-only commit costs
     // O(#fragments) lines and never touches the files' stats/bloom/
     // _rows annotations (they live inside the untouched fragments)
-    writeManifestAtomic(s, root, v, meta, listBody(s, root, s"v$cur"))
+    writeManifestAtomic(s, root, v, meta, ver(s, root, cur).body)
     v
   }
 
@@ -3344,7 +3032,7 @@ object SnapshotTable {
     val meta = (schemaMeta(s, root, cur) - ColTypesKey) ++
       Map("op" -> s"widen:$name:$ddlType", ColTypesKey -> renderPairs(types))
     val v = cur + 1
-    writeManifestAtomic(s, root, v, meta, listBody(s, root, s"v$cur"))
+    writeManifestAtomic(s, root, v, meta, ver(s, root, cur).body)
     v
   }
 
@@ -3387,7 +3075,7 @@ object SnapshotTable {
       Map("op" -> s"add:$name:$ddlType", ColTypesKey -> renderPairs(types),
         FieldIdsKey -> renderPairs(newIds.map { case (k, i) => k -> i.toString }))
     val v = cur + 1
-    writeManifestAtomic(s, root, v, meta, listBody(s, root, s"v$cur"))
+    writeManifestAtomic(s, root, v, meta, ver(s, root, cur).body)
     v
   }
 
@@ -3409,7 +3097,7 @@ object SnapshotTable {
       .flatMap(_.split(",")).filter(_.nonEmpty).toSet
     if (registered.contains(name) || registered.contains(physical))
       return Some(s"DROP COLUMN $name: stats/bloom skipping is registered on it")
-    if (eqDeletesOf(manifestLines(s, root, cur)).exists(_.cols.contains(physical)))
+    if (ver(s, root, cur).eqDeletes.exists(_.cols.contains(physical)))
       return Some(s"DROP COLUMN $name: pending equality deletes key on it")
     None
   }
@@ -3420,7 +3108,7 @@ object SnapshotTable {
     * includes them when assigning fresh ids).
     */
   private def fieldIdTombstones(s: SparkSession, root: String, v: Int): Map[String, Int] =
-    parsePairs(commitMeta(s, root, v).get(FieldIdsKey))
+    pairs(commitMeta(s, root, v).get(FieldIdsKey))
       .collect { case (k, x) if k.startsWith("!") => k -> x.toInt }
 
   /** DROP COLUMN — metadata-only commit (Iceberg §Schema Evolution:
@@ -3455,7 +3143,7 @@ object SnapshotTable {
       (if (newMapping.nonEmpty) Map(ColMapKey -> renderPairs(newMapping)) else Map.empty) ++
       (if (newTypes.nonEmpty) Map(ColTypesKey -> renderPairs(newTypes)) else Map.empty)
     val v = cur + 1
-    writeManifestAtomic(s, root, v, meta, listBody(s, root, s"v$cur"))
+    writeManifestAtomic(s, root, v, meta, ver(s, root, cur).body)
     v
   }
 
@@ -3496,7 +3184,8 @@ object SnapshotTable {
     */
   def read(s: SparkSession, root: String, version: Int = -1): DataFrame = {
     val v = if (version < 0) currentVersion(s, root) else version
-    readFiles(s, root, v, dataFiles(s, root, v))
+    val mv = ver(s, root, v)
+    readFilesWith(s, root, v, mv.dataFiles, mv.deleteFiles, mv.eqDeletes, fileSeqFn(s, mv))
   }
 
   /** Read an explicit file subset through a version's column mapping +
@@ -3509,28 +3198,16 @@ object SnapshotTable {
   private[graft] val ScanRootKey = "graft.snapshot.root"
   private[graft] val ScanVersionKey = "graft.snapshot.version"
 
-  // marks a read covering the version's FULL data-file set — the one
-  // shape whose middle-footer probe result is valid to memoize in
-  // absentColsCache (a pruned subset proves nothing table-wide)
-  private val AllFilesKey = "graft.snapshot.allfiles"
-
-  private def readFiles(
-      s: SparkSession, root: String, v: Int, files: Seq[String]): DataFrame = {
-    val lines = manifestLines(s, root, v)
-    readFilesWith(s, root, v, files, deleteFiles(s, root, v),
-      eqDeletesOf(lines), fileSeqFn(s, lines), allFiles = true)
-  }
-
   private def readFilesWith(
       s: SparkSession, root: String, v: Int, files: Seq[String],
       deletes: Seq[String],
       eqDels: Seq[EqDelete] = Seq.empty,
-      fileSeq: String => Long = _ => 0L,
-      allFiles: Boolean = false): DataFrame =
-    readWithSchema(s, files, columnMapping(s, root, v), columnTypes(s, root, v),
-      Map(ScanRootKey -> root, ScanVersionKey -> v.toString) ++
-        (if (allFiles) Map(AllFilesKey -> "true") else Map.empty), deletes,
-      eqDels, fileSeq, droppedColumns(s, root, v).keySet)
+      fileSeq: String => Long = _ => 0L): DataFrame = {
+    val mv = ver(s, root, v)
+    readWithSchema(s, files, mv.columnMapping, columnTypes(s, root, v),
+      Map(ScanRootKey -> root, ScanVersionKey -> v.toString), deletes,
+      eqDels, fileSeq, droppedColumns(s, root, v).keySet, Some(mv))
+  }
 
   private def readWithSchema(
       s: SparkSession, files: Seq[String],
@@ -3539,9 +3216,10 @@ object SnapshotTable {
       deletes: Seq[String] = Seq.empty,
       eqDels: Seq[EqDelete] = Seq.empty,
       fileSeq: String => Long = _ => 0L,
-      dropped: Set[String] = Set.empty): DataFrame =
+      dropped: Set[String] = Set.empty,
+      of: Option[Manifest.Version] = None): DataFrame =
     logicalView(
-      applyAllDeletes(s, files, fs => rawWidenedRead(s, fs, mapping, types, tags),
+      applyAllDeletes(s, files, fs => rawWidenedRead(s, fs, mapping, types, tags, of),
         deletes, eqDels, fileSeq),
       mapping, types, dropped)
 
@@ -3575,18 +3253,43 @@ object SnapshotTable {
       else f
     })
 
-  /** (root@version) -> columns VERIFIED absent from every data file of
-    * that immutable version. See the memo guard in [[rawWidenedRead]].
-    */
-  private val absentColsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Set[String]]()
+  // session settings the footer-to-Spark schema conversion reads
+  // (graft.sources.Footer): a read schema derived under one value must
+  // not serve a read under another
+  private def footerConfKey(s: SparkSession): String =
+    Seq("spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp",
+      "spark.sql.parquet.inferTimestampNTZ.enabled",
+      "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.caseSensitive")
+      .map(k => s.conf.getOption(k).getOrElse("")).mkString("|")
 
+  /** Physical read of `files` under version `of`. When the files are
+    * `of`'s data files, the widened read schema of its FULL data-file
+    * set is derived once per version and kept with it ([[Manifest]]);
+    * a proper subset still derives its own, skipping the middle-footer
+    * probe for columns the full set proved absent from every file
+    * (absent everywhere ⇒ absent from any subset). Files from outside
+    * the version (a CDF diff's removed side) derive theirs unaided.
+    */
   private def rawWidenedRead(
       s: SparkSession, files: Seq[String],
       mapping: Map[String, String], types: Map[String, String],
-      tags: Map[String, String] = Map.empty): DataFrame = {
+      tags: Map[String, String] = Map.empty,
+      of: Option[Manifest.Version] = None): DataFrame = {
     if (files.isEmpty) return s.read.options(tags).parquet(files: _*)
     val physTypes = types.map { case (l, t) => mapping.getOrElse(l, l) -> t }
+    val key = s"readSchema|${physTypes.toSeq.sorted}|${footerConfKey(s)}"
+    val full = of.filter(mv => files.toSet.subsetOf(mv.dataFiles.toSet))
+      .map(mv => mv.memo(key)(widenedSchema(s, mv.dataFiles, physTypes, Set.empty)))
+    val schema =
+      if (full.isDefined && of.exists(_.dataFiles == files)) full.get
+      else widenedSchema(s, files, physTypes,
+        full.fold(Set.empty[String])(physTypes.keySet -- _.fieldNames))
+    s.read.schema(schema).options(tags).parquet(files: _*)
+  }
+
+  private def widenedSchema(
+      s: SparkSession, files: Seq[String], physTypes: Map[String, String],
+      knownAbsent: Set[String]): org.apache.spark.sql.types.StructType = {
     // infer from TWO footers, not a full relation: creating a relation
     // just to read its schema would LIST every file a second time — a
     // real fixed cost on many-file tables. The NEWEST file (manifest
@@ -3620,20 +3323,9 @@ object SnapshotTable {
     // already holds the widened type. Short-circuits at the first
     // carrying file; the full-scan worst case is the rare table whose
     // header lists a column NO file ever carried (legitimate NULL
-    // materialization), and stays driver-side footer reads.
+    // materialization) — paid once per version, since the full-set
+    // schema is kept with the version.
     val middleOnly: Seq[org.apache.spark.sql.types.StructField] = {
-      // memo guard: a column the coltypes header lists but NO file of
-      // this (root, version) carries — the standard ADD COLUMN-before-
-      // backfill state — would otherwise re-probe every footer on
-      // EVERY read. Versions are immutable, so a full-set probe's
-      // "absent everywhere" verdict is cached per (root, version) and
-      // is sound to consult for subsets too (absent everywhere ⇒
-      // absent from any subset).
-      val cacheKey = for {
-        r <- tags.get(ScanRootKey); ver <- tags.get(ScanVersionKey)
-      } yield s"$r@$ver"
-      val knownAbsent: Set[String] = cacheKey
-        .flatMap(k => Option(absentColsCache.get(k))).getOrElse(Set.empty)
       var missing = physTypes.keySet -- inferred.fieldNames -- knownAbsent
       if (missing.isEmpty || files.length <= 2) Seq.empty
       else {
@@ -3656,10 +3348,6 @@ object SnapshotTable {
               n, org.apache.spark.sql.types.DataType.fromDDL(physTypes(n)))
           }
         }
-        if (missing.nonEmpty && tags.contains(AllFilesKey)) cacheKey.foreach { k =>
-          if (absentColsCache.size > 4096) absentColsCache.clear() // bound, never wrong
-          absentColsCache.merge(k, missing.toSet, (a, b) => a ++ b); ()
-        }
         found.toSeq
       }
     }
@@ -3668,8 +3356,31 @@ object SnapshotTable {
         .map(t => f.copy(dataType = org.apache.spark.sql.types.DataType.fromDDL(t)))
         .getOrElse(f)
     } ++ middleOnly)
-    s.read.schema(stripFieldIdMeta(widened)).options(tags).parquet(files: _*)
+    stripFieldIdMeta(widened)
   }
+
+  /** The logical schema of a version (what [[read]] returns), derived
+    * once per version and kept with it — the catalog, Iceberg export
+    * and wire-commit validation ask for it far more often than the
+    * table changes.
+    */
+  def schema(s: SparkSession, root: String,
+      version: Int = -1): org.apache.spark.sql.types.StructType = {
+    val v = if (version < 0) currentVersion(s, root) else version
+    ver(s, root, v).memo(s"schema|${footerConfKey(s)}")(read(s, root, v).schema)
+  }
+
+  /** `f` of the newest version of `root`, computed once per version and
+    * kept with it (the REST catalog serves its registry rows this way).
+    * `f` receives the version number; a root with no version yet is
+    * computed afresh on every call.
+    */
+  private[graft] def memoAtHead[T <: AnyRef](s: SparkSession, root: String, key: String)(
+      f: Int => T): T =
+    Manifest.head(conf(s), root) match {
+      case Some((v, mv)) => mv.memo(key)(f(v))
+      case None => f(0)
+    }
 
   /** CDF-style row changes between two versions, Delta-CDF semantics
     * without persisted change files: `change_type` is 'insert' or
@@ -3722,15 +3433,17 @@ object SnapshotTable {
     // exceptAll net the unchanged rows out. File-accurate but
     // key-conservative: a candidate file with no matching keys reads
     // and nets to zero (Iceberg CDC pays the same scan).
-    val fromLines = if (fromV == 0) Seq.empty[String] else manifestLines(s, root, fromV)
-    val toLines = manifestLines(s, root, toV)
-    val eqFrom = eqDeletesOf(fromLines)
-    val eqTo = eqDeletesOf(toLines)
+    val fromVer = if (fromV == 0) None else Some(ver(s, root, fromV))
+    val toVer = ver(s, root, toV)
+    val eqFrom = fromVer.fold(Seq.empty[EqDelete])(_.eqDeletes)
+    val eqTo = toVer.eqDeletes
+    val fileSeqFrom = fromVer.fold((_: String) => 0L)(fileSeqFn(s, _))
+    val fileSeqTo = fileSeqFn(s, toVer)
     val eqAffected =
       if (eqFrom.isEmpty && eqTo.isEmpty) Seq.empty[String]
       else {
-        val fsFrom = fileSeqFn(s, fromLines)
-        val fsTo = fileSeqFn(s, toLines)
+        val fsFrom = fileSeqFrom
+        val fsTo = fileSeqTo
         toFiles.filter { f =>
           fromSet.contains(norm(f)) &&
             eqFrom.filter(_.seq > fsFrom(f)).map(e => norm(e.path)).toSet !=
@@ -3738,8 +3451,6 @@ object SnapshotTable {
         }
       }
     val affected = (posAffected ++ eqAffected).distinct
-    val fileSeqFrom = fileSeqFn(s, fromLines)
-    val fileSeqTo = fileSeqFn(s, toLines)
     // empty-side frames need the to-version schema; derive it cheaply
     // from the other side (at least one side is non-empty unless the
     // versions are file-identical)
@@ -3773,13 +3484,9 @@ object SnapshotTable {
     val p = new Path(root)
     val fs = fsOf(s, p)
     if (fs.exists(p)) { fs.delete(p, true); () }
-    // the absent-column memo is keyed root@version; a table dropped and
-    // recreated at the same root restarts its version numbering, so a
-    // stale "absent everywhere" verdict from the OLD table could make a
-    // middle-file-only column of the NEW table read as typed NULLs in a
-    // long-lived session. Versions are only immutable within one table
-    // lifetime — purge the root's entries with the directory.
-    val prefix = s"$root@"
-    absentColsCache.keySet.removeIf(_.startsWith(prefix))
+    // versions are only immutable within one table lifetime: a table
+    // re-created at this root restarts its numbering, so its parsed
+    // versions go with the directory
+    Manifest.purge(root)
   }
 }

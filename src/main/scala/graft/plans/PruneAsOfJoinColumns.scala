@@ -21,15 +21,29 @@ import org.apache.spark.sql.catalyst.rules.Rule
 /** Limit pushdown through AsOfJoin: the operator emits exactly one
   * row per left row, so a LocalLimit above it can also bound the LEFT
   * child — n rows in, n rows out — instead of merging both full
-  * inputs first. (The limit above stays: pushdown is an additional
-  * bound, same contract as Spark's own LimitPushDown through joins.)
+  * inputs first. A deterministic Project between the limit and the
+  * join (`AsOf.join(…).select(…).limit(n)`) is row-for-row too, so the
+  * limit reaches through it. (The limit above stays: pushdown is an
+  * additional bound, same contract as Spark's own LimitPushDown
+  * through joins.)
   */
 object PushLimitThroughAsOfJoin extends Rule[LogicalPlan] {
   import org.apache.spark.sql.catalyst.plans.logical.LocalLimit
 
+  // already bounded: a LocalLimit, possibly under the Projects column
+  // pruning puts on the join's left child
+  private def limited(p: LogicalPlan): Boolean = p match {
+    case _: LocalLimit => true
+    case Project(_, c) => limited(c)
+    case _ => false
+  }
+
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case ll @ LocalLimit(expr, a: AsOfJoin) if !a.left.isInstanceOf[LocalLimit] =>
+    case ll @ LocalLimit(expr, a: AsOfJoin) if !limited(a.left) =>
       ll.copy(child = a.copy(left = LocalLimit(expr, a.left)))
+    case ll @ LocalLimit(expr, p @ Project(list, a: AsOfJoin))
+        if list.forall(_.deterministic) && !limited(a.left) =>
+      ll.copy(child = p.copy(child = a.copy(left = LocalLimit(expr, a.left))))
   }
 }
 

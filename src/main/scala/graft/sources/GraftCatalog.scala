@@ -237,7 +237,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     // PHYSICAL (in-file) mapping is simulated alongside: names freed
     // logically by a rename stay occupied physically, so ADD must
     // check both namespaces or appends die on duplicate file columns
-    var evolving = SnapshotTable.read(spark, root).schema
+    var evolving = SnapshotTable.schema(spark, root)
     var physOf: Map[String, String] = {
       val m = SnapshotTable.columnMapping(spark, root,
         SnapshotTable.currentVersion(spark, root))
@@ -435,7 +435,7 @@ private[graft] class GraftTable(
   override def name(): String = tableName
 
   override lazy val schema: StructType =
-    SnapshotTable.read(spark, root, version).schema
+    SnapshotTable.schema(spark, root, version)
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(

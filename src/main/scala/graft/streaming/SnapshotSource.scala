@@ -58,7 +58,7 @@ object SnapshotSource {
     * the change_type column.
     */
   def changeSchema(spark: org.apache.spark.sql.SparkSession, root: String): StructType =
-    StructType(SnapshotTable.read(spark, root).schema.fields :+
+    StructType(SnapshotTable.schema(spark, root).fields :+
       StructField("change_type", StringType, nullable = false))
 }
 
@@ -87,7 +87,7 @@ class GraftSnapshotRelation(
   private def spark = sqlContext.sparkSession
 
   override lazy val schema: StructType =
-    SnapshotTable.read(spark, root, version).schema
+    SnapshotTable.schema(spark, root, version)
 
   /** SQL `INSERT INTO` / `INSERT OVERWRITE` on a registered lake
     * table: an append goes through the concurrency-safe commitAppend

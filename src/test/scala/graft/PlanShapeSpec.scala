@@ -98,6 +98,31 @@ class PlanShapeSpec extends SparkSpec {
     got.foreach { case (id, m) => assert(full(id) === m, s"event $id") }
   }
 
+  test("limit pushes through a projection over the AsOfJoin") {
+    val ev = sources.Tables.load(spark, sf(), "events")
+    val l = ev.filter(col("event_type") === "purchase")
+    val r = ev.filter(col("event_type") === "view")
+      .withColumnRenamed("event_id", "v_event_id")
+      .withColumnRenamed("user_id", "v_user_id")
+      .withColumnRenamed("ts", "v_ts")
+    val joined = plans.AsOf.join(l, r, "user_id", "v_user_id", "ts", "v_ts")
+      .select("event_id", "v_event_id")
+    val limited = joined.limit(7)
+    val optimized = limited.queryExecution.optimizedPlan.toString
+    val asofIdx = optimized.indexOf("AsOfJoin")
+    assert(asofIdx >= 0)
+    assert(optimized.indexOf("LocalLimit", asofIdx) > asofIdx,
+      s"no pushed LocalLimit below AsOfJoin:\n${optimized.take(1500)}")
+    // each limited row keeps the match the unlimited join gives it
+    def matches(df: org.apache.spark.sql.DataFrame): Map[Long, Option[Long]] =
+      df.collect().map(row => row.getAs[Long]("event_id") ->
+        Option(row.getAs[Any]("v_event_id")).map(_.asInstanceOf[Long])).toMap
+    val got = matches(limited)
+    assert(got.size === 7)
+    val full = matches(joined)
+    got.foreach { case (id, m) => assert(full(id) === m, s"event $id") }
+  }
+
   test("dimension joins broadcast (q05)") {
     val p = planOf("q05_region_revenue")
     assert(p.contains("BroadcastHashJoin"))
