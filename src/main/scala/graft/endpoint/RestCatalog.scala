@@ -1,6 +1,5 @@
 package graft.endpoint
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
@@ -161,24 +160,9 @@ object RestCatalog {
           sv.http.getAddress.getPort
         case None =>
           PersistentCatalog.restore(spark, registryRoot)
-          // the JDK server writes a response's headers and body as two
-          // segments; with Nagle on, the body waits out the client's
-          // delayed ACK (~40 ms on Linux), which dwarfed a cached
-          // loadTable. The server reads this once, when the JVM's first
-          // HttpServer is built; an explicit setting wins.
-          if (System.getProperty("sun.net.httpserver.nodelay") == null)
-            System.setProperty("sun.net.httpserver.nodelay", "true")
-          val http = HttpServer.create(new InetSocketAddress("localhost", 0), 0)
           // a small fixed pool: handlers are metadata-sized, and the
-          // spec's two concurrent clients must genuinely overlap.
-          // DAEMON threads throughout — the endpoint must never keep
-          // the host JVM alive after main returns (the driver's Verify
-          // main exits without System.exit)
-          http.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4,
-            (r: Runnable) => {
-              val t = new Thread(r, "graft-rest-catalog")
-              t.setDaemon(true); t
-            }))
+          // spec's two concurrent clients must genuinely overlap
+          val http = LocalHttpServer.create(4, "graft-rest-catalog")
           val handler = new CatalogHandler(spark, registryRoot, db, auth,
             whStore = Some(new WarehouseStore(spark, registryRoot, auth)))
           http.createContext("/v1", handler)

@@ -154,10 +154,6 @@ private[graft] object Manifest {
     /** logical name → physical (in-file) name. */
     lazy val columnMapping: Map[String, String] = pairs(header.get(SnapshotTable.ColMapKey))
 
-    // fragment ref line → its entries, shared with later versions
-    private[Manifest] lazy val refEntries: Map[String, IndexedSeq[Entry]] =
-      groups.iterator.filter(_._1.startsWith(RefPrefix)).toMap
-
     /** Entries of the body lines not in `base` (an earlier body). */
     def entriesBeyond(base: Set[String]): Seq[Entry] =
       groups.filterNot(g => base.contains(g._1)).flatMap(_._2)
@@ -241,12 +237,7 @@ private[graft] object Manifest {
     if (matches && slot.settled) return slot.version
     val t0 = System.currentTimeMillis
     val (raw, complete) = readRaw(conf, root, stem)
-    val v =
-      if (matches && raw == slot.version.raw) slot.version
-      else parse(conf, raw, slots.synchronized {
-        import scala.jdk.CollectionConverters._
-        slots.asScala.collect { case ((r, _), sl) if r == root => sl.version }.toSeq
-      })
+    val v = if (matches && raw == slot.version.raw) slot.version else parse(conf, raw)
     if (complete) slots.synchronized {
       slots.put(key, new Slot(st.getLen, st.getModificationTime, t0, v))
     }
@@ -258,19 +249,13 @@ private[graft] object Manifest {
     slots.keySet.removeIf(_._1 == root); ()
   }
 
-  /** Resolve a manifest's body. A fragment is create-exclusive under a
-    * random name, so a ref line names one immutable content: entries a
-    * cached version of the same root already resolved for it are
-    * shared, and an append reads only its own new fragment.
-    */
-  private def parse(conf: Configuration, raw: Seq[String], known: Seq[Version]): Version =
+  /** Resolve a manifest's body: each fragment ref inlines its entries. */
+  private def parse(conf: Configuration, raw: Seq[String]): Version =
     new Version(raw, raw.filterNot(_.startsWith("#")).toIndexedSeq.map { l =>
-      l -> known.iterator.flatMap(_.refEntries.get(l)).nextOption().getOrElse {
-        val lines =
-          if (l.startsWith(RefPrefix)) readLines(conf, new Path(l.drop(1)))
-          else Seq(l)
-        lines.filterNot(_.startsWith("#")).map(new Entry(_)).toIndexedSeq
-      }
+      val lines =
+        if (l.startsWith(RefPrefix)) readLines(conf, new Path(l.drop(1)))
+        else Seq(l)
+      l -> lines.filterNot(_.startsWith("#")).map(new Entry(_)).toIndexedSeq
     })
 
   private def readLines(conf: Configuration, p: Path): Seq[String] = {

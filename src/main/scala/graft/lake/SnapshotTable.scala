@@ -141,14 +141,21 @@ object SnapshotTable {
   }
 
   /** Manifest lines (row-stamped) for the positional-delete parquet
-    * just written under `dir`, and the delete rows they carry. A set
-    * that deletes nothing is removed again.
+    * just written under `dir`.
     */
-  private def posDeleteLines(s: SparkSession, dir: String): (Seq[String], Long) = {
-    val lines = annotateRows(s, parquetFilesIn(s, dir).map(f => s"$f\t$DeleteKindAnnot"))
+  private def posDeleteLines(s: SparkSession, dir: String): Seq[String] =
+    annotateRows(s, parquetFilesIn(s, dir).map(f => s"$f\t$DeleteKindAnnot"))
+
+  /** [[posDeleteLines]] of a MoR delete set and the delete rows they
+    * carry. A set that deletes nothing (Spark still writes one empty
+    * part file) is removed again and yields no lines, so no manifest
+    * can reference its deleted files.
+    */
+  private def morDeleteLines(s: SparkSession, dir: String): (Seq[String], Long) = {
+    val lines = posDeleteLines(s, dir)
     val n = lines.map(new Entry(_).rows).sum
-    if (n == 0) { val p = new Path(dir); fsOf(s, p).delete(p, true) }
-    (lines, n)
+    if (n > 0) (lines, n)
+    else { val p = new Path(dir); fsOf(s, p).delete(p, true); (Seq.empty, 0L) }
   }
 
   /** canon(data file) → its commit sequence number, for a version.
@@ -960,7 +967,7 @@ object SnapshotTable {
       .repartition(col("file_path"))
     val delDir = s"$root/deletes/v$v"
     matches.write.mode("overwrite").parquet(delDir)
-    val (delLines, nDeleted) = posDeleteLines(s, delDir)
+    val (delLines, nDeleted) = morDeleteLines(s, delDir)
     if (nDeleted == 0) return cur
     val newRef = writeFragment(s, root, s"v$v-del", delLines)
     writeManifestAtomic(s, root, v,
@@ -1022,7 +1029,7 @@ object SnapshotTable {
         .select(col("_graft_fp").as("file_path"), col("_graft_pos").as("pos"))
         .repartition(col("file_path"))
         .write.mode("overwrite").parquet(delDir)
-      val (delLines, nUpdated) = posDeleteLines(s, delDir)
+      val (delLines, nUpdated) = morDeleteLines(s, delDir)
       if (nUpdated == 0) return cur
       val replacements = toPhysical(
         set.foldLeft(matched) { case (d, (name, value)) =>
@@ -1114,7 +1121,7 @@ object SnapshotTable {
           .repartition(col("file_path"))
         val delDir = s"$root/deletes/v$v"
         matches.write.mode("overwrite").parquet(delDir)
-        posDeleteLines(s, delDir)._1
+        morDeleteLines(s, delDir)._1
       }
     val newFiles =
       if (inserts.isEmpty) Seq.empty[String]
@@ -1421,7 +1428,7 @@ object SnapshotTable {
     val dir = s"$root/deletes/m-${java.util.UUID.randomUUID.toString.take(8)}"
     s.read.parquet(dels: _*).distinct()
       .repartition(1).write.mode("overwrite").parquet(dir)
-    val (newLines, _) = posDeleteLines(s, dir)
+    val newLines = posDeleteLines(s, dir)
     val delSet = dels.map(norm).toSet
     val (keptRefs, survivors) = ver(s, root, cur)
       .splitBody(e => e.kind == 1 && delSet.contains(norm(e.path)))
@@ -1695,7 +1702,7 @@ object SnapshotTable {
           s.read.parquet(staleFiles: _*)
             .filter(col("file_path").isin(keepRaw.toIndexedSeq: _*))
             .repartition(1).write.mode("overwrite").parquet(delDir)
-          posDeleteLines(s, delDir)._1
+          posDeleteLines(s, delDir)
         }
       }
     // Iceberg-style partial rewrite: fragments with NO affected file

@@ -176,12 +176,7 @@ object LiveFeed {
 
     def serve(key: String, backing: FeedClient): Int = synchronized {
       servers.getOrElse(key, {
-        val http = com.sun.net.httpserver.HttpServer.create(
-          new java.net.InetSocketAddress("localhost", 0), 0)
-        http.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8,
-          (r: Runnable) => {
-            val t = new Thread(r, "graft-feed-server"); t.setDaemon(true); t
-          }))
+        val http = graft.endpoint.LocalHttpServer.create(8, "graft-feed-server")
         http.createContext("/", (ex: com.sun.net.httpserver.HttpExchange) => {
           try {
             // RAW query: URI.getQuery pre-decodes percent escapes,

@@ -299,6 +299,23 @@ class MorDeleteSpec extends SparkSpec {
       SnapshotTable.deleteFiles(spark, root, 2).size)
   }
 
+  test("(i) applyChangesMor: delete images matching no live row commit no delete file") {
+    val root = "/tmp/graft_test/mor_cdc_nomatch"
+    SnapshotTable.drop(spark, root)
+    SnapshotTable.commit(spark, root, Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1))
+    val v = SnapshotTable.applyChangesMor(spark, root,
+      inserts = Seq((3L, "c")).toDF("id", "v"),
+      deleteImages = Seq((9L, "z"), (1L, "b")).toDF("id", "v"))
+    assert(v === 2)
+    // the empty delete set's directory is removed, so no manifest may
+    // reference it: the read must open every file it lists
+    assert(SnapshotTable.deleteFiles(spark, root, 2).isEmpty)
+    val got = SnapshotTable.read(spark, root).orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getString(1)))
+    assert(got.toSeq === Seq((1L, "a"), (2L, "b"), (3L, "c")))
+    assert(SnapshotTable.recordCount(spark, root, 2) === 3)
+  }
+
   test("(h) MoR delete and compaction work across a widened column (mixed-width files)") {
     val root = "/tmp/graft_test/mor_widen"
     SnapshotTable.drop(spark, root)
