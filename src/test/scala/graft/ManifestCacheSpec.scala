@@ -2,25 +2,41 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.hadoop.fs.{FSDataInputStream, Path}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.functions.col
 
 import graft.lake.{Manifest, SnapshotTable}
 
 /** `countfs://`: [[GraftTestFs]] under its own scheme, counting every
-  * open of a file under a `_manifests/` directory (version manifests
-  * and fragments alike).
+  * open and every create of a file under a `_manifests/` directory
+  * (version manifests, publish tmps and fragments alike).
   */
 class CountingTestFs extends GraftTestFs {
   override def getUri: java.net.URI = java.net.URI.create("countfs:///")
+  private def count(f: Path, n: AtomicInteger): Unit =
+    if (f.toString.contains("/_manifests/")) { n.incrementAndGet(); () }
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
-    if (f.toString.contains("/_manifests/")) CountingTestFs.opens.incrementAndGet()
+    count(f, CountingTestFs.opens)
     super.open(f, bufferSize)
+  }
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    count(f, CountingTestFs.creates)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    count(f, CountingTestFs.creates)
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
   }
 }
 
 object CountingTestFs {
   val opens = new AtomicInteger()
+  val creates = new AtomicInteger()
 }
 
 /** The parsed-manifest cache ([[Manifest]]) serves a version only while
