@@ -1189,11 +1189,12 @@ object RestCatalog {
             if (loc.isEmpty) err(ex, 404, s"$name has no location (view)")
             else {
               val v = SnapshotTable.currentVersion(spark, loc)
-              if (v == 0) err(ex, 404, s"$name is not a snapshot table (no _manifests under $loc)")
+              if (v == 0) err(ex, 404,
+                s"$name is not a snapshot table (no ${graft.lake.Manifest.dir(loc).getName} under $loc)")
               else send(ex, 200, jobj(
                 "name" -> jstr(name),
                 "snapshot_version" -> v.toString,
-                "manifest" -> jstr(s"$loc/_manifests/v$v.manifest")))
+                "manifest" -> jstr(graft.lake.Manifest.path(loc, s"v$v").toString)))
             }
           }
 
@@ -2050,7 +2051,7 @@ object RestCatalog {
       * same CAS-guarded manifest chain. Row-level deletes ride the
       * same shape: `added-delete-files` ([[parseDeleteFiles]]) lands
       * positional and equality delete files with upsertEq's sequence
-      * stamping through [[SnapshotTable.commitFilesWithDeletes]], so
+      * stamping through the same [[SnapshotTable.commitFiles]], so
       * an external CDC writer commits (delete k, insert k) batches
       * entirely over HTTP.
       */
@@ -2140,13 +2141,9 @@ object RestCatalog {
             case (status, msg) => err(ex, status, msg); return
           }
           val nv =
-            try {
-              if (posDels.isEmpty && eqDels.isEmpty)
-                SnapshotTable.commitFiles(spark, loc, files, append = true)
-              else
-                SnapshotTable.commitFilesWithDeletes(spark, loc, files,
-                  posDels, eqDels)
-            } catch {
+            try SnapshotTable.commitFiles(spark, loc, files,
+              posDeletes = posDels, eqDeletes = eqDels)
+            catch {
               case e: IllegalStateException =>
                 err(ex, 409, s"commit lost the version CAS: ${e.getMessage}"); return
             }
@@ -2212,11 +2209,12 @@ object RestCatalog {
           "(file_path string, pos bigint); got " +
           sch.map(x => s"${x.name} ${x.dataType.simpleString}").mkString(", ")))
       }.nextOption().orElse {
+        lazy val curTypes = currentTypes(loc)
         eqDels.iterator.flatMap { case (f, cols) =>
-          val fileCols = graft.sources.Footer.schemaOf(spark, f).fieldNames.toSet
-          cols.find(!fileCols.contains(_)).map(c => 400 ->
+          val sch = graft.sources.Footer.schemaOf(spark, f)
+          cols.find(c => !sch.fieldNames.contains(c)).map(c => 400 ->
             (s"equality delete file $f does not carry declared key column $c"))
-            .orElse(stagedSchemaConflict(loc, Seq(f)).map(409 -> _))
+            .orElse(fileSchemaConflict(curTypes, f, sch).map(409 -> _))
         }.nextOption()
       }
     }
@@ -2231,22 +2229,32 @@ object RestCatalog {
       */
     private def stagedSchemaConflict(loc: String,
         files: Seq[String]): Option[String] = {
-      val curTypes = SnapshotTable.schema(spark, loc)
-        .map(f => f.name -> f.dataType.simpleString).toMap
+      val curTypes = currentTypes(loc)
       files.iterator.flatMap { f =>
-        graft.sources.Footer.schemaOf(spark, f).iterator.flatMap { sf =>
-          curTypes.get(sf.name) match {
-            case Some(t) if t == sf.dataType.simpleString => None
-            case Some(t) => Some(s"staged file $f column ${sf.name} has type " +
-              s"${sf.dataType.simpleString} but the table's current schema has " +
-              s"$t — the schema evolved since write planning; re-stage and retry")
-            case None => Some(s"staged file $f carries column ${sf.name} not " +
-              "present in the table's current schema — the schema evolved " +
-              "since write planning; re-stage and retry")
-          }
-        }
+        fileSchemaConflict(curTypes, f, graft.sources.Footer.schemaOf(spark, f))
       }.nextOption()
     }
+
+    /** The table's current schema: column name → type. */
+    private def currentTypes(loc: String): Map[String, String] =
+      SnapshotTable.schema(spark, loc).map(f => f.name -> f.dataType.simpleString).toMap
+
+    /** [[stagedSchemaConflict]] of one staged file whose footer schema
+      * is `sch`.
+      */
+    private def fileSchemaConflict(curTypes: Map[String, String], f: String,
+        sch: org.apache.spark.sql.types.StructType): Option[String] =
+      sch.iterator.flatMap { sf =>
+        curTypes.get(sf.name) match {
+          case Some(t) if t == sf.dataType.simpleString => None
+          case Some(t) => Some(s"staged file $f column ${sf.name} has type " +
+            s"${sf.dataType.simpleString} but the table's current schema has " +
+            s"$t — the schema evolved since write planning; re-stage and retry")
+          case None => Some(s"staged file $f carries column ${sf.name} not " +
+            "present in the table's current schema — the schema evolved " +
+            "since write planning; re-stage and retry")
+        }
+      }.nextOption()
 
     /** Iceberg REST `POST /v1/transactions/commit`
       * (CommitTransactionRequest): atomic commits spanning tables —
@@ -2480,11 +2488,8 @@ object RestCatalog {
                 }
               case None =>
                 val before = SnapshotTable.currentVersion(spark, c.loc)
-                if (c.posDels.isEmpty && c.eqDels.isEmpty)
-                  SnapshotTable.commitFiles(spark, c.loc, c.files, append = true)
-                else
-                  SnapshotTable.commitFilesWithDeletes(spark, c.loc, c.files,
-                    c.posDels, c.eqDels)
+                SnapshotTable.commitFiles(spark, c.loc, c.files,
+                  posDeletes = c.posDels, eqDeletes = c.eqDels)
                 applied += ((c, () => {
                   SnapshotTable.rollback(spark, c.loc, before); ()
                 }))

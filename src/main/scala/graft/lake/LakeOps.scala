@@ -1755,9 +1755,10 @@ object LakeOps {
     ev.limit(10).repartition(2).write.parquet(s"$root/data/c-crashed") // crashed commit
     ev.limit(5).select(lit("x").as("file_path"), lit(0L).as("pos"))
       .repartition(1).write.parquet(s"$root/deletes/v99") // aborted delete write
-    touch(s"$root/_manifests/c-dead-s3-beefbeef.frag") // superseded rebase fragment
-    touch(s"$root/_manifests/.v9.cafecafe.manifest.tmp") // torn publish
-    touch(s"$root/_manifests/.v9.manifest.lock") // leaked arbiter lock
+    val manifests = graft.lake.Manifest.dir(root)
+    touch(s"$manifests/c-dead-s3-beefbeef.frag") // superseded rebase fragment
+    touch(s"$manifests/.v9.cafecafe.manifest.tmp") // torn publish
+    touch(s"$manifests/.v9.manifest.lock") // leaked arbiter lock
     val before = SnapshotTable.read(s, root).count()
     val live = (SnapshotTable.dataFiles(s, root, 3) ++
       SnapshotTable.deleteFiles(s, root, 3)).map(SnapshotTable.canon(s, _)).toSet

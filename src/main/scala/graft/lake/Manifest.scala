@@ -1,17 +1,43 @@
 package graft.lake
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
-/** The one reader of a snapshot table's `_manifests/` directory.
+/** The one owner of a snapshot table's `_manifests/` directory: it
+  * writes the format it reads ([[fragment]], [[publish]] and the entry
+  * encoders produce what [[Entry]] and [[Version]] decode), publishes
+  * every version through one CAS path, and caches parsed versions.
   *
-  * A version manifest is write-once: a writer-unique tmp file, a
-  * [[CommitArbiter]] publish, and an [[EofMarker]] trailer last. Its
-  * fragments (`.frag`, referenced by `>`-prefixed body lines) are
-  * create-exclusive and immutable too. So a version parsed once —
-  * header, body, resolved entries with their annotations, and whatever
-  * the lake layer derives from them (column mapping, read schema) —
-  * stays true for as long as the manifest file itself is the same file.
+  * '''On-disk format.''' UTF-8 text, one item per line:
+  * {{{
+  * v<N>.manifest                  main version N (1, 2, …)
+  * <branch>.v<N>.manifest         a branch's own commit N
+  * <hint>-<8 hex>.frag            fragment: entry lines, create-exclusive
+  * .<stem>.<8 hex>.manifest.tmp   a writer's manifest before its publish
+  * .<stem>.manifest.lock          a LockFileCas publish lock
+  *
+  * manifest   := header* body* "#graft.eof"    the trailer is always last
+  * header     := "#" key "=" value              sorted by key
+  * body       := ">" fragment-path | entry      fragment ref | legacy inline
+  * fragment   := entry+
+  * entry      := file-path ("\t" annotation)*   annotations in any order
+  * annotation := "_kind=posdelete"              positional-delete file
+  *             | "_kind=eqdelete" "\t" "_eqcols=" col("," col)* "\t" "_eqseq=" n
+  *             | "_rows=" n ["\t" "_bytes=" n]  row count, file size
+  *             | "_seq=" n                      data sequence number
+  *             | key "=" value                  partition values, stats, blooms
+  * }}}
+  * Header keys: `committed_at` (epoch ms, on every version, strictly
+  * increasing along main); the schema headers each commit inherits
+  * (`colmap`, `coltypes`, `fieldids`, `dropped`, `tblprops`,
+  * `partition`, `statscols`, `bloomcols`; see `SnapshotTable`); `op`
+  * with the op's own keys; caller metadata (e.g. a streaming batch id).
+  *
+  * '''The cache.''' A version manifest is write-once and its
+  * fragments are immutable, so a version parsed once — header, body,
+  * resolved entries, and whatever the lake layer derives from them
+  * (column mapping, read schema) — stays true for as long as the
+  * manifest file itself is the same file.
   *
   * The cache holds one [[Version]] per (root, stem), bounded at
   * [[Cap]] entries, least recently used out first. An entry is served
@@ -46,23 +72,23 @@ private[graft] object Manifest {
     * append). The trailer turns truncation into something a reader
     * can detect and wait out.
     */
-  private[lake] val EofMarker = "#graft.eof"
+  private val EofMarker = "#graft.eof"
 
   // `>`-prefixed lines in a version manifest reference an immutable
   // fragment file by absolute path; resolution inlines the fragment's
   // entry lines. Fragment paths are absolute so zero-copy refs survive
   // a cross-root shallowClone (with the same expire caveat as data
   // files).
-  private[lake] val RefPrefix = ">"
+  private val RefPrefix = ">"
 
   // per-file annotations of an entry line (`<path>\t<annot>\t…`)
-  private[lake] val DeleteKindAnnot = "_kind=posdelete"
-  private[lake] val EqDeleteKindAnnot = "_kind=eqdelete"
-  private[lake] val EqColsAnnot = "_eqcols="
-  private[lake] val EqSeqAnnot = "_eqseq="
-  private[lake] val SeqAnnot = "_seq="
-  private[lake] val RowsAnnot = "_rows="
-  private[lake] val BytesAnnot = "_bytes="
+  private val DeleteKindAnnot = "_kind=posdelete"
+  private val EqDeleteKindAnnot = "_kind=eqdelete"
+  private val EqColsAnnot = "_eqcols="
+  private val EqSeqAnnot = "_eqseq="
+  private val SeqAnnot = "_seq="
+  private val RowsAnnot = "_rows="
+  private val BytesAnnot = "_bytes="
 
   private val Cap = 512 // versions the cache holds at most
 
@@ -193,6 +219,9 @@ private[graft] object Manifest {
     }
   }
 
+  /** Version 0: the empty table before the first commit. */
+  val Empty: Version = new Version(Seq.empty, IndexedSeq.empty)
+
   private final class Slot(val len: Long, val mtime: Long,
       @volatile var checkedAt: Long, val version: Version) {
     def settled: Boolean = checkedAt - mtime >= RacyMs
@@ -203,18 +232,46 @@ private[graft] object Manifest {
       size > Cap
   }
 
-  private def manifestPath(root: String, stem: String) =
-    new Path(s"$root/_manifests/$stem.manifest")
+  /** A table root's manifest directory. */
+  def dir(root: String): Path = new Path(s"$root/_manifests")
+
+  /** The manifest file of version `stem` (`v3`, or a branch's `audit.v2`). */
+  def path(root: String, stem: String): Path = new Path(s"$root/_manifests/$stem.manifest")
 
   private val VersionRe = "v(\\d+)\\.manifest".r
 
   /** Main versions of `root` with their listing status, ascending. */
   def versions(conf: Configuration, root: String): Seq[(Int, FileStatus)] = {
-    val dir = new Path(s"$root/_manifests")
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(st => st.getPath.getName -> st)
+    val d = dir(root)
+    val fs = d.getFileSystem(conf)
+    if (!fs.exists(d)) Seq.empty
+    else fs.listStatus(d).toSeq.map(st => st.getPath.getName -> st)
       .collect { case (VersionRe(v), st) => v.toInt -> st }.sortBy(_._1)
+  }
+
+  /** The newest commit number of branch `name` of `root` (0: none yet). */
+  def branchVersion(conf: Configuration, root: String, name: String): Int = {
+    val d = dir(root)
+    val re = (java.util.regex.Pattern.quote(name) + "\\.v(\\d+)\\.manifest").r
+    d.getFileSystem(conf).listStatus(d).map(_.getPath.getName)
+      .collect { case re(v) => v.toInt }.foldLeft(0)(math.max)
+  }
+
+  /** What orphan cleanup sees in a root's manifest directory: every
+    * version and branch manifest stem, the debris decidable by name
+    * (tmps of publishes that never completed, leaked locks), and every
+    * fragment. None when the root has no manifest directory.
+    */
+  final case class Listing(stems: Seq[String], debris: Seq[FileStatus], fragments: Seq[FileStatus])
+
+  def listing(conf: Configuration, root: String): Option[Listing] = {
+    val fs = dir(root).getFileSystem(conf)
+    if (!fs.exists(dir(root))) return None
+    val files = fs.listStatus(dir(root)).toSeq.filterNot(_.isDirectory)
+    def named(p: String => Boolean) = files.filter(st => p(st.getPath.getName))
+    Some(Listing(
+      named(_.endsWith(".manifest")).map(_.getPath.getName.stripSuffix(".manifest")),
+      named(n => n.endsWith(".tmp") || n.endsWith(".lock")), named(_.endsWith(".frag"))))
   }
 
   /** The newest main version of `root` (number and parsed version),
@@ -225,7 +282,7 @@ private[graft] object Manifest {
 
   /** Version `stem` (`v3`, or a branch's `audit.v2`) of `root`. */
   def at(conf: Configuration, root: String, stem: String): Version = {
-    val p = manifestPath(root, stem)
+    val p = path(root, stem)
     at(conf, root, stem, p.getFileSystem(conf).getFileStatus(p))
   }
 
@@ -248,6 +305,90 @@ private[graft] object Manifest {
   def purge(root: String): Unit = slots.synchronized {
     slots.keySet.removeIf(_._1 == root); ()
   }
+
+  // ----- writing -----
+
+  /** A lost version CAS: another writer published the version first. */
+  final class LostCas(msg: String) extends IllegalStateException(msg)
+
+  private val CommittedAtKey = "committed_at"
+
+  /** Entry line of a positional-delete file. */
+  def posDeleteLine(path: String): String = s"$path\t$DeleteKindAnnot"
+
+  /** Entry line of an equality-delete file: its PHYSICAL key columns
+    * and the sequence number it was committed at.
+    */
+  def eqDeleteLine(path: String, cols: Seq[String], seq: Long): String =
+    s"$path\t$EqDeleteKindAnnot\t$EqColsAnnot${cols.mkString(",")}\t$EqSeqAnnot$seq"
+
+  /** `line` with its file's row count and, when known, byte size. */
+  def withCounts(line: String, rows: Long, bytes: Option[Long]): String =
+    s"$line\t$RowsAnnot$rows" + bytes.fold("")(b => s"\t$BytesAnnot$b")
+
+  /** `line` with its file's data sequence number. */
+  def withSeq(line: String, seq: Long): String = s"$line\t$SeqAnnot$seq"
+
+  /** Write `lines` as a fragment and return its body ref line (no
+    * lines, no fragment). The random name suffix keeps a losing
+    * committer's fragment from ever colliding with the winner's.
+    */
+  def fragment(conf: Configuration, root: String, hint: String,
+      lines: Seq[String]): Seq[String] =
+    if (lines.isEmpty) Seq.empty
+    else {
+      val p = new Path(s"$root/_manifests/$hint-${suffix()}.frag")
+      write(p.getFileSystem(conf), p, lines, overwrite = false)
+      Seq(RefPrefix + p.toString)
+    }
+
+  private val StemRe = "v(\\d+)".r
+
+  /** Publish version `stem` of `root`: header `meta`, then `body`,
+    * then the trailer. `committed_at`, the anchor of timestamp time
+    * travel, is stamped fresh (a rollback copies an OLD header, but the
+    * commit happens now) and STRICTLY increasing along main
+    * (max(now, previous + 1)): the clock can step back and ticks in ms.
+    * The bytes go to a WRITER-UNIQUE tmp (a shared one would let a
+    * racing committer swap them before the publish), and
+    * [[CommitArbiter]] swaps it into place; a lost CAS throws [[LostCas]].
+    */
+  def publish(conf: Configuration, root: String, stem: String,
+      meta: Map[String, String], body: Seq[String]): Unit = {
+    val prevStamp = stem match {
+      case StemRe(v) if v.toInt > 1 =>
+        try at(conf, root, s"v${v.toInt - 1}").header.get(CommittedAtKey).fold(0L)(_.toLong)
+        catch { case _: Exception => 0L }
+      case _ => 0L
+    }
+    val instant = math.max(System.currentTimeMillis, prevStamp + 1)
+    val header = (meta + (CommittedAtKey -> instant.toString)).toSeq.sorted
+      .map { case (k, v) => s"#$k=$v" }
+    val dst = path(root, stem)
+    val tmp = new Path(s"$root/_manifests/.$stem.${suffix()}.manifest.tmp")
+    val fs = dst.getFileSystem(conf)
+    write(fs, tmp, header ++ body :+ EofMarker, overwrite = true)
+    if (!CommitArbiter.forConf(conf).publish(fs, tmp, dst)) {
+      fs.delete(tmp, false)
+      throw new LostCas(s"concurrent commit detected for $root at $stem — manifest already exists")
+    }
+  }
+
+  /** Write a named ref file (a tag's version number, a branch's head
+    * stem): one line, create-exclusive unless `overwrite`.
+    */
+  def writeRef(conf: Configuration, p: Path, value: String, overwrite: Boolean): Unit =
+    write(p.getFileSystem(conf), p, Seq(value), overwrite)
+
+  private def suffix(): String = java.util.UUID.randomUUID.toString.take(8)
+
+  private def write(fs: FileSystem, p: Path, lines: Seq[String], overwrite: Boolean): Unit = {
+    val out = fs.create(p, overwrite)
+    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  // ----- reading -----
 
   /** Resolve a manifest's body: each fragment ref inlines its entries. */
   private def parse(conf: Configuration, raw: Seq[String]): Version =
@@ -276,7 +417,7 @@ private[graft] object Manifest {
     * torn-manifest spec pins the wait).
     */
   private def readRaw(conf: Configuration, root: String, stem: String): (Seq[String], Boolean) = {
-    val p = manifestPath(root, stem)
+    val p = path(root, stem)
     var attempt = 0
     while (true) {
       val lines = readLines(conf, p)

@@ -11,18 +11,17 @@ import org.apache.spark.sql.functions.{coalesce, col, lit, when}
   * (/root/reference/etc/catalog/iceberg.properties,
   * RUNBOOK.md §7 — `CREATE TABLE … WITH (partitioning …)`, inserts,
   * read-back) with no external catalog: each commit writes new
-  * immutable files plus a manifest (`_manifests/v{N}.manifest`).
+  * immutable files plus a version manifest ([[Manifest]]).
   * Readers pick a version → time travel; appends never rewrite old
   * files.
   *
   * Commit metadata I/O is O(files touched), not O(table) — Iceberg's
   * manifest-list design: a commit writes its new file entries to an
-  * immutable FRAGMENT (a `.frag` file under `_manifests`) and the
-  * version manifest
-  * is a manifest LIST — header lines plus one `>`-prefixed reference
-  * per live fragment. Unchanged fragments are re-referenced, never
-  * rewritten, so appending one file to a million-file table writes
-  * one small fragment plus a list with one line per prior commit.
+  * immutable FRAGMENT and the version manifest is a manifest LIST —
+  * header lines plus one reference per live fragment. Unchanged
+  * fragments are re-referenced, never rewritten, so appending one file
+  * to a million-file table writes one small fragment plus a list with
+  * one line per prior commit.
   * Copy-on-write (DELETE/UPDATE) rewrites only the fragments that
   * contain affected files; metadata-only commits (rename/widen/
   * rollback/tag/publish) copy fragment references verbatim. Legacy
@@ -34,13 +33,10 @@ import org.apache.spark.sql.functions.{coalesce, col, lit, when}
   * MinIO bucket; local paths are just the test medium.
   */
 object SnapshotTable {
-  import Manifest.{BytesAnnot, DeleteKindAnnot, Entry, EqColsAnnot, EqDelete,
-    EqDeleteKindAnnot, EqSeqAnnot, EofMarker, RefPrefix, RowsAnnot, SeqAnnot, pairs}
+  import Manifest.{Entry, EqDelete, pairs}
 
   private def fsOf(s: SparkSession, p: Path): FileSystem =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  private def manifestDir(root: String) = new Path(s"$root/_manifests")
 
   /** Canonical, SCHEME-PRESERVING file identity. Manifest lines and
     * `_metadata.file_path` spell the same file differently
@@ -68,29 +64,76 @@ object SnapshotTable {
   def currentVersion(s: SparkSession, root: String): Int =
     Manifest.versions(conf(s), root).lastOption.fold(0)(_._1)
 
+  /** [[currentVersion]] of a table that must already exist. */
+  private def existingVersion(s: SparkSession, root: String): Int = {
+    val cur = currentVersion(s, root)
+    require(cur > 0, s"no snapshot table at $root")
+    cur
+  }
+
   /** Main version `version` of `root`, parsed once ([[Manifest]]). */
   private def ver(s: SparkSession, root: String, version: Int): Manifest.Version =
     verAt(s, root, s"v$version")
+
+  /** Version `cur` as a commit builds on it: version 0 is the empty table. */
+  private def headAt(s: SparkSession, root: String, cur: Int): Manifest.Version =
+    if (cur < 1) Manifest.Empty else ver(s, root, cur)
 
   /** Manifest version by stem — `v3` (main) or `audit.v2` (branch). */
   private def verAt(s: SparkSession, root: String, stem: String): Manifest.Version =
     Manifest.at(conf(s), root, stem)
 
-  /** Write an immutable fragment (create-exclusive — fragments are
-    * write-once) and return its manifest ref line; no lines, no
-    * fragment. Names carry a random suffix so a losing concurrent
-    * committer's orphan fragment can never collide with the winner's.
+  /** The commit skeleton every write op on main shares: publish
+    * version `cur + 1` on head `cur` (0 = a new table), reading the
+    * head once. The header is `header` of the head's inherited headers
+    * ([[inheritedHeader]]) plus `meta`; the body is `body` of the head
+    * (its whole body by default) followed by one new fragment per
+    * (name suffix, entry lines) group that has lines, named
+    * `v<cur + 1><suffix>`. A lost CAS throws [[Manifest.LostCas]].
+    * Returns the new version.
     */
-  private def writeFragment(
-      s: SparkSession, root: String, hint: String, lines: Seq[String]): Seq[String] = {
-    if (lines.isEmpty) return Seq.empty
-    val suffix = java.util.UUID.randomUUID.toString.take(8)
-    val p = new Path(s"$root/_manifests/$hint-$suffix.frag")
-    val fs = fsOf(s, p)
-    val out = fs.create(p, false)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    Seq(RefPrefix + p.toString)
+  private def publishNext(
+      s: SparkSession, root: String, cur: Int, meta: Map[String, String],
+      added: Seq[(String, Seq[String])] = Nil,
+      body: Manifest.Version => Seq[String] = _.body,
+      header: Map[String, String] => Map[String, String] = identity): Int = {
+    val v = cur + 1
+    val head = headAt(s, root, cur)
+    val refs = added.flatMap { case (suffix, lines) =>
+      Manifest.fragment(conf(s), root, s"v$v$suffix", lines)
+    }
+    Manifest.publish(conf(s), root, s"v$v",
+      header(inheritedHeader(head)) ++ meta, body(head) ++ refs)
+    v
+  }
+
+  private val CasAttempts = 50
+
+  /** The one lost-CAS retry loop. `attempt` builds a commit on the
+    * newest head (its argument) and publishes it with [[publishNext]];
+    * when another writer published that version first, it runs again
+    * on the new head after a 2–9 ms jittered backoff (so stampeding
+    * writers spread out), [[CasAttempts]] times at most. What a rebase
+    * must redo or check is the caller's rule, inside `attempt`.
+    */
+  @annotation.tailrec
+  private def rebasing(s: SparkSession, root: String, lost: Int = 0)(
+      attempt: Int => Int): Int = {
+    val won =
+      try Some(attempt(currentVersion(s, root)))
+      catch {
+        case e: Manifest.LostCas =>
+          if (lost + 1 >= CasAttempts) throw new IllegalStateException(
+            s"lost the version CAS $CasAttempts times for $root — " +
+              "writer contention exceeds the retry budget", e)
+          None
+      }
+    won match {
+      case Some(v) => v
+      case None =>
+        Thread.sleep(2L + scala.util.Random.nextInt(8))
+        rebasing(s, root, lost + 1)(attempt)
+    }
   }
 
   // ----- merge-on-read positional deletes ---------------------------
@@ -131,7 +174,7 @@ object SnapshotTable {
     if (cur < 1) 1L else ver(s, root, cur).maxSeq + 1
 
   private def stampSeq(lines: Seq[String], seq: Long): Seq[String] =
-    lines.map(l => s"$l\t$SeqAnnot$seq")
+    lines.map(Manifest.withSeq(_, seq))
 
   /** The parquet files Spark just wrote under `dir`, sorted. */
   private def parquetFilesIn(s: SparkSession, dir: String): Seq[String] = {
@@ -144,7 +187,7 @@ object SnapshotTable {
     * just written under `dir`.
     */
   private def posDeleteLines(s: SparkSession, dir: String): Seq[String] =
-    annotateRows(s, parquetFilesIn(s, dir).map(f => s"$f\t$DeleteKindAnnot"))
+    annotateRows(s, parquetFilesIn(s, dir).map(Manifest.posDeleteLine))
 
   /** [[posDeleteLines]] of a MoR delete set and the delete rows they
     * carry. A set that deletes nothing (Spark still writes one empty
@@ -241,7 +284,7 @@ object SnapshotTable {
       val f = line.split('\t').head
       // a file absent from the grouped counts produced zero row groups
       val (n, b) = counts.getOrElse(canon(s, f), (0L, 0L))
-      s"$line\t$RowsAnnot$n\t$BytesAnnot$b"
+      Manifest.withCounts(line, n, Some(b))
     }
   }
 
@@ -372,15 +415,11 @@ object SnapshotTable {
     * e.g. by LakeSink to stamp the streaming batch id for idempotent
     * replay. Returns the new version number.
     *
-    * The manifest is written to a temp path and renamed into place,
-    * with an existence check on the final path — a concurrent
-    * committer racing to the same version fails loudly instead of
-    * silently clobbering the manifest. Pass `expectedVersion` (the
-    * version this commit should create, i.e. the version you read
-    * plus one) for optimistic concurrency: the commit fails if
-    * another writer got there first, Iceberg-CAS style. Single-writer
-    * remains the supported default; the checks turn a lost update
-    * into an error. A crash before the rename leaves only orphan
+    * A concurrent committer racing to the same version loses the
+    * publish CAS ([[Manifest.publish]]) loudly instead of clobbering
+    * the manifest. Pass `expectedVersion` (the version you read plus
+    * one) to also fail when another writer got there before this
+    * commit started. A crash before the publish leaves only orphan
     * data files, never a corrupt or half-visible version.
     */
   def commit(
@@ -398,14 +437,13 @@ object SnapshotTable {
     // schema-evolution metadata survives every commit (incl. overwrite:
     // replacing the data does not undo a rename); incoming logical
     // column names are stored under their physical names
-    val inherited = schemaMeta(s, root, cur)
-    val mapping = pairs(inherited.get(ColMapKey))
+    val mapping = headAt(s, root, cur).columnMapping
     val physDf = toPhysical(df, mapping)
     val physIds = physFieldIds(s, root, cur, physDf.columns)
     // the header a first-stamped commit persists covers the WHOLE
     // table (columns absent from this df included), so later lookups
     // never re-derive ordinals from a different column subset
-    val idsHeader = fieldIdsHeader(inherited, mapping,
+    def idsHeader(inherited: Map[String, String]) = fieldIdsHeader(inherited, mapping,
       if (cur < 1 || pairs(inherited.get(FieldIdsKey)).nonEmpty) physIds
       else fieldIds(s, root, cur)
         .map { case (n, id) => mapping.getOrElse(n, n) -> id } ++ physIds)
@@ -417,27 +455,20 @@ object SnapshotTable {
       if (bloomCols.isEmpty) withStats
       else annotateBloom(s, withStats, bloomCols.map(c => mapping.getOrElse(c, c)))),
       nextSeqAt(s, root, cur))
-    // prior FRAGMENT REFS copied verbatim (earlier stats/partition
-    // annotations live inside the untouched fragments) — this line is
-    // what makes the append O(files touched), not O(table)
-    val base =
-      if (append && v > 1) ver(s, root, v - 1).body
-      else Seq.empty
     // merge newly-registered stats/bloom columns with the inherited
     // set: a commit stamping stats on `value` must not forget that
     // older fragments carry valid stats on `id`
-    def mergeCols(key: String, added: Seq[String]): String =
-      (inherited.get(key).toSeq.flatMap(_.split(",")) ++ added)
-        .filter(_.nonEmpty).distinct.mkString(",")
-    val statsMeta =
-      (if (statsCols.isEmpty) Map.empty[String, String]
-       else Map(StatsKey -> mergeCols(StatsKey, statsCols))) ++
-        (if (bloomCols.isEmpty) Map.empty[String, String]
-         else Map(BloomKey -> mergeCols(BloomKey, bloomCols)))
-    val newRef = writeFragment(s, root, s"v$v", annotated)
-    writeManifestAtomic(s, root, v,
-      inherited ++ idsHeader ++ statsMeta ++ meta, base ++ newRef)
-    v
+    def mergeCols(inherited: Map[String, String], key: String, added: Seq[String]) =
+      if (added.isEmpty) Map.empty[String, String]
+      else Map(key -> (inherited.get(key).toSeq.flatMap(_.split(",")) ++ added)
+        .filter(_.nonEmpty).distinct.mkString(","))
+    // prior FRAGMENT REFS copied verbatim (earlier stats/partition
+    // annotations live inside the untouched fragments) — this is what
+    // makes the append O(files touched), not O(table)
+    publishNext(s, root, v - 1, meta, Seq("" -> annotated),
+      body = if (append) _.body else _ => Seq.empty,
+      header = h => h ++ idsHeader(h) ++ mergeCols(h, StatsKey, statsCols) ++
+        mergeCols(h, BloomKey, bloomCols))
   }
 
   /** Register EXISTING parquet files as a new version — ZERO-COPY, the
@@ -446,55 +477,39 @@ object SnapshotTable {
     * never read beyond their footers (row-count stamping) and never
     * rewritten. `meta` may carry schema headers (column mapping / type
     * widening) so imported tables keep foreign rename/widen semantics.
+    *
+    * Row-level delete files a wire client already wrote ride the same
+    * commit: the external-CDC-writer shape (one equality delete + one
+    * append per batch, [[upsertEq]]'s layout) landed through the
+    * catalog instead of the engine. Sequence semantics are exactly
+    * upsertEq's: every file in the commit shares ONE fresh sequence
+    * number, so the equality deletes suppress matching rows of
+    * STRICTLY OLDER data files while the same commit's own appended
+    * rows survive — the ordering that makes a CDC stream (delete k,
+    * insert k) converge. `posDeletes` are parquet of (file_path, pos)
+    * naming suppressed rows directly; `eqDeletes` pairs each staged
+    * key-value parquet with its LOGICAL key columns (mapped to
+    * physical here, like every engine-side delete writer). A commit
+    * with deletes needs an existing table and records
+    * `op=upsert_wire` (or `delete_wire` without data files).
     */
   def commitFiles(
       s: SparkSession, root: String, files: Seq[String],
-      append: Boolean = true, meta: Map[String, String] = Map.empty): Int = {
+      append: Boolean = true, meta: Map[String, String] = Map.empty,
+      posDeletes: Seq[String] = Seq.empty,
+      eqDeletes: Seq[(String, Seq[String])] = Seq.empty): Int = {
     val cur = currentVersion(s, root)
-    val v = cur + 1
-    val annotated = stampSeq(annotateRows(s, files.map(f => canon(s, f))),
-      nextSeqAt(s, root, cur))
-    val base = if (append && v > 1) ver(s, root, v - 1).body else Seq.empty
-    val newRef = writeFragment(s, root, s"v$v", annotated)
-    writeManifestAtomic(s, root, v, schemaMeta(s, root, cur) ++ meta, base ++ newRef)
-    v
-  }
-
-  /** Register STAGED data files AND row-level delete files — parquet a
-    * wire client already wrote — as ONE commit, zero-copy: the
-    * external-CDC-writer shape (one equality delete + one append per
-    * batch, [[upsertEq]]'s layout) landed through the catalog instead
-    * of the engine. Sequence semantics are exactly upsertEq's: every
-    * file in the commit shares ONE fresh sequence number, so the
-    * equality deletes suppress matching rows of STRICTLY OLDER data
-    * files while the same commit's own appended rows survive — the
-    * ordering that makes a CDC stream (delete k, insert k) converge.
-    * Positional delete files are parquet of (file_path, pos) naming
-    * suppressed rows directly; `eqDeletes` pairs each staged
-    * key-value parquet with its LOGICAL key columns (mapped to
-    * physical here, like every engine-side delete writer). Only
-    * footers are read (row-count stamping); nothing is rewritten.
-    * Returns the new version.
-    */
-  def commitFilesWithDeletes(
-      s: SparkSession, root: String,
-      dataFiles: Seq[String],
-      posDeletes: Seq[String],
-      eqDeletes: Seq[(String, Seq[String])],
-      meta: Map[String, String] = Map.empty): Int = {
-    val cur = currentVersion(s, root)
-    require(cur > 0, s"no snapshot table at $root")
+    val deletes = posDeletes.nonEmpty || eqDeletes.nonEmpty
+    if (deletes) require(cur > 0, s"no snapshot table at $root")
     eqDeletes.foreach { case (_, cols) =>
       require(cols.nonEmpty, "equality delete requires at least one key column")
       requireKeyColsInSchema(s, root, cur, cols)
     }
-    val mapping = columnMapping(s, root, cur)
     val seq = nextSeqAt(s, root, cur)
     val v = cur + 1
-    val dataLines =
-      stampSeq(annotateRows(s, dataFiles.map(f => canon(s, f))), seq)
-    val posLines =
-      annotateRows(s, posDeletes.map(p => s"${canon(s, p)}\t$DeleteKindAnnot"))
+    val dataLines = stampSeq(annotateRows(s, files.map(f => canon(s, f))), seq)
+    val posLines = annotateRows(s, posDeletes.map(p => Manifest.posDeleteLine(canon(s, p))))
+    lazy val mapping = columnMapping(s, root, cur)
     val eqLines = annotateRows(s, eqDeletes.zipWithIndex.map {
       case ((p, cols), i) =>
         val phys = cols.map(c => mapping.getOrElse(c, c))
@@ -512,17 +527,13 @@ object SnapshotTable {
               .repartition(1).write.mode("overwrite").parquet(dir)
             parquetFilesIn(s, dir).head
           }
-        s"${canon(s, path)}\t$EqDeleteKindAnnot\t$EqColsAnnot${phys.mkString(",")}\t$EqSeqAnnot$seq"
+        Manifest.eqDeleteLine(canon(s, path), phys, seq)
     })
-    val lines = eqLines ++ posLines ++ dataLines
-    val newRef = writeFragment(s, root, s"v$v", lines)
-    writeManifestAtomic(s, root, v,
-      schemaMeta(s, root, cur) ++
-        (if (eqDeletes.nonEmpty || posDeletes.nonEmpty)
-           Map("op" -> (if (dataFiles.nonEmpty) "upsert_wire" else "delete_wire"))
-         else Map.empty[String, String]) ++ meta,
-      ver(s, root, cur).body ++ newRef)
-    v
+    publishNext(s, root, cur,
+      (if (deletes) Map("op" -> (if (files.nonEmpty) "upsert_wire" else "delete_wire"))
+       else Map.empty[String, String]) ++ meta,
+      Seq("" -> (eqLines ++ posLines ++ dataLines)),
+      body = if (append) _.body else _ => Seq.empty)
   }
 
   /** Register an IMPORTED Iceberg file set — data files with explicit
@@ -543,25 +554,16 @@ object SnapshotTable {
       posDeletes: Seq[String],
       eqDeletes: Seq[(String, Seq[String], Long)], // (path, physical eq cols, seq)
       meta: Map[String, String]): Int = {
-    val cur = currentVersion(s, root)
-    val v = cur + 1
     val lines =
       data.map { case (p, rows, bytes, seq, day) =>
         // bytes 0 = the foreign writer omitted file_size_in_bytes; no
         // annotation, tableStats falls back to FileStatus for that file
-        s"${canon(s, p)}\t$RowsAnnot$rows" +
-          (if (bytes > 0) s"\t$BytesAnnot$bytes" else "") +
-          s"\t$SeqAnnot$seq" +
+        Manifest.withSeq(Manifest.withCounts(canon(s, p), rows, Some(bytes).filter(_ > 0)), seq) +
           day.fold("")(d => s"\t_graft_day=$d")
       } ++
-      posDeletes.map(p => s"${canon(s, p)}\t$DeleteKindAnnot") ++
-      eqDeletes.map { case (p, cols, seq) =>
-        s"${canon(s, p)}\t$EqDeleteKindAnnot\t$EqColsAnnot${cols.mkString(",")}\t$EqSeqAnnot$seq"
-      }
-    val base = if (v > 1) ver(s, root, v - 1).body else Seq.empty
-    val newRef = writeFragment(s, root, s"v$v", lines)
-    writeManifestAtomic(s, root, v, schemaMeta(s, root, cur) ++ meta, base ++ newRef)
-    v
+      posDeletes.map(p => Manifest.posDeleteLine(canon(s, p))) ++
+      eqDeletes.map { case (p, cols, seq) => Manifest.eqDeleteLine(canon(s, p), cols, seq) }
+    publishNext(s, root, currentVersion(s, root), meta, Seq("" -> lines))
   }
 
   /** CONCURRENT multi-writer append (VERDICT r6 item 7): Iceberg
@@ -583,7 +585,7 @@ object SnapshotTable {
     */
   def commitAppend(
       s: SparkSession, root: String, df: DataFrame,
-      meta: Map[String, String] = Map.empty, maxAttempts: Int = 50): Int = {
+      meta: Map[String, String] = Map.empty): Int = {
     val stage = java.util.UUID.randomUUID.toString.take(8)
     // data files are written ONCE; only their manifest lines are
     // (cheaply) re-stamped on a rebase. Incoming LOGICAL column names
@@ -591,8 +593,7 @@ object SnapshotTable {
     // rename mid-rebase is harmless because renames never change
     // physical names, only the logical labels over them.
     val cur0 = currentVersion(s, root)
-    val mapping =
-      if (cur0 < 1) Map.empty[String, String] else columnMapping(s, root, cur0)
+    val mapping = headAt(s, root, cur0).columnMapping
     val physDf = toPhysical(df, mapping)
     val physIds = physFieldIds(s, root, cur0, physDf.columns)
     val baseLines = annotateRows(s,
@@ -610,32 +611,15 @@ object SnapshotTable {
     // orphan metadata debris, same as a crashed commit's.
     var stagedSeq = Long.MinValue
     var newRef: Seq[String] = Seq.empty
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(s, root)
-      val v = cur + 1
+    rebasing(s, root) { cur =>
       val seq = nextSeqAt(s, root, cur)
       if (baseLines.nonEmpty && seq != stagedSeq) {
-        newRef = writeFragment(s, root, s"c-$stage-s$seq", stampSeq(baseLines, seq))
+        newRef = Manifest.fragment(conf(s), root, s"c-$stage-s$seq", stampSeq(baseLines, seq))
         stagedSeq = seq
       }
-      val inherited = schemaMeta(s, root, cur)
-      val base = if (cur >= 1) ver(s, root, cur).body else Seq.empty
-      try {
-        writeManifestAtomic(s, root, v,
-          inherited ++ fieldIdsHeader(inherited, mapping, physIds) ++ meta,
-          base ++ newRef)
-        return v
-      } catch {
-        case _: IllegalStateException =>
-          attempt += 1
-          // jittered backoff so N stampeding writers spread out
-          Thread.sleep(2L + scala.util.Random.nextInt(8))
-      }
+      publishNext(s, root, cur, meta, body = _.body ++ newRef,
+        header = h => h ++ fieldIdsHeader(h, mapping, physIds))
     }
-    throw new IllegalStateException(
-      s"commitAppend lost the version CAS $maxAttempts times for $root — " +
-        "writer contention exceeds the retry budget")
   }
 
   /** Per-file bloom filters for equality skipping on high-cardinality
@@ -930,51 +914,50 @@ object SnapshotTable {
     * path: MoR read cost grows with the accumulated delete set.
     */
   def deleteWhereMor(s: SparkSession, root: String, predicate: Column): Int = {
-    val cur = currentVersion(s, root)
-    require(cur > 0, s"no snapshot table at $root")
-    val curVer = ver(s, root, cur)
-    val files = dataFiles(s, root, cur)
-    val dels = deleteFiles(s, root, cur)
-    val mapping = columnMapping(s, root, cur)
-    val types = columnTypes(s, root, cur)
+    val cur = existingVersion(s, root)
     val v = cur + 1
-    // row identity pinned BEFORE the logical view (the view renames/
-    // casts but row positions are the scan's); predicate evaluates
-    // against logical columns with the predicate pushed to parquet.
-    // Widened-schema read: a post-widen mixed-width file set must
-    // plan, not throw. All pending deletes (positional and equality)
-    // are pre-applied so a dead row never earns a position. The
-    // planning scan is manifest-pruned: on a stats/partition-
-    // annotated table a trickle delete reads candidate files only
-    // (the bare predicate drives pruning — NULL rows aren't deleted,
-    // so files that can't hold a TRUE row can't hold a position).
-    lazy val probe = logicalView(rawWidenedRead(s, files, mapping, types),
-      mapping, types, droppedColumns(s, root, cur).keySet).filter(predicate)
-    val candidates = planningCandidates(s, root, cur, probe, files)
-    if (candidates.isEmpty) return cur // metadata proves zero matches
-    val live = applyAllDeletes(s, candidates,
-      fs => rawWidenedRead(s, fs, mapping, types),
-      dels, curVer.eqDeletes, fileSeqFn(s, curVer), keepRowId = true)
-    val matches = logicalView(live, mapping, types,
-        droppedColumns(s, root, cur).keySet)
-      .filter(coalesce(predicate, lit(false)))
-      .select(col("_graft_fp").as("file_path"), col("_graft_pos").as("pos"))
-      // hash-shuffle on file_path, NOT repartition(1): only the Δ rows
-      // shuffle, and AQE's partition coalescing collapses a trickle
-      // delete to one small file while a wide delete spreads across
-      // tasks instead of choking one writer (wide deletes should still
-      // prefer CoW — read cost, not write cost, is their problem)
-      .repartition(col("file_path"))
+    val matches = morMatches(s, root, cur, predicate) match {
+      case None => return cur // metadata proves zero matches
+      case Some(m) => m.select(col("_graft_fp").as("file_path"), col("_graft_pos").as("pos"))
+    }
+    // hash-shuffle on file_path, NOT repartition(1): only the Δ rows
+    // shuffle, and AQE's partition coalescing collapses a trickle
+    // delete to one small file while a wide delete spreads across
+    // tasks instead of choking one writer (wide deletes should still
+    // prefer CoW — read cost, not write cost, is their problem)
     val delDir = s"$root/deletes/v$v"
-    matches.write.mode("overwrite").parquet(delDir)
+    matches.repartition(col("file_path")).write.mode("overwrite").parquet(delDir)
     val (delLines, nDeleted) = morDeleteLines(s, delDir)
     if (nDeleted == 0) return cur
-    val newRef = writeFragment(s, root, s"v$v-del", delLines)
-    writeManifestAtomic(s, root, v,
-      schemaMeta(s, root, cur) ++
-        Map("op" -> "delete_mor", "delete_rows" -> nDeleted.toString),
-      ver(s, root, cur).body ++ newRef)
-    v
+    publishNext(s, root, cur,
+      Map("op" -> "delete_mor", "delete_rows" -> nDeleted.toString), Seq("-del" -> delLines))
+  }
+
+  /** The live rows of head `cur` for which `predicate` is TRUE, in
+    * logical columns plus their row identity (`_graft_fp`,
+    * `_graft_pos`, pinned BEFORE the logical view: it renames and casts,
+    * row positions are the scan's); None when metadata proves nothing
+    * matches. The widened-schema read keeps a post-widen mixed-width
+    * file set plannable; all pending deletes are pre-applied, so a dead
+    * row never earns a position. The planning scan is manifest-pruned
+    * by the bare predicate: NULL rows never match, so files that can't
+    * hold a TRUE row can't hold a position.
+    */
+  private def morMatches(
+      s: SparkSession, root: String, cur: Int, predicate: Column): Option[DataFrame] = {
+    val curVer = ver(s, root, cur)
+    val files = curVer.dataFiles
+    val mapping = columnMapping(s, root, cur)
+    val types = columnTypes(s, root, cur)
+    val dropped = droppedColumns(s, root, cur).keySet
+    lazy val probe = logicalView(rawWidenedRead(s, files, mapping, types),
+      mapping, types, dropped).filter(predicate)
+    val candidates = planningCandidates(s, root, cur, probe, files)
+    if (candidates.isEmpty) None
+    else Some(logicalView(
+      applyAllDeletes(s, candidates, fs => rawWidenedRead(s, fs, mapping, types),
+        curVer.deleteFiles, curVer.eqDeletes, fileSeqFn(s, curVer), keepRowId = true),
+      mapping, types, dropped).filter(coalesce(predicate, lit(false))))
   }
 
   /** Row-level UPDATE, MERGE-ON-READ: positional-delete the matched
@@ -1000,29 +983,13 @@ object SnapshotTable {
   def updateWhereMor(
       s: SparkSession, root: String, predicate: Column,
       set: Map[String, Column]): Int = {
-    val cur = currentVersion(s, root)
-    require(cur > 0, s"no snapshot table at $root")
-    val curVer = ver(s, root, cur)
-    val files = dataFiles(s, root, cur)
-    val dels = deleteFiles(s, root, cur)
-    val mapping = columnMapping(s, root, cur)
-    val types = columnTypes(s, root, cur)
+    val cur = existingVersion(s, root)
     val v = cur + 1
-    // row identity pinned pre-logical-view, predicate on logical
-    // columns, planning against the fully-delete-filtered view
-    // (re-updating a dead row is a no-op, positions never duplicate)
-    // — the same manifest-pruned planning pass as deleteWhereMor
-    lazy val probe = logicalView(rawWidenedRead(s, files, mapping, types),
-      mapping, types, droppedColumns(s, root, cur).keySet).filter(predicate)
-    val candidates = planningCandidates(s, root, cur, probe, files)
-    if (candidates.isEmpty) return cur // metadata proves zero matches
-    val live = applyAllDeletes(s, candidates,
-      fs => rawWidenedRead(s, fs, mapping, types),
-      dels, curVer.eqDeletes, fileSeqFn(s, curVer), keepRowId = true)
-    val matched = logicalView(live, mapping, types,
-        droppedColumns(s, root, cur).keySet)
-      .filter(coalesce(predicate, lit(false)))
-      .persist() // two consumers: the position write and the replacement write
+    val mapping = columnMapping(s, root, cur)
+    val matched = morMatches(s, root, cur, predicate) match {
+      case None => return cur // metadata proves zero matches
+      case Some(m) => m.persist() // two consumers: the position and replacement writes
+    }
     try {
       val delDir = s"$root/deletes/v$v"
       matched
@@ -1042,13 +1009,9 @@ object SnapshotTable {
       val newFiles = stampSeq(
         annotateRows(s, writeDataFiles(s, root, v, replacements)),
         nextSeqAt(s, root, cur))
-      val delRef = writeFragment(s, root, s"v$v-del", delLines)
-      val dataRef = writeFragment(s, root, s"v$v", newFiles)
-      writeManifestAtomic(s, root, v,
-        schemaMeta(s, root, cur) ++
-          Map("op" -> "update_mor", "delete_rows" -> nUpdated.toString),
-        ver(s, root, cur).body ++ delRef ++ dataRef)
-      v
+      publishNext(s, root, cur,
+        Map("op" -> "update_mor", "delete_rows" -> nUpdated.toString),
+        Seq("-del" -> delLines, "" -> newFiles))
     } finally { matched.unpersist(); () }
   }
 
@@ -1129,12 +1092,8 @@ object SnapshotTable {
         annotateRows(s, writeDataFiles(s, root, v, toPhysical(inserts, mapping))),
         nextSeqAt(s, root, cur))
     if (delLines.isEmpty && newFiles.isEmpty) return cur
-    writeManifestAtomic(s, root, v,
-      schemaMeta(s, root, cur) ++ meta + ("op" -> "cdc_apply"),
-      ver(s, root, cur).body ++
-        writeFragment(s, root, s"v$v-del", delLines) ++
-        writeFragment(s, root, s"v$v", newFiles))
-    v
+    publishNext(s, root, cur, meta + ("op" -> "cdc_apply"),
+      Seq("-del" -> delLines, "" -> newFiles))
   }
 
   /** Row-level DELETE by KEY, equality-delete encoding (Iceberg v2
@@ -1155,8 +1114,7 @@ object SnapshotTable {
     */
   def deleteWhereEq(
       s: SparkSession, root: String, keyCols: Seq[String], keys: DataFrame): Int = {
-    val cur = currentVersion(s, root)
-    require(cur > 0, s"no snapshot table at $root")
+    val cur = existingVersion(s, root)
     require(keyCols.nonEmpty, "equality delete requires at least one key column")
     requireKeyColsInSchema(s, root, cur, keyCols)
     val mapping = columnMapping(s, root, cur)
@@ -1164,12 +1122,8 @@ object SnapshotTable {
     val eqLines = writeEqDeleteFile(s, root, v,
       keys.select(keyCols.map(col): _*), keyCols, mapping,
       nextSeqAt(s, root, cur))
-    writeManifestAtomic(s, root, v,
-      schemaMeta(s, root, cur) ++
-        Map("op" -> "delete_eq", "eq_cols" -> keyCols.mkString(",")),
-      ver(s, root, cur).body ++
-        writeFragment(s, root, s"v$v-eqdel", eqLines))
-    v
+    publishNext(s, root, cur,
+      Map("op" -> "delete_eq", "eq_cols" -> keyCols.mkString(",")), Seq("-eqdel" -> eqLines))
   }
 
   /** Streaming UPSERT, Iceberg v2 upsert mode (the Flink CDC writer
@@ -1186,8 +1140,7 @@ object SnapshotTable {
     */
   def upsertEq(
       s: SparkSession, root: String, keyCols: Seq[String], batch: DataFrame): Int = {
-    val cur = currentVersion(s, root)
-    require(cur > 0, s"no snapshot table at $root")
+    val cur = existingVersion(s, root)
     require(keyCols.nonEmpty, "upsert requires at least one key column")
     requireKeyColsInSchema(s, root, cur, keyCols)
     val mapping = columnMapping(s, root, cur)
@@ -1197,13 +1150,9 @@ object SnapshotTable {
       batch.select(keyCols.map(col): _*), keyCols, mapping, seq)
     val newFiles = stampSeq(
       annotateRows(s, writeDataFiles(s, root, v, toPhysical(batch, mapping))), seq)
-    writeManifestAtomic(s, root, v,
-      schemaMeta(s, root, cur) ++
-        Map("op" -> "upsert_eq", "eq_cols" -> keyCols.mkString(",")),
-      ver(s, root, cur).body ++
-        writeFragment(s, root, s"v$v-eqdel", eqLines) ++
-        writeFragment(s, root, s"v$v", newFiles))
-    v
+    publishNext(s, root, cur,
+      Map("op" -> "upsert_eq", "eq_cols" -> keyCols.mkString(",")),
+      Seq("-eqdel" -> eqLines, "" -> newFiles))
   }
 
   /** Validate equality-delete key columns against the table's LOGICAL
@@ -1239,8 +1188,7 @@ object SnapshotTable {
     toPhysical(keyRows, mapping).distinct()
       .repartition(1) // key sets are O(batch) small; one file beats 32 shards
       .write.mode("overwrite").parquet(delDir)
-    annotateRows(s, parquetFilesIn(s, delDir).map(f =>
-      s"$f\t$EqDeleteKindAnnot\t$EqColsAnnot${physCols.mkString(",")}\t$EqSeqAnnot$seq"))
+    annotateRows(s, parquetFilesIn(s, delDir).map(Manifest.eqDeleteLine(_, physCols, seq)))
   }
 
   /** Major compaction of merge-on-read deletes (Iceberg
@@ -1253,8 +1201,7 @@ object SnapshotTable {
     * pay zero anti-join cost. Time travel preserved.
     */
   def compactDeletes(s: SparkSession, root: String): Int = {
-    val cur = currentVersion(s, root)
-    require(cur > 0, s"no snapshot table at $root")
+    val cur = existingVersion(s, root)
     val mv = ver(s, root, cur)
     val dels = deleteFiles(s, root, cur)
     val eqs = mv.eqDeletes
@@ -1324,13 +1271,9 @@ object SnapshotTable {
       }
     // every delete line goes (eq deletes with no matching rows are
     // spent: the semi-join proved no surviving row matches them)
-    val (keptRefs, survivors) =
-      mv.splitBody(e => !e.isData || affected.contains(norm(e.path)))
-    val survivorRef = writeFragment(s, root, s"v$v-keep", survivors)
-    val newRef = writeFragment(s, root, s"v$v", newFiles)
     publishRewrite(s, root, cur,
       Map("op" -> "compact_deletes", "rewrote" -> touched.size.toString),
-      keptRefs ++ survivorRef ++ newRef)
+      mv.splitBody(e => !e.isData || affected.contains(norm(e.path))), newFiles)
   }
 
   /** Publish a CONTENT-PRESERVING rewrite with Iceberg
@@ -1358,14 +1301,17 @@ object SnapshotTable {
     * ones.
     */
   private def publishRewrite(
-      s: SparkSession, root: String, basedOn: Int,
-      opMeta: Map[String, String], body: Seq[String],
-      maxAttempts: Int = 50): Int = {
+      s: SparkSession, root: String, basedOn: Int, opMeta: Map[String, String],
+      split: (Seq[String], Seq[String]), newLines: Seq[String]): Int = {
+    // the planned body: kept fragment refs, then one fragment of the
+    // surviving lines of split fragments, then one of the new files
+    val (keptRefs, survivors) = split
+    val body = keptRefs ++
+      Manifest.fragment(conf(s), root, s"v${basedOn + 1}-keep", survivors) ++
+      Manifest.fragment(conf(s), root, s"v${basedOn + 1}", newLines)
     val baseBodySet = ver(s, root, basedOn).body.toSet
     val baseSchema = schemaMeta(s, root, basedOn)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val head = currentVersion(s, root)
+    rebasing(s, root) { head =>
       val added: Seq[String] =
         if (head == basedOn) Seq.empty
         else {
@@ -1386,21 +1332,13 @@ object SnapshotTable {
               "schema/registration change — re-plan against the new head")
           extra
         }
-      try {
-        writeManifestAtomic(s, root, head + 1,
-          baseSchema ++ opMeta ++
-            (if (added.isEmpty) Map.empty[String, String]
-             else Map("rebased_over" -> (head - basedOn).toString)),
-          body ++ added)
-        return head + 1
-      } catch {
-        case _: IllegalStateException if attempt < maxAttempts - 1 =>
-          attempt += 1
-          Thread.sleep(2L + scala.util.Random.nextInt(8))
-      }
+      // the inherited header is the base's: a schema change in between
+      // is a conflict (above)
+      publishNext(s, root, head,
+        opMeta ++ (if (added.isEmpty) Map.empty[String, String]
+                   else Map("rebased_over" -> (head - basedOn).toString)),
+        body = _ => body ++ added)
     }
-    throw new IllegalStateException(
-      s"rewrite publish lost the version CAS $maxAttempts times for $root")
   }
 
   /** Consolidate accumulated positional DELETE FILES into one —
@@ -1420,8 +1358,7 @@ object SnapshotTable {
     * positional delete files are pending.
     */
   def compactDeleteFiles(s: SparkSession, root: String, minFiles: Int = 2): Int = {
-    val cur = currentVersion(s, root)
-    require(cur > 0, s"no snapshot table at $root")
+    val cur = existingVersion(s, root)
     val dels = deleteFiles(s, root, cur)
     if (dels.size < minFiles) return cur
     def norm(p: String) = canon(s, p)
@@ -1430,13 +1367,10 @@ object SnapshotTable {
       .repartition(1).write.mode("overwrite").parquet(dir)
     val newLines = posDeleteLines(s, dir)
     val delSet = dels.map(norm).toSet
-    val (keptRefs, survivors) = ver(s, root, cur)
-      .splitBody(e => e.kind == 1 && delSet.contains(norm(e.path)))
-    val survivorRef = writeFragment(s, root, s"v${cur + 1}-keep", survivors)
-    val newRef = writeFragment(s, root, s"v${cur + 1}", newLines)
     publishRewrite(s, root, cur,
       Map("op" -> "compact_delete_files", "consolidated" -> dels.size.toString),
-      keptRefs ++ survivorRef ++ newRef)
+      ver(s, root, cur).splitBody(e => e.kind == 1 && delSet.contains(norm(e.path))),
+      newLines)
   }
 
   /** Delete-aware maintenance policy (the WHEN for [[compactDeletes]]
@@ -1510,8 +1444,7 @@ object SnapshotTable {
       s: SparkSession, root: String,
       smallBytes: Long = 64L << 20, targetBytes: Long = 256L << 20,
       sortCols: Seq[String] = Seq.empty): Int = {
-    val cur = currentVersion(s, root)
-    require(cur > 0, s"no snapshot table at $root")
+    val cur = existingVersion(s, root)
     val mv = ver(s, root, cur)
     val dels = deleteFiles(s, root, cur)
     val eqs = mv.eqDeletes
@@ -1556,9 +1489,8 @@ object SnapshotTable {
         }
       }
     if (smallByGroup.isEmpty) return cur
-    val hdr = schemaMeta(s, root, cur)
     def regCols(key: String): Seq[String] =
-      hdr.get(key).toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
+      mv.header.get(key).toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
         .map(c => mapping.getOrElse(c, c))
     val seq = nextSeqAt(s, root, cur)
     val newFiles: Seq[String] = smallByGroup.toSeq.sortBy(_._1).flatMap {
@@ -1594,14 +1526,10 @@ object SnapshotTable {
         stampSeq(annotateRows(s, withPart), seq)
     }
     val packedSet: Set[String] = smallByGroup.values.flatten.map(norm).toSet
-    val (keptRefs, survivors) =
-      mv.splitBody(e => e.isData && packedSet.contains(norm(e.path)))
-    val survivorRef = writeFragment(s, root, s"v${cur + 1}-keep", survivors)
-    val newRef = writeFragment(s, root, s"v${cur + 1}", newFiles)
     publishRewrite(s, root, cur,
       Map("op" -> "optimize",
         "packed" -> packedSet.size.toString, "outputs" -> newFiles.size.toString),
-      keptRefs ++ survivorRef ++ newRef)
+      mv.splitBody(e => e.isData && packedSet.contains(norm(e.path))), newFiles)
   }
 
   /** Shared copy-on-write planner: find the data files that actually
@@ -1612,8 +1540,7 @@ object SnapshotTable {
   private def copyOnWrite(
       s: SparkSession, root: String, predicate: Column, op: String)(
       rewrite: (DataFrame, Column) => DataFrame): Int = {
-    val cur = currentVersion(s, root)
-    require(cur > 0, s"no snapshot table at $root")
+    val cur = existingVersion(s, root)
     val curVer = ver(s, root, cur)
     val files = dataFiles(s, root, cur)
     val dels = deleteFiles(s, root, cur)
@@ -1716,12 +1643,8 @@ object SnapshotTable {
     val (keptRefs, survivors) = ver(s, root, cur).splitBody { e =>
       if (e.kind == 1) staleDels.contains(norm(e.path)) else affected.contains(norm(e.path))
     }
-    val survivorRef = writeFragment(s, root, s"v$v-keep", survivors)
-    val newRef = writeFragment(s, root, s"v$v", newDataLines ++ delKeepLines)
-    writeManifestAtomic(s, root, v,
-      schemaMeta(s, root, cur) ++ meta,
-      keptRefs ++ survivorRef ++ newRef)
-    v
+    publishNext(s, root, cur, meta,
+      Seq("-keep" -> survivors, "" -> (newDataLines ++ delKeepLines)), body = _ => keptRefs)
   }
 
   /** Publish a replace-files commit from ALREADY-WRITTEN parquet
@@ -1743,7 +1666,6 @@ object SnapshotTable {
 
   // ----- hidden partitioning: day(ts) transform --------------------
 
-  private val CommittedAtKey = "committed_at" // epoch ms, stamped on every manifest
   private[lake] val PartitionKey = "partition" // "<source>" — table is day(<source>)-partitioned
   private val StatsKey = "statscols"     // logical column names carrying per-file min/max
   private val BloomKey = "bloomcols"     // logical column names carrying per-file bloom filters
@@ -1803,7 +1725,7 @@ object SnapshotTable {
     // df's own column names (no toPhysical), so names translate to
     // physical ONLY for the lookup and the result is keyed back by
     // the df's names — which is also how the header stores them.
-    val idMapping = if (cur < 1) Map.empty[String, String] else columnMapping(s, root, cur)
+    val idMapping = headAt(s, root, cur).columnMapping
     val physOfDf: Map[String, String] =
       df.columns.map(c => c -> idMapping.getOrElse(c, c)).toMap
     val physAssigned = physFieldIds(s, root, cur, df.columns.toSeq.map(physOfDf))
@@ -1863,20 +1785,13 @@ object SnapshotTable {
         files = listData()
       }
     }
-    val annotated = files.map(_._1)
-    val base = if (append && v > 1) ver(s, root, cur).body else Seq.empty
-    val lines = stampSeq(annotateRows(s, annotated.sorted),
-      nextSeqAt(s, root, cur))
-    val newRef = writeFragment(s, root, s"v$v", lines)
-    val inherited = schemaMeta(s, root, cur)
+    val lines = stampSeq(annotateRows(s, files.map(_._1).sorted), nextSeqAt(s, root, cur))
     // real mapping (not Map.empty): a df carrying a renamed column's
     // physical name must persist under the LOGICAL key, or the header
     // would grow a duplicate physical-keyed entry for the same id
-    writeManifestAtomic(s, root, v,
-      inherited ++ fieldIdsHeader(inherited, idMapping, ids) +
-        (PartitionKey -> source),
-      base ++ newRef)
-    v
+    publishNext(s, root, cur, Map(PartitionKey -> source), Seq("" -> lines),
+      body = if (append) _.body else _ => Seq.empty,
+      header = h => h ++ fieldIdsHeader(h, idMapping, ids))
   }
 
   /** Read with a row predicate, pruning manifest entries THROUGH the
@@ -2118,10 +2033,9 @@ object SnapshotTable {
   }
 
   def expire(s: SparkSession, root: String, keepLast: Int): (Seq[Int], Seq[String]) = {
-    require(keepLast >= 1, "must keep at least the current version")
-    val versions = Manifest.versions(conf(s), root).map(_._1)
-    val (expired, live) = versions.splitAt(math.max(0, versions.size - keepLast))
+    val expired = expirableVersions(s, root, keepLast)
     if (expired.isEmpty) return (Seq.empty, Seq.empty)
+    val live = Manifest.versions(conf(s), root).map(_._1).drop(expired.size)
     // branch heads keep their referenced files live — a branch created
     // from an expired main version must stay readable until published
     // or dropped
@@ -2143,7 +2057,7 @@ object SnapshotTable {
     // delete manifests FIRST: a crash mid-expire must never leave a
     // readable version pointing at deleted fragments or data files
     val fs = fsOf(s, new Path(root))
-    expired.foreach(v => fs.delete(new Path(s"$root/_manifests/v$v.manifest"), false))
+    expired.foreach(v => fs.delete(Manifest.path(root, s"v$v"), false))
     orphanedFrags.foreach(f => fs.delete(new Path(f), false))
     orphaned.foreach(f => fs.delete(new Path(f), false))
     (expired, orphaned)
@@ -2164,7 +2078,7 @@ object SnapshotTable {
     * `graceMs` MUST exceed the longest possible in-flight commit,
     * because a commit's staged data/fragment files are legitimately
     * unreferenced until its manifest publishes. Files referenced by
-    * ANY `.manifest` under `_manifests` (main versions, branch heads)
+    * ANY version or branch manifest ([[Manifest.listing]])
     * are never touched; version manifests themselves are owned by
     * [[expire]], not this. Same cross-root caveat as [[expire]]: a
     * [[shallowClone]] referencing this root's files from ANOTHER root
@@ -2176,8 +2090,8 @@ object SnapshotTable {
     * of that listing against the referenced set, so the driver never
     * materializes or diffs the full file inventory — it collects only
     * the orphans (bounded by debris, not table size). Deletion fans
-    * out the same way. `_manifests` debris is handled driver-side
-    * (that directory is O(versions)).
+    * out the same way. Manifest-directory debris is handled
+    * driver-side (that directory is O(versions)).
     *
     * Returns the reclaimed (or, with `dryRun`, reclaimable) file
     * paths, sorted.
@@ -2185,30 +2099,21 @@ object SnapshotTable {
   def removeOrphans(
       s: SparkSession, root: String, graceMs: Long = 3L * 3600 * 1000,
       dryRun: Boolean = false): Seq[String] = {
-    val mdir = manifestDir(root)
-    val fs = fsOf(s, mdir)
-    if (!fs.exists(mdir)) return Seq.empty
+    val listing = Manifest.listing(conf(s), root).getOrElse(return Seq.empty)
+    val fs = fsOf(s, new Path(root))
     val cutoff = System.currentTimeMillis - graceMs
-    val manifestStatuses = fs.listStatus(mdir).filterNot(_.isDirectory)
-    val stems = manifestStatuses.map(_.getPath.getName)
-      .filter(_.endsWith(".manifest")).map(_.stripSuffix(".manifest")).toSeq
-    // _manifests debris decidable by NAME alone: torn publish tmps and
+    val stems = listing.stems
+    // manifest debris decidable by NAME alone: torn publish tmps and
     // leaked arbiter locks. Fragments need the referenced set — they
     // join the distributed anti-join below with the data files.
     // Version manifests are expire()'s to manage and ref files live in
     // _tags/_branches, not here.
-    val manifestDebris: Seq[Path] = manifestStatuses.toSeq
-      .filter(_.getModificationTime <= cutoff)
-      .map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        n.endsWith(".tmp") || n.endsWith(".lock")
-      }
+    val manifestDebris: Seq[Path] = listing.debris
+      .filter(_.getModificationTime <= cutoff).map(_.getPath)
     // fragment candidates: flow through the same listing→anti-join as
     // data files (referenced frags survive, expired-commit leftovers
     // past the grace don't)
-    val fragCandidates: Seq[(String, Long)] = manifestStatuses.toSeq
-      .filter(_.getPath.getName.endsWith(".frag"))
+    val fragCandidates: Seq[(String, Long)] = listing.fragments
       .map(st => (st.getPath.toString, st.getModificationTime))
     // commit-grained candidate dirs + any loose top-level files
     val rootPath = new Path(root)
@@ -2217,7 +2122,8 @@ object SnapshotTable {
     // metadata.json + Avro manifests). Never manifest-referenced, so
     // they'd be swept as loose files once past the grace — protect the
     // whole directory instead.
-    val protectedTop = Set("_manifests", "_tags", "_branches", "_delta_log", "_iceberg")
+    val protectedTop =
+      Set(Manifest.dir(root).getName, "_tags", "_branches", "_delta_log", "_iceberg")
     val loose = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     val candidateDirs = scala.collection.mutable.ArrayBuffer.empty[String]
     fsOf(s, rootPath).listStatus(rootPath)
@@ -2488,50 +2394,6 @@ object SnapshotTable {
     parquetFilesIn(s, dataDir)
   }
 
-  private def writeManifestAtomic(
-      s: SparkSession, root: String, v: Int,
-      meta: Map[String, String], files: Seq[String]): Unit =
-    writeManifestAtomicAt(s, root, s"v$v", meta, files)
-
-  private def writeManifestAtomicAt(
-      s: SparkSession, root: String, stem: String,
-      meta: Map[String, String], files: Seq[String]): Unit = {
-    // every manifest carries its wall-clock commit instant (epoch ms)
-    // — the anchor for timestamp time travel ([[readAsOf]]). Always
-    // stamped fresh: rollback/clone copy an OLD header, but the
-    // commit EVENT happens now. Stamps are forced STRICTLY increasing
-    // vs the previous main version (max(now, prev+1)): the wall clock
-    // can step backwards (NTP) and has ms granularity, and readAsOf's
-    // correctness rests on stamp order agreeing with version order.
-    val StemRe = "v(\\d+)".r
-    val prevStamp = stem match {
-      case StemRe(v) if v.toInt > 1 =>
-        try committedAt(s, root, v.toInt - 1) catch { case _: Exception => 0L }
-      case _ => 0L
-    }
-    val instant = math.max(System.currentTimeMillis, prevStamp + 1)
-    val stamped = meta - CommittedAtKey + (CommittedAtKey -> instant.toString)
-    val header = stamped.toSeq.sorted.map { case (k, value) => s"#$k=$value" }
-    val mp = new Path(s"$root/_manifests/$stem.manifest")
-    // tmp is WRITER-UNIQUE: a shared tmp path would let a racing
-    // committer overwrite this writer's bytes between write and
-    // publish, silently swapping manifest contents
-    val tmp = new Path(s"$root/_manifests/.$stem." +
-      java.util.UUID.randomUUID.toString.take(8) + ".manifest.tmp")
-    val fs = fsOf(s, mp)
-    val out = fs.create(tmp, true)
-    // EofMarker LAST: readers treat a manifest without it as possibly
-    // mid-publish and wait (see Manifest.readRaw)
-    try out.write(((header ++ files ++ Seq(EofMarker)).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    // the atomic swap is the store-specific part — see CommitArbiter
-    if (!CommitArbiter.forConf(s.sparkContext.hadoopConfiguration).publish(fs, tmp, mp)) {
-      fs.delete(tmp, false)
-      throw new IllegalStateException(
-        s"concurrent commit detected for $root at $stem — manifest already exists")
-    }
-  }
-
   // ----- rollback and named refs (Iceberg tags) ---------------------
 
   /** Iceberg-style rollback: re-publish an old snapshot as the NEW
@@ -2603,7 +2465,7 @@ object SnapshotTable {
       Map("op" -> "clone", "clone_of" -> s"$srcRoot@v$v")
     // fragment refs are absolute paths, so the zero-copy clone carries
     // them verbatim across roots (same expire caveat as data files)
-    writeManifestAtomic(s, destRoot, 1, header, ver(s, srcRoot, v).body)
+    Manifest.publish(conf(s), destRoot, "v1", header, ver(s, srcRoot, v).body)
     1
   }
 
@@ -2611,12 +2473,13 @@ object SnapshotTable {
     val cur = currentVersion(s, root)
     require(toVersion >= 1 && toVersion <= cur,
       s"cannot roll back $root to version $toVersion (current: $cur)")
-    val v = cur + 1
-    val header = commitMeta(s, root, toVersion)
-    writeManifestAtomic(s, root, v,
-      header ++ Map("op" -> "rollback", "rollback_of" -> toVersion.toString),
-      ver(s, root, toVersion).body)
-    v
+    // the target's FULL header and body, so the new version reads
+    // exactly like the target (schema history included)
+    val target = ver(s, root, toVersion)
+    Manifest.publish(conf(s), root, s"v${cur + 1}",
+      target.header ++ Map("op" -> "rollback", "rollback_of" -> toVersion.toString),
+      target.body)
+    cur + 1
   }
 
   private def tagsDir(root: String) = new Path(s"$root/_tags")
@@ -2641,14 +2504,11 @@ object SnapshotTable {
     // a racing writer past the exists() check surfaces as the FS's
     // FileAlreadyExistsException — normalize to the same signal the
     // non-raced path throws so callers see one immutability exception
-    val out =
-      try fs.create(p, false)
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException | _: java.nio.file.FileAlreadyExistsException =>
-          throw new IllegalStateException(s"tag $name already exists on $root")
-      }
-    try out.write(s"$version\n".getBytes("UTF-8"))
-    finally out.close()
+    try Manifest.writeRef(conf(s), p, version.toString, overwrite = false)
+    catch {
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException | _: java.nio.file.FileAlreadyExistsException =>
+        throw new IllegalStateException(s"tag $name already exists on $root")
+    }
   }
 
   def tagVersion(s: SparkSession, root: String, name: String): Int = {
@@ -2691,19 +2551,13 @@ object SnapshotTable {
   // fast-forward main via [[publishBranch]] — the Iceberg
   // write-audit-publish pattern on the reference's table layer
   // (RUNBOOK.md:89). Branch commits write data files under
-  // data/<branch>/ and manifests as _manifests/<branch>.v{n}.manifest,
+  // data/<branch>/ and manifests as `<branch>.v{n}` stems ([[Manifest]]),
   // a namespace [[currentVersion]]'s v{N} regex never matches — so
   // staging is INVISIBLE to main readers until publish, and a dropped
   // branch leaves main bit-identical. Refs are single-writer (the ref
   // move is a small-file overwrite, not a CAS).
 
   private def branchesDir(root: String) = new Path(s"$root/_branches")
-
-  private def writeRef(fs: FileSystem, p: Path, stem: String, overwrite: Boolean): Unit = {
-    val out = fs.create(p, overwrite)
-    try out.write(s"$stem\n".getBytes("UTF-8"))
-    finally out.close()
-  }
 
   /** Create a branch at a main version (default: current). */
   def createBranch(s: SparkSession, root: String, name: String, fromVersion: Int = -1): Unit = {
@@ -2723,7 +2577,7 @@ object SnapshotTable {
     // FileAlreadyExistsException — normalize to the same signal the
     // non-raced path throws, exactly like tag() (wire callers map
     // IllegalStateException to the retryable 409)
-    try writeRef(fs, p, s"v$from", overwrite = false)
+    try Manifest.writeRef(conf(s), p, s"v$from", overwrite = false)
     catch {
       case _: org.apache.hadoop.fs.FileAlreadyExistsException
            | _: java.nio.file.FileAlreadyExistsException =>
@@ -2757,26 +2611,18 @@ object SnapshotTable {
   def commitToBranch(
       s: SparkSession, root: String, name: String, df: DataFrame,
       append: Boolean = true, meta: Map[String, String] = Map.empty): Int = {
-    val headStem = branchHead(s, root, name)
-    val inherited = verAt(s, root, headStem).header
+    val head = verAt(s, root, branchHead(s, root, name))
+    val inherited = head.header
       .filter(kv => kv._1 == ColMapKey || kv._1 == ColTypesKey ||
         kv._1 == PartitionKey || kv._1 == StatsKey || kv._1 == BloomKey)
-    val mapping = pairs(inherited.get(ColMapKey))
-    val mdir = manifestDir(root)
-    val fs = fsOf(s, mdir)
-    val seqRe = (java.util.regex.Pattern.quote(name) + "\\.v(\\d+)\\.manifest").r
-    val n = fs.listStatus(mdir).map(_.getPath.getName).collect {
-      case seqRe(v) => v.toInt
-    }.foldLeft(0)(math.max) + 1
+    val n = Manifest.branchVersion(conf(s), root, name) + 1
     val newFiles = stampSeq(annotateRows(s,
-      writeDataFilesAt(s, s"$root/data/$name/v$n", toPhysical(df, mapping))),
-      verAt(s, root, headStem).maxSeq + 1)
-    val base = if (append) verAt(s, root, headStem).body else Seq.empty
+      writeDataFilesAt(s, s"$root/data/$name/v$n", toPhysical(df, head.columnMapping))),
+      head.maxSeq + 1)
     val stem = s"$name.v$n"
-    val newRef = writeFragment(s, root, stem, newFiles)
-    writeManifestAtomicAt(s, root, stem,
-      inherited ++ meta + ("branch" -> name), base ++ newRef)
-    writeRef(fs, new Path(branchesDir(root), name), stem, overwrite = true)
+    Manifest.publish(conf(s), root, stem, inherited ++ meta + ("branch" -> name),
+      (if (append) head.body else Seq.empty) ++ Manifest.fragment(conf(s), root, stem, newFiles))
+    Manifest.writeRef(conf(s), new Path(branchesDir(root), name), stem, overwrite = true)
     n
   }
 
@@ -2799,12 +2645,10 @@ object SnapshotTable {
     */
   def publishBranch(s: SparkSession, root: String, name: String): Int = {
     val stem = branchHead(s, root, name)
-    val cur = currentVersion(s, root)
-    val v = cur + 1
-    writeManifestAtomic(s, root, v,
-      verAt(s, root, stem).header ++
-        Map("op" -> "publish", "published_from" -> stem),
-      verAt(s, root, stem).body)
+    val v = currentVersion(s, root) + 1
+    val branch = verAt(s, root, stem)
+    Manifest.publish(conf(s), root, s"v$v",
+      branch.header ++ Map("op" -> "publish", "published_from" -> stem), branch.body)
     v
   }
 
@@ -2834,7 +2678,7 @@ object SnapshotTable {
     val cur = currentVersion(s, root)
     require(toVersion >= 1 && toVersion <= cur,
       s"cannot move branch $name of $root to version $toVersion (current: $cur)")
-    writeRef(fs, p, s"v$toVersion", overwrite = true)
+    Manifest.writeRef(conf(s), p, s"v$toVersion", overwrite = true)
   }
 
   // ----- schema evolution: rename / widen via column mapping --------
@@ -2912,12 +2756,13 @@ object SnapshotTable {
   // commit would silently disable skip pruning for every old file
   // whose stats are still perfectly valid. Files without annotations
   // always scan, so inheriting the registration is never wrong.
+  private def inheritedHeader(mv: Manifest.Version): Map[String, String] =
+    mv.header.filter(kv => kv._1 == ColMapKey || kv._1 == ColTypesKey ||
+      kv._1 == PartitionKey || kv._1 == StatsKey || kv._1 == BloomKey ||
+      kv._1 == PropsKey || kv._1 == FieldIdsKey || kv._1 == DroppedKey)
+
   private def schemaMeta(s: SparkSession, root: String, version: Int): Map[String, String] =
-    if (version < 1) Map.empty
-    else commitMeta(s, root, version)
-      .filter(kv => kv._1 == ColMapKey || kv._1 == ColTypesKey ||
-        kv._1 == "partition" || kv._1 == StatsKey || kv._1 == BloomKey ||
-        kv._1 == PropsKey || kv._1 == FieldIdsKey || kv._1 == DroppedKey)
+    inheritedHeader(headAt(s, root, version))
 
   // table properties ride the same inherited-header channel as the
   // column mapping; keys and values are URL-encoded individually so
@@ -2941,16 +2786,11 @@ object SnapshotTable {
     */
   def setProperties(s: SparkSession, root: String,
       updates: Map[String, String], removals: Seq[String] = Nil): Int = {
-    val cur = currentVersion(s, root)
-    require(cur > 0, s"no snapshot table at $root")
+    val cur = existingVersion(s, root)
     val props = (properties(s, root, cur) -- removals) ++ updates
     val encoded = props.map { case (k, v) => encProp(k) -> encProp(v) }
-    val meta = (schemaMeta(s, root, cur) - PropsKey) ++
-      (if (encoded.nonEmpty) Map(PropsKey -> renderPairs(encoded)) else Map.empty) +
-      ("op" -> "properties")
-    val v = cur + 1
-    writeManifestAtomic(s, root, v, meta, ver(s, root, cur).body)
-    v
+    publishNext(s, root, cur, Map("op" -> "properties"), header = h => (h - PropsKey) ++
+      (if (encoded.nonEmpty) Map(PropsKey -> renderPairs(encoded)) else Map.empty))
   }
 
   /** Rename a column — metadata-only commit (no files touched). New
@@ -2959,8 +2799,7 @@ object SnapshotTable {
     * time-traveling earlier.
     */
   def renameColumn(s: SparkSession, root: String, oldName: String, newName: String): Int = {
-    val cur = currentVersion(s, root)
-    require(cur > 0, s"no snapshot table at $root")
+    val cur = existingVersion(s, root)
     // a dropped column's physical name still lives inside old files and
     // keeps a tombstone entry in the exported name-mapping; a live
     // field renamed TO that name would make the mapping ambiguous
@@ -2985,20 +2824,18 @@ object SnapshotTable {
       case Some(id) => (ids - oldName) + (newName -> id)
       case None => ids + (newName -> (ids.values.maxOption.getOrElse(0) + 1))
     }
-    // based on the FULL inherited header (schemaMeta), not rebuilt from
-    // scratch: stats/bloom/partition columns and table properties must
-    // survive a metadata-only schema commit, or skip pruning and
-    // TBLPROPERTIES silently die on the first ALTER
-    val meta = (schemaMeta(s, root, cur) - ColMapKey - ColTypesKey - FieldIdsKey) ++
-      Map("op" -> s"rename:$oldName->$newName", ColMapKey -> renderPairs(newMapping),
-        FieldIdsKey -> renderPairs(newIds.map { case (k, i) => k -> i.toString })) ++
-      (if (newTypes.nonEmpty) Map(ColTypesKey -> renderPairs(newTypes)) else Map.empty)
-    val v = cur + 1
-    // fragment refs copied verbatim: a metadata-only commit costs
-    // O(#fragments) lines and never touches the files' stats/bloom/
-    // _rows annotations (they live inside the untouched fragments)
-    writeManifestAtomic(s, root, v, meta, ver(s, root, cur).body)
-    v
+    // based on the FULL inherited header, not rebuilt from scratch:
+    // stats/bloom/partition columns and table properties must survive
+    // a metadata-only schema commit, or skip pruning and TBLPROPERTIES
+    // silently die on the first ALTER. Fragment refs are copied
+    // verbatim: a metadata-only commit costs O(#fragments) lines and
+    // never touches the files' annotations (they live inside the
+    // untouched fragments)
+    publishNext(s, root, cur, Map("op" -> s"rename:$oldName->$newName"),
+      header = h => (h - ColMapKey - ColTypesKey - FieldIdsKey) ++
+        Map(ColMapKey -> renderPairs(newMapping),
+          FieldIdsKey -> renderPairs(newIds.map { case (k, i) => k -> i.toString })) ++
+        (if (newTypes.nonEmpty) Map(ColTypesKey -> renderPairs(newTypes)) else Map.empty))
   }
 
   /** Whether `from` → `to` is a lossless widening promotion (the only
@@ -3027,20 +2864,16 @@ object SnapshotTable {
     * version chain.
     */
   def widenColumn(s: SparkSession, root: String, name: String, ddlType: String): Int = {
-    val cur = currentVersion(s, root)
-    require(cur > 0, s"no snapshot table at $root")
-    val curSchema = read(s, root, cur).schema
+    val cur = existingVersion(s, root)
+    val curSchema = schema(s, root, cur)
     require(curSchema.fieldNames.contains(name), s"no column $name at $root")
     val from = curSchema(name).dataType.simpleString
     require(isWidening(from, ddlType),
       s"ALTER COLUMN $name: $from -> $ddlType is not a widening promotion")
     val types = columnTypes(s, root, cur) + (name -> ddlType)
     // inherited header carried forward — see renameColumn
-    val meta = (schemaMeta(s, root, cur) - ColTypesKey) ++
-      Map("op" -> s"widen:$name:$ddlType", ColTypesKey -> renderPairs(types))
-    val v = cur + 1
-    writeManifestAtomic(s, root, v, meta, ver(s, root, cur).body)
-    v
+    publishNext(s, root, cur, Map("op" -> s"widen:$name:$ddlType"),
+      header = _ + (ColTypesKey -> renderPairs(types)))
   }
 
   /** Add a column — metadata-only commit, like [[widenColumn]] but
@@ -3051,17 +2884,16 @@ object SnapshotTable {
     * have no override, so they read without the column.
     */
   def addColumn(s: SparkSession, root: String, name: String, ddlType: String): Int = {
-    val cur = currentVersion(s, root)
-    require(cur > 0, s"no snapshot table at $root")
-    require(!read(s, root, cur).columns.contains(name),
-      s"column $name already exists at $root")
+    val cur = existingVersion(s, root)
+    val columns = schema(s, root, cur).fieldNames
+    require(!columns.contains(name), s"column $name already exists at $root")
     // the new column's PHYSICAL name is `name` itself (adds are never
     // mapped), so it must not collide with a physical name still in
     // use by a RENAMED column: after RENAME a->b, ADD COLUMN a would
     // give two logical columns the same in-file name and every later
     // append would fail on a duplicate column
     val mapping = columnMapping(s, root, cur)
-    val physInUse = read(s, root, cur).columns.map(c => mapping.getOrElse(c, c))
+    val physInUse = columns.map(c => mapping.getOrElse(c, c))
     require(!physInUse.contains(name),
       s"column $name collides with the physical (in-file) name of a renamed column at $root")
     // a DROPPED column's physical name still lives inside old data
@@ -3078,12 +2910,9 @@ object SnapshotTable {
     val ids = fieldIds(s, root, cur) ++ fieldIdTombstones(s, root, cur)
     val newIds = ids + (name -> (ids.values.maxOption.getOrElse(0) + 1))
     // inherited header carried forward — see renameColumn
-    val meta = (schemaMeta(s, root, cur) - ColTypesKey - FieldIdsKey) ++
-      Map("op" -> s"add:$name:$ddlType", ColTypesKey -> renderPairs(types),
-        FieldIdsKey -> renderPairs(newIds.map { case (k, i) => k -> i.toString }))
-    val v = cur + 1
-    writeManifestAtomic(s, root, v, meta, ver(s, root, cur).body)
-    v
+    publishNext(s, root, cur, Map("op" -> s"add:$name:$ddlType"),
+      header = _ ++ Map(ColTypesKey -> renderPairs(types),
+        FieldIdsKey -> renderPairs(newIds.map { case (k, i) => k -> i.toString })))
   }
 
   /** Why `name` cannot be dropped right now — None when it can.
@@ -3094,10 +2923,10 @@ object SnapshotTable {
   private[graft] def dropRefusal(s: SparkSession, root: String, name: String): Option[String] = {
     val cur = currentVersion(s, root)
     if (cur < 1) return Some(s"no snapshot table at $root")
-    if (!read(s, root, cur).columns.contains(name))
+    if (!schema(s, root, cur).fieldNames.contains(name))
       return Some(s"DROP COLUMN $name: no such column at $root")
     val physical = columnMapping(s, root, cur).getOrElse(name, name)
-    val hdr = schemaMeta(s, root, cur)
+    val hdr = commitMeta(s, root, cur)
     if (hdr.get(PartitionKey).contains(physical))
       return Some(s"DROP COLUMN $name: the table is day($physical)-partitioned")
     val registered = (hdr.get(StatsKey).toSeq ++ hdr.get(BloomKey).toSeq)
@@ -3131,27 +2960,22 @@ object SnapshotTable {
     * pruning and delete semantics still reference it.
     */
   def dropColumn(s: SparkSession, root: String, name: String): Int = {
-    val cur = currentVersion(s, root)
-    require(cur > 0, s"no snapshot table at $root")
+    val cur = existingVersion(s, root)
     dropRefusal(s, root, name).foreach(r => throw new IllegalArgumentException(r))
     val mapping = columnMapping(s, root, cur)
     val physical = mapping.getOrElse(name, name)
-    val hdr = schemaMeta(s, root, cur)
     val ids = fieldIds(s, root, cur)
     val newIds = (ids - name) ++ fieldIdTombstones(s, root, cur) +
       (s"!${ids(name)}" -> ids(name))
     val newMapping = mapping - name
     val newTypes = columnTypes(s, root, cur) - name
     val newDropped = droppedColumns(s, root, cur) + (physical -> ids(name))
-    val meta = (hdr - ColMapKey - ColTypesKey - FieldIdsKey - DroppedKey) ++
-      Map("op" -> s"drop:$name",
-        FieldIdsKey -> renderPairs(newIds.map { case (k, i) => k -> i.toString }),
-        DroppedKey -> renderPairs(newDropped.map { case (k, i) => k -> i.toString })) ++
-      (if (newMapping.nonEmpty) Map(ColMapKey -> renderPairs(newMapping)) else Map.empty) ++
-      (if (newTypes.nonEmpty) Map(ColTypesKey -> renderPairs(newTypes)) else Map.empty)
-    val v = cur + 1
-    writeManifestAtomic(s, root, v, meta, ver(s, root, cur).body)
-    v
+    publishNext(s, root, cur, Map("op" -> s"drop:$name"),
+      header = h => (h - ColMapKey - ColTypesKey - FieldIdsKey - DroppedKey) ++
+        Map(FieldIdsKey -> renderPairs(newIds.map { case (k, i) => k -> i.toString }),
+          DroppedKey -> renderPairs(newDropped.map { case (k, i) => k -> i.toString })) ++
+        (if (newMapping.nonEmpty) Map(ColMapKey -> renderPairs(newMapping)) else Map.empty) ++
+        (if (newTypes.nonEmpty) Map(ColTypesKey -> renderPairs(newTypes)) else Map.empty))
   }
 
   /** Physical file columns → the logical schema of a version. A type

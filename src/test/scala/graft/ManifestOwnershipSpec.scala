@@ -1,0 +1,35 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** `lake/Manifest` is the one owner of the manifest format: no other
+  * main source names the `_manifests` directory or builds lines from
+  * the trailer, the fragment-ref prefix or an entry annotation
+  * constant, so the format and its CAS publish stay one module's
+  * decision.
+  */
+class ManifestOwnershipSpec extends AnyFunSuite {
+
+  private val main = Paths.get("src/main/scala")
+  private val owner = main.resolve("graft/lake/Manifest.scala")
+
+  private def sources: Seq[Path] =
+    Files.walk(main).iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+
+  test("only lake/Manifest.scala names _manifests or uses the format's constants") {
+    val ownerText = new String(Files.readAllBytes(owner), "UTF-8")
+    val annots = "val (\\w+Annot) =".r.findAllMatchIn(ownerText).map(_.group(1)).toSeq
+    assert(annots.size >= 7, s"annotation constants not found in $owner")
+    val constants = (Seq("EofMarker", "RefPrefix") ++ annots).map(c => s"\\b$c\\b".r)
+    val offenders = sources.filter(_ != owner).flatMap { p =>
+      val text = new String(Files.readAllBytes(p), "UTF-8")
+      (if (text.contains("_manifests")) Seq(s"$p: _manifests") else Nil) ++
+        constants.filter(_.findFirstIn(text).isDefined).map(c => s"$p: $c")
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+}
