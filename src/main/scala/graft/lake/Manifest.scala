@@ -311,7 +311,8 @@ private[graft] object Manifest {
   /** A lost version CAS: another writer published the version first. */
   final class LostCas(msg: String) extends IllegalStateException(msg)
 
-  private val CommittedAtKey = "committed_at"
+  /** Header key of a version's commit instant (epoch ms). */
+  private[lake] val CommittedAtKey = "committed_at"
 
   /** Entry line of a positional-delete file. */
   def posDeleteLine(path: String): String = s"$path\t$DeleteKindAnnot"

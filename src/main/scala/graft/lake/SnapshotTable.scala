@@ -1310,7 +1310,7 @@ object SnapshotTable {
       Manifest.fragment(conf(s), root, s"v${basedOn + 1}-keep", survivors) ++
       Manifest.fragment(conf(s), root, s"v${basedOn + 1}", newLines)
     val baseBodySet = ver(s, root, basedOn).body.toSet
-    val baseSchema = schemaMeta(s, root, basedOn)
+    val baseSchema = inheritedHeader(ver(s, root, basedOn))
     rebasing(s, root) { head =>
       val added: Seq[String] =
         if (head == basedOn) Seq.empty
@@ -1327,7 +1327,7 @@ object SnapshotTable {
               s"rewrite of $root based on v$basedOn conflicts with a concurrent " +
                 "row-level delete — its positions/keys may target replaced files; " +
                 "re-plan the rewrite against the new head")
-          if (schemaMeta(s, root, head) != baseSchema) throw new IllegalStateException(
+          if (inheritedHeader(ver(s, root, head)) != baseSchema) throw new IllegalStateException(
             s"rewrite of $root based on v$basedOn conflicts with a concurrent " +
               "schema/registration change — re-plan against the new head")
           extra
@@ -2033,9 +2033,10 @@ object SnapshotTable {
   }
 
   def expire(s: SparkSession, root: String, keepLast: Int): (Seq[Int], Seq[String]) = {
-    val expired = expirableVersions(s, root, keepLast)
+    require(keepLast >= 1, "must keep at least the current version")
+    val versions = Manifest.versions(conf(s), root).map(_._1)
+    val (expired, live) = versions.splitAt(math.max(0, versions.size - keepLast))
     if (expired.isEmpty) return (Seq.empty, Seq.empty)
-    val live = Manifest.versions(conf(s), root).map(_._1).drop(expired.size)
     // branch heads keep their referenced files live — a branch created
     // from an expired main version must stay readable until published
     // or dropped
@@ -2409,7 +2410,7 @@ object SnapshotTable {
     * manifests (written before timestamp travel existed).
     */
   def committedAt(s: SparkSession, root: String, version: Int): Long =
-    commitMeta(s, root, version).get("committed_at").map(_.toLong).getOrElse(0L)
+    commitMeta(s, root, version).get(Manifest.CommittedAtKey).fold(0L)(_.toLong)
 
   /** Resolve a commit instant to the newest version committed at or
     * before it — the shared anchor for `TIMESTAMP AS OF` ([[readAsOf]]
@@ -2612,15 +2613,12 @@ object SnapshotTable {
       s: SparkSession, root: String, name: String, df: DataFrame,
       append: Boolean = true, meta: Map[String, String] = Map.empty): Int = {
     val head = verAt(s, root, branchHead(s, root, name))
-    val inherited = head.header
-      .filter(kv => kv._1 == ColMapKey || kv._1 == ColTypesKey ||
-        kv._1 == PartitionKey || kv._1 == StatsKey || kv._1 == BloomKey)
     val n = Manifest.branchVersion(conf(s), root, name) + 1
     val newFiles = stampSeq(annotateRows(s,
       writeDataFilesAt(s, s"$root/data/$name/v$n", toPhysical(df, head.columnMapping))),
       head.maxSeq + 1)
     val stem = s"$name.v$n"
-    Manifest.publish(conf(s), root, stem, inherited ++ meta + ("branch" -> name),
+    Manifest.publish(conf(s), root, stem, inheritedHeader(head) ++ meta + ("branch" -> name),
       (if (append) head.body else Seq.empty) ++ Manifest.fragment(conf(s), root, stem, newFiles))
     Manifest.writeRef(conf(s), new Path(branchesDir(root), name), stem, overwrite = true)
     n
@@ -2761,8 +2759,6 @@ object SnapshotTable {
       kv._1 == PartitionKey || kv._1 == StatsKey || kv._1 == BloomKey ||
       kv._1 == PropsKey || kv._1 == FieldIdsKey || kv._1 == DroppedKey)
 
-  private def schemaMeta(s: SparkSession, root: String, version: Int): Map[String, String] =
-    inheritedHeader(headAt(s, root, version))
 
   // table properties ride the same inherited-header channel as the
   // column mapping; keys and values are URL-encoded individually so

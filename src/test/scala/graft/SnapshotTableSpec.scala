@@ -860,4 +860,22 @@ class SnapshotTableSpec extends SparkSpec {
     assert(footer.get("v").flatten === Some(ids1("v")),
       s"footer must stamp the persistent id on the physical column: $footer")
   }
+
+  test("a branch commit and its publish keep properties, field ids and dropped columns") {
+    val root = "/tmp/graft_test/snap_branch_headers"
+    SnapshotTable.drop(spark, root)
+    SnapshotTable.commit(spark, root, Seq((1L, "a", "x")).toDF("id", "v", "gone"))
+    SnapshotTable.setProperties(spark, root, Map("owner" -> "ops"))
+    val cur = SnapshotTable.dropColumn(spark, root, "gone")
+    SnapshotTable.createBranch(spark, root, "audit")
+    SnapshotTable.commitToBranch(spark, root, "audit", Seq((2L, "b")).toDF("id", "v"))
+    assert(SnapshotTable.readBranch(spark, root, "audit").columns.toSeq === Seq("id", "v"))
+    val v = SnapshotTable.publishBranch(spark, root, "audit")
+    assert(SnapshotTable.read(spark, root, v).columns.toSeq === Seq("id", "v"),
+      "the dropped column stays dropped")
+    assert(SnapshotTable.properties(spark, root, v) === Map("owner" -> "ops"))
+    assert(SnapshotTable.fieldIds(spark, root, v) === SnapshotTable.fieldIds(spark, root, cur))
+    assert(SnapshotTable.droppedColumns(spark, root, v) ===
+      SnapshotTable.droppedColumns(spark, root, cur))
+  }
 }
