@@ -3,13 +3,17 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions.col
 
+import graft.endpoint.RestCatalog
 import graft.lake.{Manifest, SnapshotTable}
+import graft.sources.PersistentCatalog
 
 /** Metadata round trips per commit: how many files under `_manifests/`
   * one commit of each kind opens and creates ([[CountingTestFs]]),
   * each measured after every version on disk is past the racy window.
   * The counts are pinned: a commit path that starts re-reading a
   * manifest, or writes one more file, shows here as a changed count.
+  * Wire commits through the REST catalog also pin how often they open
+  * the client's staged files (footer reads).
   */
 class CommitRoundTripSpec extends SparkSpec {
   import spark.implicits._
@@ -58,5 +62,67 @@ class CommitRoundTripSpec extends SparkSpec {
     measure("rename_column")(SnapshotTable.renameColumn(spark, root, "v", "w"))
     assert(SnapshotTable.currentVersion(spark, root) === 12)
     assert(counts.toMap === Pinned)
+  }
+
+  // (manifest opens, manifest creates, staged-file opens) per wire commit;
+  // each includes rendering the response's metadata for the new version
+  private val WirePinned: Map[String, (Int, Int, Int)] = Map(
+    "add_snapshot" -> (26, 2, 3), "set_snapshot_ref" -> (1, 0, 0),
+    "transaction" -> (1, 4, 4))
+
+  test("each wire commit opens and creates a fixed number of files") {
+    conf.set("fs.countfs.impl", classOf[CountingTestFs].getName)
+    val area = "countfs:///tmp/graft_test/wire_round_trips"
+    val registry = "/tmp/graft_test/wire_round_trips_registry"
+    val db = "graft_wire_rt"
+    Seq(area, registry).foreach(d => new Path(d).getFileSystem(conf).delete(new Path(d), true))
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
+    PersistentCatalog.save(spark, registry, db)
+    val port = RestCatalog.serve(spark, registry, db)
+    try {
+      val base = s"/v1/namespaces/$db/tables"
+      Seq("a", "b").foreach { t =>
+        SnapshotTable.commit(spark, s"$area/$t",
+          (1 to 10).map(i => (i.toLong, s"r$i")).toDF("id", "v").coalesce(1))
+        val (c, r) = RestCatalog.post(port, "/v1/tables",
+          s"""{"name":"$t","format":"graft-snapshot","location":"$area/$t"}""")
+        assert(c == 201, r)
+        assert(RestCatalog.get(port, s"$base/$t")._1 == 200)
+      }
+      def stage(tag: String): String = {
+        val dir = s"$area/staged/$tag"
+        Seq((100L, tag)).toDF("id", "v").coalesce(1).write.parquet(dir)
+        new Path(dir).getFileSystem(conf).listStatus(new Path(dir))
+          .map(_.getPath.toString).filter(_.endsWith(".parquet")).head
+      }
+      def addSnapshot(file: String, snap: Int): String =
+        s"""{"requirements":[{"type":"assert-ref-snapshot-id","ref":"main","snapshot-id":$snap}],""" +
+          s""""updates":[{"action":"add-snapshot","snapshot":{"added-data-files":["$file"]}}]}"""
+      val counts = scala.collection.mutable.LinkedHashMap.empty[String, (Int, Int, Int)]
+      def measure(kind: String, path: String, body: String, status: Int): Unit = {
+        Thread.sleep(Manifest.RacyMs + 200)
+        val (o, c, st) = (CountingTestFs.opens.get, CountingTestFs.creates.get,
+          CountingTestFs.stagedOpens.get)
+        val (code, resp) = RestCatalog.post(port, path, body)
+        assert(code == status, resp)
+        counts(kind) = (CountingTestFs.opens.get - o, CountingTestFs.creates.get - c,
+          CountingTestFs.stagedOpens.get - st)
+      }
+      measure("add_snapshot", s"$base/a", addSnapshot(stage("s1"), 1), 200)
+      measure("set_snapshot_ref", s"$base/a",
+        """{"updates":[{"action":"set-snapshot-ref","ref-name":"rel","type":"tag","snapshot-id":2}]}""",
+        200)
+      val (fa, fb) = (stage("s2"), stage("s3"))
+      measure("transaction", "/v1/transactions/commit",
+        s"""{"table-changes":[${Seq("a" -> (fa, 2), "b" -> (fb, 1)).map { case (t, (f, v)) =>
+          s"""{"identifier":{"namespace":["$db"],"name":"$t"},${addSnapshot(f, v).drop(1)}"""
+        }.mkString(",")}]}""", 204)
+      assert(SnapshotTable.currentVersion(spark, s"$area/a") === 3)
+      assert(SnapshotTable.currentVersion(spark, s"$area/b") === 2)
+      assert(counts.toMap === WirePinned)
+    } finally {
+      RestCatalog.stop(registry)
+      spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+    }
   }
 }

@@ -11,7 +11,9 @@ import graft.lake.{Manifest, SnapshotTable}
 
 /** `countfs://`: [[GraftTestFs]] under its own scheme, counting every
   * open and every create of a file under a `_manifests/` directory
-  * (version manifests, publish tmps and fragments alike).
+  * (version manifests, publish tmps and fragments alike), and every
+  * open of a file under a `staged/` directory (a wire client's staged
+  * parquet, whose footer a commit reads).
   */
 class CountingTestFs extends GraftTestFs {
   override def getUri: java.net.URI = java.net.URI.create("countfs:///")
@@ -19,6 +21,7 @@ class CountingTestFs extends GraftTestFs {
     if (f.toString.contains("/_manifests/")) { n.incrementAndGet(); () }
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     count(f, CountingTestFs.opens)
+    if (f.toString.contains("/staged/")) { CountingTestFs.stagedOpens.incrementAndGet(); () }
     super.open(f, bufferSize)
   }
   override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
@@ -37,6 +40,7 @@ class CountingTestFs extends GraftTestFs {
 object CountingTestFs {
   val opens = new AtomicInteger()
   val creates = new AtomicInteger()
+  val stagedOpens = new AtomicInteger()
 }
 
 /** The parsed-manifest cache ([[Manifest]]) serves a version only while

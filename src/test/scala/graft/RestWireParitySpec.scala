@@ -699,6 +699,72 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     ()
   }
 
+  // ----- where the two commit routes differ ---------------------------------
+
+  test("a transaction failing mid-apply restores the tables it applied and says so") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftmseam.impl", classOf[ManifestSeamFs].getName)
+    val locA = mkSnapshotTable("rest_w20_cmpa", Seq(1L -> "a"))
+    // table B lives under the seam scheme, so only ITS manifest publish fails
+    val locB = s"graftmseam://$tableArea/rest_w20_cmpb"
+    SnapshotTable.drop(spark, locB)
+    SnapshotTable.commit(spark, locB, Seq(10L -> "x").toDF("id", "v"))
+    val (rc, rr) = RestCatalog.post(port, "/v1/tables",
+      s"""{"name":"rest_w20_cmpb","format":"graft-snapshot","location":${Json.jstr(locB)}}""")
+    assert(rc == 201, rr)
+    def change(name: String, file: String): String =
+      s"""{"identifier":{"namespace":["graft"],"name":"$name"},
+         |"requirements":[{"type":"assert-ref-snapshot-id","ref":"main","snapshot-id":1}],
+         |"updates":[{"action":"add-snapshot","snapshot":{
+         |"added-data-files":[${Json.jstr(file)}]}}]}""".stripMargin
+    val body = s"""{"table-changes":[${change("rest_w20_cmpa", stageOne("cmpa", Seq(2L -> "b")))},${
+      change("rest_w20_cmpb", stageOne("cmpb", Seq(11L -> "y")))}]}"""
+    ManifestSeamFs.armOnce(() => throw new java.io.IOException("injected manifest write failure"))
+    val (tc, tr) =
+      try RestCatalog.post(port, "/v1/transactions/commit", body)
+      finally ManifestSeamFs.disarm()
+    assert(tc == 500, tr)
+    assert(tr.contains("transaction failed at rest_w20_cmpb") &&
+      tr.contains("1 already-applied step(s) rolled back"), tr)
+    // A committed, then was rolled back to its pre-transaction rows; B never moved
+    assert(rows(locA) == Set(1L -> "a"), rows(locA))
+    assert(SnapshotTable.currentVersion(spark, locB) == 1)
+    assert(rows(locB) == Set(10L -> "x"), rows(locB))
+    Seq("rest_w20_cmpa", "rest_w20_cmpb").foreach(n =>
+      RestCatalog.delete(port, s"/v1/tables/$n"))
+    ()
+  }
+
+  test("updateTable moves a diverged branch, orphaning its branch-local commits") {
+    import spark.implicits._
+    val loc = mkSnapshotTable("rest_w20_divg", Seq(1L -> "a"))
+    SnapshotTable.commitAppend(spark, loc, Seq(2L -> "b").toDF("id", "v"))
+    SnapshotTable.createBranch(spark, loc, "dev", 1)
+    SnapshotTable.commitToBranch(spark, loc, "dev", Seq(500L -> "local").toDF("id", "v"))
+    assert(!SnapshotTable.branches(spark, loc)("dev").matches("v\\d+"))
+    val (c, r) = RestCatalog.post(port, "/v1/namespaces/graft/tables/rest_w20_divg",
+      """{"updates":[{"action":"set-snapshot-ref","ref-name":"dev","type":"branch",
+        |"snapshot-id":2}]}""".stripMargin)
+    assert(c == 200, r)
+    assert(SnapshotTable.branches(spark, loc).get("dev").contains("v2"))
+    assert(SnapshotTable.readBranch(spark, loc, "dev").count() == 2)
+    RestCatalog.delete(port, "/v1/tables/rest_w20_divg")
+    ()
+  }
+
+  test("a transaction answers 400 to remove-snapshot-ref") {
+    val loc = mkSnapshotTable("rest_w20_txrm", Seq(1L -> "a"))
+    SnapshotTable.tag(spark, loc, "keep", 1)
+    val (c, r) = RestCatalog.post(port, "/v1/transactions/commit",
+      """{"table-changes":[{"identifier":{"namespace":["graft"],"name":"rest_w20_txrm"},
+        |"updates":[{"action":"remove-snapshot-ref","ref-name":"keep"}]}]}""".stripMargin)
+    assert(c == 400 && r.contains("rest_w20_txrm: "), r)
+    assert(SnapshotTable.tags(spark, loc).get("keep").contains(1))
+    RestCatalog.delete(port, "/v1/tables/rest_w20_txrm")
+    ()
+  }
+
   // ----- fail-fast on uncurable wire-commit 409s (r19 VERDICT #8) ----------
 
   test("staged-schema 409 fails fast; CAS 409 retries to the bound") {
