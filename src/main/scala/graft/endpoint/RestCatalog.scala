@@ -10,7 +10,7 @@ import org.json4s.jackson.JsonMethods.compact
 
 import graft.Json.{arr, at, bool, double, jstr, long, optLong, parse, parseObject,
   present, str, strs}
-import graft.lake.SnapshotTable
+import graft.lake.{IcebergInterop, SnapshotTable}
 import graft.sources.{Catalog, PersistentCatalog}
 
 /** HTTP REST catalog — the reference's Lakekeeper role as a WIRE
@@ -125,6 +125,28 @@ object RestCatalog {
   /** The `snapshot` objects of a commit's add-snapshot updates. */
   private def snapshots(upds: Seq[(String, JValue)]): Seq[JValue] =
     upds.collect { case ("add-snapshot", u) => at(u, "snapshot") }
+
+  /** One table change of a wire commit, as parsed: the files an
+    * add-snapshot lands (data, positional deletes, equality deletes
+    * with their key names), a tag or branch set to a snapshot, main set
+    * (to a snapshot, when given), or a ref removed. `updateTable` and
+    * `transactions/commit` both parse, validate and apply these.
+    */
+  private sealed trait TableChange
+  private final case class AddFiles(files: Seq[String], posDels: Seq[String],
+      eqDels: Seq[(String, Seq[String])]) extends TableChange
+  private final case class SetRef(ref: String, kind: String, snapshotId: Long)
+      extends TableChange
+  private final case class SetMain(snapshotId: Option[Long]) extends TableChange
+  private final case class RemoveRef(ref: String) extends TableChange
+
+  /** A validated table change. `run` makes it and returns the version
+    * main is then at, plus the undo of what it changed (None: it changed
+    * nothing); `noUndo` says why the change could not be undone once
+    * made, where it could not.
+    */
+  private final case class Step(run: () => (Int, Option[() => Unit]),
+      noUndo: Option[String] = None)
 
   // ---------------------------------------------------------------
 
@@ -560,25 +582,20 @@ object RestCatalog {
     // churn (the r19 mount-retention pattern; see loadViewResult)
     private val viewMetaRetain = 8
 
-    /** The failure message of the first violated `assert-table-uuid`
-      * requirement, if any (every one is checked).
+    /** Validate EVERY requirement of a commit to `loc`, whose head is
+      * `cur`: each `assert-table-uuid` first, then each
+      * `assert-ref-snapshot-id` against the table's refs — a requirement
+      * may name any ref (main, a tag, a branch whose head is a main
+      * version); asserting a snapshot-id checks position, omitting it
+      * asserts ABSENCE (Iceberg semantics: a commit carrying main PLUS a
+      * tag assertion fails when either is stale). Returns the first
+      * violated requirement's message, if any (a 409).
       */
-    private def uuidAssertionFailure(loc: String,
-        reqs: Seq[Requirement]): Option[String] =
-      if (reqs.exists { case AssertUuid(u) => u != tableUuid(loc); case _ => false })
-        Some(s"requirement failed: table-uuid is ${tableUuid(loc)}")
-      else None
-
-    /** Validate EVERY `assert-ref-snapshot-id` requirement against the
-      * table's refs at `cur` — a requirement may name any ref (main,
-      * a tag, a branch whose head is a main version); asserting a
-      * snapshot-id checks position, omitting it asserts ABSENCE
-      * (Iceberg semantics: a commit carrying main PLUS a tag assertion
-      * fails when either is stale). Returns the first violated
-      * assertion's message, if any.
-      */
-    private def refAssertionFailure(loc: String, cur: Int,
+    private def requirementFailure(loc: String, cur: Int,
         reqs: Seq[Requirement]): Option[String] = {
+      lazy val uuid = IcebergInterop.tableUuid(loc)
+      if (reqs.exists { case AssertUuid(u) => u != uuid; case _ => false })
+        return Some(s"requirement failed: table-uuid is $uuid")
       // a ref's wire-visible position: main = the head; tags by
       // version; branches only when their head is a MAIN version
       // (branch-local staging is invisible to external catalogs)
@@ -1370,19 +1387,14 @@ object RestCatalog {
       withTable(ex, name) { case (_, _, _, loc) =>
         val v = if (loc.isEmpty) 0 else SnapshotTable.currentVersion(spark, loc)
         if (v == 0) err(ex, 404, s"$name is not a snapshot table")
-        else {
-          val (metaLocation, metadata) = icebergMetadata(name, loc, v)
-          // sts-enabled warehouses vend a fresh scoped credential with
-          // every load (Lakekeeper's vended-credentials-enabled flow)
-          val (cfg, credsField) = stsCredential match {
-            case Some(_) =>
-              val (c, sc) = vendFor(name, loc)
-              (c, s""","storage-credentials":$sc""")
-            case None => ("{}", "")
-          }
-          send(ex, 200,
-            s"""{"metadata-location":${jstr(metaLocation)},"metadata":$metadata,"config":$cfg$credsField}""")
-        }
+        // sts-enabled warehouses vend a fresh scoped credential with
+        // every load (Lakekeeper's vended-credentials-enabled flow)
+        else sendTable(ex, loc, v, stsCredential match {
+          case Some(_) =>
+            val (cfg, sc) = vendFor(name, loc)
+            s""","config":$cfg,"storage-credentials":$sc"""
+          case None => ""","config":{}"""
+        })
       }
 
     /** Iceberg REST loadCredentials: re-vend (refresh) the scoped
@@ -1402,13 +1414,6 @@ object RestCatalog {
             send(ex, 200, s"""{"storage-credentials":$sc}""")
         }
       }
-
-    /** A stable table uuid derived from the location ([[IcebergInterop
-      * .tableUuid]]): the registry has no separate identity store, and
-      * clients only require uniqueness + stability across loads.
-      */
-    private def tableUuid(loc: String): String =
-      graft.lake.IcebergInterop.tableUuid(loc)
 
     /** The defining SQL of view `name` in this handler's database,
       * from the session catalog's stored view text (the exact query
@@ -1438,10 +1443,10 @@ object RestCatalog {
         val fields = spark.table(s"$db.$name").schema.zipWithIndex.map {
           case (f, i) =>
             s"""{"id":${i + 1},"name":${jstr(f.name)},"required":false,""" +
-              s""""type":${jstr(graft.lake.IcebergInterop.icebergType(
+              s""""type":${jstr(IcebergInterop.icebergType(
                 f.dataType.simpleString))}}"""
         }
-        val uuid = tableUuid(s"$registryRoot/_views/$name")
+        val uuid = IcebergInterop.tableUuid(s"$registryRoot/_views/$name")
         // materialize so an external reader can walk to the definition
         // by path, like table metadata.json (the sql hash keys the
         // file: a REPLACEd view serves a fresh location, an unchanged
@@ -1547,20 +1552,25 @@ object RestCatalog {
       loadViewResult(ex, name)
     }
 
-    /** Render Iceberg v2 table metadata for version `v`, materialized
-      * as an immutable per-version file under `_iceberg/` together
-      * with its REAL Avro manifest-list + manifest chain
-      * ([[graft.lake.IcebergInterop.writeMetadata]]) — an external
-      * Iceberg engine can walk metadata.json → Avro manifest list →
-      * Avro manifests to the parquet files with no graft code. Schema
-      * comes from the ENGINE's read at this version (the session-
-      * catalog registration freezes its inferred schema at register
-      * time, so DESCRIBE would serve pre-evolution fields after a
-      * wire add-schema commit); field ids are the persistent
-      * [[SnapshotTable.fieldIds]] assignment.
+    /** Answer 200 with the table result of version `v` of `loc`:
+      * `metadata-location` and `metadata` of its Iceberg v2 metadata,
+      * materialized as an immutable per-version file under `_iceberg/`
+      * together with its REAL Avro manifest-list + manifest chain
+      * ([[IcebergInterop.writeMetadata]]) — an external Iceberg engine
+      * can walk metadata.json → Avro manifest list → Avro manifests to
+      * the parquet files with no graft code. Schema comes from the
+      * ENGINE's read at this version (the session-catalog registration
+      * freezes its inferred schema at register time, so DESCRIBE would
+      * serve pre-evolution fields after a wire add-schema commit);
+      * field ids are the persistent [[SnapshotTable.fieldIds]]
+      * assignment. `extra` adds fields after the metadata.
       */
-    private def icebergMetadata(name: String, loc: String, v: Int): (String, String) =
-      graft.lake.IcebergInterop.writeMetadata(spark, loc, v)
+    private def sendTable(ex: HttpExchange, loc: String, v: Int,
+        extra: => String = ""): Unit = {
+      val (metaLocation, metadata) = IcebergInterop.writeMetadata(spark, loc, v)
+      send(ex, 200,
+        s"""{"metadata-location":${jstr(metaLocation)},"metadata":$metadata$extra}""")
+    }
 
     /** The `add-schema` update action: wire-driven schema evolution.
       * The action carries the FULL target schema; the handler diffs it
@@ -1597,16 +1607,7 @@ object RestCatalog {
         case Right(cs) => cs
         case Left(msg) => err(ex, 400, msg); return
       }
-      def widens(from: String, to: String): Boolean =
-        SnapshotTable.isWidening(from, to)
-      uuidAssertionFailure(loc, reqs).foreach { msg =>
-        err(ex, 409, msg); return
-      }
-      ddlLock.synchronized {
-        val cur = SnapshotTable.currentVersion(spark, loc)
-        refAssertionFailure(loc, cur, reqs).foreach { msg =>
-          err(ex, 409, msg); return
-        }
+      commitUnderLock(ex, loc, reqs) { cur =>
         val have = SnapshotTable.schema(spark, loc)
           .map(f => f.name -> f.dataType.simpleString)
         val haveMap = have.toMap
@@ -1668,7 +1669,7 @@ object RestCatalog {
                 else Seq(Rename(oldName, n))
               val widen =
                 if (curT == t) Seq.empty
-                else if (widens(curT, t)) Seq(Widen(n, t))
+                else if (SnapshotTable.isWidening(curT, t)) Seq(Widen(n, t))
                 else {
                   err(ex, 400,
                     s"type change $n: $curT -> $t is not a supported promotion")
@@ -1679,7 +1680,7 @@ object RestCatalog {
               haveMap.get(n).filterNot(_ => claimed.contains(n)) match {
                 case None => Seq(Add(n, t))
                 case Some(curT) if curT == t => Seq.empty
-                case Some(curT) if widens(curT, t) => Seq(Widen(n, t))
+                case Some(curT) if SnapshotTable.isWidening(curT, t) => Seq(Widen(n, t))
                 case Some(curT) =>
                   err(ex, 400,
                     s"type change $n: $curT -> $t is not a supported promotion")
@@ -1741,9 +1742,7 @@ object RestCatalog {
           PersistentCatalog.registerTable(spark, s"$db.$name", "graft-snapshot", loc)
           PersistentCatalog.save(spark, registryRoot, db)
         }
-        val (metaLocation, metadata) = icebergMetadata(name, loc, nv)
-        send(ex, 200,
-          s"""{"metadata-location":${jstr(metaLocation)},"metadata":$metadata}""")
+        nv
       }
     }
 
@@ -1753,7 +1752,7 @@ object RestCatalog {
       * the properties as of each version, and loadTable surfaces them
       * under metadata.properties.
       */
-    private def commitProps(ex: HttpExchange, name: String, loc: String,
+    private def commitProps(ex: HttpExchange, loc: String,
         upds: Seq[(String, JValue)], reqs: Seq[Requirement]): Unit = {
       // every set-properties action's `updates` object (string values)
       // and every remove-properties action's `removals` array
@@ -1774,143 +1773,149 @@ object RestCatalog {
         err(ex, 400, "set-properties needs a non-empty updates object " +
           "(or remove-properties a removals array)"); return
       }
-      uuidAssertionFailure(loc, reqs).foreach { msg =>
-        err(ex, 409, msg); return
-      }
+      commitUnderLock(ex, loc, reqs)(_ =>
+        SnapshotTable.setProperties(spark, loc, updates, removals))
+    }
+
+    /** The single-table commit scaffold: under the DDL lock, check the
+      * requirements against the head `cur` (a failed one is a 409), run
+      * `commit(cur)` — which answers its own refusals — and answer 200
+      * with the table result of the version it returns.
+      */
+    private def commitUnderLock(ex: HttpExchange, loc: String,
+        reqs: Seq[Requirement])(commit: Int => Int): Unit =
       ddlLock.synchronized {
         val cur = SnapshotTable.currentVersion(spark, loc)
-        refAssertionFailure(loc, cur, reqs).foreach { msg =>
+        requirementFailure(loc, cur, reqs).foreach { msg =>
           err(ex, 409, msg); return
         }
-        val nv = SnapshotTable.setProperties(spark, loc, updates, removals)
-        val (metaLocation, metadata) = icebergMetadata(name, loc, nv)
-        send(ex, 200,
-          s"""{"metadata-location":${jstr(metaLocation)},"metadata":$metadata}""")
+        sendTable(ex, loc, commit(cur))
+      }
+
+    /** Parse the updates of one table change: add-snapshot updates, or
+      * exactly one set/remove-snapshot-ref. A `set-snapshot-ref` riding
+      * an add-snapshot must name main (graft's main always tracks the
+      * latest commit), and every staged file must exist. Left is a
+      * client error (400).
+      */
+    private def parseChange(upds: Seq[(String, JValue)]): Either[String, TableChange] = {
+      val snaps = snapshots(upds)
+      if (snaps.isEmpty)
+        return upds.filter { case (a, _) =>
+          a == "set-snapshot-ref" || a == "remove-snapshot-ref"
+        } match {
+          case Seq((action, u)) => parseRef(action, u)
+          case _ => Left("exactly one set/remove-snapshot-ref action per " +
+            "request (documented delta)")
+        }
+      if (upds.exists { case (a, u) =>
+          a == "set-snapshot-ref" && !str(at(u, "ref-name")).contains("main") })
+        return Left("a set-snapshot-ref riding add-snapshot must name main: " +
+          "graft's main always tracks the latest commit (documented delta)")
+      val files = snaps.flatMap(sn => strs(at(sn, "added-data-files"), "added-data-files"))
+      parseDeleteFiles(snaps).flatMap { case (posDels, eqDels) =>
+        val staged = files ++ posDels ++ eqDels.map(_._1)
+        val hconf = spark.sparkContext.hadoopConfiguration
+        if (staged.isEmpty)
+          Left("add-snapshot must carry a non-empty added-data-files or " +
+            "added-delete-files array (this catalog's documented commit " +
+            "shape — see README)")
+        else staged.find { f => val p = new Path(f); !p.getFileSystem(hconf).exists(p) }
+          .map(missing => s"added file does not exist: $missing")
+          .toLeft(AddFiles(files, posDels, eqDels))
       }
     }
 
-    /** Standalone `set-snapshot-ref` / `remove-snapshot-ref` update
-      * actions: WIRE-side tag/branch management — the write half of
-      * the ref surface loadTable already serves (`refs` +
-      * `snapshot-log` in the exported metadata.json). The reference's
-      * catalog (Lakekeeper) accepts exactly these actions from any
-      * mounted engine (Trino creates tags/branches through it;
-      * /root/reference/etc/catalog/iceberg.properties mounts the REST
-      * catalog that brokers them). Semantics on graft's refs:
+    /** Parse one set/remove-snapshot-ref update. */
+    private def parseRef(action: String, u: JValue): Either[String, TableChange] =
+      str(at(u, "ref-name")) match {
+        case None => Left(s"$action needs a ref-name")
+        case Some(ref) if action == "remove-snapshot-ref" => Right(RemoveRef(ref))
+        case Some("main") => Right(SetMain(long(at(u, "snapshot-id"))))
+        case Some(ref) =>
+          val kind = str(at(u, "type")).getOrElse("")
+          if (kind != "tag" && kind != "branch")
+            Left(s"set-snapshot-ref type must be tag|branch, got '$kind'")
+          else long(at(u, "snapshot-id")).map(SetRef(ref, kind, _))
+            .toRight("set-snapshot-ref needs a snapshot-id")
+      }
+
+    /** Validate `change` of table `name` at `loc`, whose head is `cur`,
+      * under the DDL lock: the step that makes it, or the (status,
+      * message) refusing it.
       *
-      *  - `set-snapshot-ref` type=tag creates an immutable tag;
-      *    re-setting to the SAME snapshot is an idempotent 200,
-      *    re-setting to a DIFFERENT one 409s (graft tags are
-      *    immutable — documented delta: move = remove + set).
-      *  - `set-snapshot-ref` type=branch creates a branch at the
-      *    snapshot or MOVES an existing branch ref there (staged
-      *    branch-local commits orphan, like dropBranch).
-      *  - `ref-name` "main" is the table head: setting it to the
-      *    current snapshot is an idempotent 200, anything else 400s
-      *    (rollback is an engine operation, not a ref overwrite).
-      *  - `remove-snapshot-ref` drops the named tag/branch; 404 when
-      *    no such ref, 400 on "main".
-      *
-      * `assert-ref-snapshot-id` here resolves the REQUIREMENT's named
-      * ref (not just main): a stale replay — asserting a ref position
-      * that moved, or asserting absence of a ref that now exists —
-      * 409s, Iceberg's CommitFailedException over the wire. One ref
-      * action per request (documented delta, same separation as
-      * schema/property commits). The 200 response carries metadata
-      * whose `refs` include the change (writeMetadata regenerates on
-      * refs drift), so a second client resolves `FOR VERSION AS OF
-      * <tag>` from the exported JSON alone.
+      *  - Staged files must fit the table's schema AS OF THIS COMMIT
+      *    ([[stagedSchemaConflict]], [[deleteSchemaConflict]]): a schema
+      *    commit landing between the client's write planning and this
+      *    commit is a 409 — the schema analog of the snapshot CAS — never
+      *    files landed in an outdated shape.
+      *  - main is the table head: "setting" it to the current snapshot
+      *    is a no-op; moving or removing it is a 400 (rollback is an
+      *    engine operation, not a ref overwrite).
+      *  - Tags are immutable: re-setting one to its snapshot is a no-op,
+      *    to another a 409 (documented delta: move = remove + set).
+      *  - A branch is created at, or moved to, a main snapshot. Moving a
+      *    branch with branch-local commits orphans them, like
+      *    [[SnapshotTable.dropBranch]], so that step has no undo.
+      *  - A tag and a branch never share a name; removing a ref that
+      *    does not exist is a 404.
       */
-    private def commitRefs(ex: HttpExchange, name: String, loc: String,
-        upds: Seq[(String, JValue)], reqs: Seq[Requirement]): Unit = {
-      val (refAction, upd) = upds.filter { case (a, _) =>
-        a == "set-snapshot-ref" || a == "remove-snapshot-ref"
-      } match {
-        case Seq(one) => one
-        case _ =>
-          err(ex, 400, "exactly one set/remove-snapshot-ref action per " +
-            "request (documented delta)"); return
-      }
-      val rname = str(at(upd, "ref-name")).getOrElse {
-        err(ex, 400, s"$refAction needs a ref-name"); return
-      }
-      uuidAssertionFailure(loc, reqs).foreach { msg =>
-        err(ex, 409, msg); return
-      }
-      ddlLock.synchronized {
-        val cur = SnapshotTable.currentVersion(spark, loc)
-        // EVERY assertion must hold, each read from its own object
-        refAssertionFailure(loc, cur, reqs).foreach { msg =>
-          err(ex, 409, msg); return
-        }
-        val isRemove = refAction == "remove-snapshot-ref"
-        if (rname == "main") {
-          val sid = long(at(upd, "snapshot-id"))
-          if (!isRemove && sid.contains(cur.toLong)) {
-            // idempotent: main already IS the head
-          } else {
-            err(ex, 400, "ref main is the table head: it cannot be removed " +
-              "or moved over the wire (use engine rollback)"); return
-          }
-        } else if (isRemove) {
-          val isTag = SnapshotTable.tags(spark, loc).contains(rname)
-          val isBranch = !isTag && SnapshotTable.branches(spark, loc).contains(rname)
-          if (isTag) SnapshotTable.dropTag(spark, loc, rname)
-          else if (isBranch) SnapshotTable.dropBranch(spark, loc, rname)
-          else { err(ex, 404, s"no ref $rname on $name"); return }
-        } else {
-          val rtype = str(at(upd, "type")).getOrElse("")
-          if (rtype != "tag" && rtype != "branch") {
-            err(ex, 400, s"set-snapshot-ref type must be tag|branch, got '$rtype'")
-            return
-          }
-          val sid = long(at(upd, "snapshot-id")).getOrElse {
-            err(ex, 400, "set-snapshot-ref needs a snapshot-id"); return
-          }
-          if (sid < 1 || sid > cur) {
-            err(ex, 400, s"snapshot-id $sid is not a live snapshot of $name " +
-              s"(current: $cur)"); return
-          }
-          val v = sid.toInt
-          if (rtype == "tag") {
-            SnapshotTable.tags(spark, loc).get(rname) match {
-              case Some(at) if at == v => // idempotent re-set
-              case Some(at) =>
-                err(ex, 409, s"tag $rname already points at snapshot $at " +
-                  "(graft tags are immutable: remove-snapshot-ref first)")
-                return
-              case None =>
-                if (SnapshotTable.branches(spark, loc).contains(rname)) {
-                  err(ex, 409, s"ref $rname already exists as a branch"); return
-                }
-                // a CROSS-PROCESS writer can land the tag between the
-                // read above and this create (create-no-overwrite is
-                // the CAS); surface the loss as the wire's 409
-                try SnapshotTable.tag(spark, loc, rname, v)
-                catch {
-                  case e: IllegalStateException =>
-                    err(ex, 409, e.getMessage); return
-                }
-            }
-          } else {
-            if (SnapshotTable.tags(spark, loc).contains(rname)) {
-              err(ex, 409, s"ref $rname already exists as a tag"); return
-            }
-            if (SnapshotTable.branches(spark, loc).contains(rname))
-              SnapshotTable.moveBranch(spark, loc, rname, v)
-            else
-              // same cross-process window as tags: a racing creator
-              // past the contains() check loses as a wire 409
-              try SnapshotTable.createBranch(spark, loc, rname, v)
-              catch {
-                case e: IllegalStateException =>
-                  err(ex, 409, e.getMessage); return
-              }
+    private def validate(name: String, loc: String, cur: Int,
+        change: TableChange): Either[(Int, String), Step] = {
+      lazy val tags = SnapshotTable.tags(spark, loc)
+      lazy val branches = SnapshotTable.branches(spark, loc)
+      val unchanged = Step(() => (cur, None))
+      // a ref change leaves main where it is
+      def refStep(make: => Unit)(undo: => Unit): Step =
+        Step(() => { make; (cur, Some(() => undo)) })
+      def localCommits(ref: String, head: String): Option[String] =
+        if (head.matches("v\\d+")) None
+        else Some(s"branch $ref has branch-local commits (head $head) — " +
+          "move it in a single-table commit")
+      change match {
+        case AddFiles(files, posDels, eqDels) =>
+          stagedSchemaConflict(loc, files).map(409 -> _)
+            .orElse(deleteSchemaConflict(loc, posDels, eqDels))
+            .toLeft(Step { () =>
+              val nv = SnapshotTable.commitFiles(spark, loc, files,
+                posDeletes = posDels, eqDeletes = eqDels)
+              (nv, Some(() => { SnapshotTable.rollback(spark, loc, nv - 1); () }))
+            })
+        case SetMain(sid) if sid.contains(cur.toLong) => Right(unchanged)
+        case SetMain(_) | RemoveRef("main") =>
+          Left(400 -> ("ref main is the table head: it cannot be removed " +
+            "or moved over the wire (use engine rollback)"))
+        case RemoveRef(ref) => tags.get(ref) match {
+          case Some(v) => Right(refStep(SnapshotTable.dropTag(spark, loc, ref))(
+            SnapshotTable.tag(spark, loc, ref, v)))
+          case None => branches.get(ref) match {
+            case Some(head) => Right(refStep(SnapshotTable.dropBranch(spark, loc, ref))(
+              SnapshotTable.createBranch(spark, loc, ref, head.drop(1).toInt))
+              .copy(noUndo = localCommits(ref, head)))
+            case None => Left(404 -> s"no ref $ref on $name")
           }
         }
-        val (metaLocation, metadata) = icebergMetadata(name, loc, cur)
-        send(ex, 200,
-          s"""{"metadata-location":${jstr(metaLocation)},"metadata":$metadata}""")
+        case SetRef(_, _, sid) if sid < 1 || sid > cur =>
+          Left(400 -> s"snapshot-id $sid is not a live snapshot of $name (current: $cur)")
+        case SetRef(ref, "tag", sid) => tags.get(ref) match {
+          case Some(v) if v == sid => Right(unchanged)
+          case Some(v) => Left(409 -> (s"tag $ref already points at snapshot $v " +
+            "(graft tags are immutable: remove-snapshot-ref first)"))
+          case None if branches.contains(ref) =>
+            Left(409 -> s"ref $ref already exists as a branch")
+          case None => Right(refStep(SnapshotTable.tag(spark, loc, ref, sid.toInt))(
+            SnapshotTable.dropTag(spark, loc, ref)))
+        }
+        case SetRef(ref, _, _) if tags.contains(ref) =>
+          Left(409 -> s"ref $ref already exists as a tag")
+        case SetRef(ref, _, sid) => branches.get(ref) match {
+          case Some(head) if head == s"v$sid" => Right(unchanged)
+          case Some(head) => Right(refStep(SnapshotTable.moveBranch(spark, loc, ref, sid.toInt))(
+            SnapshotTable.moveBranch(spark, loc, ref, head.drop(1).toInt))
+            .copy(noUndo = localCommits(ref, head)))
+          case None => Right(refStep(SnapshotTable.createBranch(spark, loc, ref, sid.toInt))(
+            SnapshotTable.dropBranch(spark, loc, ref)))
+        }
       }
     }
 
@@ -2028,32 +2033,31 @@ object RestCatalog {
         PersistentCatalog.registerTable(spark, s"$db.$name", "graft-snapshot", loc)
         PersistentCatalog.save(spark, registryRoot, db)
       }
-      val (metaLocation, metadata) = icebergMetadata(name, loc, 1)
-      send(ex, 200,
-        s"""{"metadata-location":${jstr(metaLocation)},"metadata":$metadata,"config":{}}""")
+      sendTable(ex, loc, 1, ""","config":{}""")
     }
 
     /** Iceberg REST `updateTable` (CommitTableRequest → POST
-      * /v1/namespaces/{ns}/tables/{name}): the route an EXTERNAL
-      * engine uses to commit against the catalog. Supported
-      * requirements: `assert-ref-snapshot-id` (checked against the
-      * table's current version — the `main` ref) and
-      * `assert-table-uuid`; a failed requirement is a 409, Iceberg's
-      * CommitFailedException over the wire. Supported update actions:
-      * `add-snapshot` + optional `set-snapshot-ref` rider (graft's
-      * main ref always tracks the latest commit). Documented protocol
-      * delta (README): the snapshot carries its data files INLINE as
-      * `added-data-files` (paths to parquet the client already staged)
-      * instead of pointing at a client-written Avro manifest list —
-      * the engine stamps row counts from the footers and commits
-      * zero-copy through [[SnapshotTable.commitFiles]] (the Iceberg
-      * `add_files` path), so REST writers and engine writers share the
-      * same CAS-guarded manifest chain. Row-level deletes ride the
-      * same shape: `added-delete-files` ([[parseDeleteFiles]]) lands
-      * positional and equality delete files with upsertEq's sequence
-      * stamping through the same [[SnapshotTable.commitFiles]], so
-      * an external CDC writer commits (delete k, insert k) batches
-      * entirely over HTTP.
+      * /v1/namespaces/{ns}/tables/{name}): the route an EXTERNAL engine
+      * uses to commit against the catalog. Requirements:
+      * `assert-ref-snapshot-id` (any ref; no snapshot-id asserts it
+      * absent) and `assert-table-uuid`; a failed one is a 409, Iceberg's
+      * CommitFailedException over the wire. One kind of update per
+      * request (documented delta): `add-snapshot` (with optional main
+      * riders), `add-schema` ([[commitSchema]]), set/remove-properties
+      * ([[commitProps]]), or one set/remove-snapshot-ref. A snapshot or
+      * ref change runs the one-change pipeline a transaction runs per
+      * table ([[parseChange]] → [[validate]] → apply), and the answer is
+      * 200 with the table result of the version it leaves (after a ref
+      * change its `refs` include the change, so a second client resolves
+      * `FOR VERSION AS OF <tag>` from the JSON alone). Documented
+      * protocol delta (README): the snapshot carries its files INLINE —
+      * `added-data-files` (parquet the client already staged) and
+      * `added-delete-files` ([[parseDeleteFiles]]) — instead of pointing
+      * at a client-written Avro manifest list; the engine stamps row
+      * counts from the footers and commits zero-copy through
+      * [[SnapshotTable.commitFiles]] (the Iceberg `add_files` path), so
+      * REST writers and engine writers share one CAS-guarded manifest
+      * chain.
       */
     private def commitTable(ex: HttpExchange, name: String): Unit =
       withTable(ex, name) { case (_, _, _, loc) =>
@@ -2075,14 +2079,13 @@ object RestCatalog {
         val hasSchema = actions.contains("add-schema")
         val hasProps = actions.contains("set-properties") ||
           actions.contains("remove-properties")
-        // set-snapshot-ref WITH add-snapshot is the standard rider
-        // (graft's main always tracks the latest commit); STANDALONE
-        // ref actions are wire-side tag/branch management.
+        // a set-snapshot-ref riding an add-snapshot belongs to the
+        // snapshot commit (parseChange: it must name main); ALONE, ref
+        // actions are wire-side tag/branch management.
         // remove-snapshot-ref is a ref action UNCONDITIONALLY: riding
-        // it with add-snapshot would pass the allowed-actions gate and
-        // then be silently ignored by the snapshot path — a 200 whose
-        // ref still exists (r17 review finding); the category check
-        // below turns that mix into the documented 400.
+        // it with add-snapshot would otherwise be silently ignored by the
+        // snapshot path — a 200 whose ref still exists (r17 review
+        // finding); the category check below makes that mix a 400.
         val hasRef = actions.contains("remove-snapshot-ref") ||
           (!hasSnap && actions.contains("set-snapshot-ref"))
         if (Seq(hasSnap, hasSchema, hasProps, hasRef).count(identity) > 1) {
@@ -2095,61 +2098,26 @@ object RestCatalog {
           return
         }
         if (hasSchema) { commitSchema(ex, name, loc, upds, reqs); return }
-        if (hasProps) { commitProps(ex, name, loc, upds, reqs); return }
-        if (hasRef) { commitRefs(ex, name, loc, upds, reqs); return }
-        val snaps = snapshots(upds)
-        val files = snaps.flatMap(sn => strs(at(sn, "added-data-files"), "added-data-files"))
-        val (posDels, eqDels) = parseDeleteFiles(snaps) match {
+        if (hasProps) { commitProps(ex, loc, upds, reqs); return }
+        val change = parseChange(upds) match {
           case Left(m) => err(ex, 400, m); return
-          case Right(parsed) => parsed
+          case Right(c) => c
         }
-        if (files.isEmpty && posDels.isEmpty && eqDels.isEmpty) {
-          err(ex, 400, "add-snapshot must carry a non-empty added-data-files " +
-            "or added-delete-files array (this catalog's documented commit " +
-            "shape — see README)"); return
-        }
-        val hconf = spark.sparkContext.hadoopConfiguration
-        (files ++ posDels ++ eqDels.map(_._1)).find { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          !p.getFileSystem(hconf).exists(p)
-        } match {
-          case Some(missing) =>
-            err(ex, 400, s"added file does not exist: $missing"); return
-          case None =>
-        }
-        uuidAssertionFailure(loc, reqs).foreach { msg =>
-          err(ex, 409, msg); return
-        }
-        // the commit itself: serialized with DDL so a registry restore
-        // never sees a half-applied step; engine-side writers racing
-        // this route lose or win the SAME manifest CAS (commitFiles
-        // publishes through writeManifestAtomic)
-        ddlLock.synchronized {
-          val cur = SnapshotTable.currentVersion(spark, loc)
-          refAssertionFailure(loc, cur, reqs).foreach { msg =>
-            err(ex, 409, msg); return
+        // engine-side writers racing this route lose or win the SAME
+        // manifest CAS (commitFiles publishes through Manifest.publish)
+        commitUnderLock(ex, loc, reqs) { cur =>
+          val step = validate(name, loc, cur, change) match {
+            case Left((status, m)) => err(ex, status, m); return
+            case Right(st) => st
           }
-          // staged files are validated against the table's schema AS
-          // OF THIS COMMIT (under the lock): a schema commit landing
-          // between the client's write planning and this commit must
-          // surface as a 409 — the schema analog of the snapshot CAS —
-          // never land files in an outdated shape (r18 ADVICE)
-          stagedSchemaConflict(loc, files).foreach { msg =>
-            err(ex, 409, msg); return
+          try step.run()._1
+          catch {
+            case e: IllegalStateException =>
+              err(ex, 409, change match {
+                case _: AddFiles => s"commit lost the version CAS: ${e.getMessage}"
+                case _ => e.getMessage // a racing creator of the same tag or branch
+              }); return
           }
-          deleteSchemaConflict(loc, posDels, eqDels).foreach {
-            case (status, msg) => err(ex, status, msg); return
-          }
-          val nv =
-            try SnapshotTable.commitFiles(spark, loc, files,
-              posDeletes = posDels, eqDeletes = eqDels)
-            catch {
-              case e: IllegalStateException =>
-                err(ex, 409, s"commit lost the version CAS: ${e.getMessage}"); return
-            }
-          val (metaLocation, metadata) = icebergMetadata(name, loc, nv)
-          send(ex, 200,
-            s"""{"metadata-location":${jstr(metaLocation)},"metadata":$metadata}""")
         }
       }
 
@@ -2257,31 +2225,24 @@ object RestCatalog {
       }.nextOption()
 
     /** Iceberg REST `POST /v1/transactions/commit`
-      * (CommitTransactionRequest): atomic commits spanning tables —
-      * the route Trino uses for multi-table writes. Each
-      * `table-changes` entry carries its identifier, requirements and
-      * EITHER `add-snapshot` update(s) — data files AND/OR row-level
-      * delete files ([[parseDeleteFiles]]), so an external CDC writer
-      * can land a multi-table upsert batch atomically — OR exactly one
-      * `set-snapshot-ref` (tag/branch several tables at one consistent
-      * point: the "release a coherent snapshot set" flow). Other
-      * actions 400 — schema/property/ref-removal changes stay
-      * single-table commits. A transaction may span THIS handler's
+      * (CommitTransactionRequest): atomic commits spanning tables — the
+      * route Trino uses for multi-table writes. Each `table-changes`
+      * entry carries its identifier, requirements and updates, and runs
+      * the pipeline [[commitTable]] runs for one change ([[parseChange]]
+      * → [[validate]] → apply), limited to add-snapshot changes and a
+      * lone set-snapshot-ref of a tag or branch (tag several tables at
+      * one consistent point). A transaction may span THIS handler's
       * namespace and any NESTED namespace beneath it (the {prefix}
-      * scopes the request, Iceberg's model); each table commits
-      * through its own handler, and every involved handler's DDL lock
-      * is acquired in one global deterministic order (registry path;
-      * parent before child, the same order dropNested uses) so
-      * overlapping transactions cannot deadlock. EVERY table's
-      * requirements and staged schemas are validated under the locks
-      * BEFORE any commit, so one stale assertion 409s the whole
-      * transaction with nothing applied. Wire writers serialize on
-      * the same locks; the only mid-apply loser is an engine-side
-      * writer racing a manifest CAS from outside the endpoint — then
-      * the already-committed tables are compensated by
-      * [[SnapshotTable.rollback]] (a restating commit, the engine's
-      * rollback shape) and the transaction 409s.
-      * Success is the spec's 204 (no content).
+      * scopes the request, Iceberg's model); every involved handler's
+      * DDL lock is acquired in one global deterministic order (registry
+      * path; parent before child, the same order dropNested uses) so
+      * overlapping transactions cannot deadlock. EVERY change is
+      * validated under the locks BEFORE any is applied: one failed
+      * requirement, or one step that could not be undone, refuses the
+      * whole transaction with nothing applied. Wire writers serialize on
+      * the same locks, so a mid-apply failure is an engine-side writer
+      * winning a manifest CAS (409) or an I/O error (500); either undoes
+      * the applied steps in reverse order. Success is the spec's 204.
       */
     private def commitTransaction(ex: HttpExchange): Unit = {
       val changes = arr(at(jsonBody(ex), "table-changes"))
@@ -2289,16 +2250,8 @@ object RestCatalog {
         err(ex, 400, "table-changes must be a non-empty array of " +
           "per-table commit objects"); return
       }
-      val hconf = spark.sparkContext.hadoopConfiguration
-      // a change is EITHER an add-snapshot commit (data files and/or
-      // row-level delete files) OR one set-snapshot-ref (`ref` set:
-      // name, tag|branch, snapshot version) — the "release a coherent
-      // snapshot set" flow that tags several tables at one consistent
-      // point (r19 VERDICT #5)
       case class Change(name: String, loc: String, reqs: Seq[Requirement],
-        files: Seq[String], posDels: Seq[String],
-        eqDels: Seq[(String, Seq[String])],
-        ref: Option[(String, String, Long)], handler: CatalogHandler)
+        change: TableChange, handler: CatalogHandler)
       val parsed = changes.map { ch =>
         val ident = at(ch, "identifier") match {
           case o: JObject => o
@@ -2333,9 +2286,9 @@ object RestCatalog {
         }
         val upds = updates(ch)
         val actions = upds.map(_._1)
-        val isSnap = actions.nonEmpty && actions.forall(_ == "add-snapshot")
-        val isRef = actions == Seq("set-snapshot-ref")
-        if (!isSnap && !isRef) {
+        val isSnap = actions.contains("add-snapshot") &&
+          actions.forall(a => a == "add-snapshot" || a == "set-snapshot-ref")
+        if (!isSnap && actions != Seq("set-snapshot-ref")) {
           err(ex, 400, s"$name: transactions support add-snapshot updates " +
             "or exactly one set-snapshot-ref per table (documented delta — " +
             "schema/property/ref-removal changes are single-table commits)")
@@ -2347,45 +2300,14 @@ object RestCatalog {
             case e: IllegalArgumentException =>
               err(ex, 400, s"$name: ${e.getMessage}"); return
           }
-        if (isRef) {
-          val upd = upds.head._2
-          val rname = str(at(upd, "ref-name")).getOrElse {
-            err(ex, 400, s"$name: set-snapshot-ref needs a ref-name"); return
-          }
-          if (rname == "main") {
+        val change = parseChange(upds) match {
+          case Left(m) => err(ex, 400, s"$name: $m"); return
+          case Right(SetMain(_)) =>
             err(ex, 400, s"$name: ref main is the table head — it cannot " +
               "be moved in a transaction (use engine rollback)"); return
-          }
-          val rtype = str(at(upd, "type")).getOrElse("")
-          if (rtype != "tag" && rtype != "branch") {
-            err(ex, 400, s"$name: set-snapshot-ref type must be tag|branch, " +
-              s"got '$rtype'"); return
-          }
-          val sid = long(at(upd, "snapshot-id")).getOrElse {
-            err(ex, 400, s"$name: set-snapshot-ref needs a snapshot-id"); return
-          }
-          Change(name, loc, reqs, Seq.empty, Seq.empty, Seq.empty,
-            Some((rname, rtype, sid)), handler)
-        } else {
-          val snaps = snapshots(upds)
-          val files = snaps.flatMap(sn =>
-            strs(at(sn, "added-data-files"), "added-data-files"))
-          val (posDels, eqDels) = parseDeleteFiles(snaps) match {
-            case Left(m) => err(ex, 400, s"$name: $m"); return
-            case Right(parsed) => parsed
-          }
-          if (files.isEmpty && posDels.isEmpty && eqDels.isEmpty) {
-            err(ex, 400, s"$name: add-snapshot must carry a non-empty " +
-              "added-data-files or added-delete-files array"); return
-          }
-          (files ++ posDels ++ eqDels.map(_._1)).find { f =>
-            val p = new Path(f); !p.getFileSystem(hconf).exists(p)
-          }.foreach { missing =>
-            err(ex, 400, s"$name: added file does not exist: $missing")
-            return
-          }
-          Change(name, loc, reqs, files, posDels, eqDels, None, handler)
+          case Right(c) => c
         }
+        Change(name, loc, reqs, change, handler)
       }
       if (parsed.map(c => (c.handler.registry, c.name)).distinct.size
           != parsed.size) {
@@ -2403,115 +2325,38 @@ object RestCatalog {
         case h :: rest => h.ddlLock.synchronized(withLocks(rest)(body))
       }
       withLocks(handlers) {
-        // phase 1: validate EVERYTHING before committing ANYTHING
-        parsed.foreach { c =>
-          uuidAssertionFailure(c.loc, c.reqs).foreach { m =>
-            err(ex, 409, s"${c.name}: $m — transaction aborted, nothing " +
-              "applied"); return
-          }
+        // phase 1: validate EVERYTHING before applying ANYTHING
+        val steps = parsed.map { c =>
           val cur = SnapshotTable.currentVersion(spark, c.loc)
-          refAssertionFailure(c.loc, cur, c.reqs).foreach { m =>
-            err(ex, 409, s"${c.name}: $m — transaction aborted, nothing " +
-              "applied"); return
-          }
-          stagedSchemaConflict(c.loc, c.files).foreach { m =>
-            err(ex, 409, s"${c.name}: $m — transaction aborted, nothing " +
-              "applied"); return
-          }
-          deleteSchemaConflict(c.loc, c.posDels, c.eqDels).foreach {
-            case (status, m) =>
+          requirementFailure(c.loc, cur, c.reqs).map(409 -> _).toLeft(())
+            .flatMap(_ => validate(c.name, c.loc, cur, c.change))
+            .flatMap(st => st.noUndo.map(409 -> _).toLeft(st)) match {
+            case Left((status, m)) =>
               err(ex, status, s"${c.name}: $m — transaction aborted, " +
                 "nothing applied"); return
-          }
-          c.ref.foreach { case (rname, rtype, sid) =>
-            if (sid < 1 || sid > cur) {
-              err(ex, 400, s"${c.name}: snapshot-id $sid is not a live " +
-                s"snapshot (current: $cur) — transaction aborted, nothing " +
-                "applied"); return
-            }
-            val tags = SnapshotTable.tags(spark, c.loc)
-            val branches = SnapshotTable.branches(spark, c.loc)
-            if (rtype == "tag") {
-              tags.get(rname) match {
-                case Some(at) if at != sid.toInt =>
-                  err(ex, 409, s"${c.name}: tag $rname already points at " +
-                    s"snapshot $at (graft tags are immutable) — transaction " +
-                    "aborted, nothing applied"); return
-                case None if branches.contains(rname) =>
-                  err(ex, 409, s"${c.name}: ref $rname already exists as a " +
-                    "branch — transaction aborted, nothing applied"); return
-                case _ => // free, or idempotent re-set
-              }
-            } else if (tags.contains(rname)) {
-              err(ex, 409, s"${c.name}: ref $rname already exists as a tag " +
-                "— transaction aborted, nothing applied"); return
-            } else branches.get(rname).foreach { head =>
-              // a DIVERGED branch (branch-local head, not a main
-              // version) can't be compensated by a pointer move-back —
-              // refuse up front rather than break all-or-nothing
-              if (!head.matches("v\\d+")) {
-                err(ex, 409, s"${c.name}: branch $rname has branch-local " +
-                  "commits (head $head) — move it in a single-table commit " +
-                  "— transaction aborted, nothing applied"); return
-              }
-            }
+            case Right(st) => c -> st
           }
         }
-        // phase 2: publish all-or-nothing. Every applied step records
-        // its own UNDO (snapshot rollback / drop created ref / move a
-        // branch back) so a mid-apply loser compensates in reverse.
-        val applied =
-          scala.collection.mutable.ArrayBuffer.empty[(Change, () => Unit)]
-        parsed.foreach { c =>
-          try {
-            c.ref match {
-              case Some((rname, "tag", sid)) =>
-                if (!SnapshotTable.tags(spark, c.loc).get(rname)
-                    .contains(sid.toInt)) {
-                  SnapshotTable.tag(spark, c.loc, rname, sid.toInt)
-                  applied += ((c,
-                    () => SnapshotTable.dropTag(spark, c.loc, rname)))
-                }
-              case Some((rname, _, sid)) =>
-                SnapshotTable.branches(spark, c.loc).get(rname) match {
-                  case Some(prev) if prev == s"v${sid.toInt}" => // idempotent
-                  case Some(prev) =>
-                    // phase 1 guaranteed prev is a main version stem
-                    val prevV = prev.stripPrefix("v").toInt
-                    SnapshotTable.moveBranch(spark, c.loc, rname, sid.toInt)
-                    applied += ((c, () =>
-                      SnapshotTable.moveBranch(spark, c.loc, rname, prevV)))
-                  case None =>
-                    SnapshotTable.createBranch(spark, c.loc, rname, sid.toInt)
-                    applied += ((c,
-                      () => SnapshotTable.dropBranch(spark, c.loc, rname)))
-                }
-              case None =>
-                val before = SnapshotTable.currentVersion(spark, c.loc)
-                SnapshotTable.commitFiles(spark, c.loc, c.files,
-                  posDeletes = c.posDels, eqDeletes = c.eqDels)
-                applied += ((c, () => {
-                  SnapshotTable.rollback(spark, c.loc, before); ()
-                }))
-            }
-            ()
-          } catch {
+        // phase 2: apply all-or-nothing; each applied step's undo is
+        // kept so a mid-apply failure compensates in reverse order
+        val undos = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+        steps.foreach { case (c, st) =>
+          try undos ++= st.run()._2
+          catch {
             // ANY mid-apply failure — CAS loss (IllegalStateException)
             // but also IO/Analysis errors from an unreadable footer or
             // a full disk — must run the same reverse-order
             // compensation, or the advertised all-or-nothing contract
             // breaks with earlier tables already committed (r19 ADVICE)
             case e if scala.util.control.NonFatal(e) =>
-              applied.reverseIterator.foreach { case (_, undo) =>
-                scala.util.Try(undo())
-              }
+              undos.reverseIterator.foreach(undo => scala.util.Try(undo()))
               val (status, why) = e match {
                 case _: IllegalStateException =>
                   (409, "an engine-side writer won the manifest CAS")
                 case _ => (500, "the per-table commit failed mid-apply")
               }
               err(ex, status, s"transaction failed at ${c.name} ($why): " +
-                s"${e.getMessage} — ${applied.size} already-applied " +
+                s"${e.getMessage} — ${undos.size} already-applied " +
                 "step(s) rolled back")
               return
           }

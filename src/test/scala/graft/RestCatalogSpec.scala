@@ -448,6 +448,35 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(cD == 200)
   }
 
+  test("updateTable: a set-snapshot-ref riding add-snapshot must name main") {
+    import spark.implicits._
+    val loc = s"$tableArea/restrider"
+    SnapshotTable.drop(spark, loc)
+    SnapshotTable.commit(spark, loc, Seq((1L, "a")).toDF("id", "v"))
+    assert(RestCatalog.post(port, "/v1/tables",
+      s"""{"name":"rest_spec_rider","format":"graft-snapshot","location":"$loc"}""")._1 == 201)
+    val base = "/v1/namespaces/graft/tables/rest_spec_rider"
+    def stage(dir: String): String = {
+      Seq((2L, "b")).toDF("id", "v").coalesce(1).write.mode("overwrite").parquet(dir)
+      new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(new Path(dir)).map(_.getPath.toString).filter(_.endsWith(".parquet")).head
+    }
+    def commit(file: String, ref: String): (Int, String) = RestCatalog.post(port, base,
+      s"""{"updates":[{"action":"add-snapshot","snapshot":{"snapshot-id":7,
+         |"added-data-files":["$file"]}},
+         |{"action":"set-snapshot-ref","ref-name":"$ref","type":"branch","snapshot-id":7}]}""".stripMargin)
+    // a rider naming another ref would land the files on main, not there
+    val (c1, r1) = commit(stage(s"$tableArea/restrider_s1"), "dev")
+    assert(c1 == 400 && r1.contains("must name main") && r1.contains("documented delta"), r1)
+    assert(SnapshotTable.currentVersion(spark, loc) == 1)
+    assert(!SnapshotTable.branches(spark, loc).contains("dev"))
+    // the standard main rider commits
+    val (c2, r2) = commit(stage(s"$tableArea/restrider_s2"), "main")
+    assert(c2 == 200 && r2.contains("\"current-snapshot-id\":2"), r2)
+    assert(SnapshotTable.read(spark, loc).count() == 2)
+    assert(RestCatalog.delete(port, "/v1/tables/rest_spec_rider")._1 == 200)
+  }
+
   test("Iceberg createTable + HEAD + namespaced drop complete the loop") {
     import spark.implicits._
     val base = "/v1/namespaces/graft/tables"

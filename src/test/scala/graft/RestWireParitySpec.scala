@@ -736,6 +736,26 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     ()
   }
 
+  test("a transaction accepts the main rider on add-snapshot and refuses any other") {
+    val loc = mkSnapshotTable("rest_w20_txrider", Seq(1L -> "a"))
+    def tx(file: String, ref: String): (Int, String) =
+      RestCatalog.post(port, "/v1/transactions/commit",
+        s"""{"table-changes":[{"identifier":{"namespace":["graft"],"name":"rest_w20_txrider"},
+           |"requirements":[{"type":"assert-ref-snapshot-id","ref":"main","snapshot-id":1}],
+           |"updates":[{"action":"add-snapshot","snapshot":{"snapshot-id":7,
+           |"added-data-files":[${Json.jstr(file)}]}},
+           |{"action":"set-snapshot-ref","ref-name":"$ref","type":"branch","snapshot-id":7}]}]}""".stripMargin)
+    val (xc, xr) = tx(stageOne("txrider1", Seq(2L -> "b")), "dev")
+    assert(xc == 400 && xr.contains("rest_w20_txrider: ") && xr.contains("must name main"), xr)
+    assert(SnapshotTable.currentVersion(spark, loc) == 1)
+    // the rider Iceberg clients send with every snapshot
+    val (tc, tr) = tx(stageOne("txrider2", Seq(2L -> "b")), "main")
+    assert(tc == 204, tr)
+    assert(rows(loc) == Set(1L -> "a", 2L -> "b"), rows(loc))
+    RestCatalog.delete(port, "/v1/tables/rest_w20_txrider")
+    ()
+  }
+
   test("updateTable moves a diverged branch, orphaning its branch-local commits") {
     import spark.implicits._
     val loc = mkSnapshotTable("rest_w20_divg", Seq(1L -> "a"))
