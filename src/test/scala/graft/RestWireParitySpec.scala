@@ -244,6 +244,13 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
       .replace("add-snapshot", "set-properties")
     assert(RestCatalog.post(port, "/v1/transactions/commit",
       s"""{"table-changes":[$badAct]}""")._1 == 400)
+    // ref removal is a single-table commit too
+    SnapshotTable.tag(spark, s"$tableArea/rest_w19_txna", "keep", 1)
+    val (rc, rr) = RestCatalog.post(port, "/v1/transactions/commit",
+      """{"table-changes":[{"identifier":{"namespace":["graft"],"name":"rest_w19_txna"},
+        |"updates":[{"action":"remove-snapshot-ref","ref-name":"keep"}]}]}""".stripMargin)
+    assert(rc == 400 && rr.contains("rest_w19_txna: "), rr)
+    assert(SnapshotTable.tags(spark, s"$tableArea/rest_w19_txna").contains("keep"))
     assert(RestCatalog.post(port, "/v1/transactions/commit",
       s"""{"table-changes":[${change("rest_w19_txna", fa, 2)},${change("rest_w19_txna", fa, 2)}]}""")._1 == 400)
     assert(RestCatalog.post(port, "/v1/transactions/commit",
@@ -694,6 +701,13 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     val (bc, br) = RestCatalog.post(port, "/v1/transactions/commit",
       s"""{"table-changes":[${refChange("rest_w20_tgb", "dev", "branch", 2, 2)}]}""")
     assert(bc == 409 && br.contains("branch-local"), br)
+    // updateTable moves it, orphaning its branch-local commits
+    val (uc, ur) = RestCatalog.post(port, "/v1/namespaces/graft/tables/rest_w20_tgb",
+      """{"updates":[{"action":"set-snapshot-ref","ref-name":"dev","type":"branch",
+        |"snapshot-id":2}]}""".stripMargin)
+    assert(uc == 200, ur)
+    assert(SnapshotTable.branches(spark, locB).get("dev").contains("v2"))
+    assert(SnapshotTable.readBranch(spark, locB, "dev").count() == 2)
     Seq("rest_w20_tga", "rest_w20_tgb").foreach(n =>
       RestCatalog.delete(port, s"/v1/tables/$n"))
     ()
@@ -753,35 +767,6 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     assert(tc == 204, tr)
     assert(rows(loc) == Set(1L -> "a", 2L -> "b"), rows(loc))
     RestCatalog.delete(port, "/v1/tables/rest_w20_txrider")
-    ()
-  }
-
-  test("updateTable moves a diverged branch, orphaning its branch-local commits") {
-    import spark.implicits._
-    val loc = mkSnapshotTable("rest_w20_divg", Seq(1L -> "a"))
-    SnapshotTable.commitAppend(spark, loc, Seq(2L -> "b").toDF("id", "v"))
-    SnapshotTable.createBranch(spark, loc, "dev", 1)
-    SnapshotTable.commitToBranch(spark, loc, "dev", Seq(500L -> "local").toDF("id", "v"))
-    assert(!SnapshotTable.branches(spark, loc)("dev").matches("v\\d+"))
-    val (c, r) = RestCatalog.post(port, "/v1/namespaces/graft/tables/rest_w20_divg",
-      """{"updates":[{"action":"set-snapshot-ref","ref-name":"dev","type":"branch",
-        |"snapshot-id":2}]}""".stripMargin)
-    assert(c == 200, r)
-    assert(SnapshotTable.branches(spark, loc).get("dev").contains("v2"))
-    assert(SnapshotTable.readBranch(spark, loc, "dev").count() == 2)
-    RestCatalog.delete(port, "/v1/tables/rest_w20_divg")
-    ()
-  }
-
-  test("a transaction answers 400 to remove-snapshot-ref") {
-    val loc = mkSnapshotTable("rest_w20_txrm", Seq(1L -> "a"))
-    SnapshotTable.tag(spark, loc, "keep", 1)
-    val (c, r) = RestCatalog.post(port, "/v1/transactions/commit",
-      """{"table-changes":[{"identifier":{"namespace":["graft"],"name":"rest_w20_txrm"},
-        |"updates":[{"action":"remove-snapshot-ref","ref-name":"keep"}]}]}""".stripMargin)
-    assert(c == 400 && r.contains("rest_w20_txrm: "), r)
-    assert(SnapshotTable.tags(spark, loc).get("keep").contains(1))
-    RestCatalog.delete(port, "/v1/tables/rest_w20_txrm")
     ()
   }
 
