@@ -8,29 +8,47 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
-/** Bounded top-k buffer: keeps the k best (score desc, id asc) pairs.
-  * O(k) memory regardless of input size.
+/** Bounded top-k buffer: keeps the k best (score desc, id asc) pairs
+  * under [[TopKBuffer.before]]. O(k) memory regardless of input size.
   */
 final class TopKBuffer(val k: Int) {
-  // min-heap on "goodness" so the worst kept element is at the root
+  // the greatest element under best-first order is the worst kept, so
+  // the max-heap's head is the one to evict
   private[functions] val heap =
-    scala.collection.mutable.PriorityQueue.empty[(Double, Long)](
-      // reverse of (score desc, id asc): head = worst kept
-      Ordering.by[(Double, Long), (Double, Long)] { case (s, id) => (-s, id) })
-
-  private def worseThanHead(s: Double, id: Long): Boolean = {
-    val (hs, hid) = heap.head
-    s < hs || (s == hs && id > hid)
-  }
+    scala.collection.mutable.PriorityQueue.empty[(Double, Long)](TopKBuffer.bestFirst)
 
   def add(s: Double, id: Long): Unit = {
     if (heap.size < k) heap.enqueue((s, id))
-    else if (!worseThanHead(s, id)) { heap.dequeue(); heap.enqueue((s, id)) }
+    else {
+      val (hs, hid) = heap.head
+      if (TopKBuffer.before(s, id, hs, hid)) { heap.dequeue(); heap.enqueue((s, id)) }
+    }
   }
 
   /** Best-first (score desc, id asc). */
-  def sorted: Array[(Double, Long)] =
-    heap.toArray.sortBy { case (s, id) => (-s, id) }
+  def sorted: Array[(Double, Long)] = heap.toArray.sorted(TopKBuffer.bestFirst)
+}
+
+/** The one ranking of graft's similarity scores: score desc, then id
+  * asc. Scores compare as Spark's and DuckDB's sorts compare doubles —
+  * NaN above every number and equal to itself, -0.0 equal to 0.0 — so
+  * the order is total and a NaN score (the cosine of a zero vector)
+  * cannot make the kept set depend on insertion order.
+  */
+object TopKBuffer {
+  def compareScores(a: Double, b: Double): Int =
+    if (a == b) 0 else java.lang.Double.compare(a, b)
+
+  /** (s1, id1) ranks strictly before (s2, id2). */
+  def before(s1: Double, id1: Long, s2: Double, id2: Long): Boolean = {
+    val c = compareScores(s1, s2)
+    c > 0 || (c == 0 && id1 < id2)
+  }
+
+  val bestFirst: Ordering[(Double, Long)] = (x, y) => {
+    val c = compareScores(y._1, x._1)
+    if (c != 0) c else java.lang.Long.compare(x._2, y._2)
+  }
 }
 
 /** Aggregate `graft_topk(score, id, k)` → `array<struct<score,id>>`
@@ -105,27 +123,26 @@ case class TopKByScore(
 }
 
 /** Bounded top-k buffer with STRING payloads: k best (score desc,
-  * tag asc) pairs, O(k) memory.
+  * tag asc) pairs, scores ranked by [[TopKBuffer.compareScores]].
+  * O(k) memory.
   */
 final class TopKStrBuffer(val k: Int) {
   private[functions] val heap =
-    scala.collection.mutable.PriorityQueue.empty[(Double, String)](
-      Ordering.by[(Double, String), (Double, String)] { case (s, t) => (-s, t) }(
-        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.String)))
-
-  private def worseThanHead(s: Double, t: String): Boolean = {
-    val (hs, ht) = heap.head
-    s < hs || (s == hs && t > ht)
-  }
+    scala.collection.mutable.PriorityQueue.empty[(Double, String)](TopKStrBuffer.bestFirst)
 
   def add(s: Double, t: String): Unit = {
     if (heap.size < k) heap.enqueue((s, t))
-    else if (!worseThanHead(s, t)) { heap.dequeue(); heap.enqueue((s, t)) }
+    else if (TopKStrBuffer.bestFirst.lt((s, t), heap.head)) { heap.dequeue(); heap.enqueue((s, t)) }
   }
 
-  def sorted: Array[(Double, String)] =
-    heap.toArray.sortBy { case (s, t) => (-s, t) }(
-      Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.String))
+  def sorted: Array[(Double, String)] = heap.toArray.sorted(TopKStrBuffer.bestFirst)
+}
+
+object TopKStrBuffer {
+  val bestFirst: Ordering[(Double, String)] = (x, y) => {
+    val c = TopKBuffer.compareScores(y._1, x._1)
+    if (c != 0) c else x._2.compareTo(y._2)
+  }
 }
 
 /** Aggregate `graft_topk_str(score, tag, k)` →

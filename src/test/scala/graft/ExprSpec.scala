@@ -117,6 +117,28 @@ class ExprSpec extends SparkSpec {
     assert(run(7) === expected, "merge order must not change the result")
   }
 
+  test("topk: a NaN score ranks first, so every insertion order keeps the same k") {
+    import graft.functions.{TopKBuffer, TopKStrBuffer}
+    // NaN ranks above every number (Spark's and DuckDB's double order),
+    // then id asc; without a total order the last NaN added won
+    val in = Seq((Double.NaN, 3L), (0.3, 2L), (Double.NaN, 1L), (0.9, 4L), (0.3, 0L))
+    def key(s: Double) = java.lang.Double.doubleToLongBits(s)
+    for (k <- 1 to 3) {
+      val kept = in.permutations.map { p =>
+        val b = new TopKBuffer(k)
+        p.foreach { case (s, id) => b.add(s, id) }
+        b.sorted.toSeq.map { case (s, id) => (key(s), id) }
+      }.toSet
+      assert(kept === Set(Seq((key(Double.NaN), 1L), (key(Double.NaN), 3L), (key(0.9), 4L)).take(k)))
+      val keptStr = in.permutations.map { p =>
+        val b = new TopKStrBuffer(k)
+        p.foreach { case (s, id) => b.add(s, id.toString) }
+        b.sorted.toSeq.map { case (s, t) => (key(s), t) }
+      }.toSet
+      assert(keptStr === Set(Seq((key(Double.NaN), "1"), (key(Double.NaN), "3"), (key(0.9), "4")).take(k)))
+    }
+  }
+
   test("aspectFit: box on the long side, floor on the short, never zero") {
     import graft.multimodal.Multimodal.aspectFit
     assert(aspectFit(640, 480, 224) === ((224L, 168L))) // landscape
