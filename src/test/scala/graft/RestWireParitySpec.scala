@@ -53,10 +53,11 @@ class RestWireParitySpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
 
   private def mkSnapshotTable(name: String, rows: Seq[(Long, String)]): String = {
     import spark.implicits._
+    val rest = port // its first use clears tableArea: take it before committing there
     val loc = s"$tableArea/$name"
     SnapshotTable.drop(spark, loc)
     SnapshotTable.commit(spark, loc, rows.toDF("id", "v"))
-    val (rc, rr) = RestCatalog.post(port, "/v1/tables",
+    val (rc, rr) = RestCatalog.post(rest, "/v1/tables",
       s"""{"name":"$name","format":"graft-snapshot","location":${Json.jstr(loc)}}""")
     assert(rc == 201, rr)
     loc
