@@ -592,44 +592,53 @@ object Dedup {
 
   // ---------------------------------------------------------------
   /** Exact self-1NN over an embedding table WITHOUT broadcasting the
-    * corpus: a fragment-and-replicate block grid. The corpus is hashed
-    * into `blocks` fragments; every query row is replicated once per
-    * fragment (explode — no join, no broadcast) and equi-joins its
-    * fragment. Each task therefore holds ONE fragment (N/B vectors) of
-    * build side — memory is bounded by choosing B — and the N²/B pair
-    * stream per task collapses through the partial `graft_topk`
-    * aggregate before anything shuffles. Total shuffle: N·B probe rows
-    * + N corpus rows + ≤ tasks×1 partial top-1 rows; never N² rows and
-    * never a full-corpus broadcast (the round-1 version died on both).
+    * corpus: a blocked cosine kernel. The corpus is hashed into B
+    * blocks and each block is packed once (`graft_pack_vectors`: ids,
+    * one flat float array, norms). Block pairs meet through
+    * one shuffle equi-join on the block keys. The cosine is symmetric
+    * to the bit, so only pairs a ≤ b are formed, B(B+1)/2 pair rows in
+    * all, each block replicated B times across the two sides. Each
+    * pair row is scored in a tight loop (`graft_block_nn`) that keeps
+    * a running best per vector of either block and emits at most one
+    * (q_id, nn_id, cos) row per vector. The final
+    * `graft_topk(cos, nn_id, 1)` merges N·B rows, never N². A kernel
+    * call holds the two packed blocks of its pair row.
     *
     * Exact kNN is inherently N² compute — the *approximate* scale path
     * is [[embeddingAnn]] — but this is the shape that lets the exact
     * variant run as far as compute allows on a 1000-executor cluster.
     *
-    * Returns (vec_id, nn_id, cos) with DuckDB-matching tie-breaking
-    * (score desc, id asc — guaranteed by the TopK buffer's total
-    * order, independent of partitioning).
+    * Returns (vec_id, nn_id, cos): cos is `graft_cosine`'s value
+    * (both score through [[graft.functions.Cosine]]), ties break by
+    * (score desc, id asc) with NaN ranked first
+    * ([[graft.functions.TopKBuffer.before]]), independent of
+    * partitioning. A null vector is never anyone's neighbor; a query
+    * with no non-null candidate — a null vector, a one-vector table —
+    * gets no row.
     */
-  def exactSelf1nn(s: SparkSession, e: DataFrame, blocks: Int = -1): DataFrame = {
+  def exactSelf1nn(s: SparkSession, e: DataFrame): DataFrame = {
     GraftFunctions.register(s)
-    // the equi-join distributes work by blk, so the number of DISTINCT
-    // blk values caps the usable parallelism: 8 blocks on a 32-slot
-    // session leaves 3/4 of the cluster idle while each task grinds
-    // N²/8 cosine evals (measured 4× wall-clock at sf1). Default to
-    // 2× the session's shuffle partitions — every slot gets ~2 blocks,
-    // probe replication stays N·B rows (tiny next to the N² evals).
-    val b = if (blocks > 0) blocks
-      else math.max(8, s.sessionState.conf.numShufflePartitions * 2)
-    val corpus = e.select(
-      pmod(xxhash64(col("vec_id")), lit(b)).as("blk"),
-      col("vec_id"), col("embedding"))
-    val probes = e.select(
-      explode(sequence(lit(0L), lit((b - 1).toLong))).as("blk"),
-      col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    probes.join(corpus, Seq("blk"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id").as("nn_id"),
-        expr("graft_cosine(q_emb, embedding)").as("cos"))
+    // the pair rows are distributed by block pair, so B caps the
+    // usable parallelism: 2× the session's shuffle partitions gives
+    // every slot several pairs, and replication stays N·B vectors
+    // (tiny next to the N² cosines)
+    val b = math.max(8, s.sessionState.conf.numShufflePartitions * 2)
+    val blocks = e
+      .groupBy(pmod(xxhash64(col("vec_id")), lit(b)).as("blk"))
+      .agg(expr("graft_pack_vectors(vec_id, embedding)").as("packed"))
+    // the pair rows are a few MB, which AQE would coalesce into one
+    // task; a repartition to an explicit count is never coalesced
+    val tasks = math.max(b, s.sparkContext.defaultParallelism)
+    def side(role: String, partners: Column, partnerRole: String) =
+      blocks.select(col("blk").as(s"${role}_blk"), explode(partners).as(s"${partnerRole}_blk"),
+          col("packed").as(role))
+        .repartition(tasks, col("a_blk"), col("b_blk"))
+    val lower = side("a", sequence(col("blk"), lit(b - 1L)), "b")
+    val upper = side("b", sequence(lit(0L), col("blk")), "a")
+    // sort-merge at any size: a broadcast would ship half the pair
+    // rows, B/2 copies of the corpus, to every executor
+    lower.join(upper.hint("merge"), Seq("a_blk", "b_blk"))
+      .select(expr("graft_block_nn(a, b, a_blk = b_blk)"))
       .groupBy("q_id")
       .agg(expr("graft_topk(cos, nn_id, 1)").as("top"))
       .select(col("q_id").as("vec_id"), col("top")(0).getField("id").as("nn_id"),
@@ -638,7 +647,7 @@ object Dedup {
 
   /** Embedding near-dup: each vector's exact nearest neighbor by
     * cosine, flagged against a threshold. Pair generation is the
-    * block-grid [[exactSelf1nn]] (no corpus broadcast, no
+    * blocked kernel [[exactSelf1nn]] (no corpus broadcast, no
     * BroadcastNestedLoopJoin — pinned in PlanShapeSpec). DuckDB oracle
     * recomputes the cosine with the same sequential double fold.
     */
@@ -840,7 +849,7 @@ object Dedup {
   def ccClusters(s: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(s)
     val e = Tables.load(s, dir, "embeddings").select("vec_id", "embedding")
-    // 1-NN graph via the block-grid exact kNN — no corpus broadcast
+    // 1-NN graph via the blocked exact kNN — no corpus broadcast
     val pairs = exactSelf1nn(s, e)
       .select(col("vec_id").as("src"), col("nn_id").as("dst"))
     val labels = ConnectedComponents.run(

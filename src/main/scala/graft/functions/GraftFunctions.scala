@@ -38,6 +38,8 @@ object GraftFunctions {
     "graft_fingerprint" -> (es => RollingFingerprint(es(0), intArg(es(1), "k"))),
     "graft_topk" -> (es => TopKByScore(es(0), es(1), intArg(es(2), "k"))),
     "graft_topk_str" -> (es => TopKStrings(es(0), es(1), intArg(es(2), "k"))),
+    "graft_pack_vectors" -> (es => PackVectors(es(0), es(1))),
+    "graft_block_nn" -> (es => BlockNearest(es(0), es(1), es(2))),
     "graft_zvalue" -> (es => ZValue(es(0), es(1))))
 
   def names: Seq[String] = builders.map(_._1)

@@ -5,15 +5,61 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
+/** The one cosine of graft: `graft_cosine` (interpreted and
+  * generated) and the blocked exact-1-NN kernel ([[BlockNearest]])
+  * all score through it, so they cannot drift apart.
+  *
+  * Floats are widened to double and folded sequentially in element
+  * order, mirrored op-for-op by the DuckDB oracle SQL (list_transform
+  * + list_sum in DOUBLE), so results are deterministic under any
+  * partitioning. The score is `dot / (sqrt(na) * sqrt(nb))`. The dot
+  * product and the two squared norms are three separate accumulators
+  * that never mix, so a norm computed ahead of time has the same bits
+  * as one folded beside the dot. No `Math.fma`: fusing would change
+  * the bits.
+  */
+object Cosine {
+
+  /** Σ x(xo+i)·y(yo+i) over i < n, one sequential double fold. */
+  def dot(x: Array[Double], xo: Int, y: Array[Double], yo: Int, n: Int): Double = {
+    var s = 0.0; var i = 0
+    while (i < n) { s += x(xo + i) * y(yo + i); i += 1 }
+    s
+  }
+
+  /** The norm of x's first n elements: the root of their squares' fold. */
+  def norm(x: Array[Double], xo: Int, n: Int): Double = math.sqrt(dot(x, xo, x, xo, n))
+
+  def combine(dot: Double, normA: Double, normB: Double): Double = dot / (normA * normB)
+
+  /** Vectors of unequal length score over their common prefix: both
+    * norms fold over the first min(|x|, |y|) elements only. */
+  def of(x: Array[Double], y: Array[Double]): Double = {
+    val n = math.min(x.length, y.length)
+    combine(dot(x, 0, y, 0, n), norm(x, 0, n), norm(y, 0, n))
+  }
+
+  def of(x: ArrayData, y: ArrayData): Double = of(widen(x), widen(y))
+
+  /** An `array<float>`'s elements widened to double. Widening is
+    * exact, so a fold over the widened copy has the bits of a fold
+    * that widens each float as it goes. Under JDK 17 a fold over
+    * doubles runs about twice as fast as one converting each float
+    * (64-dim vectors, measured on a 4-core Xeon). */
+  def widen(a: ArrayData): Array[Double] = {
+    val n = a.numElements()
+    val w = new Array[Double](n)
+    var i = 0
+    while (i < n) { w(i) = a.getFloat(i).toDouble; i += 1 }
+    w
+  }
+}
+
 /** Vector math over `array<float>` embedding columns as native
   * Catalyst expressions with whole-stage codegen — the hot path of
   * similarity search runs millions of pairs, so this must stay inside
   * WholeStageCodegen (a Scala UDF would break the span and box every
   * row).
-  *
-  * Accumulation is a sequential double-precision fold, mirrored
-  * op-for-op by the DuckDB oracle SQL (list_transform + list_sum in
-  * DOUBLE), so results are deterministic under any partitioning.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -21,42 +67,12 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_cosine"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < n) {
-      val xi = x.getFloat(i).toDouble
-      val yi = y.getFloat(i).toDouble
-      dot += xi * yi; na += xi * xi; nb += yi * yi
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    Cosine.of(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
-  // Every local goes through ctx.freshName: two instances of this
-  // expression can land in ONE generated function (e.g. a predicate
-  // over two cosines), and fixed names made Janino reject the whole
-  // function ("Redefinition of local variable") — silently dropping
-  // the hot path to interpreted mode.
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot"); val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val xi = ctx.freshName("xi"); val yi = ctx.freshName("yi")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xi = (double) $a.getFloat($i);
-         |  double $yi = (double) $b.getFloat($i);
-         |  $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
-         |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = ${Cosine.getClass.getName}.MODULE$$.of($a, $b);")
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)

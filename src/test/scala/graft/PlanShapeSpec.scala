@@ -21,6 +21,30 @@ class PlanShapeSpec extends SparkSpec {
 
   private def planOf(name: String): String = physical(SparkEntry.queries(name)(spark, sf()))
 
+  /** Rows entering the partial `graft_topk` of an executed DataFrame,
+    * read from the SQL metrics of its final plan: the output rows of
+    * the aggregate's child, looking through adaptive wrappers, query
+    * stages and nodes that keep no row count. */
+  private def rowsIntoPartialTopk(df: org.apache.spark.sql.DataFrame): Long = {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(nodes)
+    def rowsOut(p: SparkPlan): Long = p.metrics.get("numOutputRows").map(_.value)
+      .getOrElse(kids(p).headOption.map(rowsOut).getOrElse(0L))
+    nodes(df.queryExecution.executedPlan).collect {
+      case a: BaseAggregateExec if a.aggregateExpressions.exists(ae =>
+          ae.mode == Partial && ae.aggregateFunction.prettyName == "graft_topk") =>
+        rowsOut(a.child)
+    }.sum
+  }
+
   test("filters and column pruning reach the parquet scan (q06)") {
     val p = planOf("q06_revenue_filter")
     // plan strings truncate long filter lists; match on stable prefixes
@@ -151,9 +175,17 @@ class PlanShapeSpec extends SparkSpec {
       // assert the shared exactSelf1nn plan directly instead.
       val e = sources.Tables.load(spark, sf(), "embeddings")
         .select("vec_id", "embedding")
-      val nn = physical(dedup.Dedup.exactSelf1nn(spark, e))
+      val nnDf = dedup.Dedup.exactSelf1nn(spark, e)
+      val nn = physical(nnDf)
       assert(!nn.contains("BroadcastNestedLoopJoin") && !nn.contains("BroadcastExchange"))
       assert(nn.contains("partial_graft_topk"))
+      // the kernel emits at most one candidate per query vector and
+      // block pair, so at most N·B rows reach the partial top-k
+      nnDf.collect()
+      val n = e.count()
+      val b = math.max(8, spark.sessionState.conf.numShufflePartitions * 2)
+      val into = rowsIntoPartialTopk(nnDf)
+      assert(into > 0 && into <= n * b, s"$into rows entered the partial top-k; N·B = ${n * b}")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
@@ -264,7 +296,7 @@ class PlanShapeSpec extends SparkSpec {
       pmod(xxhash64(col("vec_id")), lit(math.max(8, parts * 2))).as("blk"))
       .distinct().count()
     assert(blkCount > parts.toLong,
-      s"block-grid must expose more join keys ($blkCount) than slots ($parts)")
+      s"the kernel must expose more blocks ($blkCount) than slots ($parts)")
     assert(df.count() === e.count(), "every vector still gets its 1-NN")
   }
 
