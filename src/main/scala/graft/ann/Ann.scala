@@ -953,15 +953,15 @@ object Ann {
     val fp = "inc|" + IvfIndex.fingerprint(dir)
     // NonFatal, not just IllegalStateException: a rebuild that crashed
     // between buildAt's drops can leave lists at v2 with centroids
-    // absent, where commitMeta throws FileNotFoundException from
+    // absent, where the version lookup throws FileNotFoundException from
     // fs.open — ANY unreadable stored index must mean "stale, rebuild"
     // rather than failing the entry. The centroids currentVersion
-    // guard avoids even attempting commitMeta on a missing table.
+    // guard avoids even attempting the lookup on a missing table.
     val fresh = try {
       SnapshotTable.currentVersion(s, listRoot) == 2 &&
         SnapshotTable.currentVersion(s, s"$root/centroids") > 0 &&
-        SnapshotTable.commitMeta(s, s"$root/centroids",
-            SnapshotTable.currentVersion(s, s"$root/centroids"))
+        SnapshotTable.version(s, s"$root/centroids",
+            SnapshotTable.currentVersion(s, s"$root/centroids")).header
           .get("corpus_fp").contains(fp)
     } catch { case scala.util.control.NonFatal(_) => false }
     if (!fresh) {

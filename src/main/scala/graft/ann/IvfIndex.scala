@@ -72,13 +72,13 @@ object IvfIndex {
     // always matches; pre-build_id indexes match on None == None)
     val fresh = try {
       SnapshotTable.currentVersion(s, centRoot) > 0 &&
-        SnapshotTable.commitMeta(s, centRoot, SnapshotTable.currentVersion(s, centRoot))
+        SnapshotTable.version(s, centRoot, SnapshotTable.currentVersion(s, centRoot)).header
           .get("corpus_fp").contains(fp) && {
           val listV = SnapshotTable.currentVersion(s, listRoot)
           listV > 0 &&
-            SnapshotTable.commitMeta(s, listRoot, listV).get(BuildIdKey) ==
-              SnapshotTable.commitMeta(s, centRoot,
-                SnapshotTable.currentVersion(s, centRoot)).get(BuildIdKey)
+            SnapshotTable.version(s, listRoot, listV).header.get(BuildIdKey) ==
+              SnapshotTable.version(s, centRoot,
+                SnapshotTable.currentVersion(s, centRoot)).header.get(BuildIdKey)
         }
     } catch { case _: IllegalStateException => false }
     if (!fresh) buildAt(s, root, corpus, nLists, lloydIters,
@@ -182,7 +182,7 @@ object IvfIndex {
   def needsRebuild(s: SparkSession, root: String): Boolean = {
     val listRoot = s"$root/lists"
     val v = SnapshotTable.currentVersion(s, listRoot)
-    v > 0 && SnapshotTable.commitMeta(s, listRoot, v).get(RebuildKey).contains("true")
+    v > 0 && SnapshotTable.version(s, listRoot, v).header.get(RebuildKey).contains("true")
   }
 
   private[ann] val BuildIdKey = "build_id"
@@ -256,8 +256,8 @@ object IvfIndex {
     // lists HEAD without n_lists and a later drift rebuild (which can
     // only trigger AFTER an append) would silently retrain at the
     // fallback list count instead of the built one
-    val headMeta = SnapshotTable
-      .commitMeta(s, listRoot, SnapshotTable.currentVersion(s, listRoot))
+    val headMeta =
+      SnapshotTable.version(s, listRoot, SnapshotTable.currentVersion(s, listRoot)).header
     val nLists = headMeta.getOrElse("n_lists", centroids.count().toString)
     // the build identity rides every append like n_lists does, so the
     // heads-agree freshness check (ensure) survives any append history
@@ -265,8 +265,8 @@ object IvfIndex {
     // drift check: batch signals vs the build-time baselines; the
     // flag is sticky until the next buildAt so one drifted daily drop
     // cannot be masked by later quiet ones
-    val baseMeta = SnapshotTable
-      .commitMeta(s, centRoot, SnapshotTable.currentVersion(s, centRoot))
+    val baseMeta =
+      SnapshotTable.version(s, centRoot, SnapshotTable.currentVersion(s, centRoot)).header
     val (batchP50, batchHot) = assignStats(centroids, batch)
     val p50Drift = baseMeta.get(P50Key).map(_.toDouble)
       .exists(b => batchP50 < b * RelP50Factor)
@@ -305,7 +305,7 @@ object IvfIndex {
     val listRoot = s"$root/lists"
     val v = SnapshotTable.currentVersion(s, listRoot)
     require(v > 0, s"no IVF index at $root")
-    val nLists = SnapshotTable.commitMeta(s, listRoot, v).get("n_lists")
+    val nLists = SnapshotTable.version(s, listRoot, v).header.get("n_lists")
       .map(_.toInt)
       .getOrElse(SnapshotTable.read(s, s"$root/centroids").count().toInt)
     val stage = s"$root/_rebuild_stage"

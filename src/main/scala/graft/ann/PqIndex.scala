@@ -54,8 +54,8 @@ object PqIndex {
     // is simply stale — rebuild, same as a corpus change
     val fresh = try {
       SnapshotTable.currentVersion(s, coarseRoot) > 0 && {
-        val head = SnapshotTable.commitMeta(s, coarseRoot,
-          SnapshotTable.currentVersion(s, coarseRoot))
+        val head = SnapshotTable.version(s, coarseRoot,
+          SnapshotTable.currentVersion(s, coarseRoot)).header
         head.get("corpus_fp").contains(fp) &&
           head.get("codes_fmt").contains(CodesFormat)
       }
@@ -98,8 +98,8 @@ object PqIndex {
             k: Int, nProbes: Int): DataFrame = {
     GraftFunctions.register(s)
     val coarseRoot = s"$root/coarse"
-    val headMeta = SnapshotTable.commitMeta(s, coarseRoot,
-      SnapshotTable.currentVersion(s, coarseRoot))
+    val headMeta = SnapshotTable.version(s, coarseRoot,
+      SnapshotTable.currentVersion(s, coarseRoot)).header
     val m = headMeta("m").toInt
     val sub = headMeta("sub").toInt
     val coarse = SnapshotTable.read(s, coarseRoot)

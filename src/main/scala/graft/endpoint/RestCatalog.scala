@@ -1709,7 +1709,7 @@ object RestCatalog {
           }
           names = names - r.from + r.to
         }
-        val mapping = SnapshotTable.columnMapping(spark, loc, cur)
+        val mapping = SnapshotTable.version(spark, loc, cur).columnMapping
         val physInUse = haveMap.keySet.map(c => mapping.getOrElse(c, c))
         changes.collect { case a: Add => a }.foreach { a =>
           if (physInUse.contains(a.n)) {

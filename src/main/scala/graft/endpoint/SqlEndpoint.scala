@@ -195,7 +195,7 @@ object SqlEndpoint {
     // is simply stale — rebuild, same as a source change
     val fresh = try {
       cur > 0 &&
-        SnapshotTable.commitMeta(s, root, cur).get("source_fp").contains(fp)
+        SnapshotTable.version(s, root, cur).header.get("source_fp").contains(fp)
     } catch { case _: IllegalStateException => false }
     if (!fresh) {
       SnapshotTable.drop(s, root)

@@ -36,10 +36,10 @@ object DeltaInterop {
     * render for the JSON chain's metaData actions AND the checkpoint's
     * metaData row, so the two can never drift apart.
     */
-  private def stampedSchema(s: SparkSession, root: String, v: Int)
+  private def stampedSchema(s: SparkSession, root: String, v: Int, mv: Manifest.Version)
       : (StructType, Map[String, String]) = {
-    val mapping = SnapshotTable.columnMapping(s, root, v)
-    val logical = SnapshotTable.schema(s, root, v)
+    val mapping = mv.columnMapping
+    val logical = SnapshotTable.schema(s, root, v, mv)
     val stamped = StructType(logical.map { f =>
       mapping.get(f.name) match {
         case Some(phys) if phys != f.name =>
@@ -56,9 +56,10 @@ object DeltaInterop {
   }
 
   /** The metaData action for a version — see [[stampedSchema]]. */
-  private def metaDataAction(s: SparkSession, root: String, v: Int): String = {
-    val stamp = SnapshotTable.committedAt(s, root, v)
-    val (stamped, cfg) = stampedSchema(s, root, v)
+  private def metaDataAction(
+      s: SparkSession, root: String, v: Int, mv: Manifest.Version): String = {
+    val stamp = mv.committedAt
+    val (stamped, cfg) = stampedSchema(s, root, v, mv)
     val cfgJson = cfg.toSeq.sorted
       .map { case (k, v2) => s"""${jstr(k)}:${jstr(v2)}""" }.mkString(",")
     s"""{"metaData":{"id":"graft-delta-export","format":{"provider":"parquet",""" +
@@ -122,7 +123,18 @@ object DeltaInterop {
                checkpointPartActions: Int = 10000): Path = {
     val v = if (version < 0) SnapshotTable.currentVersion(s, root) else version
     require(v >= 1, s"nothing to export at $root")
-    val headEntries = SnapshotTable.lineEntries(s, root, v)
+    // versions EXPIRED by retention have no manifest (and possibly
+    // reclaimed files) — the chain starts at the earliest LIVE
+    // version, exactly like real Delta log cleanup: older JSON
+    // commits are gone and readers bootstrap from the checkpoint
+    // (the head checkpoint below always covers the full state). Each
+    // live version is looked up once; any failure but a missing
+    // manifest (a torn one) throws rather than shorten the chain.
+    val live: Seq[(Int, Manifest.Version)] =
+      (1 to v).flatMap(k => SnapshotTable.liveVersion(s, root, k).map(k -> _))
+    require(live.nonEmpty, s"no live version of $root at or below $v")
+    val head = live.toMap.getOrElse(v, SnapshotTable.version(s, root, v))
+    val headEntries = head.entries
     // Delta has NO equality deletes (no reader contract expresses
     // "suppress rows matching these key values") — a head with pending
     // eq-deletes still refuses loudly with the fix. Pending POSITIONAL
@@ -139,8 +151,7 @@ object DeltaInterop {
     val dvByFile: Map[String, Seq[Long]] =
       if (!headEntries.exists(_.kind == 1)) Map.empty
       else {
-        val delFiles = SnapshotTable.deleteFiles(s, root, v)
-        s.read.parquet(delFiles: _*)
+        s.read.parquet(head.deleteFiles: _*)
           .select("file_path", "pos").collect()
           .groupBy(r => SnapshotTable.canon(s, r.getString(0)))
           .map { case (f, rows) => f -> rows.map(_.getLong(1)).toSeq.sorted }
@@ -149,18 +160,9 @@ object DeltaInterop {
     val logDir = new Path(s"$exportDir/_delta_log")
     val fs = logDir.getFileSystem(conf)
     fs.mkdirs(logDir)
-    def canonOf(k: Int): Seq[String] = SnapshotTable.dataFiles(s, root, k)
-    def schemaKey(k: Int): (Map[String, String], Map[String, String], Map[String, Int]) =
-      (SnapshotTable.columnMapping(s, root, k), SnapshotTable.columnTypes(s, root, k),
-        SnapshotTable.droppedColumns(s, root, k))
-    // versions EXPIRED by retention have no manifest (and possibly
-    // reclaimed files) — the chain starts at the earliest LIVE
-    // version, exactly like real Delta log cleanup: older JSON
-    // commits are gone and readers bootstrap from the checkpoint
-    // (the head checkpoint below always covers the full state)
-    val firstLive = (1 to v).find(k =>
-      scala.util.Try(SnapshotTable.commitMeta(s, root, k)).isSuccess).getOrElse(
-      throw new IllegalArgumentException(s"no live version of $root at or below $v"))
+    def schemaKey(mv: Manifest.Version) = (mv.columnMapping, mv.columnTypes, mv.droppedColumns)
+    val firstLive = live.head._1
+    var prev: Manifest.Version = Manifest.Empty
     var prevFiles = Seq.empty[String]
     var logFile: Path = null
     // deletion vectors are a table FEATURE: their presence anywhere in
@@ -171,9 +173,9 @@ object DeltaInterop {
         """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
           """"readerFeatures":["deletionVectors"],"writerFeatures":["deletionVectors"]}}"""
       else """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
-    (firstLive to v).foreach { k =>
-      val stamp = SnapshotTable.committedAt(s, root, k)
-      val files = canonOf(k)
+    live.foreach { case (k, mv) =>
+      val stamp = mv.committedAt
+      val files = mv.dataFiles
       val prevSet = prevFiles.map(SnapshotTable.canon(s, _)).toSet
       val curSet = files.map(SnapshotTable.canon(s, _)).toSet
       // DVs attach at the HEAD commit only (intermediate MoR-pending
@@ -194,8 +196,8 @@ object DeltaInterop {
           .flatMap(f => Seq(removeAction(f, stamp), addAction(s, f, stamp, dvOf(f))))
       val header =
         if (k == firstLive)
-          Seq(protocolJson, metaDataAction(s, root, k))
-        else if (schemaKey(k) != schemaKey(k - 1)) Seq(metaDataAction(s, root, k))
+          Seq(protocolJson, metaDataAction(s, root, k, mv))
+        else if (schemaKey(mv) != schemaKey(prev)) Seq(metaDataAction(s, root, k, mv))
         else Seq.empty
       // an INTERMEDIATE version with pending MoR deletes renders its
       // data files only — a foreign reader time-traveling there sees
@@ -204,7 +206,7 @@ object DeltaInterop {
       // external tooling (and humans reading the log) can tell this
       // commit's rendered state is wider than the engine's own view.
       val mor =
-        if (k < v && SnapshotTable.lineEntries(s, root, k).exists(_.kind != 0))
+        if (k < v && mv.entries.exists(_.kind != 0))
           Seq(s"""{"commitInfo":{"timestamp":$stamp,"operation":"graft-export",""" +
             s""""operationParameters":{},"engineInfo":"graft-delta-export",""" +
             s""""userMetadata":"graft: version had pending merge-on-read deletes; """ +
@@ -216,6 +218,7 @@ object DeltaInterop {
         ((mor ++ header ++ adds ++ removes ++ dvUpdates).mkString("\n") + "\n")
           .getBytes("UTF-8"))
       finally out.close()
+      prev = mv
       prevFiles = files
     }
     // exporting an explicit OLDER version into a dir previously
@@ -234,7 +237,7 @@ object DeltaInterop {
         case _ => ()
       }
     }
-    writeCheckpoint(s, root, v, logDir, dvByFile, checkpointPartActions)
+    writeCheckpoint(s, root, v, head, logDir, dvByFile, checkpointPartActions)
     logFile
   }
 
@@ -257,15 +260,14 @@ object DeltaInterop {
     * schema.
     */
   private def writeCheckpoint(
-      s: SparkSession, root: String, v: Int, logDir: Path,
-      dvByFile: Map[String, Seq[Long]] = Map.empty,
-      partActions: Int = 10000): Unit = {
+      s: SparkSession, root: String, v: Int, mv: Manifest.Version, logDir: Path,
+      dvByFile: Map[String, Seq[Long]], partActions: Int): Unit = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val conf = s.sparkContext.hadoopConfiguration
     val fs = logDir.getFileSystem(conf)
-    val stamp = SnapshotTable.committedAt(s, root, v)
-    val (stamped, cfg) = stampedSchema(s, root, v)
+    val stamp = mv.committedAt
+    val (stamped, cfg) = stampedSchema(s, root, v, mv)
     val schema = StructType(Seq(
       StructField("protocol", StructType(Seq(
         StructField("minReaderVersion", IntegerType),
@@ -298,7 +300,7 @@ object DeltaInterop {
       else Row(Row(1, 2, null, null), null, null)
     val metaRow = Row(null, Row("graft-delta-export", Row("parquet",
       Map.empty[String, String]), stamped.json, Seq.empty[String], cfg, stamp), null)
-    val addRows = SnapshotTable.dataFiles(s, root, v).map { f =>
+    val addRows = mv.dataFiles.map { f =>
       val p = new Path(f)
       val size = p.getFileSystem(conf).getFileStatus(p).getLen
       val dvRow = dvByFile.get(SnapshotTable.canon(s, f)).map { pos =>
@@ -595,15 +597,10 @@ object DeltaInterop {
     require(SnapshotTable.currentVersion(s, destRoot) == 0,
       s"import destination $destRoot already has commits")
     val (files, schema, mapping) = readLog(s, tableDir)
-    val renderedMap = mapping.toSeq.sorted
-      .map { case (l, p) => s"$l=$p" }.mkString(",")
-    val renderedTypes = schema.map(f => s"${f.name}=${f.dataType.sql}")
-      .mkString(",")
-    val meta = Map(
-      "op" -> "import_delta_log", "import_of" -> tableDir,
-      SnapshotTable.ColTypesKey -> renderedTypes) ++
-      (if (renderedMap.nonEmpty) Map(SnapshotTable.ColMapKey -> renderedMap)
-       else Map.empty)
+    val meta = Manifest.withFacts(
+      Map("op" -> "import_delta_log", "import_of" -> tableDir),
+      columnMapping = Some(mapping),
+      columnTypes = Some(schema.map(f => f.name -> f.dataType.sql).toMap))
     SnapshotTable.commitFiles(s, destRoot, files, meta = meta)
   }
 }

@@ -139,16 +139,14 @@ object IcebergInterop {
     * is unpartitioned (or the source no longer maps): the version
     * then exports the unpartitioned spec 0, a safe degradation.
     */
-  private def daySourceOf(s: SparkSession, root: String, v: Int,
-      fields: Seq[(Int, String, String)]): Option[(String, Int)] = {
-    SnapshotTable.commitMeta(s, root, v).get("partition").flatMap { src =>
-      val mapping = SnapshotTable.columnMapping(s, root, v)
+  private def daySourceOf(mv: Manifest.Version,
+      fields: Seq[(Int, String, String)]): Option[(String, Int)] =
+    mv.partitionSource.flatMap { src =>
       fields.collectFirst {
-        case (id, n, _) if mapping.getOrElse(n, n) == src =>
+        case (id, n, _) if mv.columnMapping.getOrElse(n, n) == src =>
           (avroName(n) + "_day", id)
       }
     }
-  }
 
   private lazy val listSchema = new Schema.Parser().parse(ListSchemaJson)
   private val entrySchemaCache =
@@ -235,9 +233,10 @@ object IcebergInterop {
     * walk stays metadata-priced instead of re-inferring O(versions)
     * parquet schemas per commit.
     */
-  private def fieldsOf(s: SparkSession, root: String, v: Int): Seq[(Int, String, String)] = {
-    val ids = SnapshotTable.fieldIds(s, root, v)
-    SnapshotTable.schema(s, root, v).zipWithIndex.map { case (f, i) =>
+  private def fieldsOf(s: SparkSession, root: String, v: Int,
+      mv: Manifest.Version): Seq[(Int, String, String)] = {
+    val ids = SnapshotTable.fieldIds(s, root, v, mv)
+    SnapshotTable.schema(s, root, v, mv).zipWithIndex.map { case (f, i) =>
       (ids.getOrElse(f.name, i + 1), f.name, icebergType(f.dataType.simpleString))
     }.toSeq
   }
@@ -512,10 +511,10 @@ object IcebergInterop {
     // narrower than the schema type — Iceberg widen semantics)
     val colmap = schemaFields.collect {
       case (id, logical, _) if physicalOf(id, logical) != logical =>
-        s"$logical=${physicalOf(id, logical)}"
-    }
-    val fieldids = schemaFields.map { case (id, logical, _) => s"$logical=$id" }
-    val coltypes = schemaFields.map { case (_, logical, t) => s"$logical=${ddlType(t)}" }
+        logical -> physicalOf(id, logical)
+    }.toMap
+    val fieldids = schemaFields.map { case (id, logical, _) => logical -> id }.toMap
+    val coltypes = schemaFields.map { case (_, logical, t) => logical -> ddlType(t) }.toMap
     // day partition spec -> graft's partition header (physical source):
     // resolved from the DEFAULT spec's fields, so a day transform in a
     // historic (non-default) spec never mis-labels the current layout
@@ -559,13 +558,9 @@ object IcebergInterop {
         s"equality delete $p keys on field id $id, which the current schema does not define")))
       (p, cols, seq)
     }
-    val meta = Map("op" -> "import_iceberg",
-      SnapshotTable.FieldIdsKey -> fieldids.mkString(","),
-      SnapshotTable.ColTypesKey -> coltypes.mkString(",")) ++
-      (if (colmap.nonEmpty) Map(SnapshotTable.ColMapKey -> colmap.mkString(","))
-       else Map.empty) ++
-      daySource.fold(Map.empty[String, String])(src =>
-        Map(SnapshotTable.PartitionKey -> src))
+    val meta = Manifest.withFacts(Map("op" -> "import_iceberg"),
+      columnMapping = Some(colmap), columnTypes = Some(coltypes),
+      fieldIds = Some(fieldids), partitionSource = daySource)
     SnapshotTable.commitImported(s, destRoot, data, posDeletes, eqDeletes, meta)
   }
 
@@ -575,37 +570,32 @@ object IcebergInterop {
     new Path(s"$root/_iceberg/snap-$v.avro")
 
   /** Export ONE version's Avro manifests + manifest list (immutable;
-    * returns the existing list when already materialized). Returns
-    * None when the version's graft manifest is expired.
+    * returns the existing list when already materialized): version
+    * `v` of `root` parsed as `mv`, with `fields` its [[fieldsOf]] and
+    * `prev` version `v - 1` (None: none, or expired).
     */
-  private[graft] def exportVersion(s: SparkSession, root: String, v: Int): Option[String] = {
+  private def exportVersion(s: SparkSession, root: String, v: Int, mv: Manifest.Version,
+      fields: Seq[(Int, String, String)], prev: Option[Manifest.Version]): String = {
     val c = conf(s)
     val lp = listPath(root, v)
     val fs = lp.getFileSystem(c)
-    if (fs.exists(lp)) return Some(lp.toString)
-    val entries =
-      try SnapshotTable.lineEntries(s, root, v)
-      catch { case _: Exception => return None } // expired version
+    if (fs.exists(lp)) return lp.toString
+    val entries = mv.entries
     val prevFiles: Set[String] =
-      if (v <= 1) Set.empty
-      else scala.util.Try(SnapshotTable.lineEntries(s, root, v - 1))
-        .map(_.map(e => SnapshotTable.canon(s, e.path)).toSet)
-        .getOrElse(Set.empty)
-    val fields = fieldsOf(s, root, v)
-    val mapping = SnapshotTable.columnMapping(s, root, v)
+      prev.fold(Set.empty[String])(_.entries.map(e => SnapshotTable.canon(s, e.path)).toSet)
+    val mapping = mv.columnMapping
     val eqIdOf: Map[String, Int] = // PHYSICAL column name -> field id
       fields.map { case (id, n, _) => mapping.getOrElse(n, n) -> id }.toMap
     // per-file manifest annotations (stats bounds, partition values;
     // PHYSICAL column keys) — data files only, metadata-sized
     val annotsOf: Map[String, Map[String, String]] =
-      SnapshotTable.dataFilesWithPartitions(s, root, v)
-        .map { case (p, m) => SnapshotTable.canon(s, p) -> m }.toMap
+      mv.dataEntries.map(e => SnapshotTable.canon(s, e.path) -> e.annots).toMap
     // hidden day(source) partitioning exports as a REAL day spec:
     // spec-id 1 with one date field (ids from 1000), per-file values
     // from the _graft_day annotation — external engines get partition
     // pruning back. Delete manifests stay spec 0: graft's row-level
     // deletes are not partition-scoped.
-    val daySource = daySourceOf(s, root, v, fields)
+    val daySource = daySourceOf(mv, fields)
     val dayFieldName = daySource.map(_._1)
     val dataEntrySchema = entrySchemaOf(dayFieldName)
     val delEntrySchema = entrySchemaOf(None)
@@ -737,7 +727,7 @@ object IcebergInterop {
         "parent-snapshot-id" -> (if (v > 1) (v - 1).toString else "null"),
         "sequence-number" -> v.toString),
       listRecs.result())
-    Some(lp.toString)
+    lp.toString
   }
 
   /** Named refs as the export serves them, sorted by name: `main` (the
@@ -823,34 +813,36 @@ object IcebergInterop {
       // only at publish time (below, under the destination lock), so a
       // concurrent loader polling the location never finds it absent
     }
-    val fields = fieldsOf(s, loc, v)
-    // one pass over the live versions: export each Avro chain and
-    // remember its schema, so snapshots can carry per-snapshot
-    // schema-ids (an external engine time-traveling to a pre-evolution
-    // snapshot must see THAT snapshot's shape, and DROP COLUMN keeps
-    // old snapshots readable only through their schema-id binding)
-    val exported: Seq[(Int, String)] =
-      (1 to v).flatMap(sv => exportVersion(s, loc, sv).map(sv -> _))
+    // every live version, looked up once: expired versions (manifest
+    // gone) are skipped, like Iceberg metadata lists only live
+    // snapshots; any other failure — a torn manifest — throws
+    val live: Seq[(Int, Manifest.Version)] =
+      (1 to v).flatMap(sv => SnapshotTable.liveVersion(s, loc, sv).map(sv -> _))
+    val liveBy = live.toMap
+    val head = liveBy.getOrElse(v, SnapshotTable.version(s, loc, v))
     val fieldsBy: Map[Int, Seq[(Int, String, String)]] =
-      exported.map { case (sv, _) =>
-        sv -> (if (sv == v) fields else fieldsOf(s, loc, sv))
-      }.toMap
+      live.map { case (sv, mv) => sv -> fieldsOf(s, loc, sv, mv) }.toMap
+    val fields = fieldsBy(v)
+    // one pass over the live versions: export each Avro chain, whose
+    // schema snapshots carry as per-snapshot schema-ids (an external
+    // engine time-traveling to a pre-evolution snapshot must see THAT
+    // snapshot's shape, and DROP COLUMN keeps old snapshots readable
+    // only through their schema-id binding)
+    val exported: Seq[(Int, Manifest.Version, String)] = live.map { case (sv, mv) =>
+      (sv, mv, exportVersion(s, loc, sv, mv, fieldsBy(sv), liveBy.get(sv - 1)))
+    }
     // schema epochs in first-appearance order; ids are per-metadata-
     // file (each metadata.json is self-consistent, which is all an
     // Iceberg reader of THIS file requires)
     val epochIds = scala.collection.mutable.LinkedHashMap[Seq[(Int, String, String)], Int]()
-    exported.foreach { case (sv, _) => epochIds.getOrElseUpdate(fieldsBy(sv), epochIds.size) }
+    exported.foreach { case (sv, _, _) => epochIds.getOrElseUpdate(fieldsBy(sv), epochIds.size) }
     val currentSchemaId = epochIds.getOrElseUpdate(fields, epochIds.size)
     val schemasJson = epochIds.toSeq.sortBy(_._2)
       .map { case (f, id) => schemaJson(f, id) }.mkString(",")
-    val snapshots = exported.flatMap { case (sv, list) =>
-      scala.util.Try {
-        val op = SnapshotTable.commitMeta(s, loc, sv).getOrElse("op", "append")
-        s"""{"snapshot-id":$sv,"sequence-number":$sv,"timestamp-ms":${
-          SnapshotTable.committedAt(s, loc, sv)},"schema-id":${
-          epochIds(fieldsBy(sv))},"manifest-list":${
-          jstr(list)},"summary":{"operation":${jstr(op)}}}"""
-      }.toOption
+    val snapshots = exported.map { case (sv, mv, list) =>
+      s"""{"snapshot-id":$sv,"sequence-number":$sv,"timestamp-ms":${
+        mv.committedAt},"schema-id":${epochIds(fieldsBy(sv))},"manifest-list":${
+        jstr(list)},"summary":{"operation":${jstr(mv.header.getOrElse("op", "append"))}}}"""
     }
     // a day-partitioned table serves its real spec (spec-id 1, the
     // data manifests' declared spec); spec 0 stays for delete
@@ -864,9 +856,9 @@ object IcebergInterop {
     // older snapshot must never hit an undefined spec — so the head's
     // spec falls back to the latest listed version that had one;
     // default-spec-id still reflects the HEAD's own state.
-    val headDay = daySourceOf(s, loc, v, fields)
-    val anyDay = headDay.orElse(exported.reverseIterator.flatMap { case (sv, _) =>
-      daySourceOf(s, loc, sv, fieldsBy(sv))
+    val headDay = daySourceOf(head, fields)
+    val anyDay = headDay.orElse(exported.reverseIterator.flatMap { case (sv, mv, _) =>
+      daySourceOf(mv, fieldsBy(sv))
     }.nextOption())
     val specsJson = anyDay match {
       case Some((fn, srcId)) =>
@@ -880,23 +872,21 @@ object IcebergInterop {
     // self-describing to engines that bind columns by name: graft's
     // lake files carry PHYSICAL column names, so without the mapping a
     // renamed column reads as NULL everywhere outside graft
-    val props = SnapshotTable.properties(s, loc, v) +
+    val props = head.properties +
       ("schema.name-mapping.default" ->
-        nameMappingJson(fields, SnapshotTable.columnMapping(s, loc, v),
-          SnapshotTable.droppedColumns(s, loc, v)))
+        nameMappingJson(fields, head.columnMapping, head.droppedColumns))
     // refs + snapshot-log: the engine's travel surface, externalized.
     // A reader resolves `FOR VERSION AS OF <tag>` through refs and
     // `FOR TIMESTAMP AS OF <t>` through snapshot-log (latest entry
     // with timestamp-ms <= t), purely from this JSON.
-    val liveIds = exported.map(_._1).toSet
-    val refsJson = renderRefs(refsSeq(s, loc, v, liveIds.contains))
-    val snapshotLog = exported.map { case (sv, _) =>
-      s"""{"timestamp-ms":${SnapshotTable.committedAt(s, loc, sv)},"snapshot-id":$sv}"""
+    val refsJson = renderRefs(refsSeq(s, loc, v, liveBy.contains))
+    val snapshotLog = exported.map { case (sv, mv, _) =>
+      s"""{"timestamp-ms":${mv.committedAt},"snapshot-id":$sv}"""
     }.mkString("[", ",", "]")
     val metadata =
       s"""{"format-version":2,"table-uuid":${jstr(tableUuid(loc))},"location":${
         jstr(loc)},"last-sequence-number":$v,"last-updated-ms":${
-        SnapshotTable.committedAt(s, loc, v)},"last-column-id":${
+        head.committedAt},"last-column-id":${
         fields.map(_._1).maxOption.getOrElse(0)},"current-snapshot-id":$v,"current-schema-id":$currentSchemaId,"schemas":[${
         schemasJson}],"default-spec-id":$defaultSpecId,"partition-specs":$specsJson,"last-partition-id":$lastPartitionId,"default-sort-order-id":0,"sort-orders":[{"order-id":0,"fields":[]}],"properties":${
         props.toSeq.sorted

@@ -1113,7 +1113,7 @@ object LakeOps {
     SnapshotTable.deleteWhere(s, root, col("event_type") === "error")
     val rows = (1 to SnapshotTable.currentVersion(s, root)).map { v =>
       (v.toLong,
-        SnapshotTable.commitMeta(s, root, v).getOrElse("op", "unknown"),
+        SnapshotTable.version(s, root, v).header.getOrElse("op", "unknown"),
         SnapshotTable.recordCount(s, root, v))
     }
     rows.toDF("version", "op", "n_rows").orderBy("version")
@@ -1231,8 +1231,8 @@ object LakeOps {
     SnapshotTable.commit(s, root, ev.filter(col("ts") >= d11 && col("ts") < d21))
     Thread.sleep(2)
     SnapshotTable.commit(s, root, ev.filter(col("ts") >= d21))
-    val t1 = SnapshotTable.committedAt(s, root, 1)
-    val t2 = SnapshotTable.committedAt(s, root, 2)
+    val t1 = SnapshotTable.version(s, root, 1).committedAt
+    val t2 = SnapshotTable.version(s, root, 2).committedAt
     Seq(("v1", t1), ("v2", t2), ("head", System.currentTimeMillis))
       .map { case (labelName, t) =>
         SnapshotTable.readAsOf(s, root, t)
@@ -1443,7 +1443,7 @@ object LakeOps {
       t <- long(at(e, "timestamp-ms")); sid <- long(at(e, "snapshot-id"))
     } yield (t, sid.toInt))
     require(logEntries.nonEmpty, "exported metadata must carry a snapshot-log")
-    val t2 = SnapshotTable.committedAt(s, root, 2)
+    val t2 = SnapshotTable.version(s, root, 2).committedAt
     // id tiebreak: commits landing within the same millisecond
     val resolved = logEntries.filter(_._1 <= t2).maxBy(e => (e._1, e._2))._2
     require(resolved == 2,

@@ -26,7 +26,7 @@ object LakeSink {
   def lastCommittedBatch(stream: DataFrame, root: String): Long = {
     val s = stream.sparkSession
     (SnapshotTable.currentVersion(s, root) to 1 by -1).iterator
-      .flatMap(v => SnapshotTable.commitMeta(s, root, v).get("streaming_batch"))
+      .flatMap(v => SnapshotTable.version(s, root, v).header.get("streaming_batch"))
       .map(_.toLong)
       .nextOption().getOrElse(-1L)
   }

@@ -28,10 +28,14 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   *             | key "=" value                  partition values, stats, blooms
   * }}}
   * Header keys: `committed_at` (epoch ms, on every version, strictly
-  * increasing along main); the schema headers each commit inherits
-  * (`colmap`, `coltypes`, `fieldids`, `dropped`, `tblprops`,
-  * `partition`, `statscols`, `bloomcols`; see `SnapshotTable`); `op`
-  * with the op's own keys; caller metadata (e.g. a streaming batch id).
+  * increasing along main); the headers each commit inherits
+  * ([[InheritedKeys]]: `colmap`, `coltypes`, `fieldids`, `dropped`,
+  * `tblprops`, `partition`, `statscols`, `bloomcols`); `op` with the
+  * op's own keys; caller metadata (e.g. a streaming batch id). This
+  * module owns that vocabulary and its `k=v,k=v` value codec: a
+  * [[Version]] serves each header as a typed fact, and [[withFacts]]
+  * is the one way a commit writes them, so no other module spells a
+  * header key or renders a header value.
   *
   * '''The cache.''' A version manifest is write-once and its
   * fragments are immutable, so a version parsed once — header, body,
@@ -138,11 +142,76 @@ private[graft] object Manifest {
       EqDelete(path, eqCols, ann(EqSeqAnnot).map(_.toLong).getOrElse(Long.MaxValue))
   }
 
-  /** `k=v,k=v` header value → map (column mapping, types, field ids…). */
-  private[lake] def pairs(v: Option[String]): Map[String, String] =
+  // ----- the header vocabulary -----
+
+  private val CommittedAtKey = "committed_at" // epoch ms
+  private val ColMapKey = "colmap"       // logical=physical,…
+  private val ColTypesKey = "coltypes"   // logical=ddl type,…
+  private val FieldIdsKey = "fieldids"   // logical=id,… plus !<id>=id tombstones
+  private val DroppedKey = "dropped"     // physical=tombstoned id,…
+  private val PropsKey = "tblprops"      // url(key)=url(value),…
+  private val PartitionKey = "partition" // <source>: the table is day(<source>)-partitioned
+  private val StatsKey = "statscols"     // logical column names carrying per-file min/max
+  private val BloomKey = "bloomcols"     // logical column names carrying per-file bloom filters
+
+  /** The headers every commit copies forward from the version it
+    * builds on. statscols/bloomcols ride along with the schema
+    * headers: the per-file min/max and bloom annotations live in the
+    * (immutable, re-referenced) fragments, so dropping the header on a
+    * later commit would silently disable skip pruning for every old
+    * file whose stats are still valid. Files without annotations
+    * always scan, so inheriting a registration is never wrong.
+    */
+  private val InheritedKeys = Set(ColMapKey, ColTypesKey, FieldIdsKey, DroppedKey,
+    PropsKey, PartitionKey, StatsKey, BloomKey)
+
+  /** `k=v,k=v` header value → map. */
+  private def pairs(v: Option[String]): Map[String, String] =
     v.toSeq.flatMap(_.split(",")).flatMap { e =>
       e.split("=", 2) match { case Array(k, x) => Some(k -> x); case _ => None }
     }.toMap
+
+  private def renderPairs(m: Map[String, String]): String =
+    m.toSeq.sorted.map { case (k, x) => s"$k=$x" }.mkString(",")
+
+  // table property keys and values are URL-encoded one by one, so
+  // arbitrary property strings survive the k=v,k=v format
+  private def url(p: String): String = java.net.URLEncoder.encode(p, "UTF-8")
+  private def unurl(p: String): String = java.net.URLDecoder.decode(p, "UTF-8")
+
+  private def ints(v: Option[String]) = pairs(v).map { case (k, x) => k -> x.toInt }
+  private def names(v: Option[String]) = v.toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
+
+  /** `h` with the given header facts replaced, encoded here: each
+    * given fact replaces its header, an empty one removes it, and an
+    * absent one keeps whatever `h` has. Field ids include the `!<id>`
+    * tombstones of dropped fields.
+    */
+  def withFacts(h: Map[String, String],
+      columnMapping: Option[Map[String, String]] = None,
+      columnTypes: Option[Map[String, String]] = None,
+      fieldIds: Option[Map[String, Int]] = None,
+      droppedColumns: Option[Map[String, Int]] = None,
+      properties: Option[Map[String, String]] = None,
+      partitionSource: Option[String] = None,
+      statsColumns: Option[Seq[String]] = None,
+      bloomColumns: Option[Seq[String]] = None): Map[String, String] = {
+    def ids(m: Map[String, Int]) = m.map { case (k, i) => k -> i.toString }
+    Seq(
+      ColMapKey -> columnMapping.map(renderPairs),
+      ColTypesKey -> columnTypes.map(renderPairs),
+      FieldIdsKey -> fieldIds.map(m => renderPairs(ids(m))),
+      DroppedKey -> droppedColumns.map(m => renderPairs(ids(m))),
+      PropsKey -> properties.map(m => renderPairs(m.map { case (k, v) => url(k) -> url(v) })),
+      PartitionKey -> partitionSource,
+      StatsKey -> statsColumns.map(_.distinct.mkString(",")),
+      BloomKey -> bloomColumns.map(_.distinct.mkString(","))
+    ).foldLeft(h) {
+      case (acc, (k, Some(v))) if v.nonEmpty => acc + (k -> v)
+      case (acc, (k, Some(_))) => acc - k
+      case (acc, (_, None)) => acc
+    }
+  }
 
   /** One parsed, immutable manifest version. */
   final class Version private[Manifest] (
@@ -177,8 +246,30 @@ private[graft] object Manifest {
     lazy val deleteFiles: Seq[String] = entries.filter(_.kind == 1).map(_.path)
     lazy val eqDeletes: Seq[EqDelete] = entries.filter(_.kind == 2).map(_.eqDelete)
     lazy val maxSeq: Long = entries.map(_.seq).maxOption.getOrElse(0L)
+    // header facts, each decoded once per version
+    /** Commit instant (epoch ms); 0 on manifests written before stamping. */
+    lazy val committedAt: Long = header.get(CommittedAtKey).fold(0L)(_.toLong)
     /** logical name → physical (in-file) name. */
-    lazy val columnMapping: Map[String, String] = pairs(header.get(SnapshotTable.ColMapKey))
+    lazy val columnMapping: Map[String, String] = pairs(header.get(ColMapKey))
+    /** logical name → widened DDL type. */
+    lazy val columnTypes: Map[String, String] = pairs(header.get(ColTypesKey))
+    /** physical name → tombstoned field id of each column dropped at or before this version. */
+    lazy val droppedColumns: Map[String, Int] = ints(header.get(DroppedKey))
+    /** logical name → field id, plus `!<id>` → id tombstones of dropped fields. */
+    lazy val storedFieldIds: Map[String, Int] = ints(header.get(FieldIdsKey))
+    def fieldIdTombstones: Map[String, Int] = storedFieldIds.filter(_._1.startsWith("!"))
+    /** Table properties (Iceberg/Delta TBLPROPERTIES). */
+    lazy val properties: Map[String, String] =
+      pairs(header.get(PropsKey)).map { case (k, x) => unurl(k) -> unurl(x) }
+    /** The day-partition source's commit-time (physical) name. */
+    def partitionSource: Option[String] = header.get(PartitionKey)
+    /** Logical columns registered for per-file min/max stats and bloom filters. */
+    lazy val statsColumns: Seq[String] = names(header.get(StatsKey))
+    lazy val bloomColumns: Seq[String] = names(header.get(BloomKey))
+    def hasPruningMeta: Boolean =
+      partitionSource.isDefined || header.contains(StatsKey) || header.contains(BloomKey)
+    /** The headers a commit on this version copies forward. */
+    lazy val inheritedHeader: Map[String, String] = header.filter(kv => InheritedKeys(kv._1))
 
     /** Entries of the body lines not in `base` (an earlier body). */
     def entriesBeyond(base: Set[String]): Seq[Entry] =
@@ -311,9 +402,6 @@ private[graft] object Manifest {
   /** A lost version CAS: another writer published the version first. */
   final class LostCas(msg: String) extends IllegalStateException(msg)
 
-  /** Header key of a version's commit instant (epoch ms). */
-  private[lake] val CommittedAtKey = "committed_at"
-
   /** Entry line of a positional-delete file. */
   def posDeleteLine(path: String): String = s"$path\t$DeleteKindAnnot"
 
@@ -358,7 +446,7 @@ private[graft] object Manifest {
       meta: Map[String, String], body: Seq[String]): Unit = {
     val prevStamp = stem match {
       case StemRe(v) if v.toInt > 1 =>
-        try at(conf, root, s"v${v.toInt - 1}").header.get(CommittedAtKey).fold(0L)(_.toLong)
+        try at(conf, root, s"v${v.toInt - 1}").committedAt
         catch { case _: Exception => 0L }
       case _ => 0L
     }

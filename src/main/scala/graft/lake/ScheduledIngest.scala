@@ -45,7 +45,7 @@ object ScheduledIngest {
   /** Interval stamps already committed — the scheduler's "done" set. */
   def committedIntervals(s: SparkSession, root: String): Set[String] =
     (1 to SnapshotTable.currentVersion(s, root))
-      .flatMap(v => SnapshotTable.commitMeta(s, root, v).get(IntervalKey)).toSet
+      .flatMap(v => SnapshotTable.version(s, root, v).header.get(IntervalKey)).toSet
 
   /** Airflow-catchup planning: schedule intervals not yet committed,
     * oldest first. Metadata-only.

@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions.{coalesce, col, lit, when}
   * MinIO bucket; local paths are just the test medium.
   */
 object SnapshotTable {
-  import Manifest.{Entry, EqDelete, pairs}
+  import Manifest.{Entry, EqDelete}
 
   private def fsOf(s: SparkSession, p: Path): FileSystem =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -71,39 +71,50 @@ object SnapshotTable {
     cur
   }
 
-  /** Main version `version` of `root`, parsed once ([[Manifest]]). */
-  private def ver(s: SparkSession, root: String, version: Int): Manifest.Version =
-    verAt(s, root, s"v$version")
+  /** Main version `v` of `root`, parsed once ([[Manifest]]). An
+    * operation looks up each version it touches once and reads every
+    * fact it needs of it (entries, header facts, the memoized schema)
+    * from what this returns.
+    */
+  def version(s: SparkSession, root: String, v: Int): Manifest.Version =
+    verAt(s, root, s"v$v")
+
+  /** [[version]], or None when `v` was expired (its manifest is gone).
+    * Any other failure throws, a torn manifest included: a tear is
+    * never read as a shorter history.
+    */
+  private[lake] def liveVersion(s: SparkSession, root: String, v: Int): Option[Manifest.Version] =
+    try Some(version(s, root, v)) catch { case _: java.io.FileNotFoundException => None }
 
   /** Version `cur` as a commit builds on it: version 0 is the empty table. */
   private def headAt(s: SparkSession, root: String, cur: Int): Manifest.Version =
-    if (cur < 1) Manifest.Empty else ver(s, root, cur)
+    if (cur < 1) Manifest.Empty else version(s, root, cur)
 
   /** Manifest version by stem — `v3` (main) or `audit.v2` (branch). */
   private def verAt(s: SparkSession, root: String, stem: String): Manifest.Version =
     Manifest.at(conf(s), root, stem)
 
   /** The commit skeleton every write op on main shares: publish
-    * version `cur + 1` on head `cur` (0 = a new table), reading the
-    * head once. The header is `header` of the head's inherited headers
-    * ([[inheritedHeader]]) plus `meta`; the body is `body` of the head
+    * version `cur + 1` on `head`, the caller's lookup of version `cur`
+    * (0 = a new table, [[headAt]]). The header is `header` of the
+    * head's inherited headers plus `meta`; the body is `body` of the head
     * (its whole body by default) followed by one new fragment per
     * (name suffix, entry lines) group that has lines, named
     * `v<cur + 1><suffix>`. A lost CAS throws [[Manifest.LostCas]].
     * Returns the new version.
     */
   private def publishNext(
-      s: SparkSession, root: String, cur: Int, meta: Map[String, String],
+      s: SparkSession, root: String, cur: Int, head: Manifest.Version,
+      meta: Map[String, String],
       added: Seq[(String, Seq[String])] = Nil,
       body: Manifest.Version => Seq[String] = _.body,
       header: Map[String, String] => Map[String, String] = identity): Int = {
     val v = cur + 1
-    val head = headAt(s, root, cur)
     val refs = added.flatMap { case (suffix, lines) =>
       Manifest.fragment(conf(s), root, s"v$v$suffix", lines)
     }
     Manifest.publish(conf(s), root, s"v$v",
-      header(inheritedHeader(head)) ++ meta, body(head) ++ refs)
+      header(head.inheritedHeader) ++ meta, body(head) ++ refs)
     v
   }
 
@@ -163,15 +174,14 @@ object SnapshotTable {
 
   /** Equality-delete files visible at a version. */
   def eqDeleteEntries(s: SparkSession, root: String, version: Int): Seq[EqDelete] =
-    ver(s, root, version).eqDeletes
+    SnapshotTable.version(s, root, version).eqDeletes
 
-  /** Sequence number the NEXT commit on top of `cur` should stamp.
-    * Pre-seq manifests (every line unstamped) yield 1; data lines
-    * without `_seq` read as 0, i.e. "older than every eq delete" —
-    * the conservative direction.
+  /** Sequence number the NEXT commit on top of `head` should stamp.
+    * Pre-seq manifests (every line unstamped) and the empty table
+    * yield 1; data lines without `_seq` read as 0, i.e. "older than
+    * every eq delete" — the conservative direction.
     */
-  private def nextSeqAt(s: SparkSession, root: String, cur: Int): Long =
-    if (cur < 1) 1L else ver(s, root, cur).maxSeq + 1
+  private def nextSeq(head: Manifest.Version): Long = head.maxSeq + 1
 
   private def stampSeq(lines: Seq[String], seq: Long): Seq[String] =
     lines.map(Manifest.withSeq(_, seq))
@@ -216,29 +226,11 @@ object SnapshotTable {
     * stripped).
     */
   def dataFiles(s: SparkSession, root: String, version: Int): Seq[String] =
-    ver(s, root, version).dataFiles
+    SnapshotTable.version(s, root, version).dataFiles
 
   /** Positional delete files visible at a version. */
   def deleteFiles(s: SparkSession, root: String, version: Int): Seq[String] =
-    ver(s, root, version).deleteFiles
-
-  /** Data files with their manifest-recorded partition values —
-    * Iceberg-style: partition values live in table metadata, NOT in
-    * the file content, which is what makes the partitioning hidden.
-    */
-  def dataFilesWithPartitions(s: SparkSession, root: String, version: Int): Seq[(String, Map[String, String])] =
-    ver(s, root, version).dataEntries.map(e => (e.path, e.annots))
-
-  /** Metadata recorded with a commit (`#key=value` manifest header). */
-  def commitMeta(s: SparkSession, root: String, version: Int): Map[String, String] =
-    ver(s, root, version).header
-
-  /** All file entries visible at a version — data AND delete files,
-    * with their annotations decoded (the per-file facts the Iceberg
-    * Avro export renders). Metadata-sized (no data read).
-    */
-  private[lake] def lineEntries(s: SparkSession, root: String, version: Int): Seq[Entry] =
-    ver(s, root, version).entries
+    SnapshotTable.version(s, root, version).deleteFiles
 
   /** Stamp each manifest line with its file's row count
     * (`_rows=<n>`, Iceberg's per-data-file `record_count`) and byte
@@ -295,13 +287,14 @@ object SnapshotTable {
     * files.
     */
   def recordCount(s: SparkSession, root: String, version: Int): Long = {
-    val entries = ver(s, root, version).entries
+    val mv = SnapshotTable.version(s, root, version)
+    val entries = mv.entries
     // equality deletes suppress an unknowable-from-metadata number of
     // rows (their `_rows` is key rows, not matches) — fall back to an
     // exact read-side count; exactness beats speed here, and
     // maintenance (compactDeletesIfNeeded) folds eq deletes promptly
     // so the metadata-only fast path is the steady state
-    if (entries.exists(_.kind == 2)) return read(s, root, version).count()
+    if (entries.exists(_.kind == 2)) return readVersion(s, root, version, mv).count()
     def total(es: Seq[Entry]): Long = {
       val known = es.flatMap(_.rowsOpt).sum
       val unknown = es.filter(_.rowsOpt.isEmpty).map(_.path)
@@ -331,7 +324,7 @@ object SnapshotTable {
     */
   def tableStats(s: SparkSession, root: String, version: Int = -1): (Long, Long) = {
     val v = if (version < 0) currentVersion(s, root) else version
-    val entries = ver(s, root, v).entries
+    val entries = SnapshotTable.version(s, root, v).entries
     val dataOnly = entries.filter(_.isData)
     val bytes = dataOnly.map { e =>
       e.bytesOpt.getOrElse {
@@ -437,15 +430,16 @@ object SnapshotTable {
     // schema-evolution metadata survives every commit (incl. overwrite:
     // replacing the data does not undo a rename); incoming logical
     // column names are stored under their physical names
-    val mapping = headAt(s, root, cur).columnMapping
+    val head = headAt(s, root, cur)
+    val mapping = head.columnMapping
     val physDf = toPhysical(df, mapping)
-    val physIds = physFieldIds(s, root, cur, physDf.columns)
+    val physIds = physFieldIds(s, root, cur, head, physDf.columns)
     // the header a first-stamped commit persists covers the WHOLE
     // table (columns absent from this df included), so later lookups
     // never re-derive ordinals from a different column subset
-    def idsHeader(inherited: Map[String, String]) = fieldIdsHeader(inherited, mapping,
-      if (cur < 1 || pairs(inherited.get(FieldIdsKey)).nonEmpty) physIds
-      else fieldIds(s, root, cur)
+    val idsHeader = fieldIdsHeader(head, mapping,
+      if (cur < 1 || head.storedFieldIds.nonEmpty) physIds
+      else fieldIds(s, root, cur, head)
         .map { case (n, id) => mapping.getOrElse(n, n) -> id } ++ physIds)
     val newFiles = writeDataFiles(s, root, v, withFieldIds(physDf, physIds))
     val withStats =
@@ -454,21 +448,20 @@ object SnapshotTable {
     val annotated = stampSeq(annotateRows(s,
       if (bloomCols.isEmpty) withStats
       else annotateBloom(s, withStats, bloomCols.map(c => mapping.getOrElse(c, c)))),
-      nextSeqAt(s, root, cur))
+      nextSeq(head))
     // merge newly-registered stats/bloom columns with the inherited
     // set: a commit stamping stats on `value` must not forget that
     // older fragments carry valid stats on `id`
-    def mergeCols(inherited: Map[String, String], key: String, added: Seq[String]) =
-      if (added.isEmpty) Map.empty[String, String]
-      else Map(key -> (inherited.get(key).toSeq.flatMap(_.split(",")) ++ added)
-        .filter(_.nonEmpty).distinct.mkString(","))
+    def merged(inherited: Seq[String], added: Seq[String]) =
+      if (added.isEmpty) None else Some(inherited ++ added.filter(_.nonEmpty))
     // prior FRAGMENT REFS copied verbatim (earlier stats/partition
     // annotations live inside the untouched fragments) — this is what
     // makes the append O(files touched), not O(table)
-    publishNext(s, root, v - 1, meta, Seq("" -> annotated),
+    publishNext(s, root, v - 1, head, meta, Seq("" -> annotated),
       body = if (append) _.body else _ => Seq.empty,
-      header = h => h ++ idsHeader(h) ++ mergeCols(h, StatsKey, statsCols) ++
-        mergeCols(h, BloomKey, bloomCols))
+      header = Manifest.withFacts(_, fieldIds = Some(idsHeader),
+        statsColumns = merged(head.statsColumns, statsCols),
+        bloomColumns = merged(head.bloomColumns, bloomCols)))
   }
 
   /** Register EXISTING parquet files as a new version — ZERO-COPY, the
@@ -501,15 +494,16 @@ object SnapshotTable {
     val cur = currentVersion(s, root)
     val deletes = posDeletes.nonEmpty || eqDeletes.nonEmpty
     if (deletes) require(cur > 0, s"no snapshot table at $root")
+    val head = headAt(s, root, cur)
     eqDeletes.foreach { case (_, cols) =>
       require(cols.nonEmpty, "equality delete requires at least one key column")
-      requireKeyColsInSchema(s, root, cur, cols)
+      requireKeyColsInSchema(s, root, head, cols)
     }
-    val seq = nextSeqAt(s, root, cur)
+    val seq = nextSeq(head)
     val v = cur + 1
     val dataLines = stampSeq(annotateRows(s, files.map(f => canon(s, f))), seq)
     val posLines = annotateRows(s, posDeletes.map(p => Manifest.posDeleteLine(canon(s, p))))
-    lazy val mapping = columnMapping(s, root, cur)
+    val mapping = head.columnMapping
     val eqLines = annotateRows(s, eqDeletes.zipWithIndex.map {
       case ((p, cols), i) =>
         val phys = cols.map(c => mapping.getOrElse(c, c))
@@ -529,7 +523,7 @@ object SnapshotTable {
           }
         Manifest.eqDeleteLine(canon(s, path), phys, seq)
     })
-    publishNext(s, root, cur,
+    publishNext(s, root, cur, head,
       (if (deletes) Map("op" -> (if (files.nonEmpty) "upsert_wire" else "delete_wire"))
        else Map.empty[String, String]) ++ meta,
       Seq("" -> (eqLines ++ posLines ++ dataLines)),
@@ -563,7 +557,8 @@ object SnapshotTable {
       } ++
       posDeletes.map(p => Manifest.posDeleteLine(canon(s, p))) ++
       eqDeletes.map { case (p, cols, seq) => Manifest.eqDeleteLine(canon(s, p), cols, seq) }
-    publishNext(s, root, currentVersion(s, root), meta, Seq("" -> lines))
+    val cur = currentVersion(s, root)
+    publishNext(s, root, cur, headAt(s, root, cur), meta, Seq("" -> lines))
   }
 
   /** CONCURRENT multi-writer append (VERDICT r6 item 7): Iceberg
@@ -593,9 +588,10 @@ object SnapshotTable {
     // rename mid-rebase is harmless because renames never change
     // physical names, only the logical labels over them.
     val cur0 = currentVersion(s, root)
-    val mapping = headAt(s, root, cur0).columnMapping
+    val head0 = headAt(s, root, cur0)
+    val mapping = head0.columnMapping
     val physDf = toPhysical(df, mapping)
-    val physIds = physFieldIds(s, root, cur0, physDf.columns)
+    val physIds = physFieldIds(s, root, cur0, head0, physDf.columns)
     val baseLines = annotateRows(s,
       writeDataFilesAt(s, s"$root/data/c-$stage", withFieldIds(physDf, physIds)))
     // Iceberg commit-time sequence assignment: the data sequence number
@@ -612,13 +608,14 @@ object SnapshotTable {
     var stagedSeq = Long.MinValue
     var newRef: Seq[String] = Seq.empty
     rebasing(s, root) { cur =>
-      val seq = nextSeqAt(s, root, cur)
+      val head = if (cur == cur0) head0 else headAt(s, root, cur)
+      val seq = nextSeq(head)
       if (baseLines.nonEmpty && seq != stagedSeq) {
         newRef = Manifest.fragment(conf(s), root, s"c-$stage-s$seq", stampSeq(baseLines, seq))
         stagedSeq = seq
       }
-      publishNext(s, root, cur, meta, body = _.body ++ newRef,
-        header = h => h ++ fieldIdsHeader(h, mapping, physIds))
+      publishNext(s, root, cur, head, meta, body = _.body ++ newRef,
+        header = Manifest.withFacts(_, fieldIds = Some(fieldIdsHeader(head, mapping, physIds))))
     }
   }
 
@@ -915,8 +912,9 @@ object SnapshotTable {
     */
   def deleteWhereMor(s: SparkSession, root: String, predicate: Column): Int = {
     val cur = existingVersion(s, root)
+    val head = version(s, root, cur)
     val v = cur + 1
-    val matches = morMatches(s, root, cur, predicate) match {
+    val matches = morMatches(s, root, cur, head, predicate) match {
       case None => return cur // metadata proves zero matches
       case Some(m) => m.select(col("_graft_fp").as("file_path"), col("_graft_pos").as("pos"))
     }
@@ -929,7 +927,7 @@ object SnapshotTable {
     matches.repartition(col("file_path")).write.mode("overwrite").parquet(delDir)
     val (delLines, nDeleted) = morDeleteLines(s, delDir)
     if (nDeleted == 0) return cur
-    publishNext(s, root, cur,
+    publishNext(s, root, cur, head,
       Map("op" -> "delete_mor", "delete_rows" -> nDeleted.toString), Seq("-del" -> delLines))
   }
 
@@ -944,15 +942,15 @@ object SnapshotTable {
     * hold a TRUE row can't hold a position.
     */
   private def morMatches(
-      s: SparkSession, root: String, cur: Int, predicate: Column): Option[DataFrame] = {
-    val curVer = ver(s, root, cur)
+      s: SparkSession, root: String, cur: Int, curVer: Manifest.Version,
+      predicate: Column): Option[DataFrame] = {
     val files = curVer.dataFiles
-    val mapping = columnMapping(s, root, cur)
-    val types = columnTypes(s, root, cur)
-    val dropped = droppedColumns(s, root, cur).keySet
+    val mapping = curVer.columnMapping
+    val types = curVer.columnTypes
+    val dropped = curVer.droppedColumns.keySet
     lazy val probe = logicalView(rawWidenedRead(s, files, mapping, types),
       mapping, types, dropped).filter(predicate)
-    val candidates = planningCandidates(s, root, cur, probe, files)
+    val candidates = planningCandidates(curVer, probe, files)
     if (candidates.isEmpty) None
     else Some(logicalView(
       applyAllDeletes(s, candidates, fs => rawWidenedRead(s, fs, mapping, types),
@@ -984,9 +982,10 @@ object SnapshotTable {
       s: SparkSession, root: String, predicate: Column,
       set: Map[String, Column]): Int = {
     val cur = existingVersion(s, root)
+    val head = version(s, root, cur)
     val v = cur + 1
-    val mapping = columnMapping(s, root, cur)
-    val matched = morMatches(s, root, cur, predicate) match {
+    val mapping = head.columnMapping
+    val matched = morMatches(s, root, cur, head, predicate) match {
       case None => return cur // metadata proves zero matches
       case Some(m) => m.persist() // two consumers: the position and replacement writes
     }
@@ -1008,8 +1007,8 @@ object SnapshotTable {
       // eq deletes never re-suppress them
       val newFiles = stampSeq(
         annotateRows(s, writeDataFiles(s, root, v, replacements)),
-        nextSeqAt(s, root, cur))
-      publishNext(s, root, cur,
+        nextSeq(head))
+      publishNext(s, root, cur, head,
         Map("op" -> "update_mor", "delete_rows" -> nUpdated.toString),
         Seq("-del" -> delLines, "" -> newFiles))
     } finally { matched.unpersist(); () }
@@ -1042,11 +1041,11 @@ object SnapshotTable {
       deleteImages: DataFrame, meta: Map[String, String] = Map.empty): Int = {
     val cur = currentVersion(s, root)
     require(cur > 0, s"no snapshot table at $root (bootstrap with commit)")
-    val curVer = ver(s, root, cur)
-    val files = dataFiles(s, root, cur)
-    val dels = deleteFiles(s, root, cur)
-    val mapping = columnMapping(s, root, cur)
-    val types = columnTypes(s, root, cur)
+    val curVer = version(s, root, cur)
+    val files = curVer.dataFiles
+    val dels = curVer.deleteFiles
+    val mapping = curVer.columnMapping
+    val types = curVer.columnTypes
     val v = cur + 1
     val delLines: Seq[String] =
       if (deleteImages.isEmpty) Seq.empty
@@ -1056,11 +1055,11 @@ object SnapshotTable {
         // drops files that provably contain no matching value, and a
         // column with null image values is skipped — <=> matches null
         // rows that min/max can't bound)
-        val planFiles = cdcPlanningCandidates(s, root, cur, deleteImages, files)
+        val planFiles = cdcPlanningCandidates(s, root, cur, curVer, deleteImages, files)
         val live = logicalView(
           applyAllDeletes(s, planFiles, fs => rawWidenedRead(s, fs, mapping, types),
             dels, curVer.eqDeletes, fileSeqFn(s, curVer), keepRowId = true),
-          mapping, types, droppedColumns(s, root, cur).keySet)
+          mapping, types, curVer.droppedColumns.keySet)
         val cols = deleteImages.columns.toSeq
         // image multiplicities; null-safe equality on every column;
         // rank per image group caps removals at multiplicity. NOT
@@ -1090,9 +1089,9 @@ object SnapshotTable {
       if (inserts.isEmpty) Seq.empty[String]
       else stampSeq(
         annotateRows(s, writeDataFiles(s, root, v, toPhysical(inserts, mapping))),
-        nextSeqAt(s, root, cur))
+        nextSeq(curVer))
     if (delLines.isEmpty && newFiles.isEmpty) return cur
-    publishNext(s, root, cur, meta + ("op" -> "cdc_apply"),
+    publishNext(s, root, cur, curVer, meta + ("op" -> "cdc_apply"),
       Seq("-del" -> delLines, "" -> newFiles))
   }
 
@@ -1116,13 +1115,13 @@ object SnapshotTable {
       s: SparkSession, root: String, keyCols: Seq[String], keys: DataFrame): Int = {
     val cur = existingVersion(s, root)
     require(keyCols.nonEmpty, "equality delete requires at least one key column")
-    requireKeyColsInSchema(s, root, cur, keyCols)
-    val mapping = columnMapping(s, root, cur)
+    val head = version(s, root, cur)
+    requireKeyColsInSchema(s, root, head, keyCols)
+    val mapping = head.columnMapping
     val v = cur + 1
     val eqLines = writeEqDeleteFile(s, root, v,
-      keys.select(keyCols.map(col): _*), keyCols, mapping,
-      nextSeqAt(s, root, cur))
-    publishNext(s, root, cur,
+      keys.select(keyCols.map(col): _*), keyCols, mapping, nextSeq(head))
+    publishNext(s, root, cur, head,
       Map("op" -> "delete_eq", "eq_cols" -> keyCols.mkString(",")), Seq("-eqdel" -> eqLines))
   }
 
@@ -1142,15 +1141,16 @@ object SnapshotTable {
       s: SparkSession, root: String, keyCols: Seq[String], batch: DataFrame): Int = {
     val cur = existingVersion(s, root)
     require(keyCols.nonEmpty, "upsert requires at least one key column")
-    requireKeyColsInSchema(s, root, cur, keyCols)
-    val mapping = columnMapping(s, root, cur)
-    val seq = nextSeqAt(s, root, cur)
+    val head = version(s, root, cur)
+    requireKeyColsInSchema(s, root, head, keyCols)
+    val mapping = head.columnMapping
+    val seq = nextSeq(head)
     val v = cur + 1
     val eqLines = writeEqDeleteFile(s, root, v,
       batch.select(keyCols.map(col): _*), keyCols, mapping, seq)
     val newFiles = stampSeq(
       annotateRows(s, writeDataFiles(s, root, v, toPhysical(batch, mapping))), seq)
-    publishNext(s, root, cur,
+    publishNext(s, root, cur, head,
       Map("op" -> "upsert_eq", "eq_cols" -> keyCols.mkString(",")),
       Seq("-eqdel" -> eqLines, "" -> newFiles))
   }
@@ -1164,11 +1164,11 @@ object SnapshotTable {
     * nothing at all on an empty table.
     */
   private def requireKeyColsInSchema(
-      s: SparkSession, root: String, cur: Int, keyCols: Seq[String]): Unit = {
-    val files = dataFiles(s, root, cur)
+      s: SparkSession, root: String, head: Manifest.Version, keyCols: Seq[String]): Unit = {
+    val files = head.dataFiles
     if (files.isEmpty) return
     val physical = graft.sources.Footer.schemaOf(s, files.head).fieldNames.toSeq
-    val reverse = columnMapping(s, root, cur).map(_.swap)
+    val reverse = head.columnMapping.map(_.swap)
     val logical = physical.map(p => reverse.getOrElse(p, p))
     val missing = keyCols.filterNot(logical.contains)
     require(missing.isEmpty,
@@ -1202,15 +1202,15 @@ object SnapshotTable {
     */
   def compactDeletes(s: SparkSession, root: String): Int = {
     val cur = existingVersion(s, root)
-    val mv = ver(s, root, cur)
-    val dels = deleteFiles(s, root, cur)
+    val mv = version(s, root, cur)
+    val dels = mv.deleteFiles
     val eqs = mv.eqDeletes
     if (dels.isEmpty && eqs.isEmpty) return cur
     def norm(p: String) = canon(s, p)
-    val files = dataFiles(s, root, cur)
+    val files = mv.dataFiles
     val fileSeq = fileSeqFn(s, mv)
-    val mapping = columnMapping(s, root, cur)
-    val types = columnTypes(s, root, cur)
+    val mapping = mv.columnMapping
+    val types = mv.columnTypes
     // positionally-affected files: named directly by the delete rows
     val posAffected: Set[String] =
       if (dels.isEmpty) Set.empty
@@ -1266,12 +1266,12 @@ object SnapshotTable {
         stampSeq(
           annotateRows(s, writeDataFilesAt(s,
             s"$root/data/m-${java.util.UUID.randomUUID.toString.take(8)}",
-            withFieldIds(rewritten, physFieldIds(s, root, cur, rewritten.columns)))),
-          nextSeqAt(s, root, cur))
+            withFieldIds(rewritten, physFieldIds(s, root, cur, mv, rewritten.columns)))),
+          nextSeq(mv))
       }
     // every delete line goes (eq deletes with no matching rows are
     // spent: the semi-join proved no surviving row matches them)
-    publishRewrite(s, root, cur,
+    publishRewrite(s, root, cur, mv,
       Map("op" -> "compact_deletes", "rewrote" -> touched.size.toString),
       mv.splitBody(e => !e.isData || affected.contains(norm(e.path))), newFiles)
   }
@@ -1301,7 +1301,8 @@ object SnapshotTable {
     * ones.
     */
   private def publishRewrite(
-      s: SparkSession, root: String, basedOn: Int, opMeta: Map[String, String],
+      s: SparkSession, root: String, basedOn: Int, base: Manifest.Version,
+      opMeta: Map[String, String],
       split: (Seq[String], Seq[String]), newLines: Seq[String]): Int = {
     // the planned body: kept fragment refs, then one fragment of the
     // surviving lines of split fragments, then one of the new files
@@ -1309,32 +1310,32 @@ object SnapshotTable {
     val body = keptRefs ++
       Manifest.fragment(conf(s), root, s"v${basedOn + 1}-keep", survivors) ++
       Manifest.fragment(conf(s), root, s"v${basedOn + 1}", newLines)
-    val baseBodySet = ver(s, root, basedOn).body.toSet
-    val baseSchema = inheritedHeader(ver(s, root, basedOn))
+    val baseBodySet = base.body.toSet
     rebasing(s, root) { head =>
+      val headVer = if (head == basedOn) base else version(s, root, head)
       val added: Seq[String] =
         if (head == basedOn) Seq.empty
         else {
-          val headBody = ver(s, root, head).body
+          val headBody = headVer.body
           val removed = baseBodySet -- headBody.toSet
           if (removed.nonEmpty) throw new IllegalStateException(
             s"rewrite of $root based on v$basedOn conflicts with a concurrent " +
               s"commit that removed ${removed.size} manifest line(s) (another " +
               "rewrite/overwrite) — re-plan the rewrite against the new head")
           val extra = headBody.filterNot(baseBodySet.contains)
-          if (ver(s, root, head).entriesBeyond(baseBodySet).exists(!_.isData))
+          if (headVer.entriesBeyond(baseBodySet).exists(!_.isData))
             throw new IllegalStateException(
               s"rewrite of $root based on v$basedOn conflicts with a concurrent " +
                 "row-level delete — its positions/keys may target replaced files; " +
                 "re-plan the rewrite against the new head")
-          if (inheritedHeader(ver(s, root, head)) != baseSchema) throw new IllegalStateException(
+          if (headVer.inheritedHeader != base.inheritedHeader) throw new IllegalStateException(
             s"rewrite of $root based on v$basedOn conflicts with a concurrent " +
               "schema/registration change — re-plan against the new head")
           extra
         }
       // the inherited header is the base's: a schema change in between
       // is a conflict (above)
-      publishNext(s, root, head,
+      publishNext(s, root, head, headVer,
         opMeta ++ (if (added.isEmpty) Map.empty[String, String]
                    else Map("rebased_over" -> (head - basedOn).toString)),
         body = _ => body ++ added)
@@ -1359,7 +1360,8 @@ object SnapshotTable {
     */
   def compactDeleteFiles(s: SparkSession, root: String, minFiles: Int = 2): Int = {
     val cur = existingVersion(s, root)
-    val dels = deleteFiles(s, root, cur)
+    val mv = version(s, root, cur)
+    val dels = mv.deleteFiles
     if (dels.size < minFiles) return cur
     def norm(p: String) = canon(s, p)
     val dir = s"$root/deletes/m-${java.util.UUID.randomUUID.toString.take(8)}"
@@ -1367,9 +1369,9 @@ object SnapshotTable {
       .repartition(1).write.mode("overwrite").parquet(dir)
     val newLines = posDeleteLines(s, dir)
     val delSet = dels.map(norm).toSet
-    publishRewrite(s, root, cur,
+    publishRewrite(s, root, cur, mv,
       Map("op" -> "compact_delete_files", "consolidated" -> dels.size.toString),
-      ver(s, root, cur).splitBody(e => e.kind == 1 && delSet.contains(norm(e.path))),
+      mv.splitBody(e => e.kind == 1 && delSet.contains(norm(e.path))),
       newLines)
   }
 
@@ -1388,17 +1390,18 @@ object SnapshotTable {
   def compactDeletesIfNeeded(
       s: SparkSession, root: String, maxDeleteRatio: Double = 0.05): Int = {
     val cur = currentVersion(s, root)
-    val dels = deleteFiles(s, root, cur)
+    val mv = version(s, root, cur)
+    val dels = mv.deleteFiles
     // any pending EQUALITY delete triggers: its selectivity is
     // unknowable from metadata (could suppress half the table), every
     // pending one costs an anti-join per scan, and folding restores
     // the metadata-only recordCount fast path
-    if (eqDeleteEntries(s, root, cur).nonEmpty) return compactDeletes(s, root)
+    if (mv.eqDeletes.nonEmpty) return compactDeletes(s, root)
     if (dels.isEmpty) return cur
     val delCounts: Map[String, Long] = s.read.parquet(dels: _*)
       .groupBy("file_path").count().collect()
       .map(r => canon(s, r.getString(0)) -> r.getLong(1)).toMap
-    val trigger = ver(s, root, cur).entries.filter(_.kind != 1).exists { e =>
+    val trigger = mv.entries.filter(_.kind != 1).exists { e =>
       delCounts.get(canon(s, e.path)).exists(d =>
         e.rowsOpt.exists(r => r > 0 && d.toDouble / r > maxDeleteRatio))
     }
@@ -1445,19 +1448,19 @@ object SnapshotTable {
       smallBytes: Long = 64L << 20, targetBytes: Long = 256L << 20,
       sortCols: Seq[String] = Seq.empty): Int = {
     val cur = existingVersion(s, root)
-    val mv = ver(s, root, cur)
-    val dels = deleteFiles(s, root, cur)
+    val mv = version(s, root, cur)
+    val dels = mv.deleteFiles
     val eqs = mv.eqDeletes
     val fileSeq = fileSeqFn(s, mv)
-    val mapping = columnMapping(s, root, cur)
-    val types = columnTypes(s, root, cur)
+    val mapping = mv.columnMapping
+    val types = mv.columnTypes
     def norm(p: String) = canon(s, p)
     val posAffected: Set[String] =
       if (dels.isEmpty) Set.empty
       else s.read.parquet(dels: _*).select("file_path").distinct()
         .collect().map(r => norm(r.getString(0))).toSet
     // (file, partition-annotation suffix) for every live data file
-    val withParts = dataFilesWithPartitions(s, root, cur)
+    val withParts = mv.dataEntries.map(e => (e.path, e.annots))
     val partAnnotOf: Map[String, String] = withParts.map { case (f, annots) =>
       val p = annots.filterNot { case (k, _) =>
         k.startsWith("_min_") || k.startsWith("_max_") ||
@@ -1489,10 +1492,9 @@ object SnapshotTable {
         }
       }
     if (smallByGroup.isEmpty) return cur
-    def regCols(key: String): Seq[String] =
-      mv.header.get(key).toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
-        .map(c => mapping.getOrElse(c, c))
-    val seq = nextSeqAt(s, root, cur)
+    val statsCols = mv.statsColumns.map(c => mapping.getOrElse(c, c))
+    val bloomCols = mv.bloomColumns.map(c => mapping.getOrElse(c, c))
+    val seq = nextSeq(mv)
     val newFiles: Seq[String] = smallByGroup.toSeq.sortBy(_._1).flatMap {
       case (partAnnot, fs) =>
         val bytes = fs.map(f => sizes(norm(f))).sum
@@ -1514,19 +1516,19 @@ object SnapshotTable {
           }
         val staged = writeDataFilesAt(s,
           s"$root/data/m-${java.util.UUID.randomUUID.toString.take(8)}",
-          withFieldIds(arranged, physFieldIds(s, root, cur, arranged.columns)))
+          withFieldIds(arranged, physFieldIds(s, root, cur, mv, arranged.columns)))
         val withStats =
-          if (regCols(StatsKey).isEmpty) staged
-          else annotateStats(s, staged, regCols(StatsKey))
+          if (statsCols.isEmpty) staged
+          else annotateStats(s, staged, statsCols)
         val withBloom =
-          if (regCols(BloomKey).isEmpty) withStats
-          else annotateBloom(s, withStats, regCols(BloomKey))
+          if (bloomCols.isEmpty) withStats
+          else annotateBloom(s, withStats, bloomCols)
         val withPart =
           if (partAnnot.isEmpty) withBloom else withBloom.map(l => s"$l\t$partAnnot")
         stampSeq(annotateRows(s, withPart), seq)
     }
     val packedSet: Set[String] = smallByGroup.values.flatten.map(norm).toSet
-    publishRewrite(s, root, cur,
+    publishRewrite(s, root, cur, mv,
       Map("op" -> "optimize",
         "packed" -> packedSet.size.toString, "outputs" -> newFiles.size.toString),
       mv.splitBody(e => e.isData && packedSet.contains(norm(e.path))), newFiles)
@@ -1541,13 +1543,13 @@ object SnapshotTable {
       s: SparkSession, root: String, predicate: Column, op: String)(
       rewrite: (DataFrame, Column) => DataFrame): Int = {
     val cur = existingVersion(s, root)
-    val curVer = ver(s, root, cur)
-    val files = dataFiles(s, root, cur)
-    val dels = deleteFiles(s, root, cur)
+    val curVer = version(s, root, cur)
+    val files = curVer.dataFiles
+    val dels = curVer.deleteFiles
     val eqs = curVer.eqDeletes
     val curFileSeq = fileSeqFn(s, curVer)
-    val mapping = columnMapping(s, root, cur)
-    val types = columnTypes(s, root, cur)
+    val mapping = curVer.columnMapping
+    val types = curVer.columnTypes
     def norm(p: String) = canon(s, p)
     // predicate is written against the LOGICAL schema; pin the file
     // path first, then apply the logical view over it. Pending MoR
@@ -1559,11 +1561,11 @@ object SnapshotTable {
       applyAllDeletes(s, paths, fs => rawWidenedRead(s, fs, mapping, types),
         dels, eqs, curFileSeq, keepRowId = true)
         .withColumnRenamed("_graft_fp", "_graft_file").drop("_graft_pos"),
-      mapping, types, droppedColumns(s, root, cur).keySet)
+      mapping, types, curVer.droppedColumns.keySet)
     // manifest-prune the planning scan: a selective predicate on a
     // stats/partition-annotated table reads candidate files only
     val probe = viewWithFile(files).filter(predicate)
-    val candidates = planningCandidates(s, root, cur, probe, files)
+    val candidates = planningCandidates(curVer, probe, files)
     if (candidates.isEmpty) return cur // metadata proves zero matches
     val affected = (if (candidates.size == files.size) probe
                     else viewWithFile(candidates).filter(predicate))
@@ -1579,9 +1581,9 @@ object SnapshotTable {
     // deletes (already applied to their content) stop matching them
     val newFiles = stampSeq(
       annotateRows(s, writeDataFiles(s, root, v,
-        withFieldIds(rewritten, physFieldIds(s, root, cur, rewritten.columns)))),
-      nextSeqAt(s, root, cur))
-    publishReplace(s, root, cur, affected, newFiles,
+        withFieldIds(rewritten, physFieldIds(s, root, cur, curVer, rewritten.columns)))),
+      nextSeq(curVer))
+    publishReplace(s, root, cur, curVer, affected, newFiles,
       Map("op" -> op, "rewrote" -> touched.size.toString))
   }
 
@@ -1593,10 +1595,10 @@ object SnapshotTable {
     * written by executor-side parquet writers before this commit).
     */
   private def publishReplace(
-      s: SparkSession, root: String, cur: Int, affected: Set[String],
-      newDataLines: Seq[String], meta: Map[String, String]): Int = {
+      s: SparkSession, root: String, cur: Int, head: Manifest.Version,
+      affected: Set[String], newDataLines: Seq[String], meta: Map[String, String]): Int = {
     val v = cur + 1
-    val dels = deleteFiles(s, root, cur)
+    val dels = head.deleteFiles
     def norm(p: String) = canon(s, p)
     // Pending MoR delete files that reference a rewritten data file
     // must themselves be rewritten: the rewrite APPLIES those deletes
@@ -1640,10 +1642,10 @@ object SnapshotTable {
     // didn't change). Metadata I/O is O(touched fragments), not
     // O(table).
     // (legacy inline lines fold into the rewrite fragment)
-    val (keptRefs, survivors) = ver(s, root, cur).splitBody { e =>
+    val (keptRefs, survivors) = head.splitBody { e =>
       if (e.kind == 1) staleDels.contains(norm(e.path)) else affected.contains(norm(e.path))
     }
-    publishNext(s, root, cur, meta,
+    publishNext(s, root, cur, head, meta,
       Seq("-keep" -> survivors, "" -> (newDataLines ++ delKeepLines)), body = _ => keptRefs)
   }
 
@@ -1660,15 +1662,13 @@ object SnapshotTable {
       removed: Seq[String], added: Seq[String],
       meta: Map[String, String]): Int = {
     val affected = removed.map(canon(s, _)).toSet
-    val newLines = stampSeq(annotateRows(s, added.sorted), nextSeqAt(s, root, cur))
-    publishReplace(s, root, cur, affected, newLines, meta)
+    val head = version(s, root, cur)
+    val newLines = stampSeq(annotateRows(s, added.sorted), nextSeq(head))
+    publishReplace(s, root, cur, head, affected, newLines, meta)
   }
 
   // ----- hidden partitioning: day(ts) transform --------------------
 
-  private[lake] val PartitionKey = "partition" // "<source>" — table is day(<source>)-partitioned
-  private val StatsKey = "statscols"     // logical column names carrying per-file min/max
-  private val BloomKey = "bloomcols"     // logical column names carrying per-file bloom filters
   private[lake] val BloomBits = 16384    // 2 KiB bitset per (file, column)
   private[lake] val BloomHashes = 3
 
@@ -1725,10 +1725,11 @@ object SnapshotTable {
     // df's own column names (no toPhysical), so names translate to
     // physical ONLY for the lookup and the result is keyed back by
     // the df's names — which is also how the header stores them.
-    val idMapping = headAt(s, root, cur).columnMapping
+    val head = headAt(s, root, cur)
+    val idMapping = head.columnMapping
     val physOfDf: Map[String, String] =
       df.columns.map(c => c -> idMapping.getOrElse(c, c)).toMap
-    val physAssigned = physFieldIds(s, root, cur, df.columns.toSeq.map(physOfDf))
+    val physAssigned = physFieldIds(s, root, cur, head, df.columns.toSeq.map(physOfDf))
     val ids = df.columns.map(c => c -> physAssigned(physOfDf(c))).toMap
     def writeData(nSalt: Int): Unit = {
       val salt = org.apache.spark.sql.functions.pmod(
@@ -1785,13 +1786,14 @@ object SnapshotTable {
         files = listData()
       }
     }
-    val lines = stampSeq(annotateRows(s, files.map(_._1).sorted), nextSeqAt(s, root, cur))
+    val lines = stampSeq(annotateRows(s, files.map(_._1).sorted), nextSeq(head))
     // real mapping (not Map.empty): a df carrying a renamed column's
     // physical name must persist under the LOGICAL key, or the header
     // would grow a duplicate physical-keyed entry for the same id
-    publishNext(s, root, cur, Map(PartitionKey -> source), Seq("" -> lines),
+    publishNext(s, root, cur, head, Map.empty, Seq("" -> lines),
       body = if (append) _.body else _ => Seq.empty,
-      header = h => h ++ fieldIdsHeader(h, idMapping, ids))
+      header = Manifest.withFacts(_, partitionSource = Some(source),
+        fieldIds = Some(fieldIdsHeader(head, idMapping, ids))))
   }
 
   /** Read with a row predicate, pruning manifest entries THROUGH the
@@ -1802,10 +1804,10 @@ object SnapshotTable {
     */
   def readWhere(s: SparkSession, root: String, predicate: Column, version: Int = -1): DataFrame = {
     val v = if (version < 0) currentVersion(s, root) else version
-    val entries = dataFilesWithPartitions(s, root, v)
-    val mapping = columnMapping(s, root, v)
-    val types = columnTypes(s, root, v)
-    val mv = ver(s, root, v)
+    val mv = SnapshotTable.version(s, root, v)
+    val files = mv.dataFiles
+    val mapping = mv.columnMapping
+    val types = mv.columnTypes
     val dels = mv.deleteFiles
     val eqs = mv.eqDeletes
     val fileSeq = fileSeqFn(s, mv)
@@ -1813,8 +1815,8 @@ object SnapshotTable {
       logicalView(
         applyAllDeletes(s, files, fs => rawWidenedRead(s, fs, mapping, types, of = Some(mv)),
           dels, eqs, fileSeq),
-        mapping, types, droppedColumns(s, root, v).keySet).filter(predicate)
-    val full = view(entries.map(_._1))
+        mapping, types, mv.droppedColumns.keySet).filter(predicate)
+    val full = view(files)
     // pattern-match the ANALYZED filter condition (the unresolved
     // Column wraps lazy ColumnNodes in Spark 4) — resolved
     // comparisons with analyzer-set cast timezones
@@ -1822,16 +1824,16 @@ object SnapshotTable {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
     }
     val pruned = cond match {
-      case Some(c) => pruneEntries(s, root, v, c)
-      case None => entries.map(_._1)
+      case Some(c) => pruneEntries(mv, c)
+      case None => files
     }
     if (pruned.isEmpty) full.filter(lit(false)) // nothing matched: keep schema, no rows
-    else if (pruned.size == entries.size) full
+    else if (pruned.size == files.size) full
     else view(pruned)
   }
 
   /** Manifest-prune the candidate files for a PLANNING scan: the
-    * files of `version` that might contain rows matching the filter
+    * files of `mv` that might contain rows matching the filter
     * of `filtered` (per partition/stats/bloom metadata). Row-level
     * writes (copy-on-write and MoR position planning) call this so a
     * selective DELETE/UPDATE on a stats- or partition-annotated table
@@ -1842,22 +1844,16 @@ object SnapshotTable {
     * Unprunable predicate shapes fall back to every file.
     */
   private def planningCandidates(
-      s: SparkSession, root: String, version: Int,
-      filtered: => DataFrame, all: Seq[String]): Seq[String] = {
+      mv: Manifest.Version, filtered: => DataFrame, all: Seq[String]): Seq[String] = {
     // without partition/stats/bloom registrations nothing can prune —
     // skip even BUILDING the probe plan (its relation re-lists files
     // and reads a schema footer, measurable per-op overhead on plain
     // tables, which are the common case)
-    if (!hasPruningMeta(s, root, version)) return all
+    if (!mv.hasPruningMeta) return all
     val cond = filtered.queryExecution.analyzed.collectFirst {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
     }
-    cond.map(c => pruneEntries(s, root, version, c)).getOrElse(all)
-  }
-
-  private def hasPruningMeta(s: SparkSession, root: String, version: Int): Boolean = {
-    val m = commitMeta(s, root, version)
-    m.contains(PartitionKey) || m.contains(StatsKey) || m.contains(BloomKey)
+    cond.map(c => pruneEntries(mv, c)).getOrElse(all)
   }
 
   /** Why a version cannot be served by the SQL row-level
@@ -1873,11 +1869,10 @@ object SnapshotTable {
     */
   private[graft] def sqlRowLevelBlocker(
       s: SparkSession, root: String, version: Int): Option[String] = {
-    val mv = ver(s, root, version)
+    val mv = SnapshotTable.version(s, root, version)
     if (mv.deleteFiles.nonEmpty || mv.eqDeletes.nonEmpty)
       Some("pending merge-on-read deletes — run compactDeletes() first")
-    else if (columnMapping(s, root, version).nonEmpty ||
-      columnTypes(s, root, version).nonEmpty)
+    else if (mv.columnMapping.nonEmpty || mv.columnTypes.nonEmpty)
       Some("column mapping / type overrides — use the engine API " +
         "(updateWhere / merge), which reads through the logical view")
     else None
@@ -1894,14 +1889,15 @@ object SnapshotTable {
       s: SparkSession, root: String, predicate: Option[Column],
       version: Int = -1): Seq[String] = {
     val v = if (version < 0) currentVersion(s, root) else version
-    val all = dataFiles(s, root, v)
+    val mv = SnapshotTable.version(s, root, v)
+    val all = mv.dataFiles
     predicate match {
-      case Some(p) if hasPruningMeta(s, root, v) =>
-        val probe = read(s, root, v).filter(p)
+      case Some(p) if mv.hasPruningMeta =>
+        val probe = readVersion(s, root, v, mv).filter(p)
         val cond = probe.queryExecution.analyzed.collectFirst {
           case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
         }
-        cond.map(c => pruneEntries(s, root, v, c)).getOrElse(all)
+        cond.map(c => pruneEntries(mv, c)).getOrElse(all)
       case _ => all
     }
   }
@@ -1917,13 +1913,11 @@ object SnapshotTable {
     * nothing can prune.
     */
   private[graft] def cdcPlanningCandidates(
-      s: SparkSession, root: String, version: Int,
+      s: SparkSession, root: String, v: Int, mv: Manifest.Version,
       images: DataFrame, all: Seq[String]): Seq[String] = {
-    if (!hasPruningMeta(s, root, version)) return all
-    val meta = commitMeta(s, root, version)
-    val pruneCols =
-      (meta.get(StatsKey).toSeq.flatMap(_.split(",")) ++ meta.get(PartitionKey))
-        .filter(_.nonEmpty).distinct.filter(images.columns.contains)
+    if (!mv.hasPruningMeta) return all
+    val pruneCols = (mv.statsColumns ++ mv.partitionSource)
+      .filter(_.nonEmpty).distinct.filter(images.columns.contains)
     if (pruneCols.isEmpty) return all
     import org.apache.spark.sql.functions.{count, max => fmax, min => fmin, when}
     val aggs = pruneCols.flatMap(c => Seq(
@@ -1936,25 +1930,23 @@ object SnapshotTable {
       else Some(col(c) >= lit(mn) && col(c) <= lit(r.getAs[Any](s"_mx_$c")))
     }
     if (preds.isEmpty) all
-    else planningCandidates(s, root, version,
-      read(s, root, version).filter(preds.reduce(_ && _)), all)
+    else planningCandidates(mv,
+      readVersion(s, root, v, mv).filter(preds.reduce(_ && _)), all)
   }
 
   /** The [[readWhere]] pruning core, reusable by the point-lookup
-    * optimizer rule (plans.SnapshotScanPruning): files of `version`
+    * optimizer rule (plans.SnapshotScanPruning): files of `mv`
     * that MIGHT satisfy `cond` per the manifest's partition/stats/
     * bloom metadata — a metadata-only decision, no data file opened.
     * `cond` names logical columns (physical == logical when the table
     * has no rename history, which is how the rule sees scan filters).
     */
   private[graft] def pruneEntries(
-      s: SparkSession, root: String, version: Int,
+      mv: Manifest.Version,
       c: org.apache.spark.sql.catalyst.expressions.Expression): Seq[String] = {
-    val mv = ver(s, root, version)
     val entries = mv.dataEntries.map(e => (e.path, e.annots))
-    val meta = mv.header
     val mapping = mv.columnMapping
-    val afterPartition = meta.get(PartitionKey) match {
+    val afterPartition = mv.partitionSource match {
       case Some(source) =>
         PartitionTransforms.dayBounds(c, source) match {
           case (lo, hi) if lo.nonEmpty || hi.nonEmpty => entries.filter {
@@ -1968,8 +1960,8 @@ object SnapshotTable {
     // per-file min/max stats skipping (annotations written by commit
     // with statsCols): keep a file unless its [min,max] provably
     // misses the predicate's bounds; files without stats always scan
-    val statCols = meta.get(StatsKey).toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
-    val bloomCols = meta.get(BloomKey).toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
+    val statCols = mv.statsColumns
+    val bloomCols = mv.bloomColumns
     implicit val bord: Ordering[Array[Byte]] = unsignedBytesOrdering
     val b64 = java.util.Base64.getDecoder
     val afterStats =
@@ -2053,7 +2045,7 @@ object SnapshotTable {
     // — manifest metadata must not outgrow the data it describes
     val liveFrags = (live.map(v => s"v$v") ++ branchStems)
       .flatMap(st => verAt(s, root, st).fragments).toSet
-    val orphanedFrags = expired.flatMap(v => ver(s, root, v).fragments)
+    val orphanedFrags = expired.flatMap(v => version(s, root, v).fragments)
       .distinct.filterNot(liveFrags.contains)
     // delete manifests FIRST: a crash mid-expire must never leave a
     // readable version pointing at deleted fragments or data files
@@ -2252,11 +2244,11 @@ object SnapshotTable {
     * never-evolved fallback.
     */
   private def physFieldIds(s: SparkSession, root: String, cur: Int,
-      dfCols: Seq[String]): Map[String, Int] =
+      head: Manifest.Version, dfCols: Seq[String]): Map[String, Int] =
     if (cur < 1) dfCols.zipWithIndex.map { case (n, i) => n -> (i + 1) }.toMap
     else {
-      val mapping = columnMapping(s, root, cur)
-      val stored = pairs(commitMeta(s, root, cur).get(FieldIdsKey))
+      val mapping = head.columnMapping
+      val stored = head.storedFieldIds
       // dropped physical names keep their TOMBSTONED id: a compaction
       // rewriting an old file that still physically carries a dropped
       // column must stamp the dropped field's own id, never a fresh one.
@@ -2266,15 +2258,15 @@ object SnapshotTable {
       val phys: Map[String, Int] =
         (if (stored.nonEmpty)
           stored.collect { case (n, i) if !n.startsWith("!") =>
-            mapping.getOrElse(n, n) -> i.toInt
+            mapping.getOrElse(n, n) -> i
           }
-        else fieldIds(s, root, cur)
+        else fieldIds(s, root, cur, head)
           .map { case (n, id) => mapping.getOrElse(n, n) -> id }) ++
-        droppedColumns(s, root, cur)
+        head.droppedColumns
       // fresh ids start past EVERY id ever assigned, tombstones
       // included — reusing a burned id in a footer would alias the
       // dropped field's data in external engines
-      var next = (phys.values ++ fieldIdTombstones(s, root, cur).values)
+      var next = (phys.values ++ head.fieldIdTombstones.values)
         .maxOption.getOrElse(0)
       dfCols.map { c =>
         phys.get(c) match {
@@ -2284,21 +2276,19 @@ object SnapshotTable {
       }.toMap
     }
 
-  /** The fieldids header a data commit persists: the stored assignment
-    * (tombstones and absent columns included) plus fresh entries for
-    * columns THIS commit introduces, keyed logical. Persisting on
-    * every commit makes every later id lookup header-only — without
-    * it, each commit would re-infer the table schema (a parquet
-    * footer read) just to reconstruct ordinal ids.
+  /** The field ids a data commit on `head` persists: the stored
+    * assignment (tombstones and absent columns included) plus fresh
+    * entries for columns THIS commit introduces, keyed logical.
+    * Persisting on every commit makes every later id lookup
+    * header-only — without it, each commit would re-infer the table
+    * schema (a parquet footer read) just to reconstruct ordinal ids.
     */
-  private def fieldIdsHeader(inherited: Map[String, String],
-      mapping: Map[String, String], physIds: Map[String, Int]): Map[String, String] = {
-    val stored = pairs(inherited.get(FieldIdsKey))
+  private def fieldIdsHeader(head: Manifest.Version,
+      mapping: Map[String, String], physIds: Map[String, Int]): Map[String, Int] = {
+    val stored = head.storedFieldIds
     val reverse = mapping.map(_.swap)
-    val merged = stored ++ physIds.map { case (p, id) =>
-      reverse.getOrElse(p, p) -> id.toString
-    }.filterNot { case (n, _) => stored.contains(n) }
-    Map(FieldIdsKey -> renderPairs(merged))
+    stored ++ physIds.map { case (p, id) => reverse.getOrElse(p, p) -> id }
+      .filterNot { case (n, _) => stored.contains(n) }
   }
 
   /** Stamp `parquet.field.id` column metadata so the parquet writer
@@ -2324,7 +2314,7 @@ object SnapshotTable {
     */
   private[graft] def withFieldIdMetadata(s: SparkSession, root: String, v: Int,
       schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType = {
-    val ids = physFieldIds(s, root, v, schema.fieldNames.toSeq)
+    val ids = physFieldIds(s, root, v, headAt(s, root, v), schema.fieldNames.toSeq)
     org.apache.spark.sql.types.StructType(schema.map { f =>
       ids.get(f.name).fold(f) { id =>
         f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
@@ -2406,12 +2396,6 @@ object SnapshotTable {
     * carried, so reading the new version behaves exactly like reading
     * the target (schema history included).
     */
-  /** Commit instant of a version (epoch ms). 0 for pre-stamp
-    * manifests (written before timestamp travel existed).
-    */
-  def committedAt(s: SparkSession, root: String, version: Int): Long =
-    commitMeta(s, root, version).get(Manifest.CommittedAtKey).fold(0L)(_.toLong)
-
   /** Resolve a commit instant to the newest version committed at or
     * before it — the shared anchor for `TIMESTAMP AS OF` ([[readAsOf]]
     * and the SQL catalog). Commit stamps are ENFORCED strictly
@@ -2423,16 +2407,18 @@ object SnapshotTable {
     */
   def versionAt(s: SparkSession, root: String, epochMillis: Long): Int = {
     val cur = currentVersion(s, root)
-    if (cur < 1 || committedAt(s, root, 1) > epochMillis)
+    def committedAt(v: Int) = version(s, root, v).committedAt
+    val earliest = if (cur < 1) None else Some(committedAt(1))
+    if (earliest.forall(_ > epochMillis))
       throw new IllegalArgumentException(
         s"no version of $root committed at or before $epochMillis " +
-          s"(earliest: ${if (cur >= 1) committedAt(s, root, 1).toString else "none"})")
+          s"(earliest: ${earliest.fold("none")(_.toString)})")
     // invariant: committedAt(lo) <= epochMillis < committedAt(hi+1)
     var lo = 1
     var hi = cur
     while (lo < hi) {
       val mid = lo + (hi - lo + 1) / 2
-      if (committedAt(s, root, mid) <= epochMillis) lo = mid else hi = mid - 1
+      if (committedAt(mid) <= epochMillis) lo = mid else hi = mid - 1
     }
     lo
   }
@@ -2462,11 +2448,11 @@ object SnapshotTable {
     require(v >= 1, s"cannot clone $srcRoot: no committed version")
     require(currentVersion(s, destRoot) == 0,
       s"clone destination $destRoot already has commits")
-    val header = commitMeta(s, srcRoot, v) ++
-      Map("op" -> "clone", "clone_of" -> s"$srcRoot@v$v")
+    val src = SnapshotTable.version(s, srcRoot, v)
+    val header = src.header ++ Map("op" -> "clone", "clone_of" -> s"$srcRoot@v$v")
     // fragment refs are absolute paths, so the zero-copy clone carries
     // them verbatim across roots (same expire caveat as data files)
-    Manifest.publish(conf(s), destRoot, "v1", header, ver(s, srcRoot, v).body)
+    Manifest.publish(conf(s), destRoot, "v1", header, src.body)
     1
   }
 
@@ -2476,7 +2462,7 @@ object SnapshotTable {
       s"cannot roll back $root to version $toVersion (current: $cur)")
     // the target's FULL header and body, so the new version reads
     // exactly like the target (schema history included)
-    val target = ver(s, root, toVersion)
+    val target = version(s, root, toVersion)
     Manifest.publish(conf(s), root, s"v${cur + 1}",
       target.header ++ Map("op" -> "rollback", "rollback_of" -> toVersion.toString),
       target.body)
@@ -2618,7 +2604,7 @@ object SnapshotTable {
       writeDataFilesAt(s, s"$root/data/$name/v$n", toPhysical(df, head.columnMapping))),
       head.maxSeq + 1)
     val stem = s"$name.v$n"
-    Manifest.publish(conf(s), root, stem, inheritedHeader(head) ++ meta + ("branch" -> name),
+    Manifest.publish(conf(s), root, stem, head.inheritedHeader ++ meta + ("branch" -> name),
       (if (append) head.body else Seq.empty) ++ Manifest.fragment(conf(s), root, stem, newFiles))
     Manifest.writeRef(conf(s), new Path(branchesDir(root), name), stem, overwrite = true)
     n
@@ -2630,9 +2616,7 @@ object SnapshotTable {
   def readBranch(s: SparkSession, root: String, name: String): DataFrame = {
     val stem = branchHead(s, root, name)
     val mv = verAt(s, root, stem)
-    readWithSchema(s, mv.dataFiles, mv.columnMapping, pairs(mv.header.get(ColTypesKey)),
-      deletes = mv.deleteFiles, eqDels = mv.eqDeletes, fileSeq = fileSeqFn(s, mv),
-      dropped = pairs(mv.header.get(DroppedKey)).keySet)
+    readFilesWith(s, mv, Map.empty, mv.dataFiles, mv.deleteFiles, mv.eqDeletes, fileSeqFn(s, mv))
   }
 
   /** PUBLISH: fast-forward main to the branch head. Zero-copy — the
@@ -2687,40 +2671,21 @@ object SnapshotTable {
   // logical type overrides, copied forward by every commit. Renames
   // and widens are metadata-only commits — zero data rewritten, old
   // versions still read with their old schema (time travel includes
-  // schema history, like Iceberg).
-
-  private[lake] val ColMapKey = "colmap"    // logical=physical,…
-  private[lake] val ColTypesKey = "coltypes" // logical=ddl type,…
-  // DROPPED columns: physical (in-file) name = tombstoned field id.
-  // The files are never rewritten (old versions still read the
-  // column); current-version reads drop the physical column in
-  // logicalView, and the id stays burned so no later field can alias
-  // the dropped field's data — Iceberg §Schema Evolution.
-  private[lake] val DroppedKey = "dropped"
-
-  /** physical name → tombstoned field id of every column dropped at or
-    * before `version`. Versions before a drop carry no entry — time
-    * travel reads the column.
-    */
-  def droppedColumns(s: SparkSession, root: String, version: Int): Map[String, Int] =
-    pairs(commitMeta(s, root, version).get(DroppedKey))
-      .map { case (k, v) => k -> v.toInt }
-
-  private def renderPairs(m: Map[String, String]): String =
-    m.toSeq.sorted.map { case (k, x) => s"$k=$x" }.mkString(",")
-
-  /** logical name → physical (in-file) name at a version. */
-  def columnMapping(s: SparkSession, root: String, version: Int): Map[String, String] =
-    ver(s, root, version).columnMapping
-
-  // persistent Iceberg-style field ids: logical name → id, carried in
+  // schema history, like Iceberg). DROPPED columns keep their
+  // physical name with a tombstoned field id: the files are never
+  // rewritten (old versions still read the column); current-version
+  // reads drop the physical column in logicalView, and the id stays
+  // burned so no later field can alias the dropped field's data —
+  // Iceberg §Schema Evolution. The headers themselves are
+  // [[Manifest]]'s, served as facts of each [[Manifest.Version]].
+  //
+  // Persistent Iceberg-style field ids: logical name → id, carried in
   // the inherited header. The id FOLLOWS a field through renames (the
   // Iceberg spec's rename encoding: same field-id, new name), which is
   // what lets a REST client express RENAME by sending the old id with
   // a new name. Tables that never evolved have no header and read as
   // ordinal ids; the first schema-evolution commit snapshots that
   // assignment so it can never drift afterwards.
-  private[lake] val FieldIdsKey = "fieldids"
 
   /** Logical field name → persistent field id at a version. Fields
     * without a stored id (pre-evolution tables, or columns that
@@ -2728,10 +2693,13 @@ object SnapshotTable {
     * position when NO ids are stored, max-stored-id + arrival order
     * when some are.
     */
-  def fieldIds(s: SparkSession, root: String, version: Int): Map[String, Int] = {
-    val stored = pairs(commitMeta(s, root, version).get(FieldIdsKey))
-      .map { case (k, v) => k -> v.toInt }
-    val names = schema(s, root, version).fieldNames
+  def fieldIds(s: SparkSession, root: String, version: Int): Map[String, Int] =
+    fieldIds(s, root, version, SnapshotTable.version(s, root, version))
+
+  /** [[fieldIds]] of version `v`, already looked up as `mv`. */
+  def fieldIds(s: SparkSession, root: String, v: Int, mv: Manifest.Version): Map[String, Int] = {
+    val stored = mv.storedFieldIds
+    val names = schema(s, root, v, mv).fieldNames
     if (stored.isEmpty) names.zipWithIndex.map { case (n, i) => n -> (i + 1) }.toMap
     else {
       var next = stored.values.max
@@ -2744,36 +2712,6 @@ object SnapshotTable {
     }
   }
 
-  /** logical name → widened DDL type at a version. */
-  def columnTypes(s: SparkSession, root: String, version: Int): Map[String, String] =
-    pairs(commitMeta(s, root, version).get(ColTypesKey))
-
-  // statscols/bloomcols ride along with the schema headers: the
-  // per-file min/max and bloom annotations live in the (immutable,
-  // re-referenced) fragments, so dropping the header on a later
-  // commit would silently disable skip pruning for every old file
-  // whose stats are still perfectly valid. Files without annotations
-  // always scan, so inheriting the registration is never wrong.
-  private def inheritedHeader(mv: Manifest.Version): Map[String, String] =
-    mv.header.filter(kv => kv._1 == ColMapKey || kv._1 == ColTypesKey ||
-      kv._1 == PartitionKey || kv._1 == StatsKey || kv._1 == BloomKey ||
-      kv._1 == PropsKey || kv._1 == FieldIdsKey || kv._1 == DroppedKey)
-
-
-  // table properties ride the same inherited-header channel as the
-  // column mapping; keys and values are URL-encoded individually so
-  // arbitrary property strings survive the k=v,k=v header format
-  private[lake] val PropsKey = "tblprops"
-
-  private def encProp(p: String): String =
-    java.net.URLEncoder.encode(p, "UTF-8")
-
-  /** Table properties visible at `version` (Iceberg/Delta TBLPROPERTIES). */
-  def properties(s: SparkSession, root: String, version: Int): Map[String, String] =
-    pairs(commitMeta(s, root, version).get(PropsKey)).map { case (k, v) =>
-      java.net.URLDecoder.decode(k, "UTF-8") -> java.net.URLDecoder.decode(v, "UTF-8")
-    }
-
   /** Set/remove table properties — a metadata-only commit (Iceberg
     * `UpdateProperties`). Removals apply before updates; unknown
     * removals are no-ops. Properties inherit across ALL later commits
@@ -2783,10 +2721,10 @@ object SnapshotTable {
   def setProperties(s: SparkSession, root: String,
       updates: Map[String, String], removals: Seq[String] = Nil): Int = {
     val cur = existingVersion(s, root)
-    val props = (properties(s, root, cur) -- removals) ++ updates
-    val encoded = props.map { case (k, v) => encProp(k) -> encProp(v) }
-    publishNext(s, root, cur, Map("op" -> "properties"), header = h => (h - PropsKey) ++
-      (if (encoded.nonEmpty) Map(PropsKey -> renderPairs(encoded)) else Map.empty))
+    val head = version(s, root, cur)
+    val props = (head.properties -- removals) ++ updates
+    publishNext(s, root, cur, head, Map("op" -> "properties"),
+      header = Manifest.withFacts(_, properties = Some(props)))
   }
 
   /** Rename a column — metadata-only commit (no files touched). New
@@ -2796,15 +2734,16 @@ object SnapshotTable {
     */
   def renameColumn(s: SparkSession, root: String, oldName: String, newName: String): Int = {
     val cur = existingVersion(s, root)
+    val head = version(s, root, cur)
     // a dropped column's physical name still lives inside old files and
     // keeps a tombstone entry in the exported name-mapping; a live
     // field renamed TO that name would make the mapping ambiguous
     // (two entries claiming one file column) — external engines could
     // bind the dropped bytes to the live field
-    require(!droppedColumns(s, root, cur).contains(newName),
+    require(!head.droppedColumns.contains(newName),
       s"RENAME to $newName: collides with a dropped column's physical name still present in old files at $root")
-    val mapping = columnMapping(s, root, cur)
-    val types = columnTypes(s, root, cur)
+    val mapping = head.columnMapping
+    val types = head.columnTypes
     val physical = mapping.getOrElse(oldName, oldName)
     val newMapping = (mapping - oldName) + (newName -> physical)
     val newTypes = types.get(oldName) match {
@@ -2815,7 +2754,7 @@ object SnapshotTable {
     // field-id, new name) — snapshotting the full assignment here is
     // what makes ids persistent from the first evolution onward.
     // Tombstoned ids of dropped fields ride along so they stay burned.
-    val ids = fieldIds(s, root, cur) ++ fieldIdTombstones(s, root, cur)
+    val ids = fieldIds(s, root, cur, head) ++ head.fieldIdTombstones
     val newIds = ids.get(oldName) match {
       case Some(id) => (ids - oldName) + (newName -> id)
       case None => ids + (newName -> (ids.values.maxOption.getOrElse(0) + 1))
@@ -2827,11 +2766,9 @@ object SnapshotTable {
     // verbatim: a metadata-only commit costs O(#fragments) lines and
     // never touches the files' annotations (they live inside the
     // untouched fragments)
-    publishNext(s, root, cur, Map("op" -> s"rename:$oldName->$newName"),
-      header = h => (h - ColMapKey - ColTypesKey - FieldIdsKey) ++
-        Map(ColMapKey -> renderPairs(newMapping),
-          FieldIdsKey -> renderPairs(newIds.map { case (k, i) => k -> i.toString })) ++
-        (if (newTypes.nonEmpty) Map(ColTypesKey -> renderPairs(newTypes)) else Map.empty))
+    publishNext(s, root, cur, head, Map("op" -> s"rename:$oldName->$newName"),
+      header = Manifest.withFacts(_, columnMapping = Some(newMapping),
+        columnTypes = Some(newTypes), fieldIds = Some(newIds)))
   }
 
   /** Whether `from` → `to` is a lossless widening promotion (the only
@@ -2861,15 +2798,16 @@ object SnapshotTable {
     */
   def widenColumn(s: SparkSession, root: String, name: String, ddlType: String): Int = {
     val cur = existingVersion(s, root)
-    val curSchema = schema(s, root, cur)
+    val head = version(s, root, cur)
+    val curSchema = schema(s, root, cur, head)
     require(curSchema.fieldNames.contains(name), s"no column $name at $root")
     val from = curSchema(name).dataType.simpleString
     require(isWidening(from, ddlType),
       s"ALTER COLUMN $name: $from -> $ddlType is not a widening promotion")
-    val types = columnTypes(s, root, cur) + (name -> ddlType)
+    val types = head.columnTypes + (name -> ddlType)
     // inherited header carried forward — see renameColumn
-    publishNext(s, root, cur, Map("op" -> s"widen:$name:$ddlType"),
-      header = _ + (ColTypesKey -> renderPairs(types)))
+    publishNext(s, root, cur, head, Map("op" -> s"widen:$name:$ddlType"),
+      header = Manifest.withFacts(_, columnTypes = Some(types)))
   }
 
   /** Add a column — metadata-only commit, like [[widenColumn]] but
@@ -2881,14 +2819,15 @@ object SnapshotTable {
     */
   def addColumn(s: SparkSession, root: String, name: String, ddlType: String): Int = {
     val cur = existingVersion(s, root)
-    val columns = schema(s, root, cur).fieldNames
+    val head = version(s, root, cur)
+    val columns = schema(s, root, cur, head).fieldNames
     require(!columns.contains(name), s"column $name already exists at $root")
     // the new column's PHYSICAL name is `name` itself (adds are never
     // mapped), so it must not collide with a physical name still in
     // use by a RENAMED column: after RENAME a->b, ADD COLUMN a would
     // give two logical columns the same in-file name and every later
     // append would fail on a duplicate column
-    val mapping = columnMapping(s, root, cur)
+    val mapping = head.columnMapping
     val physInUse = columns.map(c => mapping.getOrElse(c, c))
     require(!physInUse.contains(name),
       s"column $name collides with the physical (in-file) name of a renamed column at $root")
@@ -2896,19 +2835,18 @@ object SnapshotTable {
     // files; a same-named re-add would be indistinguishable from it in
     // files written before the drop — refuse (graft's conservative
     // reading of Iceberg's re-add-gets-a-new-id rule: pick a new name)
-    require(!droppedColumns(s, root, cur).contains(name),
+    require(!head.droppedColumns.contains(name),
       s"column $name was dropped and its physical name still lives in old files at $root — re-add under a new name")
-    val types = columnTypes(s, root, cur) + (name -> ddlType)
+    val types = head.columnTypes + (name -> ddlType)
     // the new field gets a FRESH id past every id ever assigned —
     // Iceberg's add-column rule, so a drop+re-add can never alias an
     // old field's identity; tombstoned ids of dropped fields count
     // toward (and survive past) the max
-    val ids = fieldIds(s, root, cur) ++ fieldIdTombstones(s, root, cur)
+    val ids = fieldIds(s, root, cur, head) ++ head.fieldIdTombstones
     val newIds = ids + (name -> (ids.values.maxOption.getOrElse(0) + 1))
     // inherited header carried forward — see renameColumn
-    publishNext(s, root, cur, Map("op" -> s"add:$name:$ddlType"),
-      header = _ ++ Map(ColTypesKey -> renderPairs(types),
-        FieldIdsKey -> renderPairs(newIds.map { case (k, i) => k -> i.toString })))
+    publishNext(s, root, cur, head, Map("op" -> s"add:$name:$ddlType"),
+      header = Manifest.withFacts(_, columnTypes = Some(types), fieldIds = Some(newIds)))
   }
 
   /** Why `name` cannot be dropped right now — None when it can.
@@ -2919,29 +2857,19 @@ object SnapshotTable {
   private[graft] def dropRefusal(s: SparkSession, root: String, name: String): Option[String] = {
     val cur = currentVersion(s, root)
     if (cur < 1) return Some(s"no snapshot table at $root")
-    if (!schema(s, root, cur).fieldNames.contains(name))
+    val head = version(s, root, cur)
+    if (!schema(s, root, cur, head).fieldNames.contains(name))
       return Some(s"DROP COLUMN $name: no such column at $root")
-    val physical = columnMapping(s, root, cur).getOrElse(name, name)
-    val hdr = commitMeta(s, root, cur)
-    if (hdr.get(PartitionKey).contains(physical))
+    val physical = head.columnMapping.getOrElse(name, name)
+    if (head.partitionSource.contains(physical))
       return Some(s"DROP COLUMN $name: the table is day($physical)-partitioned")
-    val registered = (hdr.get(StatsKey).toSeq ++ hdr.get(BloomKey).toSeq)
-      .flatMap(_.split(",")).filter(_.nonEmpty).toSet
+    val registered = (head.statsColumns ++ head.bloomColumns).toSet
     if (registered.contains(name) || registered.contains(physical))
       return Some(s"DROP COLUMN $name: stats/bloom skipping is registered on it")
-    if (ver(s, root, cur).eqDeletes.exists(_.cols.contains(physical)))
+    if (head.eqDeletes.exists(_.cols.contains(physical)))
       return Some(s"DROP COLUMN $name: pending equality deletes key on it")
     None
   }
-
-  /** Field-id tombstones of dropped columns, straight from the stored
-    * header: key "!<id>" → id. Ride every evolution commit so a
-    * dropped field's id stays burned forever ([[fieldIds]]'s max
-    * includes them when assigning fresh ids).
-    */
-  private def fieldIdTombstones(s: SparkSession, root: String, v: Int): Map[String, Int] =
-    pairs(commitMeta(s, root, v).get(FieldIdsKey))
-      .collect { case (k, x) if k.startsWith("!") => k -> x.toInt }
 
   /** DROP COLUMN — metadata-only commit (Iceberg §Schema Evolution:
     * files are never rewritten). The column disappears from reads at
@@ -2958,20 +2886,17 @@ object SnapshotTable {
   def dropColumn(s: SparkSession, root: String, name: String): Int = {
     val cur = existingVersion(s, root)
     dropRefusal(s, root, name).foreach(r => throw new IllegalArgumentException(r))
-    val mapping = columnMapping(s, root, cur)
+    // tombstones ride every evolution commit so a dropped field's id
+    // stays burned forever (fresh ids start past them)
+    val head = version(s, root, cur)
+    val mapping = head.columnMapping
     val physical = mapping.getOrElse(name, name)
-    val ids = fieldIds(s, root, cur)
-    val newIds = (ids - name) ++ fieldIdTombstones(s, root, cur) +
-      (s"!${ids(name)}" -> ids(name))
-    val newMapping = mapping - name
-    val newTypes = columnTypes(s, root, cur) - name
-    val newDropped = droppedColumns(s, root, cur) + (physical -> ids(name))
-    publishNext(s, root, cur, Map("op" -> s"drop:$name"),
-      header = h => (h - ColMapKey - ColTypesKey - FieldIdsKey - DroppedKey) ++
-        Map(FieldIdsKey -> renderPairs(newIds.map { case (k, i) => k -> i.toString }),
-          DroppedKey -> renderPairs(newDropped.map { case (k, i) => k -> i.toString })) ++
-        (if (newMapping.nonEmpty) Map(ColMapKey -> renderPairs(newMapping)) else Map.empty) ++
-        (if (newTypes.nonEmpty) Map(ColTypesKey -> renderPairs(newTypes)) else Map.empty))
+    val ids = fieldIds(s, root, cur, head)
+    val newIds = (ids - name) ++ head.fieldIdTombstones + (s"!${ids(name)}" -> ids(name))
+    publishNext(s, root, cur, head, Map("op" -> s"drop:$name"),
+      header = Manifest.withFacts(_, columnMapping = Some(mapping - name),
+        columnTypes = Some(head.columnTypes - name), fieldIds = Some(newIds),
+        droppedColumns = Some(head.droppedColumns + (physical -> ids(name)))))
   }
 
   /** Physical file columns → the logical schema of a version. A type
@@ -3011,44 +2936,36 @@ object SnapshotTable {
     */
   def read(s: SparkSession, root: String, version: Int = -1): DataFrame = {
     val v = if (version < 0) currentVersion(s, root) else version
-    val mv = ver(s, root, v)
-    readFilesWith(s, root, v, mv.dataFiles, mv.deleteFiles, mv.eqDeletes, fileSeqFn(s, mv))
+    readVersion(s, root, v, SnapshotTable.version(s, root, v))
   }
 
-  /** Read an explicit file subset through a version's column mapping +
-    * type overrides (physical names are stable across renames, so old
-    * files read correctly under a newer version's schema).
-    */
+  /** [[read]] of version `v`, already looked up as `mv`. */
+  private def readVersion(s: SparkSession, root: String, v: Int, mv: Manifest.Version): DataFrame =
+    readFilesWith(s, mv, scanTags(root, v), mv.dataFiles, mv.deleteFiles, mv.eqDeletes,
+      fileSeqFn(s, mv))
+
   // scan tags: ride the parquet relation's options so the point-lookup
   // optimizer rule (plans.SnapshotScanPruning) can recognize a snapshot
   // scan and re-derive its manifest for metadata file pruning
   private[graft] val ScanRootKey = "graft.snapshot.root"
   private[graft] val ScanVersionKey = "graft.snapshot.version"
+  private def scanTags(root: String, v: Int) =
+    Map(ScanRootKey -> root, ScanVersionKey -> v.toString)
 
+  /** Read an explicit file subset through version `mv`'s column
+    * mapping, type overrides and dropped columns (physical names are
+    * stable across renames, so old files read correctly under a newer
+    * version's schema), `tags` riding the scan.
+    */
   private def readFilesWith(
-      s: SparkSession, root: String, v: Int, files: Seq[String],
-      deletes: Seq[String],
-      eqDels: Seq[EqDelete] = Seq.empty,
-      fileSeq: String => Long = _ => 0L): DataFrame = {
-    val mv = ver(s, root, v)
-    readWithSchema(s, files, mv.columnMapping, columnTypes(s, root, v),
-      Map(ScanRootKey -> root, ScanVersionKey -> v.toString), deletes,
-      eqDels, fileSeq, droppedColumns(s, root, v).keySet, Some(mv))
-  }
-
-  private def readWithSchema(
-      s: SparkSession, files: Seq[String],
-      mapping: Map[String, String], types: Map[String, String],
-      tags: Map[String, String] = Map.empty,
-      deletes: Seq[String] = Seq.empty,
-      eqDels: Seq[EqDelete] = Seq.empty,
-      fileSeq: String => Long = _ => 0L,
-      dropped: Set[String] = Set.empty,
-      of: Option[Manifest.Version] = None): DataFrame =
+      s: SparkSession, mv: Manifest.Version, tags: Map[String, String], files: Seq[String],
+      deletes: Seq[String], eqDels: Seq[EqDelete] = Seq.empty,
+      fileSeq: String => Long = _ => 0L): DataFrame =
     logicalView(
-      applyAllDeletes(s, files, fs => rawWidenedRead(s, fs, mapping, types, tags, of),
+      applyAllDeletes(s, files,
+        fs => rawWidenedRead(s, fs, mv.columnMapping, mv.columnTypes, tags, Some(mv)),
         deletes, eqDels, fileSeq),
-      mapping, types, dropped)
+      mv.columnMapping, mv.columnTypes, mv.droppedColumns.keySet)
 
   /** Physical-schema scan of a file set under a version's widening
     * metadata, NO logical view applied: files written before a widen
@@ -3194,8 +3111,13 @@ object SnapshotTable {
   def schema(s: SparkSession, root: String,
       version: Int = -1): org.apache.spark.sql.types.StructType = {
     val v = if (version < 0) currentVersion(s, root) else version
-    ver(s, root, v).memo(s"schema|${footerConfKey(s)}")(read(s, root, v).schema)
+    schema(s, root, v, SnapshotTable.version(s, root, v))
   }
+
+  /** [[schema]] of version `v`, already looked up as `mv`. */
+  def schema(s: SparkSession, root: String, v: Int,
+      mv: Manifest.Version): org.apache.spark.sql.types.StructType =
+    mv.memo(s"schema|${footerConfKey(s)}")(readVersion(s, root, v, mv).schema)
 
   /** `f` of the newest version of `root`, computed once per version and
     * kept with it (the REST catalog serves its registry rows this way).
@@ -3225,8 +3147,10 @@ object SnapshotTable {
     def norm(p: String) = canon(s, p)
     // version 0 = the empty table before the first commit, so a
     // changesSince(0) bootstrap replays everything as inserts
-    val fromFiles = if (fromV == 0) Seq.empty[String] else dataFiles(s, root, fromV)
-    val toFiles = dataFiles(s, root, toV)
+    val fromVer = headAt(s, root, fromV)
+    val toVer = version(s, root, toV)
+    val fromFiles = fromVer.dataFiles
+    val toFiles = toVer.dataFiles
     val fromSet = fromFiles.map(norm).toSet
     val toSet = toFiles.map(norm).toSet
     val added = toFiles.filterNot(f => fromSet.contains(norm(f)))
@@ -3240,8 +3164,8 @@ object SnapshotTable {
     // re-references the pre-delete body zero-copy) surface the
     // RESURRECTED rows as 'insert'. Still O(affected files), never
     // O(table).
-    val delFromFiles = if (fromV == 0) Seq.empty[String] else deleteFiles(s, root, fromV)
-    val delToFiles = deleteFiles(s, root, toV)
+    val delFromFiles = fromVer.deleteFiles
+    val delToFiles = toVer.deleteFiles
     val delFromSet = delFromFiles.map(norm).toSet
     val delToSet = delToFiles.map(norm).toSet
     val delAdded = delToFiles.filterNot(f => delFromSet.contains(norm(f)))
@@ -3260,11 +3184,9 @@ object SnapshotTable {
     // exceptAll net the unchanged rows out. File-accurate but
     // key-conservative: a candidate file with no matching keys reads
     // and nets to zero (Iceberg CDC pays the same scan).
-    val fromVer = if (fromV == 0) None else Some(ver(s, root, fromV))
-    val toVer = ver(s, root, toV)
-    val eqFrom = fromVer.fold(Seq.empty[EqDelete])(_.eqDeletes)
+    val eqFrom = fromVer.eqDeletes
     val eqTo = toVer.eqDeletes
-    val fileSeqFrom = fromVer.fold((_: String) => 0L)(fileSeqFn(s, _))
+    val fileSeqFrom = fileSeqFn(s, fromVer)
     val fileSeqTo = fileSeqFn(s, toVer)
     val eqAffected =
       if (eqFrom.isEmpty && eqTo.isEmpty) Seq.empty[String]
@@ -3281,12 +3203,13 @@ object SnapshotTable {
     // empty-side frames need the to-version schema; derive it cheaply
     // from the other side (at least one side is non-empty unless the
     // versions are file-identical)
+    val tags = scanTags(root, toV)
     def readOr(files: Seq[String], deletes: Seq[String], eqDels: Seq[EqDelete],
                fileSeq: String => Long, other: Seq[String]): DataFrame =
-      if (files.nonEmpty) readFilesWith(s, root, toV, files, deletes, eqDels, fileSeq)
-      else readFilesWith(s, root, toV, other, Seq.empty).limit(0)
+      if (files.nonEmpty) readFilesWith(s, toVer, tags, files, deletes, eqDels, fileSeq)
+      else readFilesWith(s, toVer, tags, other, Seq.empty).limit(0)
     if (added.isEmpty && removed.isEmpty && affected.isEmpty)
-      return read(s, root, toV).limit(0)
+      return readVersion(s, root, toV, toVer).limit(0)
         .withColumn("change_type", lit(""))
     val after = readOr(added ++ affected, delToFiles, eqTo, fileSeqTo, removed)
     val before = readOr(removed ++ affected, delFromFiles, eqFrom, fileSeqFrom, added)

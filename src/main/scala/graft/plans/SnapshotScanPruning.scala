@@ -42,7 +42,7 @@ object SnapshotScanPruning extends Rule[LogicalPlan] {
       val version = hfs.options(SnapshotTable.ScanVersionKey).toInt
       def norm(p: String) = SnapshotTable.canon(spark, p)
       val current = hfs.location.inputFiles.toSeq
-      val keep = SnapshotTable.pruneEntries(spark, root, version, cond)
+      val keep = SnapshotTable.pruneEntries(SnapshotTable.version(spark, root, version), cond)
         .map(norm).toSet
       val target = current.filter(p => keep.contains(norm(p)))
       if (target.size < current.size) {

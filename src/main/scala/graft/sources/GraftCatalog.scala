@@ -237,12 +237,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     // PHYSICAL (in-file) mapping is simulated alongside: names freed
     // logically by a rename stay occupied physically, so ADD must
     // check both namespaces or appends die on duplicate file columns
-    var evolving = SnapshotTable.schema(spark, root)
-    var physOf: Map[String, String] = {
-      val m = SnapshotTable.columnMapping(spark, root,
-        SnapshotTable.currentVersion(spark, root))
-      evolving.fieldNames.map(c => c -> m.getOrElse(c, c)).toMap
-    }
+    val cur = SnapshotTable.currentVersion(spark, root)
+    val head = SnapshotTable.version(spark, root, cur)
+    var evolving = SnapshotTable.schema(spark, root, cur, head)
+    var physOf: Map[String, String] =
+      evolving.fieldNames.map(c => c -> head.columnMapping.getOrElse(c, c)).toMap
     changes.foreach {
       case r: TableChange.RenameColumn =>
         require(r.fieldNames.length == 1, "nested column rename is not supported")

@@ -101,7 +101,7 @@ object PersistentCatalog {
     */
   def restore(s: SparkSession, registryRoot: String): Seq[String] = {
     val db = SnapshotTable
-      .commitMeta(s, registryRoot, SnapshotTable.currentVersion(s, registryRoot))
+      .version(s, registryRoot, SnapshotTable.currentVersion(s, registryRoot)).header
       .getOrElse(DbKey, Catalog.DB)
     // the events view rebuilds TIMESTAMP(NANOS); a fresh session needs
     // the same read conf Catalog.register sets

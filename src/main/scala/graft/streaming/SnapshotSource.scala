@@ -269,7 +269,7 @@ class SnapshotSourceProvider extends StreamSourceProvider with DataSourceRegiste
       .orElse(parameters.get("timestamp_ms").map { raw =>
         val ts = raw.trim.toLong
         val cur = SnapshotTable.currentVersion(s, root)
-        (1 to cur).filter(SnapshotTable.committedAt(s, root, _) <= ts)
+        (1 to cur).filter(SnapshotTable.version(s, root, _).committedAt <= ts)
           .maxOption.getOrElse(throw new IllegalArgumentException(
             s"no version of $root committed at or before $ts"))
       })
@@ -334,7 +334,7 @@ object SnapshotSourceProvider {
   private[streaming] def filesMeta(
       s: SparkSession, root: String, version: Int): DataFrame = {
     val v = if (version < 0) SnapshotTable.currentVersion(s, root) else version
-    val rows = SnapshotTable.dataFilesWithPartitions(s, root, v).map {
+    val rows = SnapshotTable.version(s, root, v).dataEntries.map(e => (e.path, e.annots)).map {
       case (f, a) =>
         val part = a.filterNot { case (k, _) =>
           k.startsWith("_min_") || k.startsWith("_max_") ||
@@ -362,8 +362,8 @@ object SnapshotSourceProvider {
   private[streaming] def historyMeta(s: SparkSession, root: String): DataFrame = {
     val cur = SnapshotTable.currentVersion(s, root)
     val rows = (1 to cur).map { v =>
-      Row(v.toLong, SnapshotTable.committedAt(s, root, v),
-        SnapshotTable.commitMeta(s, root, v).getOrElse("op", ""),
+      val mv = SnapshotTable.version(s, root, v)
+      Row(v.toLong, mv.committedAt, mv.header.getOrElse("op", ""),
         SnapshotTable.recordCount(s, root, v))
     }
     import scala.jdk.CollectionConverters._

@@ -97,7 +97,7 @@ class CommitConcurrencySpec extends SparkSpec {
     val expected = (0 until 2).flatMap(w => (0 until 25).map(i => w * 1000 + i)).sorted
     assert(rows.toSeq === expected)
     // every writer's per-commit meta is present exactly once
-    val metas = (1 to 50).map(v => SnapshotTable.commitMeta(spark, root, v))
+    val metas = (1 to 50).map(v => SnapshotTable.version(spark, root, v).header)
       .map(m => (m("writer"), m("seq")))
     assert(metas.distinct.size === 50)
   }

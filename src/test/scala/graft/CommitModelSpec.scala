@@ -178,7 +178,7 @@ class CommitModelSpec extends SparkSpec {
           if (failB != null) throw failB
           land(vB, state.copy(rows = state.rows ++ rowsB))
           land(vA, state.copy(rows = state.rows ++ rowsA))
-          assert(SnapshotTable.commitMeta(spark, root, vA).get("op").isEmpty &&
+          assert(SnapshotTable.version(spark, root, vA).header.get("op").isEmpty &&
             SnapshotTable.dataFiles(spark, root, vA).size >
               SnapshotTable.dataFiles(spark, root, vB).size,
             "the losing append rebased onto the winner's version")

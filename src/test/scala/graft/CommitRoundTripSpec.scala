@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions.col
 
 import graft.endpoint.RestCatalog
-import graft.lake.{Manifest, SnapshotTable}
+import graft.lake.{DeltaInterop, IcebergInterop, Manifest, SnapshotTable}
 import graft.sources.PersistentCatalog
 
 /** Metadata round trips per commit: how many files under `_manifests/`
@@ -13,7 +13,10 @@ import graft.sources.PersistentCatalog
   * The counts are pinned: a commit path that starts re-reading a
   * manifest, or writes one more file, shows here as a changed count.
   * Wire commits through the REST catalog also pin how often they open
-  * the client's staged files (footer reads).
+  * the client's staged files (footer reads). Reads made right after a
+  * commit are pinned too: inside [[Manifest.RacyMs]] of its publish,
+  * every lookup of the new version re-reads its manifest, so their
+  * opens count the lookups one call makes.
   */
 class CommitRoundTripSpec extends SparkSpec {
   import spark.implicits._
@@ -64,10 +67,48 @@ class CommitRoundTripSpec extends SparkSpec {
     assert(counts.toMap === Pinned)
   }
 
+  // _manifests/ opens of one call made right after an overwrite commit
+  // (the new version: its manifest and its one fragment), every older
+  // version settled: the first parse plus one re-read per further lookup
+  private val RacyPinned: Map[String, Int] = Map(
+    "read_schema" -> 2, "iceberg_metadata" -> 2, "delta_log" -> 2)
+
+  test("a call right after a commit looks up the new version a fixed number of times") {
+    conf.set("fs.countfs.impl", classOf[CountingTestFs].getName)
+    val root = "countfs:///tmp/graft_test/commit_round_trips/racy"
+    val export = "/tmp/graft_test/commit_round_trips/racy_delta"
+    SnapshotTable.drop(spark, root)
+    def rows(n: Int) = (1 to n).map(i => (i.toLong, s"r$i")).toDF("id", "v").coalesce(1)
+    SnapshotTable.commit(spark, root, rows(5))
+    val fs = new Path(root).getFileSystem(conf)
+    val counts = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    def measure(kind: String)(call: Int => Unit): Unit = {
+      var attempts = 0
+      while (!counts.contains(kind)) {
+        attempts += 1
+        Thread.sleep(Manifest.RacyMs + 200)
+        val cur = SnapshotTable.currentVersion(spark, root)
+        (1 to cur).foreach(SnapshotTable.dataFiles(spark, root, _)) // settle every version
+        val v = SnapshotTable.commit(spark, root, rows(5 + attempts), append = false)
+        val o = CountingTestFs.opens.get
+        call(v)
+        val opened = CountingTestFs.opens.get - o
+        val mtime = fs.getFileStatus(Manifest.path(root, s"v$v")).getModificationTime
+        // a lookup after the window re-reads nothing: such a run is short
+        if (System.currentTimeMillis - mtime < Manifest.RacyMs) counts(kind) = opened
+        else assert(attempts < 3, s"$kind outlived the racy window $attempts times")
+      }
+    }
+    measure("read_schema")(v => SnapshotTable.read(spark, root, v).schema)
+    measure("iceberg_metadata")(v => IcebergInterop.writeMetadata(spark, root, v))
+    measure("delta_log")(v => DeltaInterop.writeLog(spark, root, export, v))
+    assert(counts.toMap === RacyPinned)
+  }
+
   // (manifest opens, manifest creates, staged-file opens) per wire commit;
   // each includes rendering the response's metadata for the new version
   private val WirePinned: Map[String, (Int, Int, Int)] = Map(
-    "add_snapshot" -> (26, 2, 3), "set_snapshot_ref" -> (1, 0, 0),
+    "add_snapshot" -> (4, 2, 3), "set_snapshot_ref" -> (1, 0, 0),
     "transaction" -> (1, 4, 4))
 
   test("each wire commit opens and creates a fixed number of files") {

@@ -264,14 +264,15 @@ class EqDeleteSpec extends SparkSpec {
       statsCols = Seq("id"))
     val all = SnapshotTable.dataFiles(spark, root, 2)
     val loImages = spark.range(10, 20).select(col("id"), lit("lo").as("v"))
-    val cands = SnapshotTable.cdcPlanningCandidates(spark, root, 2, loImages, all)
+    val v2 = SnapshotTable.version(spark, root, 2)
+    val cands = SnapshotTable.cdcPlanningCandidates(spark, root, 2, v2, loImages, all)
     assert(cands.nonEmpty && cands.size < all.size,
       s"images bounded to [10,20) must prune the 1000+ files: ${cands.size}/${all.size}")
     // a null image value on the stats column disables pruning (sound:
     // min/max is null-blind, <=> can match null rows)
     val withNull = loImages.unionByName(
       Seq((Option.empty[Long], "x")).toDF("id", "v"))
-    assert(SnapshotTable.cdcPlanningCandidates(spark, root, 2, withNull, all) === all)
+    assert(SnapshotTable.cdcPlanningCandidates(spark, root, 2, v2, withNull, all) === all)
     // end-to-end: applyChangesMor over the pruned plan stays exact
     val vA = SnapshotTable.applyChangesMor(spark, root,
       inserts = Seq((15L, "new")).toDF("id", "v"),

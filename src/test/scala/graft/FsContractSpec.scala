@@ -131,7 +131,8 @@ class FsContractSpec extends SparkSpec {
     // path throws on non-"file" schemes)
     SnapshotTable.commitPartitionedByDay(spark, s"graftshift://$proot", df, "ts")
     assert(SnapshotTable.read(spark, s"graftshift://$proot").count() == 2)
-    assert(SnapshotTable.dataFilesWithPartitions(spark, s"graftshift://$proot", 1)
+    assert(SnapshotTable.version(spark, s"graftshift://$proot", 1).dataEntries
+      .map(e => (e.path, e.annots))
       .forall(_._2.contains("_graft_day")))
     assert(!new java.io.File(proot).exists,
       "spelled path exists on raw disk — partitioned write bypassed the FS API")

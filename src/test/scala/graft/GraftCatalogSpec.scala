@@ -48,7 +48,7 @@ class GraftCatalogSpec extends SparkSpec {
     SnapshotTable.drop(spark, root)
     SnapshotTable.commit(spark, root,
       (0 until 50).map(k => (k.toLong, s"r$k")).toDF("id", "v"))
-    val t1 = SnapshotTable.committedAt(spark, root, 1)
+    val t1 = SnapshotTable.version(spark, root, 1).committedAt
     SnapshotTable.commitAppend(spark, root,
       (50 until 80).map(k => (k.toLong, s"r$k")).toDF("id", "v"))
     SnapshotTable.deleteWhere(spark, root, col("id") < 10)

@@ -504,7 +504,7 @@ class IcebergInteropSpec extends SparkSpec {
     val log = """\{"timestamp-ms":(\d+),"snapshot-id":(\d+)\}""".r
       .findAllMatchIn(metaJson).map(m => (m.group(1).toLong, m.group(2).toInt)).toSeq
     assert(log.map(_._2) === Seq(1, 2, 3), s"log must list live snapshots in order: $log")
-    val t2 = SnapshotTable.committedAt(spark, root, 2)
+    val t2 = SnapshotTable.version(spark, root, 2).committedAt
     assert(log.filter(_._1 <= t2).maxBy(e => (e._1, e._2))._2 === 2)
     // ref DRIFT: a tag created after the render must surface on the
     // next load (real Iceberg rewrites metadata.json on ref changes)

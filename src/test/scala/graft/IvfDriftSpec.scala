@@ -99,8 +99,8 @@ class IvfDriftSpec extends SparkSpec {
       clustered(vecs.filter(col("vec_id") % 2 === 1), 1000000L))
     assert(IvfIndex.needsRebuild(spark, mroot))
     // the append carried the build parameter to the head it created
-    val headMeta = SnapshotTable.commitMeta(spark, s"$mroot/lists",
-      SnapshotTable.currentVersion(spark, s"$mroot/lists"))
+    val headMeta = SnapshotTable.version(spark, s"$mroot/lists",
+      SnapshotTable.currentVersion(spark, s"$mroot/lists")).header
     assert(headMeta.get("n_lists") === Some("8"), headMeta.toString)
     assert(Maintenance.plan(spark, tbl, policy).indexesRebuilt === Seq(mroot))
     assert(IvfIndex.needsRebuild(spark, mroot), "plan must not rebuild")

@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.functions.col
 
-import graft.lake.{Manifest, SnapshotTable}
+import graft.lake.{DeltaInterop, IcebergInterop, Manifest, SnapshotTable}
 
 /** `countfs://`: [[GraftTestFs]] under its own scheme, counting every
   * open and every create of a file under a `_manifests/` directory
@@ -163,6 +163,22 @@ class ManifestCacheSpec extends SparkSpec {
     val o2 = CountingTestFs.opens.get
     assert(SnapshotTable.read(spark, root, 3).count() === 2)
     assert(CountingTestFs.opens.get === o2, "the complete manifest is cached once read")
+  }
+
+  test("a torn old manifest fails an export instead of reading as expired") {
+    val root = fresh("torn_export")
+    SnapshotTable.commit(spark, root, Seq((1L, "a")).toDF("id", "v"))
+    SnapshotTable.commit(spark, root, Seq((2L, "b")).toDF("id", "v"))
+    // v1 loses its trailer for good (a publish that died mid-copy); the
+    // table was never exported, so no earlier export can stand in for it
+    val text = new String(readAll(manifest(root, 1)), "UTF-8")
+    plant(manifest(root, 1), text.replace("#graft.eof\n", "").getBytes("UTF-8"))
+    assert(!fs(root).exists(new Path(s"$root/_iceberg")))
+    val iceberg = intercept[IllegalStateException](IcebergInterop.writeMetadata(spark, root, 2))
+    assert(iceberg.getMessage.contains("incomplete"), iceberg.getMessage)
+    val out = "/tmp/graft_test/manifest_cache/torn_export_delta"
+    val delta = intercept[IllegalStateException](DeltaInterop.writeLog(spark, root, out))
+    assert(delta.getMessage.contains("incomplete"), delta.getMessage)
   }
 
   private def readAll(p: Path): Array[Byte] = {

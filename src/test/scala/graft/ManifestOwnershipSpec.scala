@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * main source names the `_manifests` directory or builds lines from
   * the trailer, the fragment-ref prefix or an entry annotation
   * constant, so the format and its CAS publish stay one module's
-  * decision.
+  * decision. It also owns the header vocabulary: no other main source
+  * declares a header-key constant or defines or calls the `k=v,k=v`
+  * header codec.
   */
 class ManifestOwnershipSpec extends AnyFunSuite {
 
@@ -29,6 +31,25 @@ class ManifestOwnershipSpec extends AnyFunSuite {
       val text = new String(Files.readAllBytes(p), "UTF-8")
       (if (text.contains("_manifests")) Seq(s"$p: _manifests") else Nil) ++
         constants.filter(_.findFirstIn(text).isDefined).map(c => s"$p: $c")
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("only lake/Manifest.scala declares header keys or runs their k=v codec") {
+    val ownerText = new String(Files.readAllBytes(owner), "UTF-8")
+    val keys = "val (\\w+Key) = \"(\\w+)\"".r.findAllMatchIn(ownerText)
+      .map(m => m.group(1) -> m.group(2)).toSeq
+    assert(keys.map(_._2).toSet === Set("committed_at", "colmap", "coltypes", "fieldids",
+      "dropped", "tblprops", "partition", "statscols", "bloomcols"),
+      s"header keys not found in $owner")
+    val rules =
+      keys.map { case (name, _) => s"\\b$name\\b".r } ++
+        keys.map { case (_, key) => s"val\\s+\\w+\\s*(:\\s*String\\s*)?=\\s*\"$key\"".r } ++
+        Seq("\\bpairs\\(".r, "\\brenderPairs\\b".r, "def\\s+pairs\\b".r,
+          "Manifest\\.\\{[^}]*\\bpairs\\b".r)
+    val offenders = sources.filter(_ != owner).flatMap { p =>
+      val text = new String(Files.readAllBytes(p), "UTF-8")
+      rules.filter(_.findFirstIn(text).isDefined).map(r => s"$p: $r")
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }

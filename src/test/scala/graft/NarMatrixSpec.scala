@@ -67,7 +67,7 @@ class NarMatrixSpec extends SparkSpec {
       val cur = SnapshotTable.currentVersion(spark, root)
       assert(cur === 7)
       (1 to cur).foreach(v =>
-        assert(SnapshotTable.commitMeta(spark, root, v).nonEmpty))
+        assert(SnapshotTable.version(spark, root, v).header.nonEmpty))
     }
   }
 

@@ -56,12 +56,12 @@ class OptimizeBinpackSpec extends SparkSpec {
     // batch this small)
     SnapshotTable.commitPartitionedByDay(spark, root, rows.toDF("id", "ts"), "ts",
       saltBuckets = 4)
-    val before = SnapshotTable.dataFilesWithPartitions(spark, root, 1)
+    val before = SnapshotTable.version(spark, root, 1).dataEntries.map(e => (e.path, e.annots))
     assert(before.size > 2, "salted partitioned write must produce several files")
     val v = SnapshotTable.compactSmallFiles(spark, root,
       smallBytes = 1L << 20, targetBytes = 10L << 20)
     assert(v === 2)
-    val after = SnapshotTable.dataFilesWithPartitions(spark, root, v)
+    val after = SnapshotTable.version(spark, root, v).dataEntries.map(e => (e.path, e.annots))
     val byDay = after.groupBy(_._2.get("_graft_day"))
     assert(byDay.keySet === Set(Some("2024-01-01"), Some("2024-01-02")),
       s"every packed output must carry its day annotation, got ${byDay.keySet}")
@@ -118,7 +118,7 @@ class OptimizeBinpackSpec extends SparkSpec {
     val v = SnapshotTable.compactSmallFiles(spark, root,
       smallBytes = 1L << 20, targetBytes = 10L << 20)
     assert(v === 2)
-    val annots = SnapshotTable.dataFilesWithPartitions(spark, root, v)
+    val annots = SnapshotTable.version(spark, root, v).dataEntries.map(e => (e.path, e.annots))
     assert(annots.size === 1)
     assert(annots.head._2.contains("_min_id") && annots.head._2.contains("_max_id"),
       s"packed output must be re-annotated with registered stats, got ${annots.head._2}")
@@ -138,7 +138,7 @@ class OptimizeBinpackSpec extends SparkSpec {
     val v = SnapshotTable.compactSmallFiles(spark, root,
       smallBytes = 1L << 20, targetBytes = 10000, sortCols = Seq("id"))
     assert(v === 5)
-    val ranges = SnapshotTable.dataFilesWithPartitions(spark, root, v)
+    val ranges = SnapshotTable.version(spark, root, v).dataEntries.map(e => (e.path, e.annots))
       .map { case (_, a) => (a("_min_id").toDouble, a("_max_id").toDouble) }
       .sortBy(_._1)
     assert(ranges.size >= 2, s"target size must force 2+ packed outputs, got $ranges")

@@ -755,10 +755,10 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       """{"updates":[{"action":"remove-properties","removals":["owner"]}]}""")
     assert(c3 == 200 && !r3.contains("owner") && r3.contains("write.target"), r3)
     // time travel: the pre-removal version still carries it
-    assert(SnapshotTable.properties(spark, loc, vProps)
+    assert(SnapshotTable.version(spark, loc, vProps).properties
       === Map("owner" -> "team a,b=c", "write.target" -> "512m"))
-    assert(SnapshotTable.properties(spark, loc,
-      SnapshotTable.currentVersion(spark, loc)) === Map("write.target" -> "512m"))
+    assert(SnapshotTable.version(spark, loc,
+      SnapshotTable.currentVersion(spark, loc)).properties === Map("write.target" -> "512m"))
     // an empty properties action is a client error
     val (c4, _) = RestCatalog.post(port, base,
       """{"updates":[{"action":"set-properties","updates":{}}]}""")
@@ -788,8 +788,8 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       """{"updates":[{"action":"set-properties","updates":{
         |"template":"{\"cols\":[1,2]} trailing","note":"say \"hi\"","retries":"3"}}]}""".stripMargin)
     assert(c1 == 200, r1)
-    val props = SnapshotTable.properties(spark, loc,
-      SnapshotTable.currentVersion(spark, loc))
+    val props = SnapshotTable.version(spark, loc,
+      SnapshotTable.currentVersion(spark, loc)).properties
     assert(props === Map(
       "template" -> """{"cols":[1,2]} trailing""",
       "note" -> """say "hi"""",
@@ -806,8 +806,8 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val (c4, _) = RestCatalog.post(port, base,
       """{"updates":[{"action":"remove-properties","removals":["weird]key","retries"]}]}""")
     assert(c4 == 200)
-    val left = SnapshotTable.properties(spark, loc,
-      SnapshotTable.currentVersion(spark, loc))
+    val left = SnapshotTable.version(spark, loc,
+      SnapshotTable.currentVersion(spark, loc)).properties
     assert(!left.contains("weird]key") && !left.contains("retries") &&
       left.contains("template"), left.toString)
     val (cD, _) = RestCatalog.delete(port, "/v1/tables/rest_spec_props_esc")
@@ -1146,7 +1146,7 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       assert(s2.sql(
         "SELECT * FROM restspec.graft.rest_spec_mnt VERSION AS OF 1")
         .count() === 30)
-      val t1 = SnapshotTable.committedAt(spark, root, 1)
+      val t1 = SnapshotTable.version(spark, root, 1).committedAt
       val iso = java.time.Instant.ofEpochMilli(t1).toString
       assert(s2.sql(
         s"SELECT * FROM restspec.graft.rest_spec_mnt TIMESTAMP AS OF '$iso'")

@@ -209,7 +209,8 @@ class RestWireStructureSpec extends SparkSpec with org.scalatest.BeforeAndAfterA
         """{"updates":[{"action":"set-properties","updates":{"owner":"team","tier":"gold"}}]}"""))
       val (c2, _) = post(s"$tables/ws_props_$s", f(
         """{"updates":[{"action":"remove-properties","removals":["tier"]}]}"""))
-      (c1, c2, SnapshotTable.properties(spark, loc, SnapshotTable.currentVersion(spark, loc)))
+      (c1, c2,
+        SnapshotTable.version(spark, loc, SnapshotTable.currentVersion(spark, loc)).properties)
     }
     assert(results.head == ((200, 200, Map("owner" -> "team"))), results.toString)
     assert(results(1) == results.head, results.toString)
@@ -293,7 +294,7 @@ class RestWireStructureSpec extends SparkSpec with org.scalatest.BeforeAndAfterA
     val (c, r) = post(s"$tables/ws_prop_action",
       """{"updates":[{"action":"set-properties","updates":{"action":"x"}}]}""")
     assert(c == 200, r)
-    assert(SnapshotTable.properties(spark, loc, SnapshotTable.currentVersion(spark, loc))
+    assert(SnapshotTable.version(spark, loc, SnapshotTable.currentVersion(spark, loc)).properties
       == Map("action" -> "x"))
   }
 

@@ -51,9 +51,9 @@ class SnapshotTableSpec extends SparkSpec {
     // committed_at is auto-stamped on every manifest (timestamp
     // travel); fieldids is persisted by every data commit (r15) so id
     // lookups never re-infer the schema
-    assert(SnapshotTable.commitMeta(spark, root, 1) - "committed_at" ===
+    assert(SnapshotTable.version(spark, root, 1).header - "committed_at" ===
       Map("streaming_batch" -> "7", "source" -> "spec", "fieldids" -> "x=1"))
-    assert(SnapshotTable.committedAt(spark, root, 1) > 0L)
+    assert(SnapshotTable.version(spark, root, 1).committedAt > 0L)
     assert(SnapshotTable.dataFiles(spark, root, 1).forall(_.endsWith(".parquet")))
     assert(SnapshotTable.read(spark, root).count() === 1)
   }
@@ -119,7 +119,7 @@ class SnapshotTableSpec extends SparkSpec {
     val filesAfter = SnapshotTable.dataFiles(spark, root, 3)
     assert(filesBefore.toSet.intersect(filesAfter.toSet).nonEmpty,
       "untouched files must be re-listed, not rewritten")
-    assert(SnapshotTable.commitMeta(spark, root, 3).get("rewrote") === Some("1"))
+    assert(SnapshotTable.version(spark, root, 3).header.get("rewrote") === Some("1"))
     // time travel: pre-delete versions are intact
     assert(SnapshotTable.read(spark, root, 2).collect().map(_.getInt(0)).toSet === Set(1, 2, 3, 10, 11))
     // no-match delete is a no-op returning the current version
@@ -140,7 +140,7 @@ class SnapshotTableSpec extends SparkSpec {
     // only the file containing k=2 was rewritten
     val filesAfter = SnapshotTable.dataFiles(spark, root, 3)
     assert(filesBefore.toSet.intersect(filesAfter.toSet).nonEmpty)
-    assert(SnapshotTable.commitMeta(spark, root, 3).get("op") === Some("update"))
+    assert(SnapshotTable.version(spark, root, 3).header.get("op") === Some("update"))
     // time travel: pre-update content intact
     assert(SnapshotTable.read(spark, root, 2).collect()
       .map(r => (r.getInt(0), r.getInt(1))).toSet === Set((1, 10), (2, 20), (3, 30), (4, 40)))
@@ -438,7 +438,7 @@ class SnapshotTableSpec extends SparkSpec {
     assert(out.count() === df.filter(pred).count())
     // hot-day salting: a day's rows spread across multiple writer tasks
     // (multiple files) but stay bounded by the salt-bucket count
-    val day3 = SnapshotTable.dataFilesWithPartitions(spark, root, 1)
+    val day3 = SnapshotTable.version(spark, root, 1).dataEntries.map(e => (e.path, e.annots))
       .filter(_._2.get("_graft_day").contains("2024-01-03"))
     assert(day3.size > 1 && day3.size <= 8, s"expected 2-8 salted files, got ${day3.size}")
     // unprunable predicate shapes fall back to full scan but stay correct
@@ -453,7 +453,7 @@ class SnapshotTableSpec extends SparkSpec {
       (lit("2024-02-01 00:00:00").cast("timestamp") +
         expr("make_interval(0, 0, 0, 0, CAST(id % 96 AS INT), 0, 0)")).as("ts"))
     def filesPerDay(root: String) =
-      SnapshotTable.dataFilesWithPartitions(spark, root, 1)
+      SnapshotTable.version(spark, root, 1).dataEntries.map(e => (e.path, e.annots))
         .groupBy(_._2.get("_graft_day")).map { case (d, fs) => d -> fs.size }
     // default: the batch is far below one target file per day, so the
     // salt collapses and each day lands as exactly one file
@@ -493,7 +493,7 @@ class SnapshotTableSpec extends SparkSpec {
         "i -> sha2(concat(cast(id AS string), ':', cast(i AS string)), 256)))")
         .as("pad"))
     def filesPerDay(root: String) =
-      SnapshotTable.dataFilesWithPartitions(spark, root, 1)
+      SnapshotTable.version(spark, root, 1).dataEntries.map(e => (e.path, e.annots))
         .groupBy(_._2.get("_graft_day")).map { case (d, fs) => d -> fs.size }
     val root = "/tmp/graft_test/snap_salt_feedback"
     SnapshotTable.drop(spark, root)
@@ -616,8 +616,8 @@ class SnapshotTableSpec extends SparkSpec {
     SnapshotTable.commit(spark, root, Seq(1, 2).toDF("x"))
     Thread.sleep(2)
     SnapshotTable.commit(spark, root, Seq(3).toDF("x"))
-    val t1 = SnapshotTable.committedAt(spark, root, 1)
-    val t2 = SnapshotTable.committedAt(spark, root, 2)
+    val t1 = SnapshotTable.version(spark, root, 1).committedAt
+    val t2 = SnapshotTable.version(spark, root, 2).committedAt
     assert(t2 > t1, "commit stamps must be strictly increasing")
     assert(SnapshotTable.readAsOf(spark, root, t1).count() === 2)
     assert(SnapshotTable.readAsOf(spark, root, t2 - 1).count() === 2) // between commits
@@ -688,7 +688,8 @@ class SnapshotTableSpec extends SparkSpec {
     SnapshotTable.deleteWhere(spark, root, col("k") === 1)
     SnapshotTable.renameColumn(spark, root, "amount", "amt")
     val cur = SnapshotTable.currentVersion(spark, root)
-    val withAnnots = SnapshotTable.dataFilesWithPartitions(spark, root, cur)
+    val withAnnots =
+      SnapshotTable.version(spark, root, cur).dataEntries.map(e => (e.path, e.annots))
     // untouched files carried their stats through the rewrite AND the
     // rename; every line still has its _rows count
     assert(withAnnots.nonEmpty)
@@ -873,9 +874,9 @@ class SnapshotTableSpec extends SparkSpec {
     val v = SnapshotTable.publishBranch(spark, root, "audit")
     assert(SnapshotTable.read(spark, root, v).columns.toSeq === Seq("id", "v"),
       "the dropped column stays dropped")
-    assert(SnapshotTable.properties(spark, root, v) === Map("owner" -> "ops"))
+    assert(SnapshotTable.version(spark, root, v).properties === Map("owner" -> "ops"))
     assert(SnapshotTable.fieldIds(spark, root, v) === SnapshotTable.fieldIds(spark, root, cur))
-    assert(SnapshotTable.droppedColumns(spark, root, v) ===
-      SnapshotTable.droppedColumns(spark, root, cur))
+    assert(SnapshotTable.version(spark, root, v).droppedColumns ===
+      SnapshotTable.version(spark, root, cur).droppedColumns)
   }
 }

@@ -110,7 +110,7 @@ class SqlRelationSpec extends SparkSpec {
     val root = "/tmp/graft_test/rel_tt"
     SnapshotTable.drop(spark, root)
     SnapshotTable.commit(spark, root, Seq((1L, "a")).toDF("id", "v"))
-    val t1 = SnapshotTable.committedAt(spark, root, 1)
+    val t1 = SnapshotTable.version(spark, root, 1).committedAt
     SnapshotTable.commit(spark, root, Seq((2L, "b")).toDF("id", "v"))
     assert(load(root).count() === 2)
     assert(load(root, "version" -> "1").count() === 1)

@@ -165,7 +165,7 @@ class StatsSkippingSpec extends SparkSpec {
     SnapshotTable.renameColumn(spark, root, "v", "val")
     val cur = SnapshotTable.currentVersion(spark, root)
     // the inherited header survived all three: properties still read…
-    assert(SnapshotTable.properties(spark, root, cur) === Map("owner" -> "graft"))
+    assert(SnapshotTable.version(spark, root, cur).properties === Map("owner" -> "graft"))
     // …and the stats annotations still prune the point lookup
     val q = SnapshotTable.readWhere(spark, root, col("id") === 75L)
     assert(q.count() === 1)

@@ -26,7 +26,8 @@ class TimeTravelResolveSpec extends SparkSpec {
       if (k == 1) SnapshotTable.commit(spark, root, Seq((k.toLong, s"r$k")).toDF("id", "v"))
       else SnapshotTable.commitAppend(spark, root, Seq((k.toLong, s"r$k")).toDF("id", "v"))
     }
-    val stamps = (1 to versions).map(v => v -> SnapshotTable.committedAt(spark, root, v)).toMap
+    val stamps =
+      (1 to versions).map(v => v -> SnapshotTable.version(spark, root, v).committedAt).toMap
     // exact resolution at every boundary (stamps are strictly increasing)
     (1 to versions).foreach { v =>
       assert(SnapshotTable.versionAt(spark, root, stamps(v)) === v)
