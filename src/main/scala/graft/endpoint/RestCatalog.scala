@@ -11,7 +11,7 @@ import org.json4s.jackson.JsonMethods.compact
 import graft.Json.{arr, at, bool, double, jstr, long, optLong, parse, parseObject,
   present, str, strs}
 import graft.lake.{IcebergInterop, SnapshotTable}
-import graft.sources.{Catalog, PersistentCatalog}
+import graft.sources.{Catalog, Footer, PersistentCatalog}
 
 /** HTTP REST catalog — the reference's Lakekeeper role as a WIRE
   * protocol, not just a durable registry. The reference stack runs
@@ -1874,11 +1874,16 @@ object RestCatalog {
           "move it in a single-table commit")
       change match {
         case AddFiles(files, posDels, eqDels) =>
-          stagedSchemaConflict(loc, files).map(409 -> _)
-            .orElse(deleteSchemaConflict(loc, posDels, eqDels))
+          // each staged footer is opened once: the schema checks read
+          // it, the commit's footer pass reuses it
+          val footers = scala.collection.mutable.Map.empty[String, Footer.Facts]
+          def schemaOf(f: String) = Footer.sparkSchema(spark, footers.getOrElseUpdate(f,
+            Footer.read(spark.sparkContext.hadoopConfiguration, f)))
+          stagedSchemaConflict(loc, files, schemaOf).map(409 -> _)
+            .orElse(deleteSchemaConflict(loc, posDels, eqDels, schemaOf))
             .toLeft(Step { () =>
               val nv = SnapshotTable.commitFiles(spark, loc, files,
-                posDeletes = posDels, eqDeletes = eqDels)
+                posDeletes = posDels, eqDeletes = eqDels, footers = footers.toMap)
               (nv, Some(() => { SnapshotTable.rollback(spark, loc, nv - 1); () }))
             })
         case SetMain(sid) if sid.contains(cur.toLong) => Right(unchanged)
@@ -2166,10 +2171,10 @@ object RestCatalog {
       * nothing, so it 409s here instead). Returns (status, message).
       */
     private def deleteSchemaConflict(loc: String,
-        posDels: Seq[String], eqDels: Seq[(String, Seq[String])])
-        : Option[(Int, String)] = {
+        posDels: Seq[String], eqDels: Seq[(String, Seq[String])],
+        schemaOf: String => org.apache.spark.sql.types.StructType): Option[(Int, String)] = {
       posDels.iterator.flatMap { f =>
-        val sch = graft.sources.Footer.schemaOf(spark, f)
+        val sch = schemaOf(f)
         def typ(n: String) = sch.find(_.name == n).map(_.dataType.simpleString)
         if (typ("file_path").contains("string") && typ("pos").contains("bigint"))
           None
@@ -2179,7 +2184,7 @@ object RestCatalog {
       }.nextOption().orElse {
         lazy val curTypes = currentTypes(loc)
         eqDels.iterator.flatMap { case (f, cols) =>
-          val sch = graft.sources.Footer.schemaOf(spark, f)
+          val sch = schemaOf(f)
           cols.find(c => !sch.fieldNames.contains(c)).map(c => 400 ->
             (s"equality delete file $f does not carry declared key column $c"))
             .orElse(fileSchemaConflict(curTypes, f, sch).map(409 -> _))
@@ -2192,15 +2197,13 @@ object RestCatalog {
       * as NULL under the bound schema), but a field unknown to the
       * current schema, or carrying a different type, is a conflict —
       * the staged write was planned against a schema that has since
-      * evolved, and the files must be re-staged. Cost: one footer read
-      * per file, the same order as commitFiles' own row-count stamping.
+      * evolved, and the files must be re-staged. `schemaOf` reads a
+      * staged file's footer schema; the commit reuses that read.
       */
     private def stagedSchemaConflict(loc: String,
-        files: Seq[String]): Option[String] = {
+        files: Seq[String], schemaOf: String => org.apache.spark.sql.types.StructType): Option[String] = {
       val curTypes = currentTypes(loc)
-      files.iterator.flatMap { f =>
-        fileSchemaConflict(curTypes, f, graft.sources.Footer.schemaOf(spark, f))
-      }.nextOption()
+      files.iterator.flatMap(f => fileSchemaConflict(curTypes, f, schemaOf(f))).nextOption()
     }
 
     /** The table's current schema: column name → type. */

@@ -638,11 +638,12 @@ object IcebergInterop {
         else Map.empty[String, String]
       val part = new GenericData.Record(dfSchema.getField("partition").schema())
       if (isData) dayFieldName.foreach { fn =>
-        // a file committed through the unpartitioned path on a later-
-        // partitioned table has no day annotation, and a null-day file
-        // is annotated with Spark's __HIVE_DEFAULT_PARTITION__
-        // sentinel: both export a NULL partition value (Iceberg
-        // day(null) is null), never a parse crash
+        // every file the engine's write ops add to a day table names
+        // its day; only files they did not write (registered zero-copy,
+        // written by the SQL row-level writer, or written before the
+        // table was partitioned) can lack one. Those and a null-day
+        // file (Spark's __HIVE_DEFAULT_PARTITION__ sentinel) export a
+        // NULL partition value, never a parse crash
         part.put(fn, annots.get("_graft_day").flatMap(d =>
           scala.util.Try(
             Integer.valueOf(java.time.LocalDate.parse(d).toEpochDay.toInt)

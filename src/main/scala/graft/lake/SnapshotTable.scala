@@ -197,7 +197,7 @@ object SnapshotTable {
     * just written under `dir`.
     */
   private def posDeleteLines(s: SparkSession, dir: String): Seq[String] =
-    annotateRows(s, parquetFilesIn(s, dir).map(Manifest.posDeleteLine))
+    footerPass(s, parquetFilesIn(s, dir).map(Manifest.posDeleteLine))
 
   /** [[posDeleteLines]] of a MoR delete set and the delete rows they
     * carry. A set that deletes nothing (Spark still writes one empty
@@ -232,51 +232,57 @@ object SnapshotTable {
   def deleteFiles(s: SparkSession, root: String, version: Int): Seq[String] =
     SnapshotTable.version(s, root, version).deleteFiles
 
-  /** Stamp each manifest line with its file's row count
-    * (`_rows=<n>`, Iceberg's per-data-file `record_count`) and byte
-    * size (`_bytes=<n>`, Iceberg's `file_size_in_bytes` — what feeds
-    * table statistics to Catalyst so a small lake dim can
-    * auto-broadcast). One job over the just-written files with NO
-    * data columns materialized — the parquet reader answers a
-    * zero-column count from row-group metadata, so the cost is footer
-    * reads, not a data scan. This is what keeps [[recordCount]],
-    * [[tableStats]] (and `$history`) metadata-sized at any scale.
+  /** The one footer pass over files a commit registers: each manifest
+    * line gains its file's row count (`_rows=<n>`, Iceberg's
+    * per-data-file `record_count`), byte size (`_bytes=<n>`, Iceberg's
+    * `file_size_in_bytes` — what feeds table statistics to Catalyst so
+    * a small lake dim can auto-broadcast) and the min/max bounds of
+    * `statsCols` (physical names, [[footerBounds]]), all from ONE open
+    * of the file's parquet footer ([[graft.sources.Footer]]) — no data
+    * page is read. This is what keeps [[recordCount]], [[tableStats]]
+    * (and `$history`) metadata-sized at any scale. `validate` (the
+    * stats columns this commit registers) must name a column of the
+    * files with a type stats support: a typo'd statsCol fails loudly.
+    * `known` holds footers the caller already read, keyed by line path.
+    * Small commits (streaming micro-batches) read footers on the
+    * driver, concurrently; large ones fan the reads out as one task
+    * wave.
     */
-  private def annotateRows(s: SparkSession, lines: Seq[String]): Seq[String] = {
+  private def footerPass(
+      s: SparkSession, lines: Seq[String], statsCols: Seq[String] = Nil,
+      validate: Seq[String] = Nil,
+      known: Map[String, graft.sources.Footer.Facts] = Map.empty): Seq[String] = {
     if (lines.isEmpty) return lines
     val files = lines.map(_.split('\t').head)
-    // small commits (streaming micro-batches): footer reads on the
-    // driver, no job-scheduling overhead. Large commits: one
-    // distributed zero-column count (footer work on executors).
-    val counts: Map[String, (Long, Long)] =
+    val cols = statsCols.distinct.sorted
+    val conf = s.sparkContext.hadoopConfiguration
+    // registered names are checked once, against the first file's
+    // footer, which the pass then reuses
+    val seen = if (validate.isEmpty) known else {
+      val ft = known.getOrElse(files.head, graft.sources.Footer.read(conf, files.head))
+      requireStatsCols(ft.parquetSchema, validate)
+      known + (files.head -> ft)
+    }
+    val facts: Seq[(Long, Long, Seq[String])] =
       if (files.size <= 64) {
-        val conf = s.sparkContext.hadoopConfiguration
         // concurrent footer reads (commonPool): the loop is pure
         // per-file I/O, and serializing ~3 ms × N files was visible
         // driver dead time between jobs on multi-file commits
         import scala.jdk.CollectionConverters._
-        files.asJava.parallelStream().map[(String, (Long, Long))] { f =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new Path(f), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try canon(s, f) -> ((r.getRecordCount, in.getLength))
-          finally r.close()
-        }.collect(java.util.stream.Collectors.toList[(String, (Long, Long))])
-          .asScala.toMap
+        files.asJava.parallelStream().map[(Long, Long, Seq[String])] { f =>
+          val ft = seen.getOrElse(f, graft.sources.Footer.read(conf, f))
+          (ft.rows, ft.bytes, footerBounds(ft, cols))
+        }.collect(java.util.stream.Collectors.toList[(Long, Long, Seq[String])])
+          .asScala.toSeq
       } else {
-        import org.apache.spark.sql.functions.{count => fcount, first}
-        s.read.parquet(files: _*)
-          .groupBy(col("_metadata.file_path"))
-          .agg(fcount(lit(1)).as("n"), first(col("_metadata.file_size")).as("b"))
-          .collect()
-          .map(r => canon(s, r.getString(0)) -> ((r.getLong(1), r.getLong(2))))
-          .toMap
+        val hconf = new org.apache.spark.util.SerializableConfiguration(conf)
+        s.sparkContext.parallelize(files, math.min(files.size, 64)).map { f =>
+          val ft = graft.sources.Footer.read(hconf.value, f)
+          (ft.rows, ft.bytes, footerBounds(ft, cols))
+        }.collect().toSeq
       }
-    lines.map { line =>
-      val f = line.split('\t').head
-      // a file absent from the grouped counts produced zero row groups
-      val (n, b) = counts.getOrElse(canon(s, f), (0L, 0L))
-      Manifest.withCounts(line, n, Some(b))
+    lines.zip(facts).map { case (line, (n, b, bounds)) =>
+      Manifest.withCounts((line +: bounds).mkString("\t"), n, Some(b))
     }
   }
 
@@ -420,7 +426,17 @@ object SnapshotTable {
       append: Boolean = true, meta: Map[String, String] = Map.empty,
       expectedVersion: Option[Int] = None,
       statsCols: Seq[String] = Seq.empty,
-      bloomCols: Seq[String] = Seq.empty): Int = {
+      bloomCols: Seq[String] = Seq.empty): Int =
+    commitData(s, root, df, append, meta, expectedVersion, statsCols, bloomCols)
+
+  /** [[commit]], optionally registering day(`partition`) partitioning
+    * with `saltBuckets` files per day ([[commitPartitionedByDay]]).
+    */
+  private def commitData(
+      s: SparkSession, root: String, df: DataFrame, append: Boolean,
+      meta: Map[String, String] = Map.empty, expectedVersion: Option[Int] = None,
+      statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
+      partition: Option[String] = None, saltBuckets: Int = -1): Int = {
     val cur = currentVersion(s, root)
     val v = expectedVersion.getOrElse(cur + 1)
     if (v <= cur)
@@ -428,27 +444,12 @@ object SnapshotTable {
         s"concurrent commit detected for $root: expected to create version $v " +
           s"but table is already at $cur")
     // schema-evolution metadata survives every commit (incl. overwrite:
-    // replacing the data does not undo a rename); incoming logical
-    // column names are stored under their physical names
+    // replacing the data does not undo a rename); the partition header
+    // holds the source's physical name, which renames never change
     val head = headAt(s, root, cur)
-    val mapping = head.columnMapping
-    val physDf = toPhysical(df, mapping)
-    val physIds = physFieldIds(s, root, cur, head, physDf.columns)
-    // the header a first-stamped commit persists covers the WHOLE
-    // table (columns absent from this df included), so later lookups
-    // never re-derive ordinals from a different column subset
-    val idsHeader = fieldIdsHeader(head, mapping,
-      if (cur < 1 || head.storedFieldIds.nonEmpty) physIds
-      else fieldIds(s, root, cur, head)
-        .map { case (n, id) => mapping.getOrElse(n, n) -> id } ++ physIds)
-    val newFiles = writeDataFiles(s, root, v, withFieldIds(physDf, physIds))
-    val withStats =
-      if (statsCols.isEmpty) newFiles
-      else annotateStats(s, newFiles, statsCols.map(c => mapping.getOrElse(c, c)))
-    val annotated = stampSeq(annotateRows(s,
-      if (bloomCols.isEmpty) withStats
-      else annotateBloom(s, withStats, bloomCols.map(c => mapping.getOrElse(c, c)))),
-      nextSeq(head))
+    val source = partition.map(p => head.columnMapping.getOrElse(p, p))
+    val w = writeNew(s, root, s"$root/data/v$v", cur, head, df, partition = source,
+      statsCols = statsCols, bloomCols = bloomCols, buckets = saltBuckets)
     // merge newly-registered stats/bloom columns with the inherited
     // set: a commit stamping stats on `value` must not forget that
     // older fragments carry valid stats on `id`
@@ -457,11 +458,12 @@ object SnapshotTable {
     // prior FRAGMENT REFS copied verbatim (earlier stats/partition
     // annotations live inside the untouched fragments) — this is what
     // makes the append O(files touched), not O(table)
-    publishNext(s, root, v - 1, head, meta, Seq("" -> annotated),
+    publishNext(s, root, v - 1, head, meta, Seq("" -> stampSeq(w.lines, nextSeq(head))),
       body = if (append) _.body else _ => Seq.empty,
-      header = Manifest.withFacts(_, fieldIds = Some(idsHeader),
+      header = withFieldIdsHeader(s, root, cur, head, w).andThen(Manifest.withFacts(_,
+        partitionSource = source,
         statsColumns = merged(head.statsColumns, statsCols),
-        bloomColumns = merged(head.bloomColumns, bloomCols)))
+        bloomColumns = merged(head.bloomColumns, bloomCols))))
   }
 
   /** Register EXISTING parquet files as a new version — ZERO-COPY, the
@@ -485,26 +487,35 @@ object SnapshotTable {
     * physical here, like every engine-side delete writer). A commit
     * with deletes needs an existing table and records
     * `op=upsert_wire` (or `delete_wire` without data files).
+    *
+    * Each registered file's footer is opened once ([[footerPass]]:
+    * `_rows`, `_bytes`, the table's registered stats); `footers` are
+    * the ones the caller already read (a wire commit's schema checks),
+    * keyed by the path it passed.
     */
   def commitFiles(
       s: SparkSession, root: String, files: Seq[String],
       append: Boolean = true, meta: Map[String, String] = Map.empty,
       posDeletes: Seq[String] = Seq.empty,
-      eqDeletes: Seq[(String, Seq[String])] = Seq.empty): Int = {
+      eqDeletes: Seq[(String, Seq[String])] = Seq.empty,
+      footers: Map[String, graft.sources.Footer.Facts] = Map.empty): Int = {
     val cur = currentVersion(s, root)
     val deletes = posDeletes.nonEmpty || eqDeletes.nonEmpty
     if (deletes) require(cur > 0, s"no snapshot table at $root")
     val head = headAt(s, root, cur)
     eqDeletes.foreach { case (_, cols) =>
       require(cols.nonEmpty, "equality delete requires at least one key column")
-      requireKeyColsInSchema(s, root, head, cols)
+      requireKeyColsInSchema(s, root, cur, head, cols)
     }
     val seq = nextSeq(head)
     val v = cur + 1
-    val dataLines = stampSeq(annotateRows(s, files.map(f => canon(s, f))), seq)
-    val posLines = annotateRows(s, posDeletes.map(p => Manifest.posDeleteLine(canon(s, p))))
     val mapping = head.columnMapping
-    val eqLines = annotateRows(s, eqDeletes.zipWithIndex.map {
+    val known = footers.map { case (f, ft) => canon(s, f) -> ft }
+    val dataLines = stampSeq(footerPass(s, files.map(f => canon(s, f)),
+      head.statsColumns.map(c => mapping.getOrElse(c, c)), known = known), seq)
+    val posLines = footerPass(s, posDeletes.map(p => Manifest.posDeleteLine(canon(s, p))),
+      known = known)
+    val eqLines = footerPass(s, eqDeletes.zipWithIndex.map {
       case ((p, cols), i) =>
         val phys = cols.map(c => mapping.getOrElse(c, c))
         // a wire client stages key files under the LOGICAL names the
@@ -522,7 +533,7 @@ object SnapshotTable {
             parquetFilesIn(s, dir).head
           }
         Manifest.eqDeleteLine(canon(s, path), phys, seq)
-    })
+    }, known = known)
     publishNext(s, root, cur, head,
       (if (deletes) Map("op" -> (if (files.nonEmpty) "upsert_wire" else "delete_wire"))
        else Map.empty[String, String]) ++ meta,
@@ -589,11 +600,7 @@ object SnapshotTable {
     // physical names, only the logical labels over them.
     val cur0 = currentVersion(s, root)
     val head0 = headAt(s, root, cur0)
-    val mapping = head0.columnMapping
-    val physDf = toPhysical(df, mapping)
-    val physIds = physFieldIds(s, root, cur0, head0, physDf.columns)
-    val baseLines = annotateRows(s,
-      writeDataFilesAt(s, s"$root/data/c-$stage", withFieldIds(physDf, physIds)))
+    val written = writeNew(s, root, s"$root/data/c-$stage", cur0, head0, df)
     // Iceberg commit-time sequence assignment: the data sequence number
     // is decided against the head this commit actually lands on, so it
     // is re-derived on EVERY CAS attempt. Stamping once against the
@@ -610,12 +617,12 @@ object SnapshotTable {
     rebasing(s, root) { cur =>
       val head = if (cur == cur0) head0 else headAt(s, root, cur)
       val seq = nextSeq(head)
-      if (baseLines.nonEmpty && seq != stagedSeq) {
-        newRef = Manifest.fragment(conf(s), root, s"c-$stage-s$seq", stampSeq(baseLines, seq))
+      if (written.lines.nonEmpty && seq != stagedSeq) {
+        newRef = Manifest.fragment(conf(s), root, s"c-$stage-s$seq", stampSeq(written.lines, seq))
         stagedSeq = seq
       }
       publishNext(s, root, cur, head, meta, body = _.body ++ newRef,
-        header = Manifest.withFacts(_, fieldIds = Some(fieldIdsHeader(head, mapping, physIds))))
+        header = withFieldIdsHeader(s, root, cur, head, written))
     }
   }
 
@@ -672,8 +679,7 @@ object SnapshotTable {
   }
 
   /** Per-file min/max column stats, Iceberg-style, read from PARQUET
-    * FOOTER METADATA — zero data bytes (the same footer-only
-    * discipline [[annotateRows]] uses; Iceberg gets these bounds free
+    * FOOTER METADATA — zero data bytes (Iceberg gets these bounds free
     * from write-time metrics the same way). Each manifest line is
     * annotated `_min_<col>`/`_max_<col>` (numeric/date/timestamp, as
     * doubles in the column's catalyst-internal unit: days for dates,
@@ -684,157 +690,107 @@ object SnapshotTable {
     * test matches Spark semantics bit-for-bit). At 100 TB this is
     * what lets a selective value predicate read a handful of files
     * instead of the table — pair with a z-order or range-partitioned
-    * write so files have tight disjoint ranges.
-    *
-    * A row group whose footer carries no usable statistics yields no
+    * write so files have tight disjoint ranges. Aggregated over the
+    * file's row groups; an absent column, an all-null file or a row
+    * group whose footer carries no usable statistics yields no
     * annotation for that column (the file then always scans — safe).
-    * Small commits read footers on the driver; large ones fan the
-    * footer reads out as one task wave.
     */
-  private def annotateStats(
-      s: SparkSession, files: Seq[String], cols: Seq[String]): Seq[String] = {
-    if (files.isEmpty || cols.isEmpty) return files
-    val conf = s.sparkContext.hadoopConfiguration
-    // validate names/types once against the first footer's schema —
-    // same loud failure a typo'd or unsupported statsCol always got
-    validateStatsCols(conf, files.head, cols)
-    val colSet = cols.toSet
-    val byFile: Map[String, String] =
-      if (files.size <= 64) {
-        // concurrent footer reads — same rationale as annotateRows
-        import scala.jdk.CollectionConverters._
-        files.asJava.parallelStream().map[(String, String)] { f =>
-          canon(s, f) -> footerBoundsAnnots(conf, f, colSet).mkString("\t")
-        }.collect(java.util.stream.Collectors.toList[(String, String)])
-          .asScala.toMap
-      } else {
-        val confEntries: Array[(String, String)] = {
-          val it = conf.iterator()
-          val b = Array.newBuilder[(String, String)]
-          while (it.hasNext) { val e = it.next(); b += ((e.getKey, e.getValue)) }
-          b.result()
+  private def footerBounds(facts: graft.sources.Footer.Facts, cols: Seq[String]): Seq[String] = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    import scala.jdk.CollectionConverters._
+    val blocks = facts.footer.getBlocks.asScala.toSeq
+    cols.flatMap { c =>
+      val chunks = blocks.flatMap(
+        _.getColumns.asScala.filter(_.getPath.toDotString == c))
+      val stats = chunks.map(ch => Option(ch.getStatistics))
+      if (chunks.isEmpty || stats.exists(so => so.isEmpty || so.exists(_.isEmpty)))
+        Seq.empty // absent column or a stat-less row group: no bounds
+      else {
+        val withValues = stats.flatten.filter(_.hasNonNullValue)
+        if (withValues.isEmpty) Seq.empty // all-null file: never skipped
+        else {
+          val prim = chunks.head.getPrimitiveType
+          val logical = prim.getLogicalTypeAnnotation
+          def dec: Option[Int] = logical match {
+            case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
+              Some(d.getScale)
+            case _ => None
+          }
+          // catalyst-internal unit scaling so the read-side interval
+          // test compares like with like (literals eval to days /
+          // MICROS)
+          def tsScale: Double = logical match {
+            case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+              t.getUnit match {
+                case LogicalTypeAnnotation.TimeUnit.MILLIS => 1000.0
+                case LogicalTypeAnnotation.TimeUnit.NANOS => 0.001
+                case _ => 1.0 // MICROS
+              }
+            case _ => 1.0
+          }
+          def numeric(v: Any): Double = (v match {
+            case n: Number => n.doubleValue()
+            case b: org.apache.parquet.io.api.Binary => // binary/fixed decimal
+              new java.math.BigDecimal(new java.math.BigInteger(b.getBytes))
+                .doubleValue()
+            case other => other.toString.toDouble
+          }) / math.pow(10, dec.getOrElse(0).toDouble) * tsScale
+          prim.getPrimitiveTypeName match {
+            case INT32 | INT64 | FLOAT | DOUBLE =>
+              val mn = withValues.map(st => numeric(st.genericGetMin)).min
+              val mx = withValues.map(st => numeric(st.genericGetMax)).max
+              Seq(s"_min_$c=$mn", s"_max_$c=$mx")
+            case BINARY
+                if logical.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
+              val ord = unsignedBytesOrdering
+              val mn = withValues.map(
+                _.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary]
+                  .getBytes).min(ord)
+              val mx = withValues.map(
+                _.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary]
+                  .getBytes).max(ord)
+              val b64 = java.util.Base64.getEncoder
+              Seq(s"_smin_$c=${b64.encodeToString(mn)}",
+                s"_smax_$c=${b64.encodeToString(mx)}")
+            case BINARY | FIXED_LEN_BYTE_ARRAY if dec.nonEmpty =>
+              val mn = withValues.map(st => numeric(st.genericGetMin)).min
+              val mx = withValues.map(st => numeric(st.genericGetMax)).max
+              Seq(s"_min_$c=$mn", s"_max_$c=$mx")
+            case _ => Seq.empty
+          }
         }
-        s.sparkContext.parallelize(files, math.max(1, math.min(files.size, 64)))
-          .map { f =>
-            val c = new org.apache.hadoop.conf.Configuration(false)
-            confEntries.foreach { case (k, v) => c.set(k, v) }
-            canonConf(c, f) -> footerBoundsAnnots(c, f, colSet).mkString("\t")
-          }.collect().toMap
       }
-    files.map { f =>
-      val key = canon(s, f)
-      byFile.get(key).filter(_.nonEmpty).map(a => s"$f\t$a").getOrElse(f)
     }
   }
 
-  private def validateStatsCols(
-      conf: org.apache.hadoop.conf.Configuration,
-      file: String, cols: Seq[String]): Unit = {
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import scala.jdk.CollectionConverters._
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(file), conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val fields = r.getFooter.getFileMetaData.getSchema.getFields.asScala
-      cols.foreach { c =>
-        val f = fields.find(_.getName == c).getOrElse(
-          throw new IllegalArgumentException(s"unknown statsCols column: $c"))
-        val ok = f.isPrimitive && (f.asPrimitiveType().getPrimitiveTypeName match {
-          case INT32 | INT64 | FLOAT | DOUBLE => true
-          case BINARY => f.asPrimitiveType().getLogicalTypeAnnotation match {
-            case _: LogicalTypeAnnotation.StringLogicalTypeAnnotation => true
-            case _: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation => true
-            case _ => false
-          }
-          case FIXED_LEN_BYTE_ARRAY =>
-            f.asPrimitiveType().getLogicalTypeAnnotation
-              .isInstanceOf[LogicalTypeAnnotation.DecimalLogicalTypeAnnotation]
-          case _ => false // BOOLEAN, INT96 (legacy ts: no usable stats ordering)
-        })
-        require(ok, s"statsCols supports numeric, string, date and timestamp " +
-          s"columns; $c is ${f}")
-      }
-    } finally r.close()
-  }
-
-  /** Footer-derived bound annotations for one file — aggregated over
-    * its row groups, no data pages touched. Unsupported/absent/
-    * stat-less columns contribute nothing (never skipped ≠ wrong).
+  /** Stats columns a commit registers must exist in its files with a
+    * type whose footer statistics order like Spark's comparisons.
     */
-  private def footerBoundsAnnots(
-      conf: org.apache.hadoop.conf.Configuration,
-      file: String, cols: Set[String]): Seq[String] = {
+  private def requireStatsCols(
+      schema: org.apache.parquet.schema.MessageType, cols: Seq[String]): Unit = {
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import scala.jdk.CollectionConverters._
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(file), conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val blocks = r.getFooter.getBlocks.asScala.toSeq
-      cols.toSeq.sorted.flatMap { c =>
-        val chunks = blocks.flatMap(
-          _.getColumns.asScala.filter(_.getPath.toDotString == c))
-        val stats = chunks.map(ch => Option(ch.getStatistics))
-        if (chunks.isEmpty || stats.exists(so => so.isEmpty || so.exists(_.isEmpty)))
-          Seq.empty // absent column or a stat-less row group: no bounds
-        else {
-          val withValues = stats.flatten.filter(_.hasNonNullValue)
-          if (withValues.isEmpty) Seq.empty // all-null file: never skipped
-          else {
-            val prim = chunks.head.getPrimitiveType
-            val logical = prim.getLogicalTypeAnnotation
-            def dec: Option[Int] = logical match {
-              case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-                Some(d.getScale)
-              case _ => None
-            }
-            // catalyst-internal unit scaling so the read-side interval
-            // test compares like with like (literals eval to days /
-            // MICROS)
-            def tsScale: Double = logical match {
-              case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                t.getUnit match {
-                  case LogicalTypeAnnotation.TimeUnit.MILLIS => 1000.0
-                  case LogicalTypeAnnotation.TimeUnit.NANOS => 0.001
-                  case _ => 1.0 // MICROS
-                }
-              case _ => 1.0
-            }
-            def numeric(v: Any): Double = (v match {
-              case n: Number => n.doubleValue()
-              case b: org.apache.parquet.io.api.Binary => // binary/fixed decimal
-                new java.math.BigDecimal(new java.math.BigInteger(b.getBytes))
-                  .doubleValue()
-              case other => other.toString.toDouble
-            }) / math.pow(10, dec.getOrElse(0).toDouble) * tsScale
-            prim.getPrimitiveTypeName match {
-              case INT32 | INT64 | FLOAT | DOUBLE =>
-                val mn = withValues.map(st => numeric(st.genericGetMin)).min
-                val mx = withValues.map(st => numeric(st.genericGetMax)).max
-                Seq(s"_min_$c=$mn", s"_max_$c=$mx")
-              case BINARY
-                  if logical.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
-                val ord = unsignedBytesOrdering
-                val mn = withValues.map(
-                  _.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary]
-                    .getBytes).min(ord)
-                val mx = withValues.map(
-                  _.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary]
-                    .getBytes).max(ord)
-                val b64 = java.util.Base64.getEncoder
-                Seq(s"_smin_$c=${b64.encodeToString(mn)}",
-                  s"_smax_$c=${b64.encodeToString(mx)}")
-              case BINARY | FIXED_LEN_BYTE_ARRAY if dec.nonEmpty =>
-                val mn = withValues.map(st => numeric(st.genericGetMin)).min
-                val mx = withValues.map(st => numeric(st.genericGetMax)).max
-                Seq(s"_min_$c=$mn", s"_max_$c=$mx")
-              case _ => Seq.empty
-            }
-          }
+    val fields = schema.getFields.asScala
+    cols.foreach { c =>
+      val f = fields.find(_.getName == c).getOrElse(
+        throw new IllegalArgumentException(s"unknown statsCols column: $c"))
+      val ok = f.isPrimitive && (f.asPrimitiveType().getPrimitiveTypeName match {
+        case INT32 | INT64 | FLOAT | DOUBLE => true
+        case BINARY => f.asPrimitiveType().getLogicalTypeAnnotation match {
+          case _: LogicalTypeAnnotation.StringLogicalTypeAnnotation => true
+          case _: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation => true
+          case _ => false
         }
-      }
-    } finally r.close()
+        case FIXED_LEN_BYTE_ARRAY =>
+          f.asPrimitiveType().getLogicalTypeAnnotation
+            .isInstanceOf[LogicalTypeAnnotation.DecimalLogicalTypeAnnotation]
+        case _ => false // BOOLEAN, INT96 (legacy ts: no usable stats ordering)
+      })
+      require(ok, s"statsCols supports numeric, string, date and timestamp " +
+        s"columns; $c is ${f}")
+    }
   }
 
   /** Parquet orders string stats by UNSIGNED byte comparison — the
@@ -984,7 +940,6 @@ object SnapshotTable {
     val cur = existingVersion(s, root)
     val head = version(s, root, cur)
     val v = cur + 1
-    val mapping = head.columnMapping
     val matched = morMatches(s, root, cur, head, predicate) match {
       case None => return cur // metadata proves zero matches
       case Some(m) => m.persist() // two consumers: the position and replacement writes
@@ -997,20 +952,17 @@ object SnapshotTable {
         .write.mode("overwrite").parquet(delDir)
       val (delLines, nUpdated) = morDeleteLines(s, delDir)
       if (nUpdated == 0) return cur
-      val replacements = toPhysical(
-        set.foldLeft(matched) { case (d, (name, value)) =>
-          require(d.columns.contains(name), s"unknown SET column $name")
-          d.withColumn(name, value.cast(d.schema(name).dataType))
-        }.drop("_graft_fp", "_graft_pos"),
-        mapping)
+      val replacements = set.foldLeft(matched) { case (d, (name, value)) =>
+        require(d.columns.contains(name), s"unknown SET column $name")
+        d.withColumn(name, value.cast(d.schema(name).dataType))
+      }.drop("_graft_fp", "_graft_pos")
+      val w = writeNew(s, root, s"$root/data/v$v", cur, head, replacements)
       // replacements stamped with the next sequence number so pending
       // eq deletes never re-suppress them
-      val newFiles = stampSeq(
-        annotateRows(s, writeDataFiles(s, root, v, replacements)),
-        nextSeq(head))
       publishNext(s, root, cur, head,
         Map("op" -> "update_mor", "delete_rows" -> nUpdated.toString),
-        Seq("-del" -> delLines, "" -> newFiles))
+        Seq("-del" -> delLines, "" -> stampSeq(w.lines, nextSeq(head))),
+        header = withFieldIdsHeader(s, root, cur, head, w))
     } finally { matched.unpersist(); () }
   }
 
@@ -1085,14 +1037,13 @@ object SnapshotTable {
         matches.write.mode("overwrite").parquet(delDir)
         morDeleteLines(s, delDir)._1
       }
-    val newFiles =
-      if (inserts.isEmpty) Seq.empty[String]
-      else stampSeq(
-        annotateRows(s, writeDataFiles(s, root, v, toPhysical(inserts, mapping))),
-        nextSeq(curVer))
-    if (delLines.isEmpty && newFiles.isEmpty) return cur
+    val w =
+      if (inserts.isEmpty) Written(Seq.empty, Map.empty)
+      else writeNew(s, root, s"$root/data/v$v", cur, curVer, inserts)
+    if (delLines.isEmpty && w.lines.isEmpty) return cur
     publishNext(s, root, cur, curVer, meta + ("op" -> "cdc_apply"),
-      Seq("-del" -> delLines, "" -> newFiles))
+      Seq("-del" -> delLines, "" -> stampSeq(w.lines, nextSeq(curVer))),
+      header = withFieldIdsHeader(s, root, cur, curVer, w))
   }
 
   /** Row-level DELETE by KEY, equality-delete encoding (Iceberg v2
@@ -1116,7 +1067,7 @@ object SnapshotTable {
     val cur = existingVersion(s, root)
     require(keyCols.nonEmpty, "equality delete requires at least one key column")
     val head = version(s, root, cur)
-    requireKeyColsInSchema(s, root, head, keyCols)
+    requireKeyColsInSchema(s, root, cur, head, keyCols)
     val mapping = head.columnMapping
     val v = cur + 1
     val eqLines = writeEqDeleteFile(s, root, v,
@@ -1142,34 +1093,33 @@ object SnapshotTable {
     val cur = existingVersion(s, root)
     require(keyCols.nonEmpty, "upsert requires at least one key column")
     val head = version(s, root, cur)
-    requireKeyColsInSchema(s, root, head, keyCols)
+    requireKeyColsInSchema(s, root, cur, head, keyCols)
     val mapping = head.columnMapping
     val seq = nextSeq(head)
     val v = cur + 1
     val eqLines = writeEqDeleteFile(s, root, v,
       batch.select(keyCols.map(col): _*), keyCols, mapping, seq)
-    val newFiles = stampSeq(
-      annotateRows(s, writeDataFiles(s, root, v, toPhysical(batch, mapping))), seq)
+    val w = writeNew(s, root, s"$root/data/v$v", cur, head, batch)
     publishNext(s, root, cur, head,
       Map("op" -> "upsert_eq", "eq_cols" -> keyCols.mkString(",")),
-      Seq("-eqdel" -> eqLines, "" -> newFiles))
+      Seq("-eqdel" -> eqLines, "" -> stampSeq(w.lines, seq)),
+      header = withFieldIdsHeader(s, root, cur, head, w))
   }
 
-  /** Validate equality-delete key columns against the table's LOGICAL
-    * schema before committing — mirrors updateWhereMor's "unknown SET
-    * column" check. Without it a typo'd key column commits fine (the
-    * keys frame just needs the column) and then poisons every
+  /** Validate equality-delete key columns against the LOGICAL schema
+    * of head `cur` before committing — mirrors updateWhereMor's
+    * "unknown SET column" check. Without it a typo'd key column commits
+    * fine (the keys frame just needs the column) and then poisons every
     * subsequent read/compaction with an unresolved-column error until
-    * a manual rollback. Cost: one parquet footer read (driver-side),
-    * nothing at all on an empty table.
+    * a manual rollback. The schema is the version's memoized one, so an
+    * added column is a key and a dropped one is not; nothing is checked
+    * on an empty table.
     */
   private def requireKeyColsInSchema(
-      s: SparkSession, root: String, head: Manifest.Version, keyCols: Seq[String]): Unit = {
-    val files = head.dataFiles
-    if (files.isEmpty) return
-    val physical = graft.sources.Footer.schemaOf(s, files.head).fieldNames.toSeq
-    val reverse = head.columnMapping.map(_.swap)
-    val logical = physical.map(p => reverse.getOrElse(p, p))
+      s: SparkSession, root: String, cur: Int, head: Manifest.Version,
+      keyCols: Seq[String]): Unit = {
+    if (head.dataFiles.isEmpty) return
+    val logical = schema(s, root, cur, head).fieldNames.toSeq
     val missing = keyCols.filterNot(logical.contains)
     require(missing.isEmpty,
       s"unknown key column(s) ${missing.mkString(", ")} for $root — " +
@@ -1188,7 +1138,7 @@ object SnapshotTable {
     toPhysical(keyRows, mapping).distinct()
       .repartition(1) // key sets are O(batch) small; one file beats 32 shards
       .write.mode("overwrite").parquet(delDir)
-    annotateRows(s, parquetFilesIn(s, delDir).map(Manifest.eqDeleteLine(_, physCols, seq)))
+    footerPass(s, parquetFilesIn(s, delDir).map(Manifest.eqDeleteLine(_, physCols, seq)))
   }
 
   /** Major compaction of merge-on-read deletes (Iceberg
@@ -1263,11 +1213,9 @@ object SnapshotTable {
       else {
         val rewritten = applyAllDeletes(s, touched,
           fs => rawWidenedRead(s, fs, mapping, types), dels, eqs, fileSeq)
-        stampSeq(
-          annotateRows(s, writeDataFilesAt(s,
-            s"$root/data/m-${java.util.UUID.randomUUID.toString.take(8)}",
-            withFieldIds(rewritten, physFieldIds(s, root, cur, mv, rewritten.columns)))),
-          nextSeq(mv))
+        stampSeq(writeNew(s, root,
+          s"$root/data/m-${java.util.UUID.randomUUID.toString.take(8)}",
+          cur, mv, rewritten, physical = true).lines, nextSeq(mv))
       }
     // every delete line goes (eq deletes with no matching rows are
     // spent: the semi-join proved no surviving row matches them)
@@ -1419,10 +1367,10 @@ object SnapshotTable {
     * so this is the nightly job that keeps a 100 TB table scannable.
     *
     * Scope and soundness:
-    *  - Partition-aware: packing groups by the files' manifest
-    *    partition annotation, so hidden-partitioning tables compact
-    *    WITHIN each partition value (cross-partition packing would
-    *    destroy manifest partition pruning), exactly like
+    *  - Partition-aware: packing groups by the day a file names, and
+    *    the packed outputs go through the table's writer, so a
+    *    day-partitioned table compacts WITHIN each day (unannotated
+    *    inputs come back out as per-day files), exactly like
     *    Iceberg/Delta per-partition bin packing.
     *  - Delete-affected files are excluded: a file named by a pending
     *    positional delete can't be rewritten here (positions would
@@ -1433,14 +1381,14 @@ object SnapshotTable {
     *    sequence number changes nothing about delete applicability.
     *  - Sizes come from the manifest-adjacent footer metadata (driver
     *    statuses for small tables, a distributed `_metadata.file_size`
-    *    scan for large ones); packed outputs are re-annotated with the
-    *    table's registered stats/bloom columns so file skipping
+    *    scan for large ones); the writer annotates packed outputs with
+    *    the table's registered stats/bloom columns, so file skipping
     *    SURVIVES compaction.
     *  - Publishes via [[publishRewrite]]: rebases over concurrent
     *    appends, fails loud on genuine conflicts.
     *
     * Returns the new version (or `cur` when there is nothing worth
-    * packing — fewer than two small files in every partition group, or
+    * packing — fewer than two small files in every day, or
     * packing wouldn't reduce the file count).
     */
   def compactSmallFiles(
@@ -1459,16 +1407,12 @@ object SnapshotTable {
       if (dels.isEmpty) Set.empty
       else s.read.parquet(dels: _*).select("file_path").distinct()
         .collect().map(r => norm(r.getString(0))).toSet
-    // (file, partition-annotation suffix) for every live data file
-    val withParts = mv.dataEntries.map(e => (e.path, e.annots))
-    val partAnnotOf: Map[String, String] = withParts.map { case (f, annots) =>
-      val p = annots.filterNot { case (k, _) =>
-        k.startsWith("_min_") || k.startsWith("_max_") ||
-          k.startsWith("_bloom_") || k == "_rows" || k == "_bytes" || k == "_seq"
-      }.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("\t")
-      norm(f) -> p
-    }.toMap
-    val eligible = withParts.map(_._1).filter { f =>
+    // the day every live data file names; unannotated files (written
+    // before the table was partitioned, or by a writer that names no
+    // day) form one group, which the writer splits back into days
+    val dayOf: Map[String, String] = mv.dataEntries.map(e =>
+      norm(e.path) -> e.annots.getOrElse("_graft_day", "")).toMap
+    val eligible = mv.dataFiles.filter { f =>
       !posAffected.contains(norm(f)) && eqs.forall(_.seq <= fileSeq(f))
     }
     if (eligible.size < 2) return cur
@@ -1480,52 +1424,37 @@ object SnapshotTable {
       else s.read.parquet(eligible: _*)
         .select(col("_metadata.file_path").as("f"), col("_metadata.file_size").as("b"))
         .distinct().collect().map(r => norm(r.getString(0)) -> r.getLong(1)).toMap
-    // pack within each partition group; a group repacks only when it
-    // has 2+ small files AND fewer outputs than inputs
+    def outputs(fs: Seq[String]): Int =
+      math.max(1, math.ceil(fs.map(f => sizes(norm(f))).sum.toDouble / targetBytes).toInt)
+    // pack within each day; a day repacks only when it has 2+ small
+    // files AND fewer outputs than inputs
     val smallByGroup: Map[String, Seq[String]] = eligible
       .filter(f => sizes.getOrElse(norm(f), Long.MaxValue) < smallBytes)
-      .groupBy(f => partAnnotOf.getOrElse(norm(f), ""))
-      .filter { case (_, fs) =>
-        fs.size >= 2 && {
-          val bytes = fs.map(f => sizes(norm(f))).sum
-          math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt) < fs.size
-        }
-      }
+      .groupBy(f => dayOf.getOrElse(norm(f), ""))
+      .filter { case (_, fs) => fs.size >= 2 && outputs(fs) < fs.size }
     if (smallByGroup.isEmpty) return cur
-    val statsCols = mv.statsColumns.map(c => mapping.getOrElse(c, c))
-    val bloomCols = mv.bloomColumns.map(c => mapping.getOrElse(c, c))
     val seq = nextSeq(mv)
-    val newFiles: Seq[String] = smallByGroup.toSeq.sortBy(_._1).flatMap {
-      case (partAnnot, fs) =>
-        val bytes = fs.map(f => sizes(norm(f))).sum
-        val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-        // physical rewrite (no logical view): renames stay
-        // metadata-only; staged under a commit-UNIQUE dir (see
-        // compactDeletes — a v-numbered dir is a concurrency hazard).
-        // With sortCols (Iceberg's rewrite SORT strategy) the pack
-        // also RESTORES clustering: range-partition + sort means each
-        // packed file owns a disjoint key range, so the re-annotated
-        // min/max stats prune like a fresh z-order/clustered write —
-        // compaction that tightens skipping instead of destroying it.
-        val raw = rawWidenedRead(s, fs, mapping, types)
-        val arranged =
-          if (sortCols.isEmpty) raw.repartition(nOut)
-          else {
-            val phys = sortCols.map(c => col(mapping.getOrElse(c, c)))
-            raw.repartitionByRange(nOut, phys: _*).sortWithinPartitions(phys: _*)
-          }
-        val staged = writeDataFilesAt(s,
-          s"$root/data/m-${java.util.UUID.randomUUID.toString.take(8)}",
-          withFieldIds(arranged, physFieldIds(s, root, cur, mv, arranged.columns)))
-        val withStats =
-          if (statsCols.isEmpty) staged
-          else annotateStats(s, staged, statsCols)
-        val withBloom =
-          if (bloomCols.isEmpty) withStats
-          else annotateBloom(s, withStats, bloomCols)
-        val withPart =
-          if (partAnnot.isEmpty) withBloom else withBloom.map(l => s"$l\t$partAnnot")
-        stampSeq(annotateRows(s, withPart), seq)
+    // physical rewrite (no logical view): renames stay metadata-only;
+    // staged under a commit-UNIQUE dir (see compactDeletes — a
+    // v-numbered dir is a concurrency hazard). Days packing into the
+    // same number of outputs share one write (the writer splits it by
+    // day again). With sortCols (Iceberg's rewrite SORT strategy) each
+    // day is written alone and the pack also RESTORES clustering:
+    // range-partition + sort means each packed file owns a disjoint
+    // key range, so the re-annotated min/max stats prune like a fresh
+    // z-order/clustered write — compaction that tightens skipping
+    // instead of destroying it.
+    val writes: Seq[(Int, Seq[String])] = {
+      val groups = smallByGroup.toSeq.sortBy(_._1).map(_._2)
+      if (sortCols.isEmpty)
+        groups.groupBy(outputs).toSeq.sortBy(_._1).map { case (n, gs) => n -> gs.flatten }
+      else groups.map(fs => outputs(fs) -> fs)
+    }
+    val newFiles: Seq[String] = writes.flatMap { case (nOut, fs) =>
+      stampSeq(writeNew(s, root,
+        s"$root/data/m-${java.util.UUID.randomUUID.toString.take(8)}", cur, mv,
+        rawWidenedRead(s, fs, mapping, types), physical = true,
+        buckets = nOut, sortCols = sortCols).lines, seq)
     }
     val packedSet: Set[String] = smallByGroup.values.flatten.map(norm).toSet
     publishRewrite(s, root, cur, mv,
@@ -1573,18 +1502,13 @@ object SnapshotTable {
       .distinct().collect().map(r => norm(r.getString(0))).toSet
     val touched = files.filter(f => affected.contains(norm(f)))
     if (touched.isEmpty) return cur
-    val v = cur + 1
-    val rewritten = toPhysical(
-      rewrite(viewWithFile(touched), predicate).drop("_graft_file"),
-      mapping)
+    val w = writeNew(s, root, s"$root/data/v${cur + 1}", cur, curVer,
+      rewrite(viewWithFile(touched), predicate).drop("_graft_file"))
     // rewritten files get the next sequence number: pending eq
     // deletes (already applied to their content) stop matching them
-    val newFiles = stampSeq(
-      annotateRows(s, writeDataFiles(s, root, v,
-        withFieldIds(rewritten, physFieldIds(s, root, cur, curVer, rewritten.columns)))),
-      nextSeq(curVer))
-    publishReplace(s, root, cur, curVer, affected, newFiles,
-      Map("op" -> op, "rewrote" -> touched.size.toString))
+    publishReplace(s, root, cur, curVer, affected, stampSeq(w.lines, nextSeq(curVer)),
+      Map("op" -> op, "rewrote" -> touched.size.toString),
+      withFieldIdsHeader(s, root, cur, curVer, w))
   }
 
   /** The commit half of copy-on-write: publish version cur+1 that
@@ -1596,7 +1520,8 @@ object SnapshotTable {
     */
   private def publishReplace(
       s: SparkSession, root: String, cur: Int, head: Manifest.Version,
-      affected: Set[String], newDataLines: Seq[String], meta: Map[String, String]): Int = {
+      affected: Set[String], newDataLines: Seq[String], meta: Map[String, String],
+      header: Map[String, String] => Map[String, String] = identity): Int = {
     val v = cur + 1
     val dels = head.deleteFiles
     def norm(p: String) = canon(s, p)
@@ -1646,7 +1571,8 @@ object SnapshotTable {
       if (e.kind == 1) staleDels.contains(norm(e.path)) else affected.contains(norm(e.path))
     }
     publishNext(s, root, cur, head, meta,
-      Seq("-keep" -> survivors, "" -> (newDataLines ++ delKeepLines)), body = _ => keptRefs)
+      Seq("-keep" -> survivors, "" -> (newDataLines ++ delKeepLines)), body = _ => keptRefs,
+      header = header)
   }
 
   /** Publish a replace-files commit from ALREADY-WRITTEN parquet
@@ -1654,8 +1580,9 @@ object SnapshotTable {
     * copy-on-write) write: `removed` are the data files the
     * operation's scan planned (every row it read), `added` the files
     * the executor-side writers produced with the replacement rows.
-    * Annotates row counts from footers and stamps the next sequence
-    * number exactly like the engine's own copy-on-write.
+    * Annotates them in one footer pass (row counts, sizes, the table's
+    * registered stats) and stamps the next sequence number exactly like
+    * the engine's own copy-on-write.
     */
   private[graft] def publishReplaceFiles(
       s: SparkSession, root: String, cur: Int,
@@ -1663,7 +1590,8 @@ object SnapshotTable {
       meta: Map[String, String]): Int = {
     val affected = removed.map(canon(s, _)).toSet
     val head = version(s, root, cur)
-    val newLines = stampSeq(annotateRows(s, added.sorted), nextSeq(head))
+    val newLines = stampSeq(footerPass(s, added.sorted,
+      head.statsColumns.map(c => head.columnMapping.getOrElse(c, c))), nextSeq(head))
     publishReplace(s, root, cur, head, affected, newLines, meta)
   }
 
@@ -1673,128 +1601,24 @@ object SnapshotTable {
   private[lake] val BloomHashes = 3
 
   /** Commit with HIDDEN day(`source`) partitioning (the reference's
-    * `WITH (partitioning = ARRAY['day(ts)'])`, RUNBOOK.md:91). The
-    * transform value is computed at write time, used to direct rows
-    * into per-day files, recorded per file in the MANIFEST, and never
-    * stored in the file content — readers see the original schema
-    * only. Rows of one day spread across `saltBuckets` writer tasks,
-    * so a hot day costs bounded extra files instead of one straggler
-    * task writing one giant file.
+    * `WITH (partitioning = ARRAY['day(ts)'])`, RUNBOOK.md:91): records
+    * day(`source`) as the table's partition header, then writes `df`
+    * like [[commit]] through the table's one writer ([[writeNew]]).
+    * That writer is what every later write op shares — appends,
+    * upserts, MoR/CoW rewrites, compactions, branch commits — so
+    * every file they write into the table holds one day and names it
+    * in its manifest line (files registered zero-copy and the SQL
+    * row-level writer's files do not). The transform value is never stored in
+    * the file content — readers see the original schema only. Rows of
+    * one day spread across `saltBuckets` writer tasks (default: derived
+    * from the batch's size, checked against the bytes written), so a
+    * hot day costs bounded extra files instead of one straggler task
+    * writing one giant file.
     */
   def commitPartitionedByDay(
       s: SparkSession, root: String, df: DataFrame, source: String,
-      append: Boolean = true, saltBuckets: Int = -1): Int = {
-    val cur = currentVersion(s, root)
-    val v = cur + 1
-    val pcol = "_graft_day"
-    val day = org.apache.spark.sql.functions.date_format(col(source), "yyyy-MM-dd")
-    // Scale-adaptive hot-day salting (opt guide §2.5 + §6): the salt
-    // exists so ONE hot day can spread across several write tasks and
-    // files — that matters once a day's bytes approach a target data
-    // file, and only hurts below it (a megabyte batch salted 4 ways
-    // shreds into day×salt fragments that every later scan task,
-    // footer read and manifest line pays for; at sf0.1 the default
-    // salt made every downstream read of these tables a ~115-task
-    // scan where ~31 files carry the same rows). Default (-1) derives
-    // the bucket count from the optimizer's size estimate — one
-    // bucket per saltTargetBytes of batch, capped at the old fixed
-    // default — so cluster-scale batches keep the full spread while
-    // small ones write one file per day. Size-derived, not
-    // core-count-derived: the same code takes the same decision at
-    // any --master width. Callers pinning a spread shape pass an
-    // explicit count.
-    val saltTarget = s.conf.get("spark.graft.write.saltTargetBytes",
-      (128L * 1024 * 1024).toString).toLong.max(1L)
-    val SaltCap = 4 // the pre-r20 fixed spread — the estimate can only
-                    // choose FEWER buckets than the old default, never more
-    def saltFor(bytes: BigInt): Int =
-      ((bytes + saltTarget - 1) / saltTarget).min(BigInt(SaltCap)).max(BigInt(1)).toInt
-    val effSalt =
-      if (saltBuckets > 0) saltBuckets
-      else saltFor(df.queryExecution.optimizedPlan.stats.sizeInBytes)
-    val dataDir = s"$root/data/v$v"
-    // explicit partition count: AQE would otherwise coalesce the
-    // write shuffle and undo the salt spread on small batches
-    val shufflePartitions = s.sessionState.conf.numShufflePartitions
-    // stamp footer field ids like every other write path, through the
-    // ONE shared assignment (physFieldIds): it resolves the column
-    // mapping (a df carrying either the logical or the physical name
-    // of a renamed column finds the column's persistent id, never a
-    // fresh one), keeps dropped columns on their tombstoned id, and
-    // starts fresh ids past every id ever burned. This path writes
-    // df's own column names (no toPhysical), so names translate to
-    // physical ONLY for the lookup and the result is keyed back by
-    // the df's names — which is also how the header stores them.
-    val head = headAt(s, root, cur)
-    val idMapping = head.columnMapping
-    val physOfDf: Map[String, String] =
-      df.columns.map(c => c -> idMapping.getOrElse(c, c)).toMap
-    val physAssigned = physFieldIds(s, root, cur, head, df.columns.toSeq.map(physOfDf))
-    val ids = df.columns.map(c => c -> physAssigned(physOfDf(c))).toMap
-    def writeData(nSalt: Int): Unit = {
-      val salt = org.apache.spark.sql.functions.pmod(
-        org.apache.spark.sql.functions.xxhash64(
-          df.columns.map(col).toIndexedSeq: _*), lit(nSalt))
-      writingMicrosTimestamps(s) {
-        withFieldIds(df, ids).withColumn(pcol, day)
-          .repartition(shufflePartitions, col(pcol), salt)
-          .write.mode("overwrite").partitionBy(pcol).parquet(dataDir)
-      }
-    }
-    // recursive listing: files live under data/vN/_graft_day=…/ —
-    // via plain listStatus recursion, not listFiles(recursive), whose
-    // LocatedFileStatus permission loading throws on non-"file"
-    // schemes (see removeOrphans). Returns (manifest line, byte size)
-    // — the sizes feed the post-write salt check below.
-    val dataPath = new Path(dataDir)
-    val fs = fsOf(s, dataPath)
-    def listData(): Seq[(String, Long)] = {
-      val acc = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-      val stack = scala.collection.mutable.Stack[Path](dataPath)
-      while (stack.nonEmpty) {
-        fs.listStatus(stack.pop()).foreach { st =>
-          val f = st.getPath
-          if (st.isDirectory) stack.push(f)
-          else if (f.getName.endsWith(".parquet")) {
-            val dayVal = f.getParent.getName.split("=", 2).lift(1).getOrElse("")
-            acc += ((s"${f.toString}\t$pcol=$dayVal", st.getLen))
-          }
-        }
-      }
-      acc.toSeq
-    }
-    writeData(effSalt)
-    var files = listData()
-    // Post-write salt feedback (VERDICT r20 item 5, opt guide §6):
-    // the estimate-derived bucket count trusts Catalyst's
-    // sizeInBytes, which after filters/joins/generators can be off by
-    // orders of magnitude. Too HIGH is already capped at the old
-    // fixed spread; too LOW (a 10 GB batch estimated at 100 MB)
-    // writes one file per hot day — one write task and one giant
-    // unsplittable scan split per day, exactly the skew the salt
-    // exists to kill. Bytes actually written are ground truth: when
-    // the estimate chose the salt (default -1) and any single file
-    // breaches 2× the target while actual bytes demand more buckets,
-    // rewrite ONCE with the actual-derived count (still ≤ the cap —
-    // identical to what a correct estimate would have chosen). The
-    // happy path pays nothing: sizes ride the listing the commit
-    // already does.
-    if (saltBuckets <= 0 && effSalt < SaltCap && files.nonEmpty) {
-      val actualSalt = saltFor(BigInt(files.map(_._2).sum))
-      if (actualSalt > effSalt && files.map(_._2).max > 2L * saltTarget) {
-        writeData(actualSalt)
-        files = listData()
-      }
-    }
-    val lines = stampSeq(annotateRows(s, files.map(_._1).sorted), nextSeq(head))
-    // real mapping (not Map.empty): a df carrying a renamed column's
-    // physical name must persist under the LOGICAL key, or the header
-    // would grow a duplicate physical-keyed entry for the same id
-    publishNext(s, root, cur, head, Map.empty, Seq("" -> lines),
-      body = if (append) _.body else _ => Seq.empty,
-      header = Manifest.withFacts(_, partitionSource = Some(source),
-        fieldIds = Some(fieldIdsHeader(head, idMapping, ids))))
-  }
+      append: Boolean = true, saltBuckets: Int = -1): Int =
+    commitData(s, root, df, append, partition = Some(source), saltBuckets = saltBuckets)
 
   /** Read with a row predicate, pruning manifest entries THROUGH the
     * day transform: bounds on the source timestamp column become day
@@ -2232,8 +2056,151 @@ object SnapshotTable {
     all
   }
 
-  private def writeDataFiles(s: SparkSession, root: String, v: Int, df: DataFrame): Seq[String] =
-    writeDataFilesAt(s, s"$root/data/v$v", df)
+  /** New data files one write added: their manifest lines (no `_seq`
+    * yet — each op stamps its own) and the field ids their footers
+    * carry, keyed by physical name.
+    */
+  private final case class Written(lines: Seq[String], physIds: Map[String, Int])
+
+  /** THE writer of new data files: writes `df` under `dir` as data
+    * files of the table whose head is version `cur` (`head`), and
+    * returns their manifest lines. How a new file becomes a manifest
+    * line is decided here and nowhere else. It applies every
+    * registration of the head plus those this commit adds
+    * (`partition`, a physical name; `statsCols`/`bloomCols`, logical):
+    *  - logical → physical column names (`df` is logical unless
+    *    `physical`) and footer field ids ([[physFieldIds]]);
+    *  - INT64-micros timestamps ([[writingMicrosTimestamps]]);
+    *  - day(source) partitioning: each file holds one day and its line
+    *    names it (`_graft_day=yyyy-MM-dd`, [[writeDays]]);
+    *  - one footer pass ([[footerPass]]): `_rows`, `_bytes` and the
+    *    min/max bounds of every registered stats column;
+    *  - bloom filters of every registered bloom column ([[annotateBloom]]).
+    * `buckets` > 0 pins the files written per partition value (a
+    * compaction's packed output count, a caller's salt); otherwise an
+    * unpartitioned write keeps the frame's own partitioning and a day
+    * write derives its spread from the batch size. `sortCols` (logical)
+    * range-sort the rows across those files.
+    */
+  private def writeNew(
+      s: SparkSession, root: String, dir: String, cur: Int, head: Manifest.Version,
+      df: DataFrame, physical: Boolean = false, partition: Option[String] = None,
+      statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
+      buckets: Int = -1, sortCols: Seq[String] = Nil): Written = {
+    val mapping = head.columnMapping
+    def phys(cs: Seq[String]) = cs.filter(_.nonEmpty).map(c => mapping.getOrElse(c, c)).distinct
+    val physDf = if (physical) df else toPhysical(df, mapping)
+    val physIds = physFieldIds(s, root, cur, head, physDf.columns.toSeq)
+    val stamped = withFieldIds(physDf, physIds)
+    val sorted = phys(sortCols).map(col)
+    val files = partition.orElse(head.partitionSource) match {
+      case Some(source) => writeDays(s, dir, stamped, source, buckets, sorted)
+      case None =>
+        val arranged =
+          if (buckets <= 0) stamped
+          else if (sorted.isEmpty) stamped.repartition(buckets)
+          else stamped.repartitionByRange(buckets, sorted: _*).sortWithinPartitions(sorted: _*)
+        writingMicrosTimestamps(s) { arranged.write.mode("overwrite").parquet(dir) }
+        parquetFilesIn(s, dir)
+    }
+    val lines = footerPass(s, files, phys(head.statsColumns ++ statsCols), validate = phys(statsCols))
+    val blooms = phys(head.bloomColumns ++ bloomCols)
+    Written(if (blooms.isEmpty) lines else annotateBloom(s, lines, blooms), physIds)
+  }
+
+  /** Hidden day(`source`) partitioning of a physical write (the
+    * reference's `WITH (partitioning = ARRAY['day(ts)'])`, RUNBOOK.md:91):
+    * the transform value directs rows into per-day files and is
+    * recorded per file in the MANIFEST line, never in the file content
+    * — readers see the original schema only. Rows of one day spread
+    * across `buckets` salt buckets, so a hot day costs bounded extra
+    * files instead of one straggler task writing one giant file; with
+    * `sorted`, each day is range-split on those columns instead.
+    * Returns the files' manifest lines, sorted.
+    */
+  private def writeDays(
+      s: SparkSession, dir: String, df: DataFrame, source: String,
+      buckets: Int, sorted: Seq[Column]): Seq[String] = {
+    val pcol = "_graft_day"
+    val day = org.apache.spark.sql.functions.date_format(col(source), "yyyy-MM-dd")
+    // Scale-adaptive hot-day salting (opt guide §2.5 + §6): the salt
+    // exists so ONE hot day can spread across several write tasks and
+    // files — that matters once a day's bytes approach a target data
+    // file, and only hurts below it (a megabyte batch salted 4 ways
+    // shreds into day×salt fragments that every later scan task,
+    // footer read and manifest line pays for; at sf0.1 the default
+    // salt made every downstream read of these tables a ~115-task
+    // scan where ~31 files carry the same rows). Default (-1) derives
+    // the bucket count from the optimizer's size estimate — one
+    // bucket per saltTargetBytes of batch, capped at the old fixed
+    // default — so cluster-scale batches keep the full spread while
+    // small ones write one file per day. Size-derived, not
+    // core-count-derived: the same code takes the same decision at
+    // any --master width. Callers pinning a spread shape pass an
+    // explicit count.
+    val saltTarget = s.conf.get("spark.graft.write.saltTargetBytes",
+      (128L * 1024 * 1024).toString).toLong.max(1L)
+    val SaltCap = 4 // the pre-r20 fixed spread — the estimate can only
+                    // choose FEWER buckets than the old default, never more
+    def saltFor(bytes: BigInt): Int =
+      ((bytes + saltTarget - 1) / saltTarget).min(BigInt(SaltCap)).max(BigInt(1)).toInt
+    val effSalt =
+      if (buckets > 0) buckets
+      else saltFor(df.queryExecution.optimizedPlan.stats.sizeInBytes)
+    // explicit partition count: AQE would otherwise coalesce the
+    // write shuffle and undo the salt spread on small batches
+    val shufflePartitions = s.sessionState.conf.numShufflePartitions
+    def writeData(nSalt: Int): Unit = {
+      val withDay = df.withColumn(pcol, day)
+      val arranged =
+        if (sorted.nonEmpty) {
+          val order = col(pcol) +: sorted
+          withDay.repartitionByRange(nSalt, order: _*).sortWithinPartitions(order: _*)
+        } else {
+          val salt = org.apache.spark.sql.functions.pmod(
+            org.apache.spark.sql.functions.xxhash64(
+              df.columns.map(col).toIndexedSeq: _*), lit(nSalt))
+          withDay.repartition(shufflePartitions, col(pcol), salt)
+        }
+      writingMicrosTimestamps(s) {
+        arranged.write.mode("overwrite").partitionBy(pcol).parquet(dir)
+      }
+    }
+    // files live one level down, under <dir>/_graft_day=<day>/. Returns
+    // (manifest line, byte size): the sizes feed the post-write salt
+    // check below
+    val fs = fsOf(s, new Path(dir))
+    def listData(): Seq[(String, Long)] =
+      fs.listStatus(new Path(dir)).toSeq.filter(_.isDirectory).flatMap { d =>
+        val dayVal = d.getPath.getName.split("=", 2).lift(1).getOrElse("")
+        fs.listStatus(d.getPath).filter(_.getPath.getName.endsWith(".parquet"))
+          .map(st => (s"${st.getPath}\t$pcol=$dayVal", st.getLen))
+      }
+    writeData(effSalt)
+    var files = listData()
+    // Post-write salt feedback (VERDICT r20 item 5, opt guide §6):
+    // the estimate-derived bucket count trusts Catalyst's
+    // sizeInBytes, which after filters/joins/generators can be off by
+    // orders of magnitude. Too HIGH is already capped at the old
+    // fixed spread; too LOW (a 10 GB batch estimated at 100 MB)
+    // writes one file per hot day — one write task and one giant
+    // unsplittable scan split per day, exactly the skew the salt
+    // exists to kill. Bytes actually written are ground truth: when
+    // the estimate chose the salt (default -1) and any single file
+    // breaches 2× the target while actual bytes demand more buckets,
+    // rewrite ONCE with the actual-derived count (still ≤ the cap —
+    // identical to what a correct estimate would have chosen). The
+    // happy path pays nothing: sizes ride the listing the commit
+    // already does.
+    if (buckets <= 0 && effSalt < SaltCap && files.nonEmpty) {
+      val actualSalt = saltFor(BigInt(files.map(_._2).sum))
+      if (actualSalt > effSalt && files.map(_._2).max > 2L * saltTarget) {
+        writeData(actualSalt)
+        files = listData()
+      }
+    }
+    files.map(_._1).sorted
+  }
 
   /** Iceberg parquet field ids for a PHYSICAL frame about to land in
     * the table at head `cur`: the table's persistent ids keyed by
@@ -2276,19 +2243,25 @@ object SnapshotTable {
       }.toMap
     }
 
-  /** The field ids a data commit on `head` persists: the stored
-    * assignment (tombstones and absent columns included) plus fresh
-    * entries for columns THIS commit introduces, keyed logical.
-    * Persisting on every commit makes every later id lookup
-    * header-only — without it, each commit would re-infer the table
-    * schema (a parquet footer read) just to reconstruct ordinal ids.
+  /** The field ids a data commit on `head` (version `cur`) persists,
+    * `w`'s new files included: the stored assignment (tombstones and
+    * absent columns included) plus fresh entries for columns THIS
+    * commit introduces, keyed logical. Persisting on every commit makes
+    * every later id lookup header-only — without it, each commit would
+    * re-infer the table schema (a parquet footer read) just to
+    * reconstruct ordinal ids. The header a first-stamped commit
+    * persists covers the WHOLE table (columns absent from this write
+    * included), so later lookups never re-derive ordinals from a
+    * different column subset.
     */
-  private def fieldIdsHeader(head: Manifest.Version,
-      mapping: Map[String, String], physIds: Map[String, Int]): Map[String, Int] = {
+  private def withFieldIdsHeader(s: SparkSession, root: String, cur: Int,
+      head: Manifest.Version, w: Written): Map[String, String] => Map[String, String] = {
     val stored = head.storedFieldIds
-    val reverse = mapping.map(_.swap)
-    stored ++ physIds.map { case (p, id) => reverse.getOrElse(p, p) -> id }
-      .filterNot { case (n, _) => stored.contains(n) }
+    val base = if (cur < 1 || stored.nonEmpty) stored else fieldIds(s, root, cur, head)
+    val reverse = head.columnMapping.map(_.swap)
+    val ids = base ++ w.physIds.map { case (p, id) => reverse.getOrElse(p, p) -> id }
+      .filterNot { case (n, _) => base.contains(n) }
+    Manifest.withFacts(_, fieldIds = Some(ids))
   }
 
   /** Stamp `parquet.field.id` column metadata so the parquet writer
@@ -2378,11 +2351,6 @@ object SnapshotTable {
         }
       }
     }
-  }
-
-  private def writeDataFilesAt(s: SparkSession, dataDir: String, df: DataFrame): Seq[String] = {
-    writingMicrosTimestamps(s) { df.write.mode("overwrite").parquet(dataDir) }
-    parquetFilesIn(s, dataDir)
   }
 
   // ----- rollback and named refs (Iceberg tags) ---------------------
@@ -2600,12 +2568,14 @@ object SnapshotTable {
       append: Boolean = true, meta: Map[String, String] = Map.empty): Int = {
     val head = verAt(s, root, branchHead(s, root, name))
     val n = Manifest.branchVersion(conf(s), root, name) + 1
-    val newFiles = stampSeq(annotateRows(s,
-      writeDataFilesAt(s, s"$root/data/$name/v$n", toPhysical(df, head.columnMapping))),
-      head.maxSeq + 1)
+    // a branch always forks from a main version, so its head is never
+    // the empty table: `n` stands in for the version number
+    val w = writeNew(s, root, s"$root/data/$name/v$n", n, head, df)
     val stem = s"$name.v$n"
-    Manifest.publish(conf(s), root, stem, head.inheritedHeader ++ meta + ("branch" -> name),
-      (if (append) head.body else Seq.empty) ++ Manifest.fragment(conf(s), root, stem, newFiles))
+    Manifest.publish(conf(s), root, stem,
+      withFieldIdsHeader(s, root, n, head, w)(head.inheritedHeader) ++ meta + ("branch" -> name),
+      (if (append) head.body else Seq.empty) ++
+        Manifest.fragment(conf(s), root, stem, stampSeq(w.lines, nextSeq(head))))
     Manifest.writeRef(conf(s), new Path(branchesDir(root), name), stem, overwrite = true)
     n
   }
@@ -3078,13 +3048,9 @@ object SnapshotTable {
         val hconf = s.sparkContext.hadoopConfiguration
         val it = files.iterator.slice(1, files.length - 1)
         while (it.hasNext && missing.nonEmpty) {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new Path(it.next()), hconf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
           val names = {
             import scala.jdk.CollectionConverters._
-            try r.getFileMetaData.getSchema.getFields.asScala.map(_.getName)
-            finally r.close()
+            graft.sources.Footer.read(hconf, it.next()).parquetSchema.getFields.asScala.map(_.getName)
           }
           names.filter(missing.contains).foreach { n =>
             missing -= n

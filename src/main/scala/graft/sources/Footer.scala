@@ -1,13 +1,22 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
-/** Driver-side parquet schema probes.
+/** The one reader of parquet footers: every footer open in the engine
+  * goes through [[read]], so a caller that needs several facts of one
+  * file (its schema, row count, size, column statistics) opens it once.
+  *
+  * Driver-side schema probes ([[schemaOf]]):
   *
   * `s.read.parquet(f).schema` schedules a 1-task schema-inference JOB
   * even for a single file — ~25-50 ms of scheduling latency per probe
@@ -42,6 +51,23 @@ object Footer {
     case other => other
   }
 
+  /** What one footer read of a parquet file yields: the file's byte
+    * length and its parsed footer (schema, key-value metadata, row
+    * groups with their column statistics).
+    */
+  final class Facts(val bytes: Long, val footer: ParquetMetadata) {
+    def rows: Long = footer.getBlocks.asScala.iterator.map(_.getRowCount).sum
+    def parquetSchema: MessageType = footer.getFileMetaData.getSchema
+  }
+
+  /** Open `file`'s footer once. */
+  def read(conf: Configuration, file: String): Facts = {
+    val in = HadoopInputFile.fromPath(new Path(file), conf)
+    val r = ParquetFileReader.open(in)
+    try new Facts(in.getLength, r.getFooter)
+    finally r.close()
+  }
+
   /** Spark schema of one parquet file OR directory-shaped table (a
     * Spark-written table is a dir of uniform-schema part files — one
     * leaf's footer is exactly what no-mergeSchema inference reads),
@@ -57,17 +83,18 @@ object Footer {
         .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
         .headOption.getOrElse(
           throw new IllegalArgumentException(s"no parquet leaves under $file"))
-    val in = HadoopInputFile.fromPath(leaf, conf)
-    val r = ParquetFileReader.open(in)
-    val (msg, kv) =
-      try (r.getFileMetaData.getSchema, r.getFileMetaData.getKeyValueMetaData)
-      finally r.close()
-    val fromMeta = Option(kv.get(SparkSchemaKey)).flatMap { json =>
+    sparkSchema(s, read(conf, leaf.toString))
+  }
+
+  /** The Spark schema inference derives from an already-read footer. */
+  def sparkSchema(s: SparkSession, facts: Facts): StructType = {
+    val meta = facts.footer.getFileMetaData
+    val fromMeta = Option(meta.getKeyValueMetaData.get(SparkSchemaKey)).flatMap { json =>
       try Some(DataType.fromJson(json).asInstanceOf[StructType])
       catch { case scala.util.control.NonFatal(_) => None }
     }
     val raw = fromMeta.getOrElse(
-      new ParquetToSparkSchemaConverter(s.sessionState.conf).convert(msg))
+      new ParquetToSparkSchemaConverter(s.sessionState.conf).convert(meta.getSchema))
     toNullable(raw).asInstanceOf[StructType]
   }
 }

@@ -108,8 +108,8 @@ class CommitRoundTripSpec extends SparkSpec {
   // (manifest opens, manifest creates, staged-file opens) per wire commit;
   // each includes rendering the response's metadata for the new version
   private val WirePinned: Map[String, (Int, Int, Int)] = Map(
-    "add_snapshot" -> (4, 2, 3), "set_snapshot_ref" -> (1, 0, 0),
-    "transaction" -> (1, 4, 4))
+    "add_snapshot" -> (4, 2, 2), "set_snapshot_ref" -> (1, 0, 0),
+    "transaction" -> (1, 4, 2))
 
   test("each wire commit opens and creates a fixed number of files") {
     conf.set("fs.countfs.impl", classOf[CountingTestFs].getName)

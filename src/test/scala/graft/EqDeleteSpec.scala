@@ -230,6 +230,29 @@ class EqDeleteSpec extends SparkSpec {
     assert(SnapshotTable.read(spark, root, v).count() === 24)
   }
 
+  test("(j2) key columns are checked against the version's schema: added yes, dropped no") {
+    val root = "/tmp/graft_test/eq_evolved_keys"
+    mk(root)
+    // an ADDed column that later appends carry is a valid key, even
+    // though the table's oldest file predates it
+    SnapshotTable.addColumn(spark, root, "k2", "bigint")
+    SnapshotTable.commit(spark, root, Seq((100L, 0L, "v100", 7L)).toDF("id", "grp", "v", "k2"))
+    val v = SnapshotTable.upsertEq(spark, root, Seq("k2"),
+      Seq((101L, 1L, "v101", 7L)).toDF("id", "grp", "v", "k2"))
+    assert(SnapshotTable.read(spark, root, v).filter(col("k2") === 7).select("id")
+      .as[Long].collect().toSeq === Seq(101L))
+    // a DROPped column is not: its bytes still live in the old files,
+    // but no version from the drop on has the column
+    SnapshotTable.dropColumn(spark, root, "v")
+    val cur = SnapshotTable.currentVersion(spark, root)
+    val e = intercept[IllegalArgumentException] {
+      SnapshotTable.deleteWhereEq(spark, root, Seq("v"), Seq("v3").toDF("v"))
+    }
+    assert(e.getMessage.contains("unknown key column(s) v"), e.getMessage)
+    assert(SnapshotTable.currentVersion(spark, root) === cur)
+    assert(SnapshotTable.read(spark, root).count() === 31)
+  }
+
   test("(k) null keys: eq delete null-safely suppresses null-keyed rows (Iceberg v2)") {
     val root = "/tmp/graft_test/eq_nullkey"
     SnapshotTable.drop(spark, root)

@@ -22,6 +22,7 @@ class CountingTestFs extends GraftTestFs {
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     count(f, CountingTestFs.opens)
     if (f.toString.contains("/staged/")) { CountingTestFs.stagedOpens.incrementAndGet(); () }
+    if (f.toString.contains("/data/")) { CountingTestFs.dataOpens.incrementAndGet(); () }
     super.open(f, bufferSize)
   }
   override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
@@ -41,6 +42,7 @@ object CountingTestFs {
   val opens = new AtomicInteger()
   val creates = new AtomicInteger()
   val stagedOpens = new AtomicInteger()
+  val dataOpens = new AtomicInteger()
 }
 
 /** The parsed-manifest cache ([[Manifest]]) serves a version only while

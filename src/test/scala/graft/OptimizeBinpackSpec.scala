@@ -9,7 +9,7 @@ import graft.lake.SnapshotTable
   * rewritten (right-sized files keep their exact bytes), packing is
   * per-partition-value on hidden-partitioned tables, delete-affected
   * files are excluded (that fold is compactDeletes' job), registered
-  * stats survive onto the packed outputs, and the publish rebases
+  * stats (numeric and string) survive onto the packed outputs, and the publish rebases
   * over a concurrent append via the shared publishRewrite path.
   */
 class OptimizeBinpackSpec extends SparkSpec {
@@ -122,6 +122,28 @@ class OptimizeBinpackSpec extends SparkSpec {
     assert(annots.size === 1)
     assert(annots.head._2.contains("_min_id") && annots.head._2.contains("_max_id"),
       s"packed output must be re-annotated with registered stats, got ${annots.head._2}")
+  }
+
+  test("string-stats files pack and keep their bounds") {
+    // per-file string bounds must not split small files into one
+    // packing group each
+    val root = "/tmp/graft_test/opt_string_stats"
+    SnapshotTable.drop(spark, root)
+    (0 until 3).foreach { i =>
+      SnapshotTable.commit(spark, root,
+        spark.range(i * 100, i * 100 + 100)
+          .select(col("id"), expr("cast(id as string)").as("v")).coalesce(1),
+        statsCols = Seq("v"))
+    }
+    assert(files(root).size === 3)
+    val v = SnapshotTable.compactSmallFiles(spark, root,
+      smallBytes = 1L << 20, targetBytes = 10L << 20)
+    assert(v === 4, "three small string-stats files must pack")
+    val annots = SnapshotTable.version(spark, root, v).dataEntries.map(_.annots)
+    assert(annots.size === 1)
+    assert(annots.head.contains("_smin_v") && annots.head.contains("_smax_v"),
+      s"packed output must be re-annotated with registered stats, got ${annots.head}")
+    assert(SnapshotTable.read(spark, root).count() === 300)
   }
 
   test("sort-ordered pack restores clustering: per-file key ranges are disjoint") {
