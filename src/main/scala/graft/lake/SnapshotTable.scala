@@ -52,9 +52,12 @@ object SnapshotTable {
 
   private def canonConf(conf: org.apache.hadoop.conf.Configuration, p: String): String = {
     val path = new Path(p)
-    val q =
-      if (path.toUri.getScheme == null) path.getFileSystem(conf).makeQualified(path)
-      else path
+    canonQualified(
+      if (path.toUri.getScheme == null) path.getFileSystem(conf).makeQualified(path) else path)
+  }
+
+  /** [[canon]] of an already-qualified path (a listing status). */
+  private def canonQualified(q: Path): String = {
     val u = q.toUri
     s"${u.getScheme}://${Option(u.getAuthority).getOrElse("")}${u.getPath}"
   }
@@ -1370,7 +1373,8 @@ object SnapshotTable {
     *  - Partition-aware: packing groups by the day a file names, and
     *    the packed outputs go through the table's writer, so a
     *    day-partitioned table compacts WITHIN each day (unannotated
-    *    inputs come back out as per-day files), exactly like
+    *    inputs come back out as per-day files, and pack only when
+    *    that still lowers the file count), exactly like
     *    Iceberg/Delta per-partition bin packing.
     *  - Delete-affected files are excluded: a file named by a pending
     *    positional delete can't be rewritten here (positions would
@@ -1410,8 +1414,7 @@ object SnapshotTable {
     // the day every live data file names; unannotated files (written
     // before the table was partitioned, or by a writer that names no
     // day) form one group, which the writer splits back into days
-    val dayOf: Map[String, String] = mv.dataEntries.map(e =>
-      norm(e.path) -> e.annots.getOrElse("_graft_day", "")).toMap
+    val dayOfFile = mv.dataEntries.map(e => norm(e.path) -> e.annots.getOrElse("_graft_day", "")).toMap
     val eligible = mv.dataFiles.filter { f =>
       !posAffected.contains(norm(f)) && eqs.forall(_.seq <= fileSeq(f))
     }
@@ -1426,35 +1429,36 @@ object SnapshotTable {
         .distinct().collect().map(r => norm(r.getString(0)) -> r.getLong(1)).toMap
     def outputs(fs: Seq[String]): Int =
       math.max(1, math.ceil(fs.map(f => sizes(norm(f))).sum.toDouble / targetBytes).toInt)
+    // the writer splits a pack by day, `outputs` files at most per day:
+    // an unannotated group of a day table comes back out as up to
+    // `outputs` files for each day its rows hold
+    def daysIn(day: String, fs: Seq[String]): Long = mv.partitionSource match {
+      case Some(source) if day.isEmpty =>
+        val df = rawWidenedRead(s, fs, mapping, types)
+        df.select(dayOf(s, df, source)).distinct().count()
+      case _ => 1L
+    }
     // pack within each day; a day repacks only when it has 2+ small
     // files AND fewer outputs than inputs
     val smallByGroup: Map[String, Seq[String]] = eligible
       .filter(f => sizes.getOrElse(norm(f), Long.MaxValue) < smallBytes)
-      .groupBy(f => dayOf.getOrElse(norm(f), ""))
-      .filter { case (_, fs) => fs.size >= 2 && outputs(fs) < fs.size }
+      .groupBy(f => dayOfFile.getOrElse(norm(f), ""))
+      .filter { case (day, fs) => fs.size >= 2 && outputs(fs) * daysIn(day, fs) < fs.size }
     if (smallByGroup.isEmpty) return cur
     val seq = nextSeq(mv)
     // physical rewrite (no logical view): renames stay metadata-only;
     // staged under a commit-UNIQUE dir (see compactDeletes — a
-    // v-numbered dir is a concurrency hazard). Days packing into the
-    // same number of outputs share one write (the writer splits it by
-    // day again). With sortCols (Iceberg's rewrite SORT strategy) each
-    // day is written alone and the pack also RESTORES clustering:
+    // v-numbered dir is a concurrency hazard). With sortCols (Iceberg's
+    // rewrite SORT strategy) the pack also RESTORES clustering:
     // range-partition + sort means each packed file owns a disjoint
     // key range, so the re-annotated min/max stats prune like a fresh
     // z-order/clustered write — compaction that tightens skipping
     // instead of destroying it.
-    val writes: Seq[(Int, Seq[String])] = {
-      val groups = smallByGroup.toSeq.sortBy(_._1).map(_._2)
-      if (sortCols.isEmpty)
-        groups.groupBy(outputs).toSeq.sortBy(_._1).map { case (n, gs) => n -> gs.flatten }
-      else groups.map(fs => outputs(fs) -> fs)
-    }
-    val newFiles: Seq[String] = writes.flatMap { case (nOut, fs) =>
+    val newFiles: Seq[String] = smallByGroup.toSeq.sortBy(_._1).flatMap { case (_, fs) =>
       stampSeq(writeNew(s, root,
         s"$root/data/m-${java.util.UUID.randomUUID.toString.take(8)}", cur, mv,
         rawWidenedRead(s, fs, mapping, types), physical = true,
-        buckets = nOut, sortCols = sortCols).lines, seq)
+        buckets = outputs(fs), sortCols = sortCols).lines, seq)
     }
     val packedSet: Set[String] = smallByGroup.values.flatten.map(norm).toSet
     publishRewrite(s, root, cur, mv,
@@ -1952,27 +1956,13 @@ object SnapshotTable {
           else loose += ((sub.getPath.toString, sub.getModificationTime))
         }
       }
-    // executors rebuild the Hadoop conf from broadcast entries so the
-    // listing/delete tasks resolve the SAME FileSystem scheme the
-    // driver does (s3a://, the test schemes) — no java.io assumptions
-    val confEntries: Array[(String, String)] = {
-      val it = s.sparkContext.hadoopConfiguration.iterator()
-      val b = Array.newBuilder[(String, String)]
-      while (it.hasNext) { val e = it.next(); b += ((e.getKey, e.getValue)) }
-      b.result()
-    }
-    val confB = s.sparkContext.broadcast(confEntries)
-    def execConf(): org.apache.hadoop.conf.Configuration = {
-      val c = new org.apache.hadoop.conf.Configuration(false)
-      confB.value.foreach { case (k, v) => c.set(k, v) }
-      c
-    }
-    // listing statuses come back fully qualified: format them with the
-    // same scheme://authority/path normal form canon() uses
-    def canonQualified(p: Path): String = {
-      val u = p.toUri
-      s"${u.getScheme}://${Option(u.getAuthority).getOrElse("")}${u.getPath}"
-    }
+    // executors get the driver's Hadoop conf (broadcast, as footerPass
+    // ships it) so the listing/delete tasks resolve the SAME FileSystem
+    // scheme the driver does (s3a://, the test schemes) — no java.io
+    // assumptions
+    val confB = s.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(s.sparkContext.hadoopConfiguration))
+    def execConf(): org.apache.hadoop.conf.Configuration = confB.value.value
     import s.implicits._
     val dirsRdd = s.sparkContext.parallelize(
       candidateDirs.toSeq, math.max(1, math.min(candidateDirs.size, 64)))
@@ -2092,6 +2082,13 @@ object SnapshotTable {
     val physDf = if (physical) df else toPhysical(df, mapping)
     val physIds = physFieldIds(s, root, cur, head, physDf.columns.toSeq)
     val stamped = withFieldIds(physDf, physIds)
+    // the commit's own bloomCols must be frame columns (an unresolved
+    // `user` would hash current_user()); a registered one the frame
+    // lacks gets no filter (the file then always scans), as footerPass
+    // skips an absent stats column
+    phys(bloomCols).find(!hasColumn(s, stamped, _)).foreach(c =>
+      throw new IllegalArgumentException(s"unknown bloomCols column: $c"))
+    val blooms = phys(head.bloomColumns ++ bloomCols).filter(hasColumn(s, stamped, _))
     val sorted = phys(sortCols).map(col)
     val files = partition.orElse(head.partitionSource) match {
       case Some(source) => writeDays(s, dir, stamped, source, buckets, sorted)
@@ -2104,7 +2101,6 @@ object SnapshotTable {
         parquetFilesIn(s, dir)
     }
     val lines = footerPass(s, files, phys(head.statsColumns ++ statsCols), validate = phys(statsCols))
-    val blooms = phys(head.bloomColumns ++ bloomCols)
     Written(if (blooms.isEmpty) lines else annotateBloom(s, lines, blooms), physIds)
   }
 
@@ -2122,26 +2118,19 @@ object SnapshotTable {
       s: SparkSession, dir: String, df: DataFrame, source: String,
       buckets: Int, sorted: Seq[Column]): Seq[String] = {
     val pcol = "_graft_day"
-    val day = org.apache.spark.sql.functions.date_format(col(source), "yyyy-MM-dd")
-    // Scale-adaptive hot-day salting (opt guide §2.5 + §6): the salt
-    // exists so ONE hot day can spread across several write tasks and
-    // files — that matters once a day's bytes approach a target data
-    // file, and only hurts below it (a megabyte batch salted 4 ways
-    // shreds into day×salt fragments that every later scan task,
-    // footer read and manifest line pays for; at sf0.1 the default
-    // salt made every downstream read of these tables a ~115-task
-    // scan where ~31 files carry the same rows). Default (-1) derives
-    // the bucket count from the optimizer's size estimate — one
-    // bucket per saltTargetBytes of batch, capped at the old fixed
-    // default — so cluster-scale batches keep the full spread while
-    // small ones write one file per day. Size-derived, not
-    // core-count-derived: the same code takes the same decision at
-    // any --master width. Callers pinning a spread shape pass an
-    // explicit count.
+    val day = dayOf(s, df, source)
+    // Size-derived salt: spreading one hot day over several write
+    // tasks and files pays once a day's bytes approach a target data
+    // file and only hurts below it (day×salt fragments that every later
+    // scan task, footer read and manifest line pays for; at sf0.1 a
+    // fixed salt of 4 made each read a ~115-task scan over ~31 files'
+    // rows). Default (-1): one bucket per saltTargetBytes of the
+    // optimizer's size estimate, capped at SaltCap, so small batches
+    // write one file per day and the choice is the same at any core
+    // count. Callers pinning a spread shape pass an explicit count.
     val saltTarget = s.conf.get("spark.graft.write.saltTargetBytes",
       (128L * 1024 * 1024).toString).toLong.max(1L)
-    val SaltCap = 4 // the pre-r20 fixed spread — the estimate can only
-                    // choose FEWER buckets than the old default, never more
+    val SaltCap = 4 // the old fixed spread: the estimate only ever picks fewer
     def saltFor(bytes: BigInt): Int =
       ((bytes + saltTarget - 1) / saltTarget).min(BigInt(SaltCap)).max(BigInt(1)).toInt
     val effSalt =
@@ -2178,20 +2167,14 @@ object SnapshotTable {
       }
     writeData(effSalt)
     var files = listData()
-    // Post-write salt feedback (VERDICT r20 item 5, opt guide §6):
-    // the estimate-derived bucket count trusts Catalyst's
+    // Post-write salt check: the estimate trusts Catalyst's
     // sizeInBytes, which after filters/joins/generators can be off by
-    // orders of magnitude. Too HIGH is already capped at the old
-    // fixed spread; too LOW (a 10 GB batch estimated at 100 MB)
-    // writes one file per hot day — one write task and one giant
-    // unsplittable scan split per day, exactly the skew the salt
-    // exists to kill. Bytes actually written are ground truth: when
-    // the estimate chose the salt (default -1) and any single file
-    // breaches 2× the target while actual bytes demand more buckets,
-    // rewrite ONCE with the actual-derived count (still ≤ the cap —
-    // identical to what a correct estimate would have chosen). The
-    // happy path pays nothing: sizes ride the listing the commit
-    // already does.
+    // orders of magnitude. Too high is capped; too low (a 10 GB batch
+    // estimated at 100 MB) writes one giant file per hot day, the skew
+    // the salt exists to kill. So when the estimate chose the salt and
+    // a file breaches 2× the target while the bytes written demand more
+    // buckets, rewrite ONCE with the count those bytes give (still ≤
+    // the cap). The happy path pays nothing: sizes ride the listing.
     if (buckets <= 0 && effSalt < SaltCap && files.nonEmpty) {
       val actualSalt = saltFor(BigInt(files.map(_._2).sum))
       if (actualSalt > effSalt && files.map(_._2).max > 2L * saltTarget) {
@@ -2201,6 +2184,19 @@ object SnapshotTable {
     }
     files.map(_._1).sorted
   }
+
+  /** The day(`source`) of each row of `df`, as `yyyy-MM-dd`. A frame
+    * without the source column holds only rows whose source reads back
+    * null, so they take the null day (Spark's __HIVE_DEFAULT_PARTITION__),
+    * as a null timestamp does.
+    */
+  private def dayOf(s: SparkSession, df: DataFrame, source: String): Column =
+    if (hasColumn(s, df, source))
+      org.apache.spark.sql.functions.date_format(col(source), "yyyy-MM-dd")
+    else lit(null).cast("string")
+
+  private def hasColumn(s: SparkSession, df: DataFrame, c: String): Boolean =
+    df.columns.exists(s.sessionState.conf.resolver(_, c))
 
   /** Iceberg parquet field ids for a PHYSICAL frame about to land in
     * the table at head `cur`: the table's persistent ids keyed by

@@ -129,6 +129,33 @@ class LakeWriterSpec extends SparkSpec {
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
+  test("a frame without a registered bloom column or the day source still commits") {
+    val root = "/tmp/graft_test/writer_absent_cols"
+    SnapshotTable.drop(spark, root)
+    SnapshotTable.commitPartitionedByDay(spark, root, rows(1 to 9), "ts")
+    SnapshotTable.commit(spark, root, rows(10 to 12), bloomCols = Seq("user"))
+    def addedBy(run: => Int): Seq[Manifest.Entry] = {
+      val before = SnapshotTable.version(spark, root, SnapshotTable.currentVersion(spark, root))
+      added(before, SnapshotTable.version(spark, root, run))
+    }
+    // no bloom filter for a column the files lack: they always scan
+    // (`user` must not resolve to current_user())
+    intercept[IllegalArgumentException](
+      SnapshotTable.commit(spark, root, rows(13 to 15).drop("user"), bloomCols = Seq("user")))
+    val noBloom = addedBy(SnapshotTable.commitAppend(spark, root, rows(13 to 15).drop("user")))
+    assert(noBloom.nonEmpty && noBloom.forall(e =>
+      e.annots.contains("_graft_day") && !e.annots.contains("_bloom_user")))
+    // rows without the source read back with a null ts: the null day
+    val noDay = addedBy(SnapshotTable.commit(spark, root, rows(16 to 18).drop("ts")))
+    assert(noDay.map(_.annots.get("_graft_day")).toSet ===
+      Set(Some("__HIVE_DEFAULT_PARTITION__")))
+    val mv = SnapshotTable.version(spark, root, SnapshotTable.currentVersion(spark, root))
+    checkPruning("null day", root, mv)
+    val all = SnapshotTable.read(spark, root)
+    assert(all.count() === 18)
+    assert(all.filter(col("ts").isNull).count() === 3)
+  }
+
   test("a commit with stats opens each new file's footer once") {
     conf.set("fs.countfs.impl", classOf[CountingTestFs].getName)
     val root = "countfs:///tmp/graft_test/writer_opens/t"

@@ -146,6 +146,46 @@ class OptimizeBinpackSpec extends SparkSpec {
     assert(SnapshotTable.read(spark, root).count() === 300)
   }
 
+  test("unannotated files of a day table pack by day and never into more files") {
+    // files registered zero-copy name no day; the writer splits their
+    // pack back into days, so the pack must count its per-day outputs
+    def rows(days: Range, tag: String) = days.flatMap(d => (0 until 4).map(i =>
+      (d * 10L + i, s"$tag$d", java.sql.Timestamp.valueOf(f"2024-01-$d%02d 10:00:00"))))
+      .toDF("id", "v", "ts")
+    def stagedTable(root: String, days: Range, nFiles: Int): Unit = {
+      SnapshotTable.drop(spark, root)
+      SnapshotTable.commitPartitionedByDay(spark, root, rows(days.take(1), "p"), "ts")
+      (0 until nFiles).foreach { i =>
+        val dir = s"$root/staged/s$i"
+        rows(days, s"s$i").coalesce(1).write.mode("overwrite").parquet(dir)
+        val p = new org.apache.hadoop.fs.Path(dir)
+        SnapshotTable.commitFiles(spark, root, p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .listStatus(p).map(_.getPath.toString).filter(_.endsWith(".parquet")).toSeq)
+      }
+    }
+    def compact(root: String) = SnapshotTable.compactSmallFiles(spark, root,
+      smallBytes = 1L << 20, targetBytes = 10L << 20)
+
+    // three files over 30 days would pack into 30: no commit
+    val wide = "/tmp/graft_test/opt_unannotated_wide"
+    stagedTable(wide, 1 to 30, 3)
+    val before = files(wide).size
+    val cur = SnapshotTable.currentVersion(spark, wide)
+    assert(compact(wide) === cur, "a pack into more files than it removes must not commit")
+    assert(files(wide).size === before)
+
+    // four files over two days pack into one file per day
+    val narrow = "/tmp/graft_test/opt_unannotated_narrow"
+    stagedTable(narrow, 1 to 2, 4)
+    val prev = SnapshotTable.currentVersion(spark, narrow)
+    val v = compact(narrow)
+    assert(v === prev + 1 && files(narrow).size === 3,
+      s"the day file, and the four staged files packed per day, got ${files(narrow)}")
+    val days = SnapshotTable.version(spark, narrow, v).dataEntries.map(_.annots.get("_graft_day"))
+    assert(days.sorted === Seq(Some("2024-01-01"), Some("2024-01-01"), Some("2024-01-02")))
+    assert(SnapshotTable.read(spark, narrow).count() === 4 + 4 * 8)
+  }
+
   test("sort-ordered pack restores clustering: per-file key ranges are disjoint") {
     val root = "/tmp/graft_test/opt_sorted"
     SnapshotTable.drop(spark, root)
