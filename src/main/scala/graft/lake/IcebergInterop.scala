@@ -39,7 +39,7 @@ import graft.Json.{arr, at, jstr, long, parse, present, str}
   *
   * Hidden day(source) partitioning exports as a REAL day partition
   * spec (spec-id 1, field-id 1000, per-file date values from the
-  * manifest's `_graft_day` annotations) so external engines keep
+  * manifest's day annotations) so external engines keep
   * partition pruning; stats-annotated columns export as
   * `lower_bounds`/`upper_bounds` (spec Appendix D single-value
   * binary) so they keep file skipping. Column binding is covered both
@@ -178,26 +178,23 @@ object IcebergInterop {
   }
 
   /** Iceberg single-value binary serialization of one per-file column
-    * bound, read from graft's manifest stats annotations
-    * ([[SnapshotTable]] `_min_/_max_` as doubles in catalyst-internal
-    * units, `_smin_/_smax_` as Base64 UTF-8 bytes — spec Appendix D:
-    * little-endian numerics, raw UTF-8 for strings). Integral values
-    * a double cannot hold exactly are widened OUTWARD (floor past the
-    * next-down for lower, ceil past the next-up for upper): a bound
-    * may be loose, never wrong — a planner skipping on a too-tight
-    * bound would drop live rows. Types graft keeps only in its own
-    * annotations (decimal) yield no exported bound.
+    * bound, read from the file's manifest entry (numeric bounds as
+    * doubles in catalyst-internal units, string bounds as UTF-8 bytes —
+    * spec Appendix D: little-endian numerics, raw UTF-8 for strings).
+    * Integral values a double cannot hold exactly are widened OUTWARD
+    * (floor past the next-down for lower, ceil past the next-up for
+    * upper): a bound may be loose, never wrong — a planner skipping on
+    * a too-tight bound would drop live rows. Types graft keeps only in
+    * its own annotations (decimal) yield no exported bound.
     */
   private def boundBuf(
-      icebergT: String, annots: Map[String, String], phys: String,
+      icebergT: String, e: Manifest.Entry, phys: String,
       lower: Boolean): Option[java.nio.ByteBuffer] = {
     import java.nio.{ByteBuffer, ByteOrder}
     def le(n: Int) = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
     if (icebergT == "string")
-      annots.get(if (lower) s"_smin_$phys" else s"_smax_$phys")
-        .map(b => ByteBuffer.wrap(java.util.Base64.getDecoder.decode(b)))
-    else annots.get(if (lower) s"_min_$phys" else s"_max_$phys")
-      .map(_.toDouble).flatMap { v =>
+      e.stringBounds(phys).map(b => ByteBuffer.wrap(if (lower) b._1 else b._2))
+    else e.numericBounds(phys).map(b => if (lower) b._1 else b._2).flatMap { v =>
         def longVal: Long =
           if (v == math.rint(v) && math.abs(v) < 9007199254740992.0) v.toLong
           else if (lower) math.floor(Math.nextDown(v)).toLong
@@ -586,13 +583,9 @@ object IcebergInterop {
     val mapping = mv.columnMapping
     val eqIdOf: Map[String, Int] = // PHYSICAL column name -> field id
       fields.map { case (id, n, _) => mapping.getOrElse(n, n) -> id }.toMap
-    // per-file manifest annotations (stats bounds, partition values;
-    // PHYSICAL column keys) — data files only, metadata-sized
-    val annotsOf: Map[String, Map[String, String]] =
-      mv.dataEntries.map(e => SnapshotTable.canon(s, e.path) -> e.annots).toMap
     // hidden day(source) partitioning exports as a REAL day spec:
     // spec-id 1 with one date field (ids from 1000), per-file values
-    // from the _graft_day annotation — external engines get partition
+    // from each file's day annotation — external engines get partition
     // pruning back. Delete manifests stay spec 0: graft's row-level
     // deletes are not partition-scoped.
     val daySource = daySourceOf(mv, fields)
@@ -633,18 +626,15 @@ object IcebergInterop {
       df.put("content", e.kind)
       df.put("file_path", canonPath)
       df.put("file_format", "PARQUET")
-      val annots =
-        if (isData) annotsOf.getOrElse(canonPath, Map.empty[String, String])
-        else Map.empty[String, String]
       val part = new GenericData.Record(dfSchema.getField("partition").schema())
       if (isData) dayFieldName.foreach { fn =>
         // every file the engine's write ops add to a day table names
-        // its day; only files they did not write (registered zero-copy,
-        // written by the SQL row-level writer, or written before the
-        // table was partitioned) can lack one. Those and a null-day
-        // file (Spark's __HIVE_DEFAULT_PARTITION__ sentinel) export a
-        // NULL partition value, never a parse crash
-        part.put(fn, annots.get("_graft_day").flatMap(d =>
+        // its day, and so does every one-day file registered zero-copy
+        // or written by the SQL row-level writer; files that span days
+        // or were written before the table was partitioned lack one.
+        // Those and a null-day file (Spark's __HIVE_DEFAULT_PARTITION__
+        // sentinel) export a NULL partition value, never a parse crash
+        part.put(fn, e.day.flatMap(d =>
           scala.util.Try(
             Integer.valueOf(java.time.LocalDate.parse(d).toEpochDay.toInt)
           ).toOption).orNull)
@@ -658,7 +648,7 @@ object IcebergInterop {
         else {
           val item = boundsItemSchemaOf(dfSchema, field)
           val kvs: Seq[GenericRecord] = fields.flatMap { case (id, n, t) =>
-            boundBuf(t, annots, mapping.getOrElse(n, n), lower).map { buf =>
+            boundBuf(t, e, mapping.getOrElse(n, n), lower).map { buf =>
               val kv = new GenericData.Record(item)
               kv.put("key", Integer.valueOf(id))
               kv.put("value", buf)

@@ -25,17 +25,26 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   *             | "_kind=eqdelete" "\t" "_eqcols=" col("," col)* "\t" "_eqseq=" n
   *             | "_rows=" n ["\t" "_bytes=" n]  row count, file size
   *             | "_seq=" n                      data sequence number
-  *             | key "=" value                  partition values, stats, blooms
+  *             | "_graft_day=" day              the file's one yyyy-MM-dd of the partition source
+  *             | "_min_" col "=" d "\t" "_max_" col "=" d    numeric bounds
+  *             | "_smin_" col "=" b64 "\t" "_smax_" col "=" b64  UTF-8 string bounds
+  *             | "_bloom_" col "=" b64          bloom bitset
   * }}}
   * Header keys: `committed_at` (epoch ms, on every version, strictly
-  * increasing along main); the headers each commit inherits
+  * increasing along main); `format`; the headers each commit inherits
   * ([[InheritedKeys]]: `colmap`, `coltypes`, `fieldids`, `dropped`,
-  * `tblprops`, `partition`, `statscols`, `bloomcols`); `op` with the
-  * op's own keys; caller metadata (e.g. a streaming batch id). This
-  * module owns that vocabulary and its `k=v,k=v` value codec: a
-  * [[Version]] serves each header as a typed fact, and [[withFacts]]
-  * is the one way a commit writes them, so no other module spells a
-  * header key or renders a header value.
+  * `tblprops`, `partition`, `statscols`, `bloomcols`), each a map
+  * `e(k)=e(v),…`, a list `e(x),…` or a name `e(x)`, where `e` is the
+  * one escape of every key, value and element (form URL encoding), so
+  * any string round-trips; `op` with the op's own keys; caller
+  * metadata (e.g. a streaming batch id). Versions published since the
+  * escape carry `#format=2`; one without it has its facts decoded once
+  * at parse time by the old rules (split on every `,` and the first
+  * `=`; `tblprops` was escaped already), so a [[Version]] serves, and
+  * rollback, clone and branch publish copy forward, escaped headers.
+  * This module owns the vocabulary, the escape and the annotation keys:
+  * [[Version]] and [[Entry]] serve typed facts, and [[withFacts]] and
+  * the entry encoders are the one way to write them.
   *
   * '''The cache.''' A version manifest is write-once and its
   * fragments are immutable, so a version parsed once — header, body,
@@ -93,6 +102,12 @@ private[graft] object Manifest {
   private val SeqAnnot = "_seq="
   private val RowsAnnot = "_rows="
   private val BytesAnnot = "_bytes="
+  private val DayAnnot = "_graft_day="
+  private val MinAnnot = "_min_" // + physical column + "="
+  private val MaxAnnot = "_max_"
+  private val StrMinAnnot = "_smin_"
+  private val StrMaxAnnot = "_smax_"
+  private val BloomAnnot = "_bloom_"
 
   private val Cap = 512 // versions the cache holds at most
 
@@ -108,6 +123,9 @@ private[graft] object Manifest {
     * committed at (suppresses rows of files with seq strictly below).
     */
   final case class EqDelete(path: String, cols: Seq[String], seq: Long)
+
+  private def b64(bytes: Array[Byte]) = java.util.Base64.getEncoder.encodeToString(bytes)
+  private def unb64(s: String) = java.util.Base64.getDecoder.decode(s)
 
   /** One manifest entry line, decoded: the file path and its
     * annotations. `kind` is 0 = data file, 1 = positional-delete file,
@@ -126,10 +144,24 @@ private[graft] object Manifest {
       else if (parts.contains(EqDeleteKindAnnot)) 2
       else 0
     def isData: Boolean = kind == 0
-    /** `k=v` annotations as a map (partition values, stats, blooms…). */
+    /** `k=v` annotations as a map. */
     lazy val annots: Map[String, String] = parts.iterator.drop(1).flatMap { a =>
       a.split("=", 2) match { case Array(k, v) => Some(k -> v); case _ => None }
     }.toMap
+    private def annot(prefix: String, c: String) = annots.get(prefix + c)
+    /** The file's one day of the partition source, if named. */
+    lazy val day: Option[String] = ann(DayAnnot)
+    /** `$files`' partition value: the day annotation, as written. */
+    def partition: Option[String] = day.map(DayAnnot + _)
+    /** Numeric (catalyst-internal units) and UTF-8 string min/max, and
+      * bloom bits, of physical column `c`.
+      */
+    def numericBounds(c: String): Option[(Double, Double)] =
+      annot(MinAnnot, c).zip(annot(MaxAnnot, c)).map { case (l, h) => (l.toDouble, h.toDouble) }
+    def stringBounds(c: String): Option[(Array[Byte], Array[Byte])] =
+      annot(StrMinAnnot, c).zip(annot(StrMaxAnnot, c)).map { case (l, h) => (unb64(l), unb64(h)) }
+    def bloom(c: String): Option[java.util.BitSet] =
+      annot(BloomAnnot, c).map(b => java.util.BitSet.valueOf(unb64(b)))
     /** Row count (`_rows`), absent on entries older than row stamping. */
     val rowsOpt: Option[Long] = ann(RowsAnnot).map(_.toLong)
     def rows: Long = rowsOpt.getOrElse(0L)
@@ -149,7 +181,7 @@ private[graft] object Manifest {
   private val ColTypesKey = "coltypes"   // logical=ddl type,…
   private val FieldIdsKey = "fieldids"   // logical=id,… plus !<id>=id tombstones
   private val DroppedKey = "dropped"     // physical=tombstoned id,…
-  private val PropsKey = "tblprops"      // url(key)=url(value),…
+  private val PropsKey = "tblprops"      // key=value,…
   private val PartitionKey = "partition" // <source>: the table is day(<source>)-partitioned
   private val StatsKey = "statscols"     // logical column names carrying per-file min/max
   private val BloomKey = "bloomcols"     // logical column names carrying per-file bloom filters
@@ -165,22 +197,37 @@ private[graft] object Manifest {
   private val InheritedKeys = Set(ColMapKey, ColTypesKey, FieldIdsKey, DroppedKey,
     PropsKey, PartitionKey, StatsKey, BloomKey)
 
-  /** `k=v,k=v` header value → map. */
-  private def pairs(v: Option[String]): Map[String, String] =
-    v.toSeq.flatMap(_.split(",")).flatMap { e =>
-      e.split("=", 2) match { case Array(k, x) => Some(k -> x); case _ => None }
-    }.toMap
+  private val FormatKey = "format" // on every version with escaped header facts
 
-  private def renderPairs(m: Map[String, String]): String =
-    m.toSeq.sorted.map { case (k, x) => s"$k=$x" }.mkString(",")
+  // the one escape of header facts: every key, value and list element
+  private def factEscape(x: String): String = java.net.URLEncoder.encode(x, "UTF-8")
+  private def factUnescape(x: String): String = java.net.URLDecoder.decode(x, "UTF-8")
 
-  // table property keys and values are URL-encoded one by one, so
-  // arbitrary property strings survive the k=v,k=v format
-  private def url(p: String): String = java.net.URLEncoder.encode(p, "UTF-8")
-  private def unurl(p: String): String = java.net.URLDecoder.decode(p, "UTF-8")
+  private def renderFactMap(m: Map[String, String]): String =
+    m.toSeq.map { case (k, x) => s"${factEscape(k)}=${factEscape(x)}" }.sorted.mkString(",")
+  private def renderFactList(xs: Seq[String]): String = xs.distinct.map(factEscape).mkString(",")
 
-  private def ints(v: Option[String]) = pairs(v).map { case (k, x) => k -> x.toInt }
-  private def names(v: Option[String]) = v.toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
+  // a stored value's elements and `k=v` elements, still escaped
+  private def factElems(v: String): Seq[String] = v.split(",").toSeq.filter(_.nonEmpty)
+  private def factPairs(v: String): Map[String, String] =
+    factElems(v).map(_.split("=", 2)).collect { case Array(k, x) => k -> x }.toMap
+
+  private def factMap(v: Option[String]): Map[String, String] = v.fold(Map.empty[String, String])(
+    factPairs(_).map { case (k, x) => factUnescape(k) -> factUnescape(x) })
+  private def factList(v: Option[String]): Seq[String] =
+    v.toSeq.flatMap(factElems).map(factUnescape)
+
+  /** A header written before the format marker, re-encoded: its facts
+    * were stored unescaped, except `tblprops`, which already was.
+    */
+  private def fromLegacy(h: Map[String, String]): Map[String, String] = {
+    def ids(k: String) = h.get(k).map(factPairs(_).map { case (n, i) => n -> i.toInt })
+    withFacts(h, columnMapping = h.get(ColMapKey).map(factPairs),
+      columnTypes = h.get(ColTypesKey).map(factPairs),
+      fieldIds = ids(FieldIdsKey), droppedColumns = ids(DroppedKey),
+      partitionSource = h.get(PartitionKey), statsColumns = h.get(StatsKey).map(factElems),
+      bloomColumns = h.get(BloomKey).map(factElems))
+  }
 
   /** `h` with the given header facts replaced, encoded here: each
     * given fact replaces its header, an empty one removes it, and an
@@ -198,14 +245,14 @@ private[graft] object Manifest {
       bloomColumns: Option[Seq[String]] = None): Map[String, String] = {
     def ids(m: Map[String, Int]) = m.map { case (k, i) => k -> i.toString }
     Seq(
-      ColMapKey -> columnMapping.map(renderPairs),
-      ColTypesKey -> columnTypes.map(renderPairs),
-      FieldIdsKey -> fieldIds.map(m => renderPairs(ids(m))),
-      DroppedKey -> droppedColumns.map(m => renderPairs(ids(m))),
-      PropsKey -> properties.map(m => renderPairs(m.map { case (k, v) => url(k) -> url(v) })),
-      PartitionKey -> partitionSource,
-      StatsKey -> statsColumns.map(_.distinct.mkString(",")),
-      BloomKey -> bloomColumns.map(_.distinct.mkString(","))
+      ColMapKey -> columnMapping.map(renderFactMap),
+      ColTypesKey -> columnTypes.map(renderFactMap),
+      FieldIdsKey -> fieldIds.map(m => renderFactMap(ids(m))),
+      DroppedKey -> droppedColumns.map(m => renderFactMap(ids(m))),
+      PropsKey -> properties.map(renderFactMap),
+      PartitionKey -> partitionSource.map(factEscape),
+      StatsKey -> statsColumns.map(renderFactList),
+      BloomKey -> bloomColumns.map(renderFactList)
     ).foldLeft(h) {
       case (acc, (k, Some(v))) if v.nonEmpty => acc + (k -> v)
       case (acc, (k, Some(_))) => acc - k
@@ -221,14 +268,16 @@ private[graft] object Manifest {
         */
       groups: IndexedSeq[(String, IndexedSeq[Entry])]) {
 
-    /** The `#key=value` header. */
-    val header: Map[String, String] =
-      raw.takeWhile(_.startsWith("#")).flatMap { l =>
+    /** The `#key=value` header, facts escaped, without the marker. */
+    val header: Map[String, String] = {
+      val h = raw.takeWhile(_.startsWith("#")).flatMap { l =>
         l.drop(1).split("=", 2) match {
           case Array(k, v) => Some(k -> v)
           case _ => None
         }
       }.toMap
+      if (h.contains(FormatKey)) h - FormatKey else fromLegacy(h)
+    }
 
     /** Non-header body (fragment refs + legacy inline lines) — what
       * O(Δ) commits copy forward VERBATIM: re-referencing a fragment
@@ -250,22 +299,21 @@ private[graft] object Manifest {
     /** Commit instant (epoch ms); 0 on manifests written before stamping. */
     lazy val committedAt: Long = header.get(CommittedAtKey).fold(0L)(_.toLong)
     /** logical name → physical (in-file) name. */
-    lazy val columnMapping: Map[String, String] = pairs(header.get(ColMapKey))
+    lazy val columnMapping: Map[String, String] = factMap(header.get(ColMapKey))
     /** logical name → widened DDL type. */
-    lazy val columnTypes: Map[String, String] = pairs(header.get(ColTypesKey))
+    lazy val columnTypes: Map[String, String] = factMap(header.get(ColTypesKey))
     /** physical name → tombstoned field id of each column dropped at or before this version. */
-    lazy val droppedColumns: Map[String, Int] = ints(header.get(DroppedKey))
+    lazy val droppedColumns: Map[String, Int] = factMap(header.get(DroppedKey)).map(kv => kv._1 -> kv._2.toInt)
     /** logical name → field id, plus `!<id>` → id tombstones of dropped fields. */
-    lazy val storedFieldIds: Map[String, Int] = ints(header.get(FieldIdsKey))
+    lazy val storedFieldIds: Map[String, Int] = factMap(header.get(FieldIdsKey)).map(kv => kv._1 -> kv._2.toInt)
     def fieldIdTombstones: Map[String, Int] = storedFieldIds.filter(_._1.startsWith("!"))
     /** Table properties (Iceberg/Delta TBLPROPERTIES). */
-    lazy val properties: Map[String, String] =
-      pairs(header.get(PropsKey)).map { case (k, x) => unurl(k) -> unurl(x) }
+    lazy val properties: Map[String, String] = factMap(header.get(PropsKey))
     /** The day-partition source's commit-time (physical) name. */
-    def partitionSource: Option[String] = header.get(PartitionKey)
+    lazy val partitionSource: Option[String] = header.get(PartitionKey).map(factUnescape)
     /** Logical columns registered for per-file min/max stats and bloom filters. */
-    lazy val statsColumns: Seq[String] = names(header.get(StatsKey))
-    lazy val bloomColumns: Seq[String] = names(header.get(BloomKey))
+    lazy val statsColumns: Seq[String] = factList(header.get(StatsKey))
+    lazy val bloomColumns: Seq[String] = factList(header.get(BloomKey))
     def hasPruningMeta: Boolean =
       partitionSource.isDefined || header.contains(StatsKey) || header.contains(BloomKey)
     /** The headers a commit on this version copies forward. */
@@ -418,6 +466,17 @@ private[graft] object Manifest {
   /** `line` with its file's data sequence number. */
   def withSeq(line: String, seq: Long): String = s"$line\t$SeqAnnot$seq"
 
+  /** `line` with its file's one day of the partition source; the
+    * numeric or UTF-8 min/max of physical column `c`; `c`'s bloom bits.
+    */
+  def withDay(line: String, day: String): String = s"$line\t$DayAnnot$day"
+  def withBounds(line: String, c: String, min: Double, max: Double): String =
+    s"$line\t$MinAnnot$c=$min\t$MaxAnnot$c=$max"
+  def withStringBounds(line: String, c: String, min: Array[Byte], max: Array[Byte]): String =
+    s"$line\t$StrMinAnnot$c=${b64(min)}\t$StrMaxAnnot$c=${b64(max)}"
+  def withBloom(line: String, c: String, bits: java.util.BitSet): String =
+    s"$line\t$BloomAnnot$c=${b64(bits.toByteArray)}"
+
   /** Write `lines` as a fragment and return its body ref line (no
     * lines, no fragment). The random name suffix keeps a losing
     * committer's fragment from ever colliding with the winner's.
@@ -451,7 +510,8 @@ private[graft] object Manifest {
       case _ => 0L
     }
     val instant = math.max(System.currentTimeMillis, prevStamp + 1)
-    val header = (meta + (CommittedAtKey -> instant.toString)).toSeq.sorted
+    val header = (meta + (CommittedAtKey -> instant.toString) + (FormatKey -> "2"))
+      .toSeq.sorted
       .map { case (k, v) => s"#$k=$v" }
     val dst = path(root, stem)
     val tmp = new Path(s"$root/_manifests/.$stem.${suffix()}.manifest.tmp")

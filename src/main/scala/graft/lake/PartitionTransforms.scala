@@ -49,31 +49,41 @@ object PartitionTransforms {
     case _ => false
   }
 
-  /** (lower day, upper day) bounds implied by `e` for column `src`
-    * (inclusive, at day granularity). (None, None) = cannot prune.
+  /** (lower, upper) bounds the conjuncts of `e` put on column `src`,
+    * each value read through `of`, inclusive at file granularity
+    * (strict < / > relax to <= / >=, which can only over-scan, never
+    * under-scan); `And` keeps the tighter bound of each side, and with
+    * `prefix` a `startsWith` bounds from below. (None, None) = cannot
+    * prune.
     */
-  def dayBounds(e: Expression, src: String): (Option[String], Option[String]) = e match {
+  private def bounds[T](e: Expression, src: String, of: Expression => Option[T],
+      prefix: Boolean = false)(implicit ord: Ordering[T]): (Option[T], Option[T]) = e match {
     case And(l, r) =>
-      val (ll, lu) = dayBounds(l, src)
-      val (rl, ru) = dayBounds(r, src)
-      (tighterLo(ll, rl), tighterHi(lu, ru))
-    case GreaterThanOrEqual(a, v) if isCol(a, src) => (dayOf(v), None)
-    case GreaterThan(a, v) if isCol(a, src) => (dayOf(v), None) // day granularity: ts > x ⇒ day ≥ day(x)
-    case LessThanOrEqual(a, v) if isCol(a, src) => (None, dayOf(v))
-    case LessThan(a, v) if isCol(a, src) => (None, dayOf(v))
-    case EqualTo(a, v) if isCol(a, src) => (dayOf(v), dayOf(v))
+      val (ll, lu) = bounds(l, src, of, prefix)
+      val (rl, ru) = bounds(r, src, of, prefix)
+      ((ll ++ rl).reduceOption[T](ord.max(_, _)), (lu ++ ru).reduceOption[T](ord.min(_, _)))
+    case GreaterThanOrEqual(a, v) if isCol(a, src) => (of(v), None)
+    case GreaterThan(a, v) if isCol(a, src) => (of(v), None) // day granularity: ts > x ⇒ day ≥ day(x)
+    case LessThanOrEqual(a, v) if isCol(a, src) => (None, of(v))
+    case LessThan(a, v) if isCol(a, src) => (None, of(v))
+    case EqualTo(a, v) if isCol(a, src) => (of(v), of(v))
     // mirrored operand order
-    case GreaterThanOrEqual(v, a) if isCol(a, src) => (None, dayOf(v))
-    case GreaterThan(v, a) if isCol(a, src) => (None, dayOf(v))
-    case LessThanOrEqual(v, a) if isCol(a, src) => (dayOf(v), None)
-    case LessThan(v, a) if isCol(a, src) => (dayOf(v), None)
+    case GreaterThanOrEqual(v, a) if isCol(a, src) => (None, of(v))
+    case GreaterThan(v, a) if isCol(a, src) => (None, of(v))
+    case LessThanOrEqual(v, a) if isCol(a, src) => (of(v), None)
+    case LessThan(v, a) if isCol(a, src) => (of(v), None)
+    case EqualTo(v, a) if isCol(a, src) => (of(v), of(v))
+    // a prefix predicate bounds the range [prefix, prefix+∞): every
+    // matching string is >= prefix, and <= any string of
+    // prefix-with-last-byte-bumped is NOT safe under arbitrary bytes
+    // — the lower bound alone already skips disjoint sorted files
+    case StartsWith(a, v) if prefix && isCol(a, src) => (of(v), None)
     case _ => (None, None)
   }
 
-  private def tighterLo(a: Option[String], b: Option[String]) =
-    (a ++ b).reduceOption((x, y) => if (x >= y) x else y)
-  private def tighterHi(a: Option[String], b: Option[String]) =
-    (a ++ b).reduceOption((x, y) => if (x <= y) x else y)
+  /** (lower day, upper day) bounds implied by `e` for column `src`. */
+  def dayBounds(e: Expression, src: String): (Option[String], Option[String]) =
+    bounds(e, src, dayOf)
 
   /** Evaluate a foldable expression to a numeric value. */
   private def numOf(e: Expression): Option[Double] =
@@ -84,34 +94,13 @@ object PartitionTransforms {
         case d: org.apache.spark.sql.types.Decimal => d.toDouble
       } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** (lower, upper) numeric bounds implied by `e` for column `src` —
-    * inclusive at file granularity (strict < / > relax to <= / >=,
-    * which can only over-scan, never under-scan). Drives per-file
-    * min/max stats skipping; like [[dayBounds]], correctness never
-    * depends on it — the residual predicate always re-applies.
+  /** (lower, upper) numeric bounds implied by `e` for column `src`:
+    * they drive per-file min/max stats skipping; like [[dayBounds]],
+    * correctness never depends on them — the residual predicate always
+    * re-applies.
     */
-  def numericBounds(e: Expression, src: String): (Option[Double], Option[Double]) = e match {
-    case And(l, r) =>
-      val (ll, lu) = numericBounds(l, src)
-      val (rl, ru) = numericBounds(r, src)
-      (maxOpt(ll, rl), minOpt(lu, ru))
-    case GreaterThanOrEqual(a, v) if isCol(a, src) => (numOf(v), None)
-    case GreaterThan(a, v) if isCol(a, src) => (numOf(v), None)
-    case LessThanOrEqual(a, v) if isCol(a, src) => (None, numOf(v))
-    case LessThan(a, v) if isCol(a, src) => (None, numOf(v))
-    case EqualTo(a, v) if isCol(a, src) => (numOf(v), numOf(v))
-    case GreaterThanOrEqual(v, a) if isCol(a, src) => (None, numOf(v))
-    case GreaterThan(v, a) if isCol(a, src) => (None, numOf(v))
-    case LessThanOrEqual(v, a) if isCol(a, src) => (numOf(v), None)
-    case LessThan(v, a) if isCol(a, src) => (numOf(v), None)
-    case EqualTo(v, a) if isCol(a, src) => (numOf(v), numOf(v))
-    case _ => (None, None)
-  }
-
-  private def maxOpt(a: Option[Double], b: Option[Double]): Option[Double] =
-    (a.toSeq ++ b.toSeq).reduceOption((x, y) => math.max(x, y))
-  private def minOpt(a: Option[Double], b: Option[Double]): Option[Double] =
-    (a.toSeq ++ b.toSeq).reduceOption((x, y) => math.min(x, y))
+  def numericBounds(e: Expression, src: String): (Option[Double], Option[Double]) =
+    bounds(e, src, numOf)(Ordering.Double.IeeeOrdering)
 
   /** Evaluate a foldable expression to UTF-8 bound bytes. */
   private def strOf(e: Expression): Option[Array[Byte]] =
@@ -130,35 +119,7 @@ object PartitionTransforms {
     */
   def stringBounds(e: Expression, src: String)(
       implicit ord: Ordering[Array[Byte]]): (Option[Array[Byte]], Option[Array[Byte]]) =
-    e match {
-      case And(l, r) =>
-        val (ll, lu) = stringBounds(l, src)
-        val (rl, ru) = stringBounds(r, src)
-        (bMax(ll, rl), bMin(lu, ru))
-      case GreaterThanOrEqual(a, v) if isCol(a, src) => (strOf(v), None)
-      case GreaterThan(a, v) if isCol(a, src) => (strOf(v), None)
-      case LessThanOrEqual(a, v) if isCol(a, src) => (None, strOf(v))
-      case LessThan(a, v) if isCol(a, src) => (None, strOf(v))
-      case EqualTo(a, v) if isCol(a, src) => (strOf(v), strOf(v))
-      case GreaterThanOrEqual(v, a) if isCol(a, src) => (None, strOf(v))
-      case GreaterThan(v, a) if isCol(a, src) => (None, strOf(v))
-      case LessThanOrEqual(v, a) if isCol(a, src) => (strOf(v), None)
-      case LessThan(v, a) if isCol(a, src) => (strOf(v), None)
-      case EqualTo(v, a) if isCol(a, src) => (strOf(v), strOf(v))
-      // a prefix predicate bounds the range [prefix, prefix+∞): every
-      // matching string is >= prefix, and <= any string of
-      // prefix-with-last-byte-bumped is NOT safe under arbitrary bytes
-      // — the lower bound alone already skips disjoint sorted files
-      case StartsWith(a, v) if isCol(a, src) => (strOf(v), None)
-      case _ => (None, None)
-    }
-
-  private def bMax(a: Option[Array[Byte]], b: Option[Array[Byte]])(
-      implicit ord: Ordering[Array[Byte]]): Option[Array[Byte]] =
-    (a.toSeq ++ b.toSeq).reduceOption((x, y) => ord.max(x, y))
-  private def bMin(a: Option[Array[Byte]], b: Option[Array[Byte]])(
-      implicit ord: Ordering[Array[Byte]]): Option[Array[Byte]] =
-    (a.toSeq ++ b.toSeq).reduceOption((x, y) => ord.min(x, y))
+    bounds(e, src, strOf, prefix = true)
 
   /** Equality/IN literal values for column `src` in `e` (catalyst-
     * internal representations with their types, ready for

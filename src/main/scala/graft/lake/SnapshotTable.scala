@@ -246,18 +246,22 @@ object SnapshotTable {
     * (and `$history`) metadata-sized at any scale. `validate` (the
     * stats columns this commit registers) must name a column of the
     * files with a type stats support: a typo'd statsCol fails loudly.
-    * `known` holds footers the caller already read, keyed by line path.
-    * Small commits (streaming micro-batches) read footers on the
-    * driver, concurrently; large ones fan the reads out as one task
-    * wave.
+    * `daySource` (the physical partition source of a day table whose
+    * `lines` name no day) gives each file whose rows all fall in one
+    * day that day ([[footerDay]]); other files stay unannotated and
+    * always scan. `known` holds footers the caller already read, keyed
+    * by line path. Small commits (streaming micro-batches) read footers
+    * on the driver, concurrently; large ones fan the reads out as one
+    * task wave.
     */
   private def footerPass(
       s: SparkSession, lines: Seq[String], statsCols: Seq[String] = Nil,
-      validate: Seq[String] = Nil,
+      validate: Seq[String] = Nil, daySource: Option[String] = None,
       known: Map[String, graft.sources.Footer.Facts] = Map.empty): Seq[String] = {
     if (lines.isEmpty) return lines
-    val files = lines.map(_.split('\t').head)
+    val files = lines.map(new Entry(_).path)
     val cols = statsCols.distinct.sorted
+    val zone = s.sessionState.conf.sessionLocalTimeZone
     val conf = s.sparkContext.hadoopConfiguration
     // registered names are checked once, against the first file's
     // footer, which the pass then reuses
@@ -266,27 +270,31 @@ object SnapshotTable {
       requireStatsCols(ft.parquetSchema, validate)
       known + (files.head -> ft)
     }
-    val facts: Seq[(Long, Long, Seq[String])] =
-      if (files.size <= 64) {
-        // concurrent footer reads (commonPool): the loop is pure
-        // per-file I/O, and serializing ~3 ms × N files was visible
-        // driver dead time between jobs on multi-file commits
-        import scala.jdk.CollectionConverters._
-        files.asJava.parallelStream().map[(Long, Long, Seq[String])] { f =>
-          val ft = seen.getOrElse(f, graft.sources.Footer.read(conf, f))
-          (ft.rows, ft.bytes, footerBounds(ft, cols))
-        }.collect(java.util.stream.Collectors.toList[(Long, Long, Seq[String])])
-          .asScala.toSeq
-      } else {
-        val hconf = new org.apache.spark.util.SerializableConfiguration(conf)
-        s.sparkContext.parallelize(files, math.min(files.size, 64)).map { f =>
-          val ft = graft.sources.Footer.read(hconf.value, f)
-          (ft.rows, ft.bytes, footerBounds(ft, cols))
-        }.collect().toSeq
-      }
-    lines.zip(facts).map { case (line, (n, b, bounds)) =>
-      Manifest.withCounts((line +: bounds).mkString("\t"), n, Some(b))
+    if (files.size <= 64) {
+      // concurrent footer reads (commonPool): the loop is pure
+      // per-file I/O, and serializing ~3 ms × N files was visible
+      // driver dead time between jobs on multi-file commits
+      import scala.jdk.CollectionConverters._
+      lines.zip(files).asJava.parallelStream().map[String] { lf =>
+        annotated(lf._1, seen.getOrElse(lf._2, graft.sources.Footer.read(conf, lf._2)),
+          cols, daySource, zone)
+      }.collect(java.util.stream.Collectors.toList[String]).asScala.toSeq
+    } else {
+      val hconf = new org.apache.spark.util.SerializableConfiguration(conf)
+      s.sparkContext.parallelize(lines.zip(files), math.min(files.size, 64)).map {
+        case (line, f) =>
+          annotated(line, graft.sources.Footer.read(hconf.value, f), cols, daySource, zone)
+      }.collect().toSeq
     }
+  }
+
+  /** `line` annotated from its file's footer: the day of `daySource`
+    * in `zone` ([[footerDay]]), the bounds of `cols`, rows and bytes.
+    */
+  private def annotated(line: String, ft: graft.sources.Footer.Facts, cols: Seq[String],
+      daySource: Option[String], zone: String): String = {
+    val dayed = daySource.flatMap(footerDay(ft, _, zone)).fold(line)(Manifest.withDay(line, _))
+    Manifest.withCounts(footerBounds(dayed, ft, cols), ft.rows, Some(ft.bytes))
   }
 
   /** Total rows visible at `version`, summed from the `_rows`
@@ -492,9 +500,9 @@ object SnapshotTable {
     * `op=upsert_wire` (or `delete_wire` without data files).
     *
     * Each registered file's footer is opened once ([[footerPass]]:
-    * `_rows`, `_bytes`, the table's registered stats); `footers` are
-    * the ones the caller already read (a wire commit's schema checks),
-    * keyed by the path it passed.
+    * `_rows`, `_bytes`, the table's registered stats, a one-day file's
+    * day on a day table); `footers` are the ones the caller already
+    * read (a wire commit's schema checks), keyed by the path it passed.
     */
   def commitFiles(
       s: SparkSession, root: String, files: Seq[String],
@@ -515,7 +523,8 @@ object SnapshotTable {
     val mapping = head.columnMapping
     val known = footers.map { case (f, ft) => canon(s, f) -> ft }
     val dataLines = stampSeq(footerPass(s, files.map(f => canon(s, f)),
-      head.statsColumns.map(c => mapping.getOrElse(c, c)), known = known), seq)
+      head.statsColumns.map(c => mapping.getOrElse(c, c)), daySource = head.partitionSource,
+      known = known), seq)
     val posLines = footerPass(s, posDeletes.map(p => Manifest.posDeleteLine(canon(s, p))),
       known = known)
     val eqLines = footerPass(s, eqDeletes.zipWithIndex.map {
@@ -566,8 +575,9 @@ object SnapshotTable {
       data.map { case (p, rows, bytes, seq, day) =>
         // bytes 0 = the foreign writer omitted file_size_in_bytes; no
         // annotation, tableStats falls back to FileStatus for that file
-        Manifest.withSeq(Manifest.withCounts(canon(s, p), rows, Some(bytes).filter(_ > 0)), seq) +
-          day.fold("")(d => s"\t_graft_day=$d")
+        val line = Manifest.withSeq(
+          Manifest.withCounts(canon(s, p), rows, Some(bytes).filter(_ > 0)), seq)
+        day.fold(line)(Manifest.withDay(line, _))
       } ++
       posDeletes.map(p => Manifest.posDeleteLine(canon(s, p))) ++
       eqDeletes.map { case (p, cols, seq) => Manifest.eqDeleteLine(canon(s, p), cols, seq) }
@@ -636,13 +646,13 @@ object SnapshotTable {
     * `pmod(xxhash64(col, i), BloomBits)` for i < BloomHashes — the
     * SAME expression the read-side probe replays via
     * XxHash64Function, so commit and probe can never drift. Stored
-    * base64 in the manifest line (`_bloom_<col>=`); a point lookup
+    * in the manifest line ([[Manifest.withBloom]]); a point lookup
     * then opens only files whose filter might contain the key.
     */
   private def annotateBloom(
       s: SparkSession, lines: Seq[String], cols: Seq[String]): Seq[String] = {
     import org.apache.spark.sql.functions.{array, collect_set, explode, pmod, xxhash64}
-    val files = lines.map(_.split('\t').head)
+    val files = lines.map(new Entry(_).path)
     val df = s.read.parquet(files: _*)
     val posByFileCol: Map[(String, String), Array[Int]] =
       cols.flatMap { c =>
@@ -656,24 +666,22 @@ object SnapshotTable {
           .map(r => (canon(s, r.getString(0)), c) ->
             r.getSeq[Int](1).toArray)
       }.toMap
-    lines.map { line =>
-      val key = canon(s, line.split('\t').head)
-      val annots = cols.flatMap { c =>
-        posByFileCol.get((key, c)).map { ps =>
+    lines.zip(files).map { case (line, f) =>
+      val key = canon(s, f)
+      cols.foldLeft(line) { (l, c) =>
+        posByFileCol.get((key, c)).fold(l) { ps =>
           val bits = new java.util.BitSet(BloomBits)
           ps.foreach(bits.set)
-          s"_bloom_$c=${java.util.Base64.getEncoder.encodeToString(bits.toByteArray)}"
+          Manifest.withBloom(l, c, bits)
         }
       }
-      if (annots.isEmpty) line else line + "\t" + annots.mkString("\t")
     }
   }
 
   /** Read-side bloom probe: true = the file MIGHT contain the value. */
-  private def bloomMightContain(encoded: String, value: Any,
+  private def bloomMightContain(bits: java.util.BitSet, value: Any,
       dt: org.apache.spark.sql.types.DataType): Boolean = {
     import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-    val bits = java.util.BitSet.valueOf(java.util.Base64.getDecoder.decode(encoded))
     (0 until BloomHashes).forall { i =>
       val h1 = XxHash64Function.hash(value, dt, 42L)
       val h2 = XxHash64Function.hash(i, org.apache.spark.sql.types.IntegerType, h1)
@@ -681,89 +689,119 @@ object SnapshotTable {
     }
   }
 
-  /** Per-file min/max column stats, Iceberg-style, read from PARQUET
-    * FOOTER METADATA — zero data bytes (Iceberg gets these bounds free
-    * from write-time metrics the same way). Each manifest line is
-    * annotated `_min_<col>`/`_max_<col>` (numeric/date/timestamp, as
-    * doubles in the column's catalyst-internal unit: days for dates,
-    * MICROSECONDS for timestamps) or `_smin_<col>`/`_smax_<col>`
-    * (strings, Base64 of the UTF-8 bound bytes — raw bytes would
-    * break the tab-separated line format, and UTF-8 byte order is
-    * exactly UTF8String's comparison order, so the read-side interval
-    * test matches Spark semantics bit-for-bit). At 100 TB this is
-    * what lets a selective value predicate read a handful of files
-    * instead of the table — pair with a z-order or range-partitioned
-    * write so files have tight disjoint ranges. Aggregated over the
-    * file's row groups; an absent column, an all-null file or a row
-    * group whose footer carries no usable statistics yields no
-    * annotation for that column (the file then always scans — safe).
+  /** Column `c`'s physical type and the footer statistics of each of
+    * its row groups, when the file has the column and every row group
+    * carries statistics.
     */
-  private def footerBounds(facts: graft.sources.Footer.Facts, cols: Seq[String]): Seq[String] = {
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+  private def columnStats(facts: graft.sources.Footer.Facts, c: String)
+      : Option[(org.apache.parquet.schema.PrimitiveType,
+        Seq[org.apache.parquet.column.statistics.Statistics[_]])] = {
     import scala.jdk.CollectionConverters._
-    val blocks = facts.footer.getBlocks.asScala.toSeq
-    cols.flatMap { c =>
-      val chunks = blocks.flatMap(
-        _.getColumns.asScala.filter(_.getPath.toDotString == c))
-      val stats = chunks.map(ch => Option(ch.getStatistics))
-      if (chunks.isEmpty || stats.exists(so => so.isEmpty || so.exists(_.isEmpty)))
-        Seq.empty // absent column or a stat-less row group: no bounds
-      else {
-        val withValues = stats.flatten.filter(_.hasNonNullValue)
-        if (withValues.isEmpty) Seq.empty // all-null file: never skipped
-        else {
-          val prim = chunks.head.getPrimitiveType
+    val chunks = facts.footer.getBlocks.asScala.toSeq
+      .flatMap(_.getColumns.asScala.filter(_.getPath.toDotString == c))
+    val stats = chunks.flatMap(ch => Option(ch.getStatistics).filterNot(_.isEmpty))
+    if (chunks.isEmpty || stats.size < chunks.size) None
+    else Some(chunks.head.getPrimitiveType -> stats)
+  }
+
+  /** Whether footer statistics of a column of type `prim` order like
+    * Spark's comparisons: Some(true) for strings (unsigned UTF-8 byte
+    * order), Some(false) for numerics, dates, timestamps and decimals,
+    * None for the rest (BOOLEAN, INT96 legacy timestamps, binary).
+    */
+  private def stringStats(prim: org.apache.parquet.schema.PrimitiveType): Option[Boolean] = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation._
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    (prim.getPrimitiveTypeName, prim.getLogicalTypeAnnotation) match {
+      case (INT32 | INT64 | FLOAT | DOUBLE, _) => Some(false)
+      case (BINARY, _: StringLogicalTypeAnnotation) => Some(true)
+      case (BINARY | FIXED_LEN_BYTE_ARRAY, _: DecimalLogicalTypeAnnotation) => Some(false)
+      case _ => None
+    }
+  }
+
+  /** `line` with per-file min/max column stats, Iceberg-style, read
+    * from PARQUET FOOTER METADATA — zero data bytes (Iceberg gets these
+    * bounds free from write-time metrics the same way): numeric, date
+    * and timestamp columns as doubles in the column's catalyst-internal
+    * unit (days for dates, MICROSECONDS for timestamps), strings as
+    * their UTF-8 bound bytes (UTF-8 byte order is exactly UTF8String's
+    * comparison order, so the read-side interval test matches Spark
+    * semantics bit-for-bit). At 100 TB this is what lets a selective
+    * value predicate read a handful of files instead of the table —
+    * pair with a z-order or range-partitioned write so files have tight
+    * disjoint ranges. Aggregated over the file's row groups; an absent
+    * column, an all-null file or a row group whose footer carries no
+    * usable statistics yields no bounds for that column (the file then
+    * always scans — safe).
+    */
+  private def footerBounds(
+      line: String, facts: graft.sources.Footer.Facts, cols: Seq[String]): String = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation._
+    cols.foldLeft(line) { (l, c) =>
+      columnStats(facts, c).map { case (prim, stats) => (prim, stats.filter(_.hasNonNullValue)) }
+        .filter(_._2.nonEmpty).fold(l) { case (prim, withValues) => // all-null: never skipped
           val logical = prim.getLogicalTypeAnnotation
-          def dec: Option[Int] = logical match {
-            case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-              Some(d.getScale)
-            case _ => None
+          val scale = logical match {
+            case d: DecimalLogicalTypeAnnotation => math.pow(10, d.getScale.toDouble)
+            case _ => 1.0
           }
-          // catalyst-internal unit scaling so the read-side interval
-          // test compares like with like (literals eval to days /
-          // MICROS)
-          def tsScale: Double = logical match {
-            case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-              t.getUnit match {
-                case LogicalTypeAnnotation.TimeUnit.MILLIS => 1000.0
-                case LogicalTypeAnnotation.TimeUnit.NANOS => 0.001
-                case _ => 1.0 // MICROS
-              }
+          // catalyst-internal units, so the read-side interval test
+          // compares like with like (literals eval to days / MICROS)
+          val tsScale = logical match {
+            case t: TimestampLogicalTypeAnnotation if t.getUnit == TimeUnit.MILLIS => 1000.0
+            case t: TimestampLogicalTypeAnnotation if t.getUnit == TimeUnit.NANOS => 0.001
             case _ => 1.0
           }
           def numeric(v: Any): Double = (v match {
             case n: Number => n.doubleValue()
             case b: org.apache.parquet.io.api.Binary => // binary/fixed decimal
-              new java.math.BigDecimal(new java.math.BigInteger(b.getBytes))
-                .doubleValue()
+              new java.math.BigDecimal(new java.math.BigInteger(b.getBytes)).doubleValue()
             case other => other.toString.toDouble
-          }) / math.pow(10, dec.getOrElse(0).toDouble) * tsScale
-          prim.getPrimitiveTypeName match {
-            case INT32 | INT64 | FLOAT | DOUBLE =>
-              val mn = withValues.map(st => numeric(st.genericGetMin)).min
-              val mx = withValues.map(st => numeric(st.genericGetMax)).max
-              Seq(s"_min_$c=$mn", s"_max_$c=$mx")
-            case BINARY
-                if logical.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
-              val ord = unsignedBytesOrdering
-              val mn = withValues.map(
-                _.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary]
-                  .getBytes).min(ord)
-              val mx = withValues.map(
-                _.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary]
-                  .getBytes).max(ord)
-              val b64 = java.util.Base64.getEncoder
-              Seq(s"_smin_$c=${b64.encodeToString(mn)}",
-                s"_smax_$c=${b64.encodeToString(mx)}")
-            case BINARY | FIXED_LEN_BYTE_ARRAY if dec.nonEmpty =>
-              val mn = withValues.map(st => numeric(st.genericGetMin)).min
-              val mx = withValues.map(st => numeric(st.genericGetMax)).max
-              Seq(s"_min_$c=$mn", s"_max_$c=$mx")
-            case _ => Seq.empty
+          }) / scale * tsScale
+          def bytes(v: Any) = v.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes
+          stringStats(prim) match {
+            case Some(true) =>
+              Manifest.withStringBounds(l, c,
+                withValues.map(st => bytes(st.genericGetMin)).min(unsignedBytesOrdering),
+                withValues.map(st => bytes(st.genericGetMax)).max(unsignedBytesOrdering))
+            case Some(false) =>
+              Manifest.withBounds(l, c, withValues.map(st => numeric(st.genericGetMin)).min,
+                withValues.map(st => numeric(st.genericGetMax)).max)
+            case None => l
           }
         }
+    }
+  }
+
+  /** The one day every row of a file holds in date or timestamp column
+    * `source`, from its footer statistics, as [[dayOf]] gives it (a
+    * timestamp's day in session time zone `zone`). None when the column
+    * is absent or another type, a row group lacks statistics or holds a
+    * null, or the rows span days.
+    */
+  private def footerDay(
+      facts: graft.sources.Footer.Facts, source: String, zone: String): Option[String] = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation._
+    import org.apache.spark.sql.catalyst.util.DateTimeUtils
+    columnStats(facts, source).filter(_._2.forall(st =>
+      st.hasNonNullValue && st.isNumNullsSet && st.getNumNulls == 0)).flatMap { case (prim, stats) =>
+      val epochDay: Option[Long => Long] = prim.getLogicalTypeAnnotation match {
+        case _: DateLogicalTypeAnnotation => Some(identity)
+        case t: TimestampLogicalTypeAnnotation =>
+          val z = if (t.isAdjustedToUTC) DateTimeUtils.getZoneId(zone) else java.time.ZoneOffset.UTC
+          val micros: Long => Long = t.getUnit match {
+            case TimeUnit.MILLIS => _ * 1000L
+            case TimeUnit.NANOS => Math.floorDiv(_, 1000L)
+            case _ => identity
+          }
+          Some(v => DateTimeUtils.microsToDays(micros(v), z).toLong)
+        case _ => None
       }
+      def bound(v: Any) = v.asInstanceOf[Number].longValue
+      epochDay.map(d => (d(stats.map(st => bound(st.genericGetMin)).min),
+          d(stats.map(st => bound(st.genericGetMax)).max)))
+        .collect { case (lo, hi) if lo == hi => java.time.LocalDate.ofEpochDay(lo).toString }
     }
   }
 
@@ -772,27 +810,13 @@ object SnapshotTable {
     */
   private def requireStatsCols(
       schema: org.apache.parquet.schema.MessageType, cols: Seq[String]): Unit = {
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import scala.jdk.CollectionConverters._
     val fields = schema.getFields.asScala
     cols.foreach { c =>
       val f = fields.find(_.getName == c).getOrElse(
         throw new IllegalArgumentException(s"unknown statsCols column: $c"))
-      val ok = f.isPrimitive && (f.asPrimitiveType().getPrimitiveTypeName match {
-        case INT32 | INT64 | FLOAT | DOUBLE => true
-        case BINARY => f.asPrimitiveType().getLogicalTypeAnnotation match {
-          case _: LogicalTypeAnnotation.StringLogicalTypeAnnotation => true
-          case _: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation => true
-          case _ => false
-        }
-        case FIXED_LEN_BYTE_ARRAY =>
-          f.asPrimitiveType().getLogicalTypeAnnotation
-            .isInstanceOf[LogicalTypeAnnotation.DecimalLogicalTypeAnnotation]
-        case _ => false // BOOLEAN, INT96 (legacy ts: no usable stats ordering)
-      })
-      require(ok, s"statsCols supports numeric, string, date and timestamp " +
-        s"columns; $c is ${f}")
+      require(f.isPrimitive && stringStats(f.asPrimitiveType()).isDefined,
+        s"statsCols supports numeric, string, date and timestamp columns; $c is ${f}")
     }
   }
 
@@ -1414,7 +1438,7 @@ object SnapshotTable {
     // the day every live data file names; unannotated files (written
     // before the table was partitioned, or by a writer that names no
     // day) form one group, which the writer splits back into days
-    val dayOfFile = mv.dataEntries.map(e => norm(e.path) -> e.annots.getOrElse("_graft_day", "")).toMap
+    val dayOfFile = mv.dataEntries.map(e => norm(e.path) -> e.day.getOrElse("")).toMap
     val eligible = mv.dataFiles.filter { f =>
       !posAffected.contains(norm(f)) && eqs.forall(_.seq <= fileSeq(f))
     }
@@ -1585,8 +1609,8 @@ object SnapshotTable {
     * operation's scan planned (every row it read), `added` the files
     * the executor-side writers produced with the replacement rows.
     * Annotates them in one footer pass (row counts, sizes, the table's
-    * registered stats) and stamps the next sequence number exactly like
-    * the engine's own copy-on-write.
+    * registered stats, a one-day file's day) and stamps the next
+    * sequence number exactly like the engine's own copy-on-write.
     */
   private[graft] def publishReplaceFiles(
       s: SparkSession, root: String, cur: Int,
@@ -1595,7 +1619,8 @@ object SnapshotTable {
     val affected = removed.map(canon(s, _)).toSet
     val head = version(s, root, cur)
     val newLines = stampSeq(footerPass(s, added.sorted,
-      head.statsColumns.map(c => head.columnMapping.getOrElse(c, c))), nextSeq(head))
+      head.statsColumns.map(c => head.columnMapping.getOrElse(c, c)),
+      daySource = head.partitionSource), nextSeq(head))
     publishReplace(s, root, cur, head, affected, newLines, meta)
   }
 
@@ -1612,7 +1637,8 @@ object SnapshotTable {
     * upserts, MoR/CoW rewrites, compactions, branch commits — so
     * every file they write into the table holds one day and names it
     * in its manifest line (files registered zero-copy and the SQL
-    * row-level writer's files do not). The transform value is never stored in
+    * row-level writer's files name their day when all their rows hold
+    * one, [[footerDay]]). The transform value is never stored in
     * the file content — readers see the original schema only. Rows of
     * one day spread across `saltBuckets` writer tasks (default: derived
     * from the batch's size, checked against the bytes written), so a
@@ -1645,16 +1671,7 @@ object SnapshotTable {
           dels, eqs, fileSeq),
         mapping, types, mv.droppedColumns.keySet).filter(predicate)
     val full = view(files)
-    // pattern-match the ANALYZED filter condition (the unresolved
-    // Column wraps lazy ColumnNodes in Spark 4) — resolved
-    // comparisons with analyzer-set cast timezones
-    val cond = full.queryExecution.analyzed.collectFirst {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-    }
-    val pruned = cond match {
-      case Some(c) => pruneEntries(mv, c)
-      case None => files
-    }
+    val pruned = pruneBy(mv, full).getOrElse(files)
     if (pruned.isEmpty) full.filter(lit(false)) // nothing matched: keep schema, no rows
     else if (pruned.size == files.size) full
     else view(pruned)
@@ -1678,11 +1695,18 @@ object SnapshotTable {
     // and reads a schema footer, measurable per-op overhead on plain
     // tables, which are the common case)
     if (!mv.hasPruningMeta) return all
-    val cond = filtered.queryExecution.analyzed.collectFirst {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-    }
-    cond.map(c => pruneEntries(mv, c)).getOrElse(all)
+    pruneBy(mv, filtered).getOrElse(all)
   }
+
+  /** [[pruneEntries]] on the ANALYZED filter condition of `filtered`
+    * (the unresolved Column wraps lazy ColumnNodes in Spark 4; the
+    * analyzed one has resolved comparisons with analyzer-set cast
+    * timezones), or None when it has no filter.
+    */
+  private def pruneBy(mv: Manifest.Version, filtered: DataFrame): Option[Seq[String]] =
+    filtered.queryExecution.analyzed.collectFirst {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => pruneEntries(mv, f.condition)
+    }
 
   /** Why a version cannot be served by the SQL row-level
     * copy-on-write path (GraftCatalog UPDATE / MERGE INTO), or None
@@ -1721,11 +1745,7 @@ object SnapshotTable {
     val all = mv.dataFiles
     predicate match {
       case Some(p) if mv.hasPruningMeta =>
-        val probe = readVersion(s, root, v, mv).filter(p)
-        val cond = probe.queryExecution.analyzed.collectFirst {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-        }
-        cond.map(c => pruneEntries(mv, c)).getOrElse(all)
+        pruneBy(mv, readVersion(s, root, v, mv).filter(p)).getOrElse(all)
       case _ => all
     }
   }
@@ -1772,14 +1792,13 @@ object SnapshotTable {
   private[graft] def pruneEntries(
       mv: Manifest.Version,
       c: org.apache.spark.sql.catalyst.expressions.Expression): Seq[String] = {
-    val entries = mv.dataEntries.map(e => (e.path, e.annots))
+    val entries = mv.dataEntries
     val mapping = mv.columnMapping
     val afterPartition = mv.partitionSource match {
       case Some(source) =>
         PartitionTransforms.dayBounds(c, source) match {
           case (lo, hi) if lo.nonEmpty || hi.nonEmpty => entries.filter {
-            case (_, annots) => annots.get("_graft_day").forall(d =>
-              lo.forall(d >= (_: String)) && hi.forall(d <= (_: String)))
+            _.day.forall(d => lo.forall(d >= (_: String)) && hi.forall(d <= (_: String)))
           }
           case _ => entries
         }
@@ -1791,28 +1810,20 @@ object SnapshotTable {
     val statCols = mv.statsColumns
     val bloomCols = mv.bloomColumns
     implicit val bord: Ordering[Array[Byte]] = unsignedBytesOrdering
-    val b64 = java.util.Base64.getDecoder
     val afterStats =
       if (statCols.isEmpty) afterPartition
-      else afterPartition.filter { case (_, annots) =>
+      else afterPartition.filter { e =>
         statCols.forall { sc =>
           val phys = mapping.getOrElse(sc, sc)
           val (lo, hi) = PartitionTransforms.numericBounds(c, sc)
-          val numericKeep = (annots.get(s"_min_$phys").map(_.toDouble),
-            annots.get(s"_max_$phys").map(_.toDouble)) match {
-            case (Some(mn), Some(mx)) =>
-              lo.forall(_ <= mx) && hi.forall(_ >= mn)
-            case _ => true
+          val numericKeep = e.numericBounds(phys).forall { case (mn, mx) =>
+            lo.forall(_ <= mx) && hi.forall(_ >= mn)
           }
           // string bounds (footer stats on string columns): same
           // interval test under unsigned UTF-8 byte order
           val (slo, shi) = PartitionTransforms.stringBounds(c, sc)
-          val stringKeep = (annots.get(s"_smin_$phys"), annots.get(s"_smax_$phys")) match {
-            case (Some(mn64), Some(mx64)) if slo.nonEmpty || shi.nonEmpty =>
-              val mn = b64.decode(mn64)
-              val mx = b64.decode(mx64)
-              slo.forall(l => bord.lteq(l, mx)) && shi.forall(h => bord.gteq(h, mn))
-            case _ => true
+          val stringKeep = slo.isEmpty && shi.isEmpty || e.stringBounds(phys).forall {
+            case (mn, mx) => slo.forall(l => bord.lteq(l, mx)) && shi.forall(h => bord.gteq(h, mn))
           }
           numericKeep && stringKeep
         }
@@ -1821,17 +1832,16 @@ object SnapshotTable {
     // a file out when NONE of the sought values might be present
     val pruned =
       if (bloomCols.isEmpty) afterStats
-      else afterStats.filter { case (_, annots) =>
+      else afterStats.filter { e =>
         bloomCols.forall { bc =>
           val phys = mapping.getOrElse(bc, bc)
-          (annots.get(s"_bloom_$phys"), PartitionTransforms.equalityValues(c, bc)) match {
-            case (Some(enc), Some(values)) =>
-              values.exists { case (value, dt) => bloomMightContain(enc, value, dt) }
-            case _ => true
+          PartitionTransforms.equalityValues(c, bc).forall { values =>
+            e.bloom(phys).forall(bits =>
+              values.exists { case (value, dt) => bloomMightContain(bits, value, dt) })
           }
         }
       }
-    pruned.map(_._1)
+    pruned.map(_.path)
   }
 
   /** Expire old snapshots (Iceberg `expire_snapshots`): keep the last
@@ -2062,7 +2072,7 @@ object SnapshotTable {
     *    `physical`) and footer field ids ([[physFieldIds]]);
     *  - INT64-micros timestamps ([[writingMicrosTimestamps]]);
     *  - day(source) partitioning: each file holds one day and its line
-    *    names it (`_graft_day=yyyy-MM-dd`, [[writeDays]]);
+    *    names it ([[Manifest.withDay]], [[writeDays]]);
     *  - one footer pass ([[footerPass]]): `_rows`, `_bytes` and the
     *    min/max bounds of every registered stats column;
     *  - bloom filters of every registered bloom column ([[annotateBloom]]).
@@ -2155,7 +2165,7 @@ object SnapshotTable {
         arranged.write.mode("overwrite").partitionBy(pcol).parquet(dir)
       }
     }
-    // files live one level down, under <dir>/_graft_day=<day>/. Returns
+    // files live one level down, under <dir>/<pcol>=<day>/. Returns
     // (manifest line, byte size): the sizes feed the post-write salt
     // check below
     val fs = fsOf(s, new Path(dir))
@@ -2163,7 +2173,7 @@ object SnapshotTable {
       fs.listStatus(new Path(dir)).toSeq.filter(_.isDirectory).flatMap { d =>
         val dayVal = d.getPath.getName.split("=", 2).lift(1).getOrElse("")
         fs.listStatus(d.getPath).filter(_.getPath.getName.endsWith(".parquet"))
-          .map(st => (s"${st.getPath}\t$pcol=$dayVal", st.getLen))
+          .map(st => (Manifest.withDay(st.getPath.toString, dayVal), st.getLen))
       }
     writeData(effSalt)
     var files = listData()

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.io.{IOException, ObjectInputStream, ObjectOutputStream}
 import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
@@ -20,6 +19,7 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.lake.SnapshotTable
 import graft.streaming.GraftSnapshotRelation
@@ -153,7 +153,7 @@ private class GraftReplaceWrite(
 
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
       val spark = SparkSession.active
-      val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+      val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
       // stamp persistent Iceberg field ids so the rewritten parquet
       // footers are self-describing to external engines (the factory
       // already enables PARQUET_FIELD_ID_WRITE)
@@ -194,9 +194,12 @@ private case class GraftWrittenFiles(paths: Seq[String]) extends WriterCommitMes
   * CORRECTED rebase) are identical to a distributed write.
   */
 private[graft] object GraftDriverParquet {
-  def writeRows(s: SparkSession, schema: StructType,
-      rows: Seq[org.apache.spark.sql.Row], path: String): Unit = {
-    val hconf = new Configuration(s.sparkContext.hadoopConfiguration)
+  /** A SNAPPY parquet writer of `schema` rows at `path`, through
+    * ParquetWriteSupport with the engine's parquet physics set on a
+    * copy of `base`.
+    */
+  def writer(base: Configuration, schema: StructType, path: Path): ParquetWriter[InternalRow] = {
+    val hconf = new Configuration(base)
     ParquetWriteSupport.setSchema(schema, hconf)
     hconf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, "false")
     hconf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
@@ -204,17 +207,20 @@ private[graft] object GraftDriverParquet {
     hconf.set(SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE.key, "CORRECTED")
     hconf.set(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key, "true")
     hconf.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key, "true")
+    new ParquetRowWriterBuilder(path, hconf).withConf(hconf)
+      .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+  }
+
+  def writeRows(s: SparkSession, schema: StructType,
+      rows: Seq[org.apache.spark.sql.Row], path: String): Unit = {
     val p = new Path(path)
-    val fs = p.getFileSystem(hconf)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(p.getParent)) { fs.mkdirs(p.getParent); () }
-    val writer = new ParquetRowWriterBuilder(p, hconf)
-      .withConf(hconf)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
+    val out = writer(s.sparkContext.hadoopConfiguration, schema, p)
     val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
       .createToCatalystConverter(schema)
-    try rows.foreach(r => writer.write(toCatalyst(r).asInstanceOf[InternalRow]))
-    finally writer.close()
+    try rows.foreach(r => out.write(toCatalyst(r).asInstanceOf[InternalRow]))
+    finally out.close()
   }
 }
 
@@ -226,31 +232,19 @@ private[graft] object GraftDriverParquet {
   * stats skipping), no legacy format, proleptic dates.
   */
 private class GraftParquetWriterFactory(
-    schema: StructType, conf: SerializableHadoopConf, dir: String)
+    schema: StructType, conf: SerializableConfiguration, dir: String)
   extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    val hconf = new Configuration(conf.value)
-    ParquetWriteSupport.setSchema(schema, hconf)
-    hconf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, "false")
-    hconf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
-    hconf.set(SQLConf.PARQUET_REBASE_MODE_IN_WRITE.key, "CORRECTED")
-    hconf.set(SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE.key, "CORRECTED")
-    hconf.set(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key, "true")
-    hconf.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key, "true")
     val path = new Path(f"$dir/part-$partitionId%05d-$taskId.parquet")
-    new GraftParquetDataWriter(path, hconf, schema)
+    new GraftParquetDataWriter(path, conf.value, schema)
   }
 }
 
 private class GraftParquetDataWriter(path: Path, conf: Configuration, schema: StructType)
   extends DataWriter[InternalRow] {
 
-  private val writer: ParquetWriter[InternalRow] =
-    new ParquetRowWriterBuilder(path, conf)
-      .withConf(conf)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
+  private val writer: ParquetWriter[InternalRow] = GraftDriverParquet.writer(conf, schema, path)
   private var rows = 0L
 
   // Spark's group-based rewrite prepends an int `__row_operation`
@@ -303,22 +297,4 @@ private class ParquetRowWriterBuilder(path: Path, conf: Configuration)
   override def self(): ParquetRowWriterBuilder = this
   override def getWriteSupport(c: Configuration): WriteSupport[InternalRow] =
     new ParquetWriteSupport
-}
-
-/** Hadoop Configuration is not Serializable; ship its effective
-  * properties through Hadoop's own Writable round trip.
-  */
-private class SerializableHadoopConf(@transient private var conf: Configuration)
-  extends Serializable {
-  def value: Configuration = conf
-  @throws(classOf[IOException])
-  private def writeObject(out: ObjectOutputStream): Unit = {
-    out.defaultWriteObject(); conf.write(out)
-  }
-  @throws(classOf[IOException])
-  private def readObject(in: ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    conf = new Configuration(false)
-    conf.readFields(in)
-  }
 }

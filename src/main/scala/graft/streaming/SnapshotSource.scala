@@ -328,22 +328,14 @@ object SnapshotSourceProvider {
 
   /** Iceberg `table$files`: one row per live data file of the chosen
     * version, values straight off the manifest annotations — no data
-    * file is opened. `partition` is the file's hidden-partition
-    * annotation (`_graft_day=2024-01-01`) or null.
+    * file is opened. `partition` is the file's day annotation as
+    * written ([[graft.lake.Manifest.Entry.partition]]) or null.
     */
   private[streaming] def filesMeta(
       s: SparkSession, root: String, version: Int): DataFrame = {
     val v = if (version < 0) SnapshotTable.currentVersion(s, root) else version
-    val rows = SnapshotTable.version(s, root, v).dataEntries.map(e => (e.path, e.annots)).map {
-      case (f, a) =>
-        val part = a.filterNot { case (k, _) =>
-          k.startsWith("_min_") || k.startsWith("_max_") ||
-            k.startsWith("_bloom_") || k == "_rows" || k == "_bytes" || k == "_seq"
-        }.toSeq.sortBy(_._1).map { case (k, vv) => s"$k=$vv" }.mkString("\t")
-        Row(f, a.get("_rows").map(_.toLong).getOrElse(-1L),
-          a.get("_bytes").map(_.toLong).getOrElse(-1L),
-          a.get("_seq").map(_.toLong).getOrElse(0L),
-          if (part.isEmpty) null else part)
+    val rows = SnapshotTable.version(s, root, v).dataEntries.map { e =>
+      Row(e.path, e.rowsOpt.getOrElse(-1L), e.bytesOpt.getOrElse(-1L), e.seq, e.partition.orNull)
     }
     import scala.jdk.CollectionConverters._
     s.createDataFrame(rows.asJava, StructType(Seq(

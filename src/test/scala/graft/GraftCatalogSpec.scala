@@ -225,6 +225,19 @@ class GraftCatalogSpec extends SparkSpec {
     assert(v1.columns.toSeq === Seq("id", "v"))
   }
 
+  test("ALTER TABLE widens decimal(10,2) to decimal(12,2) and the table stays readable") {
+    enable()
+    val root = s"$wh/lake/sqldecimal"
+    SnapshotTable.drop(spark, root)
+    SnapshotTable.commit(spark, root, Seq((1, "1.25"), (2, "-3.50")).toDF("id", "d")
+      .select(col("id"), col("d").cast("decimal(10,2)").as("d")))
+    spark.sql("ALTER TABLE gcat.lake.sqldecimal ALTER COLUMN d TYPE DECIMAL(12,2)")
+    val df = spark.sql("SELECT id, d FROM gcat.lake.sqldecimal ORDER BY id")
+    assert(df.schema("d").dataType === org.apache.spark.sql.types.DecimalType(12, 2))
+    assert(df.collect().map(r => (r.getInt(0), r.getDecimal(1).toPlainString)).toSeq ===
+      Seq((1, "1.25"), (2, "-3.50")))
+  }
+
   test("MoR deletes and renames serve through the catalog read") {
     enable()
     val root = s"$wh/lake/morv2"

@@ -156,6 +156,26 @@ class LakeWriterSpec extends SparkSpec {
     assert(all.filter(col("ts").isNull).count() === 3)
   }
 
+  test("zero-copy and SQL row-level files of one day name it, so a one-day read plans only them") {
+    val wh = "/tmp/graft_test/writer_wh"
+    spark.conf.set("spark.sql.catalog.gwriter", classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gwriter.warehouse", wh)
+    val root = s"$wh/lake/dg"
+    SnapshotTable.drop(spark, root)
+    SnapshotTable.commitPartitionedByDay(spark, root, rows(1 to 9), "ts")
+    // a staged file whose rows all hold the first day, registered zero-copy
+    val staged = "/tmp/graft_test/writer_staged"
+    rows(Seq(12, 15)).coalesce(1).write.mode("overwrite").parquet(staged)
+    val stagedFiles = spark.read.parquet(staged).inputFiles.toSeq
+    SnapshotTable.commitFiles(spark, root, stagedFiles)
+    spark.sql("UPDATE gwriter.lake.dg SET id = id + 100 WHERE id = 4")
+    val mv = SnapshotTable.version(spark, root, SnapshotTable.currentVersion(spark, root))
+    assert(mv.dataEntries.forall(_.day.isDefined), mv.dataEntries.map(_.line).mkString("\n"))
+    checkPruning("commitFiles + SQL UPDATE", root, mv)
+    assert(SnapshotTable.read(spark, root).count() === 11)
+    assert(SnapshotTable.read(spark, root).filter(col("id") === 104).count() === 1)
+  }
+
   test("a commit with stats opens each new file's footer once") {
     conf.set("fs.countfs.impl", classOf[CountingTestFs].getName)
     val root = "countfs:///tmp/graft_test/writer_opens/t"

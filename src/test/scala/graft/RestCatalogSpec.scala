@@ -592,6 +592,31 @@ class RestCatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(cD == 200)
   }
 
+  test("add-schema widens decimal(10,2) to decimal(12,2) and the table stays readable") {
+    import spark.implicits._
+    val loc = s"$tableArea/evolve_decimal"
+    SnapshotTable.drop(spark, loc)
+    SnapshotTable.commit(spark, loc, Seq((1, "1.25"), (2, "-3.50")).toDF("n", "d")
+      .select($"n", $"d".cast("decimal(10,2)").as("d")))
+    val (c0, _) = RestCatalog.post(port, "/v1/tables",
+      s"""{"name":"rest_spec_evolve_decimal","format":"graft-snapshot","location":"$loc"}""")
+    assert(c0 == 201)
+    val base = "/v1/namespaces/graft/tables/rest_spec_evolve_decimal"
+    val (c1, r1) = RestCatalog.post(port, base,
+      """{"requirements":[],"updates":[{"action":"add-schema","schema":{"type":"struct","fields":[
+        |{"id":1,"name":"n","required":false,"type":"int"},
+        |{"id":2,"name":"d","required":false,"type":"decimal(12, 2)"}]}},
+        |{"action":"set-current-schema","schema-id":-1}]}""".stripMargin)
+    assert(c1 == 200, r1)
+    val evolved = SnapshotTable.read(spark, loc)
+    assert(evolved.schema("d").dataType === org.apache.spark.sql.types.DecimalType(12, 2))
+    assert(evolved.orderBy("n").collect().map(r => (r.getInt(0), r.getDecimal(1).toPlainString))
+      .toSeq === Seq((1, "1.25"), (2, "-3.50")))
+    val (c2, r2) = RestCatalog.get(port, base)
+    assert(c2 == 200 && r2.contains("decimal(12,2)"), r2)
+    assert(RestCatalog.delete(port, "/v1/tables/rest_spec_evolve_decimal")._1 == 200)
+  }
+
   test("add-schema RENAME rides persistent field ids; DROP works with time travel") {
     import spark.implicits._
     val loc = s"$tableArea/wire_rename"

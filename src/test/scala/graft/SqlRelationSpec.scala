@@ -198,6 +198,24 @@ class SqlRelationSpec extends SparkSpec {
     val parts = load(root2, "metadata" -> "files")
       .select("partition").as[String].collect().toSet
     assert(parts === Set("_graft_day=2024-01-01", "_graft_day=2024-01-02"))
+    // string stats are bounds, never partition values: a stats column
+    // adds nothing to `partition`, partitioned or not
+    val root3 = "/tmp/graft_test/rel_meta_sstats_part"
+    SnapshotTable.drop(spark, root3)
+    def named(id: Long, day: String) =
+      (id, java.sql.Timestamp.valueOf(s"$day 10:00:00"), s"n$id")
+    SnapshotTable.commitPartitionedByDay(spark, root3,
+      Seq(named(1L, "2024-01-01")).toDF("id", "ts", "name"), "ts")
+    SnapshotTable.commit(spark, root3, Seq(named(2L, "2024-01-02")).toDF("id", "ts", "name"),
+      statsCols = Seq("name"))
+    val parts2 = load(root3, "metadata" -> "files").select("partition").as[String].collect()
+    assert(parts2.sorted.toSeq === Seq("_graft_day=2024-01-01", "_graft_day=2024-01-02"))
+    val root4 = "/tmp/graft_test/rel_meta_sstats"
+    SnapshotTable.drop(spark, root4)
+    SnapshotTable.commit(spark, root4, Seq((1L, "a"), (2L, "b")).toDF("id", "name"),
+      statsCols = Seq("name"))
+    val parts3 = load(root4, "metadata" -> "files").select("partition").as[String].collect()
+    assert(parts3.nonEmpty && parts3.forall(_ == null), parts3.mkString(", "))
   }
 
   test("untranslatable filter shapes still answer correctly (no pruning, Spark re-filters)") {
