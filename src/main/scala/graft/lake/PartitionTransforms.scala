@@ -52,15 +52,14 @@ object PartitionTransforms {
   /** (lower, upper) bounds the conjuncts of `e` put on column `src`,
     * each value read through `of`, inclusive at file granularity
     * (strict < / > relax to <= / >=, which can only over-scan, never
-    * under-scan); `And` keeps the tighter bound of each side, and with
-    * `prefix` a `startsWith` bounds from below. (None, None) = cannot
-    * prune.
+    * under-scan); `And` keeps the tighter bound of each side, and a
+    * `startsWith` bounds from below. (None, None) = cannot prune.
     */
-  private def bounds[T](e: Expression, src: String, of: Expression => Option[T],
-      prefix: Boolean = false)(implicit ord: Ordering[T]): (Option[T], Option[T]) = e match {
+  private def bounds[T](e: Expression, src: String, of: Expression => Option[T])(
+      implicit ord: Ordering[T]): (Option[T], Option[T]) = e match {
     case And(l, r) =>
-      val (ll, lu) = bounds(l, src, of, prefix)
-      val (rl, ru) = bounds(r, src, of, prefix)
+      val (ll, lu) = bounds(l, src, of)
+      val (rl, ru) = bounds(r, src, of)
       ((ll ++ rl).reduceOption[T](ord.max(_, _)), (lu ++ ru).reduceOption[T](ord.min(_, _)))
     case GreaterThanOrEqual(a, v) if isCol(a, src) => (of(v), None)
     case GreaterThan(a, v) if isCol(a, src) => (of(v), None) // day granularity: ts > x ⇒ day ≥ day(x)
@@ -76,8 +75,11 @@ object PartitionTransforms {
     // a prefix predicate bounds the range [prefix, prefix+∞): every
     // matching string is >= prefix, and <= any string of
     // prefix-with-last-byte-bumped is NOT safe under arbitrary bytes
-    // — the lower bound alone already skips disjoint sorted files
-    case StartsWith(a, v) if prefix && isCol(a, src) => (of(v), None)
+    // — the lower bound alone already skips disjoint sorted files.
+    // Only string columns meet it: an analyzed startsWith on a date or
+    // timestamp wraps the column in a Cast, and a string operand has no
+    // numeric value
+    case StartsWith(a, v) if isCol(a, src) => (of(v), None)
     case _ => (None, None)
   }
 
@@ -119,7 +121,7 @@ object PartitionTransforms {
     */
   def stringBounds(e: Expression, src: String)(
       implicit ord: Ordering[Array[Byte]]): (Option[Array[Byte]], Option[Array[Byte]]) =
-    bounds(e, src, strOf, prefix = true)
+    bounds(e, src, strOf)
 
   /** Equality/IN literal values for column `src` in `e` (catalyst-
     * internal representations with their types, ready for

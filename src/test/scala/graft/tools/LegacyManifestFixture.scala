@@ -24,13 +24,16 @@ import graft.lake.{Manifest, SnapshotTable}
   * in place.
   *
   * The committed fixture was written by commit e224c69, the last whose
-  * manifests carry no header format marker:
+  * manifests carry no header format marker, from a checkout of that
+  * commit (e.g. `git archive e224c69`):
   * {{{
   * sbt "Test/runMain graft.tools.LegacyManifestFixture /tmp/graft_test/legacy_manifests"
   * }}}
   * then copied without `.crc` files to
-  * `src/test/resources/legacy_manifests`. Manifests hold absolute
-  * paths, so the spec reads it back at the same directory.
+  * `src/test/fixtures/legacy_manifests`. Manifests hold absolute
+  * paths, so the spec reads it back at the same directory. Later builds
+  * write marked manifests, so on them only `--expected-only` applies:
+  * it rewrites `expected.tsv` for the tables already in place.
   */
 object LegacyManifestFixture {
   val Dir = "/tmp/graft_test/legacy_manifests"
